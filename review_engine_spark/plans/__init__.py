@@ -8,7 +8,9 @@ operator inventory. Importing this package loads the full roster.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,46 +48,16 @@ from review_engine_spark.plans import roster_mining  # noqa: E402,F401
 # Driver-facing ordering. The harness checks only the FIRST 50 oracle
 # entries in registration order, so the dicts are re-ordered to put the
 # highest-verification-value queries first:
-#   tier 1 — queries whose plan CHANGED this round (r8: the stateful
-#            streaming family — the file-sink runner path gained
-#            idempotent update-mode writes and empty-output handling);
-#   tier 2 — any oracle-bearing query never driver-green (queries
-#            newly declared this round);
-#   tier 3 — driver-green queries by ASCENDING last-proven round: r1
-#            greens were proven against round-1 code, so re-proving the
-#            oldest first guards against silent drift. ~49 spare slots
-#            per round rotate through this tier.
+#   tier 1 — ``_TIER1_FIXED``: oracle queries whose plan changed since the
+#            driver last proved them;
+#   tier 2 — oracle queries the driver has never proved green;
+#   tier 3 — driver-green queries by ASCENDING last-proven round, so the
+#            spare slots re-prove the stalest greens first;
 #   tier 4 — rows-only queries (no oracle; bench covers execution).
 # ---------------------------------------------------------------------------
 
-#: Round-12 window arithmetic (r11 recount per ADVICE: the r11 tier 2
-#: was 15 new oracle queries — 11 named + the four media promotions,
-#: with q_binary_files separate from those — leaving ~28 spare slots,
-#: not 14/29 as the r11 comment said; CORRECTNESS_r11 proved exactly
-#: the intended 50). This round: tier 1 pins the 3 plan-changed
-#: queries (q_heaps_fit moved to the single-pass bucket-and-running-sum
-#: form, dropping both token-stream BroadcastNestedLoopJoins;
-#: q_stream_ingest_gate's memory-sink runner gained batch_id-keyed
-#: idempotent snapshots; q_pca_topk represents the PCA family whose
-#: artifact load path now digest-validates the JSON payload). Tier 2
-#: adds the round-12 queries (unigram-LM tokenizer + URL/host curation,
-#: ~5). The ~42 spare slots fall to tier 3 = the full 21-query r6
-#: straggler cohort (q_approx_percentile .. q_zorder_key — VERDICT r11
-#: item 2 asks the union histogram to show no proof older than r7)
-#: followed by the oldest ~21 of the r7 cohort.
-#: Round-13 tier 1: the two plan-changed queries this round —
-#: q_semantic_dedup's pair stage moved from id-hash sub-shards to SRP
-#: content blocks (plus localCheckpoint instead of persist), and
-#: q_stream_ingest_gate's runner deferred the empty-stream schema
-#: analysis. Tier 2 auto-adds q_c4_rules (new). Spare slots rotate the
-#: r7 cohort (oldest proofs after the r12 sweep re-proved the r6 one).
-#: Round-14 tier 1 (VERDICT r13 item 2): the r13-rewritten oracle
-#: queries whose post-rewrite form the driver never sampled — the r13
-#: tier-1 list was set early in that round and never extended, so 13+
-#: rewrites carry only builder-side proof. Pin them all; the five
-#: r13-rewritten queries the r13 sample DID cover (q_semantic_dedup,
-#: q_stream_ingest_gate, q_cooccur_topk, q_bpe_merges, q_pagerank)
-#: rotate normally via their round-13 _LAST_GREEN entries.
+#: Tier 1 is the only hand-kept list: any rewrite of an oracle-checked
+#: query adds it here in the same commit.
 _TIER1_FIXED: list[str] = [
     "q_benford",
     "q_containment_dedup",
@@ -103,191 +75,29 @@ _TIER1_FIXED: list[str] = [
     "q_recsys_eval",
 ]
 
-#: name -> last round the driver proved it green (CORRECTNESS_r01..r08
-#: union: rows_match & schema_match & hash_match). 228 entries.
-_LAST_GREEN: dict[str, int] = {
-    # proven green in round 4 (30 queries)
-    "q_abtest_ttest": 4, "q_anomaly_zscore": 4, "q_autocorr": 4,
-    "q_benford": 4, "q_bloom_membership": 4, "q_bm25": 4,
-    "q_chi2_independence": 4, "q_countmin": 4, "q_cusum": 4, "q_ewma": 4,
-    "q_inverted_index": 4, "q_ks_test": 4, "q_markov_transitions": 4,
-    "q_minhash_jaccard": 4, "q_psi_drift": 4, "q_simhash_hamming": 4,
-    "q_simhash_md5": 4, "q_tpch_q11": 4, "q_tpch_q12": 4, "q_tpch_q16": 4,
-    "q_tpch_q19": 4, "q_tpch_q2": 4, "q_tpch_q20": 4, "q_tpch_q21": 4,
-    "q_tpch_q22": 4, "q_tpch_q8": 4, "q_tpch_q9": 4, "q_trend_slope": 4,
-    "q_wilson_ci": 4, "q_winnow_md5": 4,
-    # proven green in round 5 (49 queries)
-    "q_abc_class": 5, "q_assoc_rules": 5, "q_assortativity": 5,
-    "q_attribution": 5, "q_bfs_levels": 5, "q_bom_rollup": 5,
-    "q_clean_text": 5, "q_collation": 5, "q_concurrency": 5, "q_croston": 5,
-    "q_cumulative_distinct": 5, "q_dau_mau": 5, "q_degree_hist": 5,
-    "q_dense_report": 5, "q_dup_payments": 5, "q_gap_islands": 5,
-    "q_geo_knn": 5, "q_hll_md5": 5, "q_holt_linear": 5, "q_holt_winters": 5,
-    "q_interval_merge": 5, "q_inventory_balance": 5, "q_mmr": 5,
-    "q_mmr_grouped": 5, "q_new_returning": 5, "q_ols_regression": 5,
-    "q_path_topk": 5, "q_peaks": 5, "q_python_stream_source": 5,
-    "q_resource_allocation": 5, "q_rfm": 5, "q_robust_zscore": 5,
-    "q_rolling_active": 5, "q_runs_test": 5, "q_scan_docs": 5,
-    "q_scan_embeddings": 5, "q_scd2_build": 5, "q_seasonal_decompose": 5,
-    "q_seasonal_naive": 5, "q_spend_deciles": 5, "q_sql_script": 5,
-    "q_stream_anomaly": 5, "q_stream_static_join": 5, "q_survival_km": 5,
-    "q_theil_sen": 5, "q_time_weighted_avg": 5, "q_token_filter": 5,
-    "q_winsorize": 5, "q_yoy_growth": 5,
-    # proven green in round 6 (49 queries)
-    "q_approx_percentile": 6, "q_asof_join": 6, "q_cohort_retention": 6,
-    "q_cube": 6, "q_data_profile": 6, "q_date_trunc": 6, "q_dedup_apply": 6,
-    "q_dedup_clusters": 6, "q_dedup_exact": 6, "q_distinct_count": 6,
-    "q_except": 6, "q_extract_summary": 6, "q_fingerprint": 6, "q_funnel": 6,
-    "q_fuzzy_pairs": 6, "q_group_collect": 6, "q_group_count": 6,
-    "q_group_percentiles": 6, "q_grouping_sets": 6, "q_histogram": 6,
-    "q_intersect": 6, "q_join_anti": 6, "q_join_meta": 6, "q_json_extract": 6,
-    "q_mann_whitney": 6, "q_meanpool": 6, "q_parse_budget": 6,
-    "q_percentile_norm": 6, "q_pivot": 6, "q_price_stats": 6, "q_ri_check": 6,
-    "q_rollup": 6, "q_salted_collect": 6, "q_salted_join": 6, "q_semi_join": 6,
-    "q_skew_profile": 6, "q_star_join": 6, "q_stats_agg": 6, "q_text_stats": 6,
-    "q_tfidf": 6, "q_tokenize": 6, "q_topk_window": 6, "q_triangle_count": 6,
-    "q_ts_window": 6, "q_union": 6, "q_window_analytics": 6, "q_window_lag": 6,
-    "q_window_running": 6, "q_zorder_key": 6,
-    # proven green in round 7 (50 queries)
-    "q_assign_ids": 7, "q_bitmap_distinct": 7, "q_boilerplate": 7,
-    "q_bucketed_join": 7, "q_char_entropy": 7, "q_chunk_docs": 7,
-    "q_contamination": 7, "q_cooccur_topk": 7, "q_cosine_topk": 7,
-    "q_crosstab": 7, "q_dau_mau_hll": 7, "q_domain_cap": 7, "q_dot": 7,
-    "q_except_all": 7, "q_full_outer": 7, "q_implicit_ratings": 7,
-    "q_incremental_dedup": 7, "q_intersect_all": 7, "q_kmeans": 7,
-    "q_knn_batch": 7, "q_knn_bruteforce": 7, "q_l2norm": 7,
-    "q_lateral_topk": 7, "q_map_explode": 7, "q_mix_upsample": 7,
-    "q_mixture_apply": 7, "q_mixture_weights": 7, "q_null_safe_join": 7,
-    "q_pagerank": 7, "q_pii_scrub": 7, "q_quality_gate": 7,
-    "q_quantize_embeddings": 7, "q_range_join": 7, "q_rank_blend": 7,
-    "q_rate_sample": 7, "q_recsys_eval": 7, "q_repetition_stats": 7,
-    "q_resample_ffill": 7, "q_schema_evolution": 7, "q_semantic_dedup": 7,
-    "q_sequence_pack": 7, "q_span_dedup": 7, "q_top_tokens": 7,
-    "q_train_split": 7, "q_try_arithmetic": 7, "q_unpivot": 7,
-    "q_upsert_latest": 7, "q_variant_json": 7, "q_window_range": 7,
-    "q_xml_extract": 7,
-    # proven green in round 8 (50 queries)
-    "q_asof_cogroup": 8, "q_bayes_rating": 8, "q_bpe_merges": 8,
-    "q_corrupt_records": 8, "q_csv_roundtrip": 8, "q_decontaminate": 8,
-    "q_freq_items": 8, "q_gini_udaf": 8, "q_hard_negatives": 8,
-    "q_hop_window": 8, "q_lang_id": 8, "q_length_buckets": 8,
-    "q_near_dup_embedding": 8, "q_negative_sample": 8, "q_ngram_jaccard": 8,
-    "q_observe_metrics": 8, "q_orc_roundtrip": 8, "q_partitioned_prune": 8,
-    "q_pmi_bigrams": 8, "q_popularity": 8, "q_price_fit": 8,
-    "q_python_datasource": 8, "q_quality_score": 8, "q_sentence_udtf": 8,
-    "q_sessionize": 8, "q_sessionize_state": 8, "q_sink_roundtrip": 8,
-    "q_skipgram_pairs": 8, "q_stratified_sample": 8, "q_stream_dedup": 8,
-    "q_stream_ewma": 8, "q_stream_near_dup": 8, "q_stream_sink_parquet": 8,
-    "q_stream_stream_join": 8, "q_stream_tumbling": 8, "q_stream_upsert": 8,
-    "q_token_count_bpe": 8, "q_tpch_q1": 8, "q_tpch_q10": 8, "q_tpch_q13": 8,
-    "q_tpch_q14": 8, "q_tpch_q15": 8, "q_tpch_q17": 8, "q_tpch_q18": 8,
-    "q_tpch_q3": 8, "q_tpch_q4": 8, "q_tpch_q5": 8, "q_tpch_q6": 8,
-    "q_tpch_q7": 8, "q_unigram_logprob": 8,
-    # proven green in round 9 (50 queries; supersedes earlier rounds'
-    # entries for the same names — dict literal keeps the LAST value)
-    "q_abtest_ttest": 9, "q_anomaly_zscore": 9, "q_attribution": 9,
-    "q_autocorr": 9, "q_benford": 9, "q_bigram_logprob": 9,
-    "q_bloom_membership": 9, "q_bm25": 9, "q_bpe_encode": 9,
-    "q_chi2_independence": 9, "q_clean_text": 9, "q_concurrency": 9,
-    "q_countmin": 9, "q_cusum": 9, "q_ewma": 9, "q_gap_islands": 9,
-    "q_hll_md5": 9, "q_inverted_index": 9, "q_ks_test": 9,
-    "q_markov_transitions": 9, "q_minhash_jaccard": 9, "q_mmr": 9,
-    "q_mmr_grouped": 9, "q_psi_drift": 9, "q_scan_docs": 9,
-    "q_scan_embeddings": 9, "q_scd2_build": 9, "q_sequence_pack": 9,
-    "q_sessionize_state": 9, "q_simhash_hamming": 9, "q_simhash_md5": 9,
-    "q_stream_anomaly": 9, "q_stream_ewma": 9, "q_stream_near_dup": 9,
-    "q_substring_dedup": 9, "q_substring_scrub": 9, "q_token_filter": 9,
-    "q_tpch_q11": 9, "q_tpch_q12": 9, "q_tpch_q16": 9, "q_tpch_q19": 9,
-    "q_tpch_q2": 9, "q_tpch_q20": 9, "q_tpch_q21": 9, "q_tpch_q22": 9,
-    "q_tpch_q8": 9, "q_tpch_q9": 9, "q_trend_slope": 9, "q_wilson_ci": 9,
-    "q_winnow_md5": 9,
-    # proven green in round 10 (50 queries: the 13 r10-new oracle
-    # queries + the full 37-query r5 cohort — the r9 rotation target)
-    "q_abc_class": 10, "q_adamic_adar": 10, "q_assoc_rules": 10,
-    "q_assortativity": 10, "q_bfs_levels": 10, "q_bom_rollup": 10,
-    "q_collation": 10, "q_croston": 10, "q_cumulative_distinct": 10,
-    "q_dau_mau": 10, "q_degree_hist": 10, "q_dense_report": 10,
-    "q_dsir_sample": 10, "q_dsir_weights": 10, "q_dup_payments": 10,
-    "q_geo_knn": 10, "q_gopher_rules": 10, "q_holt_linear": 10,
-    "q_holt_winters": 10, "q_interval_merge": 10,
-    "q_inventory_balance": 10, "q_kcore": 10, "q_mutual_info": 10,
-    "q_ndcg_eval": 10, "q_new_returning": 10, "q_ngram_novelty": 10,
-    "q_ols_regression": 10, "q_path_topk": 10, "q_pca_power": 10,
-    "q_pca_project": 10, "q_peaks": 10, "q_perplexity_gate": 10,
-    "q_python_stream_source": 10, "q_readability": 10,
-    "q_resource_allocation": 10, "q_rfm": 10, "q_robust_zscore": 10,
-    "q_rolling_active": 10, "q_runs_test": 10,
-    "q_seasonal_decompose": 10, "q_seasonal_naive": 10,
-    "q_spend_deciles": 10, "q_sql_script": 10,
-    "q_stream_quality_gate": 10, "q_stream_static_join": 10,
-    "q_survival_km": 10, "q_theil_sen": 10, "q_time_weighted_avg": 10,
-    "q_winsorize": 10, "q_yoy_growth": 10,
-    # proven green in round 11 (50 queries: the 15 r11-new/promoted
-    # oracle queries + 7 tier-1 plan-changed pins + 28 tier-3 rotations)
-    "q_adamic_adar": 11, "q_asof_join": 11, "q_audio_fingerprint": 11,
-    "q_bigram_logprob": 11, "q_binary_files": 11, "q_bpe_fertility": 11,
-    "q_containment_dedup": 11, "q_cube": 11, "q_dedup_exact": 11,
-    "q_distinct_count": 11, "q_except": 11, "q_extract_summary": 11,
-    "q_fingerprint": 11, "q_gopher_rules": 11, "q_group_collect": 11,
-    "q_group_count": 11, "q_heaps_fit": 11, "q_hll_mergeable": 11,
-    "q_ingest_gate": 11, "q_intersect": 11, "q_join_anti": 11,
-    "q_join_meta": 11, "q_meanpool": 11, "q_media_decode": 11,
-    "q_media_frames": 11, "q_media_resize": 11, "q_parse_budget": 11,
-    "q_pca_outlier_gate": 11, "q_pca_project_topk": 11, "q_pca_topk": 11,
-    "q_percentile_norm": 11, "q_perplexity_gate": 11, "q_price_stats": 11,
-    "q_recsys_eval": 11, "q_resource_allocation": 11, "q_rollup": 11,
-    "q_salted_collect": 11, "q_salted_join": 11, "q_semi_join": 11,
-    "q_star_join": 11, "q_stream_ingest_gate": 11,
-    "q_stream_quality_gate": 11, "q_text_stats": 11, "q_tfidf": 11,
-    "q_tokenize": 11, "q_topk_window": 11, "q_union": 11,
-    "q_window_lag": 11, "q_window_running": 11, "q_zipf_fit": 11,
-    # proven green in round 12 (50 queries: the r12-new oracle queries
-    # + 3 tier-1 plan-changed pins + the full r6 straggler cohort)
-    "q_approx_percentile": 12, "q_bitmap_distinct": 12,
-    "q_char_entropy": 12, "q_cohort_retention": 12, "q_cosine_topk": 12,
-    "q_crosstab": 12, "q_data_profile": 12, "q_date_trunc": 12,
-    "q_dedup_apply": 12, "q_dedup_clusters": 12, "q_dot": 12,
-    "q_except_all": 12, "q_full_outer": 12, "q_funnel": 12,
-    "q_fuzzy_pairs": 12, "q_group_percentiles": 12,
-    "q_grouping_sets": 12, "q_heaps_fit": 12, "q_histogram": 12,
-    "q_host_cap": 12, "q_intersect_all": 12, "q_json_extract": 12,
-    "q_l2norm": 12, "q_lateral_topk": 12, "q_mann_whitney": 12,
-    "q_map_explode": 12, "q_null_safe_join": 12, "q_pca_topk": 12,
-    "q_pivot": 12, "q_range_join": 12, "q_resample_ffill": 12,
-    "q_ri_check": 12, "q_skew_profile": 12, "q_stats_agg": 12,
-    "q_stream_ingest_gate": 12, "q_triangle_count": 12,
-    "q_try_arithmetic": 12, "q_ts_window": 12, "q_unigram_encode": 12,
-    "q_unigram_lm_train": 12, "q_unigram_pack": 12, "q_unpivot": 12,
-    "q_upsert_latest": 12, "q_url_dedup": 12, "q_url_normalize": 12,
-    "q_variant_json": 12, "q_window_analytics": 12, "q_window_range": 12,
-    "q_xml_extract": 12, "q_zorder_key": 12,
-    # proven green in round 13 (50 queries: 2 tier-1 plan-changed pins
-    # + q_c4_rules new + the r7/r8 rotation cohort)
-    "q_semantic_dedup": 13, "q_stream_ingest_gate": 13, "q_c4_rules": 13,
-    "q_knn_bruteforce": 13, "q_knn_batch": 13, "q_rank_blend": 13,
-    "q_repetition_stats": 13, "q_top_tokens": 13, "q_span_dedup": 13,
-    "q_boilerplate": 13, "q_kmeans": 13, "q_mixture_weights": 13,
-    "q_mix_upsample": 13, "q_mixture_apply": 13, "q_train_split": 13,
-    "q_contamination": 13, "q_pii_scrub": 13, "q_rate_sample": 13,
-    "q_chunk_docs": 13, "q_quantize_embeddings": 13,
-    "q_schema_evolution": 13, "q_assign_ids": 13, "q_pagerank": 13,
-    "q_domain_cap": 13, "q_quality_gate": 13, "q_incremental_dedup": 13,
-    "q_bucketed_join": 13, "q_implicit_ratings": 13, "q_cooccur_topk": 13,
-    "q_dau_mau_hll": 13, "q_hop_window": 13, "q_freq_items": 13,
-    "q_observe_metrics": 13, "q_near_dup_embedding": 13,
-    "q_hard_negatives": 13, "q_price_fit": 13, "q_bayes_rating": 13,
-    "q_popularity": 13, "q_quality_score": 13, "q_lang_id": 13,
-    "q_token_count_bpe": 13, "q_unigram_logprob": 13,
-    "q_length_buckets": 13, "q_decontaminate": 13, "q_skipgram_pairs": 13,
-    "q_bpe_merges": 13, "q_ngram_jaccard": 13, "q_sentence_udtf": 13,
-    "q_stratified_sample": 13, "q_sink_roundtrip": 13,
-}
-
-# Backward-compat name used by tools/plan_audit.py and tests.
-_DRIVER_GREEN = sorted(_LAST_GREEN)
+_REPO = Path(__file__).resolve().parents[2]
 
 
-def _driver_order() -> list[str]:
+def last_green(paths: Iterable[Path]) -> dict[str, int]:
+    """name -> highest round whose ``CORRECTNESS_rNN.json`` shows the query
+    with ``rows_match``, ``schema_match`` and ``hash_match`` all true."""
+    table: dict[str, int] = {}
+    for path in paths:
+        rnd = int(Path(path).stem.rsplit("_r", 1)[1])
+        for name, res in json.loads(Path(path).read_text()).items():
+            if res.get("rows_match") and res.get("schema_match") and res.get("hash_match"):
+                table[name] = max(table.get(name, 0), rnd)
+    return table
+
+
+_LAST_GREEN: dict[str, int] = last_green(sorted(_REPO.glob("CORRECTNESS_r*.json")))
+
+#: Registration order, kept so the window is a function of the proof
+#: table alone (``_reorder`` rewrites ``QUERIES`` in place).
+_REGISTERED: list[str] = list(QUERIES)
+
+
+def _driver_order(proofs: dict[str, int] = _LAST_GREEN) -> list[str]:
     seen: set[str] = set()
     ordered: list[str] = []
 
@@ -297,19 +107,13 @@ def _driver_order() -> list[str]:
                 seen.add(n)
                 ordered.append(n)
 
-    green = set(_LAST_GREEN)
+    oracle = [n for n in _REGISTERED if n in ORACLES]
     take(_TIER1_FIXED)
-    take(n for n in QUERIES if n in ORACLES and n not in green)
-    # tier 3: oldest proof first, so the ~49 spare slots per round
-    # re-prove the stalest greens (registration order breaks ties via
-    # the stable sort).
-    take(
-        sorted(
-            (n for n in QUERIES if n in ORACLES),
-            key=lambda n: _LAST_GREEN.get(n, 0),
-        )
-    )
-    take(QUERIES)
+    take(n for n in oracle if n not in proofs)
+    # tier 3: oldest proof first (registration order breaks ties via the
+    # stable sort).
+    take(sorted(oracle, key=lambda n: proofs.get(n, 0)))
+    take(_REGISTERED)
     return ordered
 
 

@@ -725,7 +725,7 @@ def run_ewma_stateful(
     per-bucket state round-trips grow with N/B (arrays serialized per
     batch), and a bucket is the unit of fold parallelism — size B ≥
     cores, ≪ N. Measured verdicts: bulk ingest in SCALING.md round 9;
-    the trickle regime in round 10 (tools/profile_trickle.py): coarse
+    the trickle regime in SCALING.md round 10 (trickle horizon): coarse
     wins 1.4-2× at touched-key fractions ≥10% and +8% at 1%; the
     crossover sits near f≈0.1%, where per-key wins by only 4% while
     ~95% of BOTH layouts' cost is the per-micro-batch fixed overhead —
@@ -1221,9 +1221,9 @@ def run_stream_near_dup(
         # the honest re-measurement that replaced r8's stale 7.3×);
         # folding ~buckets/B buckets per invocation drops that to the
         # signature-compute floor. The feared trickle-regime crossover
-        # was MEASURED in r10 (tools/profile_trickle.py, SCALING.md
-        # round 10): coarse wins 1.4-2x at touched fractions >=10% and
-        # +8% at 1%; per-key only wins at f~0.1% and only by 4%, in a
+        # was MEASURED in r10 (SCALING.md round 10, trickle horizon):
+        # coarse wins 1.4-2x at touched fractions >=10% and +8% at 1%;
+        # per-key only wins at f~0.1% and only by 4%, in a
         # regime where ~95% of both layouts' cost is per-micro-batch
         # fixed overhead — array re-serialization is ~us/stored key, a
         # per-key GroupState round-trip ~ms/touched key. So coarse
@@ -1391,7 +1391,7 @@ def run_stream_ingest_gate(
     def out_schema():
         # DEFERRED (round 13): analyzing the composed gate tree over
         # limit(0) costs ~2.5 s of pure Catalyst analysis — the bulk of
-        # r12's +50% regression (profiled: tools/profile_ingest_gate.py)
+        # r12's +50% regression (profiled: OPTIMIZATION_r13.md row 2)
         # — and is only needed for the empty-stream fallback, so pay it
         # there, not on every call.
         return ingest_gate_frame(

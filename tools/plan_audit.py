@@ -4,8 +4,8 @@ For each audited query the formatted plan is checked for the properties
 that matter at 100 TB (SURVEY §4): filter/column pushdown into the
 parquet scan, broadcast joins for dimension tables, whole-stage codegen
 on the relational path, and absence of cartesian products where an
-equi-join is intended. Plans are also written to ``PLANS.md`` so a
-reviewer can read exactly what would be submitted to a cluster.
+equi-join is intended. Plans are also written to ``PLANS.md`` (local,
+git-ignored output) so a reviewer can read what a cluster would run.
 
 Usage: python tools/plan_audit.py [sf_dir]   (exit 1 on any violation)
 """
