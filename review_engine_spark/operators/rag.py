@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from review_engine_spark.functions.text import extract_summary
-from review_engine_spark.functions.vector import cosine_similarity
+from review_engine_spark.functions.vector import cosine_similarity, vector_literal
 from review_engine_spark.inference.stubs import StubEmbedder, stub_chat_udf
 
 __all__ = ["QA_TEMPLATE", "build_prompt", "retrieve", "rag_answer"]
@@ -42,7 +42,7 @@ def retrieve(
     k: int = 4,
 ) -> DataFrame:
     """Cosine top-k retrieval against a literal query vector."""
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = vector_literal(query_vec)
     return (
         chunks.withColumn(
             "_sim", F.round(cosine_similarity(F.col(vec_col), qv), 6)

@@ -56,15 +56,37 @@ def mmr_diversify(
     first pick is pure relevance; ties keep the first-seen candidate
     (strict ``>`` comparison, rank.py:316), with candidate order =
     relevance-descending (rank.py:297).
-    """
-    rows = candidates.select(id_col, score_col, vec_col).collect()
 
+    Returns one row per pick, in pick order: ``mmr_rank`` (long, from 1),
+    ``id_col``, ``score_col`` (double, rounded to 6 dp), then every other
+    column of ``candidates`` except ``vec_col``, each with its own type.
+    Callers read display columns from here rather than joining back to
+    ``candidates``, which would re-run the candidates' whole lineage.
+
+    The candidates are collected once, as Arrow, and the result is built
+    from a ``pyarrow.Table``, which plans as a ``LocalTableScan``. A
+    Python-list ``createDataFrame`` plans as a Python RDD scan that forks
+    Python workers on every action that reads it, and the pandas path
+    turns a null double into NaN when Arrow is off (so a null price would
+    sort as a price).
+    """
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    types = candidates.schema
+    rest = [c for c in candidates.columns if c not in (id_col, score_col, vec_col)]
+    table = candidates.select(id_col, score_col, vec_col, *rest).toArrow()
+
+    ids = table.column(id_col).to_pylist()
+    row_of = {cid: i for i, cid in enumerate(ids)}  # a repeated id keeps its last row
     id2score: dict = {}
     id2vec: dict = {}
-    for r in rows:
-        cid = r[id_col]
-        id2score[cid] = float(r[score_col])
-        vec = r[vec_col]
+    for cid, score, vec in zip(
+        ids,
+        table.column(score_col).to_pylist(),
+        table.column(vec_col).to_pylist(),
+    ):
+        id2score[cid] = float(score)
         if vec is None:
             id2vec[cid] = None
             continue
@@ -95,14 +117,25 @@ def mmr_diversify(
         selected.append(best_id)
         remaining.remove(best_id)
 
-    out = [
-        (rank + 1, cid, round(id2score[cid], 6))
-        for rank, cid in enumerate(selected)
-    ]
-    id_type = dict(candidates.dtypes)[id_col]
-    return spark.createDataFrame(
-        out, f"mmr_rank long, {id_col} {id_type}, {score_col} double"
+    out = (
+        table.drop_columns([vec_col])
+        .take(pa.array([row_of[cid] for cid in selected], pa.int64()))
+        .set_column(
+            1,
+            score_col,
+            pa.array([round(id2score[cid], 6) for cid in selected], pa.float64()),
+        )
+        .add_column(0, "mmr_rank", pa.array(range(1, len(selected) + 1), pa.int64()))
     )
+    schema = StructType(
+        [
+            StructField("mmr_rank", LongType()),
+            types[id_col],
+            StructField(score_col, DoubleType()),
+            *(types[c] for c in rest),
+        ]
+    )
+    return spark.createDataFrame(out, schema)
 
 
 def mmr_diversify_grouped(

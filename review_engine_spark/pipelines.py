@@ -9,7 +9,9 @@ builders the declared-query roster verifies.
 
 Everything stays one lazy DataFrame lineage per flow; the only
 materialization barriers are the ≤``candidates`` collect for MMR (the
-reference's own top-200 cut) and the Arrow-batched inference UDFs
+reference's own top-200 cut, and the recommendation flow's only collect:
+its stats are window aggregates over the cut, and its display columns
+come back with the MMR picks) and the Arrow-batched inference UDFs
 (SURVEY §3.1 mapping). Models are injected — pass real
 ``predict_batch_udf`` wrappers in production, the deterministic stubs in
 tests.
@@ -29,7 +31,7 @@ from review_engine_spark.functions.scoring import (
     price_fit,
 )
 from review_engine_spark.functions.text import clean_text, parse_budget, token_count
-from review_engine_spark.functions.vector import cosine_similarity
+from review_engine_spark.functions.vector import cosine_similarity, vector_literal
 from review_engine_spark.operators.ranking import mmr_diversify, priced_first, top_k_by
 
 __all__ = [
@@ -89,17 +91,23 @@ def recommend(
 ) -> DataFrame:
     """§3.1 recommendation query (semantic.py:33-67 → rank.py:208-337).
 
-    cosine retrieval vs the broadcast query vector → top-``candidates``
-    cut (TakeOrderedAndProject) → optional rerank UDF AFTER the cut →
-    left-outer metadata join (broadcast; missing meta tolerated) → budget
-    anchor from the query text ∥ median/std price stats (1-row broadcast
-    aggregate) → Bayesian rating, log-popularity, price fit → weighted
-    blend → MMR diversification (driver-side over the collected cut) →
-    priced-first ordering → top-``display``.
+    cosine retrieval vs the literal query vector → top-``candidates``
+    cut (TakeOrderedAndProject) → left-outer metadata join (broadcast;
+    missing meta tolerated) → optional rerank UDF AFTER the cut → budget
+    anchor from the query text ∥ median/std price, rerank percentile and
+    popularity stats (window aggregates over the whole cut) → Bayesian
+    rating, log-popularity, price fit → weighted blend → MMR
+    diversification (driver-side over the cut, collected once with its
+    display columns) → priced-first ordering → top-``display``, ranked
+    on the local MMR result.
+
+    The candidate set is evaluated once per call: the MMR collect is the
+    only action that runs the scan, cut, join and rerank UDF, and the
+    returned frame reads only the local MMR result.
 
     Returns (rank, parent_asin, title, price, score, price_missing).
     """
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = vector_literal(query_vec)
     scored = embeddings.select(
         "parent_asin",
         F.col("embed"),
@@ -128,17 +136,19 @@ def recommend(
     else:
         joined = joined.withColumn("rerank_raw", F.col("sim"))
 
-    stats = joined.agg(
-        F.median("price").alias("anchor_fallback"),
-        F.stddev_pop("price").alias("price_sd"),
-        F.percentile("rerank_raw", F.lit(0.01)).alias("rr_p1"),
-        F.percentile("rerank_raw", F.lit(0.99)).alias("rr_p99"),
-        F.max(log_popularity(F.col("review_count"))).alias("pop_hi"),
-        F.min(log_popularity(F.col("review_count"))).alias("pop_lo"),
-    )
+    # window stats over the whole (≤candidates-row) cut: one pass over
+    # ``joined``, where an aggregate cross-joined back would plan the scan,
+    # cut, join and rerank UDF twice
+    whole = Window.partitionBy()
     budget = F.round(parse_budget(F.lit(query)), 6)
-    feat = joined.crossJoin(F.broadcast(stats)).withColumn(
-        "anchor", F.coalesce(budget, F.col("anchor_fallback"))
+    feat = joined.select(
+        "*",
+        F.coalesce(budget, F.median("price").over(whole)).alias("anchor"),
+        F.stddev_pop("price").over(whole).alias("price_sd"),
+        F.percentile("rerank_raw", F.lit(0.01)).over(whole).alias("rr_p1"),
+        F.percentile("rerank_raw", F.lit(0.99)).over(whole).alias("rr_p99"),
+        F.max(log_popularity(F.col("review_count"))).over(whole).alias("pop_hi"),
+        F.min(log_popularity(F.col("review_count"))).over(whole).alias("pop_lo"),
     )
     blended = feat.select(
         "parent_asin",
@@ -172,12 +182,7 @@ def recommend(
     diversified = mmr_diversify(
         spark, blended, "parent_asin", "score", "embed", k=k
     )
-    # re-attach display fields, order priced-first within MMR order
-    final = diversified.join(
-        blended.select("parent_asin", "title", "price", "price_missing"),
-        "parent_asin",
-    )
-    ordered = priced_first(final, "price", "mmr_rank").limit(display)
+    ordered = priced_first(diversified, "price", "mmr_rank").limit(display)
     w = Window.orderBy(F.col("price_missing").asc(), F.col("mmr_rank").asc())
     return ordered.select(
         F.row_number().over(w).cast("long").alias("rank"),

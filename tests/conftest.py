@@ -16,3 +16,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def plan_nodes():
+    """``plan_nodes(df)`` → ``[(nodeName, is_leaf), ...]`` over ``df``'s
+    executed physical plan, preorder, looking through the AQE root and
+    its query stages."""
+
+    def unwrap(n):
+        while True:
+            name = n.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                n = n.executedPlan()
+            elif name.endswith("QueryStageExec"):
+                n = n.plan()
+            else:
+                return n
+
+    def walk(df):
+        out = []
+        stack = [df._jdf.queryExecution().executedPlan()]
+        while stack:
+            n = unwrap(stack.pop())
+            kids = n.children()
+            out.append((n.nodeName(), kids.isEmpty()))
+            stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+        return out
+
+    return walk

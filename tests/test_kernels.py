@@ -21,7 +21,12 @@ from review_engine_spark.functions.text import (
     parse_budget,
     token_count,
 )
-from review_engine_spark.functions.vector import cosine_similarity, dot_product, l2_normalize
+from review_engine_spark.functions.vector import (
+    cosine_similarity,
+    dot_product,
+    l2_normalize,
+    vector_literal,
+)
 
 
 def one(df):
@@ -260,6 +265,19 @@ def test_dot_null_operand_is_zero(spark):
 def test_l2_normalize_zero_vector_stays_zero(spark):
     df = spark.createDataFrame([([0.0, 0.0],)], "v array<double>")
     assert one(df.select(l2_normalize(F.col("v")))) == [0.0, 0.0]
+
+
+def test_vector_literal_is_exact_and_folded(spark):
+    values = [
+        0.1, -0.0, 5e-324, 1.7976931348623157e308, -2.5e-308, 1 / 3,
+        math.inf, -math.inf, math.nan, 7,
+    ]
+    df = spark.range(1).select(vector_literal(values).alias("v"))
+    assert df.schema["v"].dataType.simpleString() == "array<double>"
+    # repr tells -0.0 from 0.0 and compares NaN to NaN
+    assert [repr(x) for x in one(df)] == [repr(float(x)) for x in values]
+    assert "split(" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert one(spark.range(1).select(vector_literal([]))) == []
 
 
 # --- hypothesis property tests (SURVEY §5.2.3) -----------------------------

@@ -39,6 +39,60 @@ def test_mmr_none_vector_tolerated(spark):
     assert [r["id"] for r in out] == [1, 2, 3]
 
 
+MMR_PASSTHROUGH = (
+    "title string, id string, price double, n int, flag boolean, "
+    "day date, rel float, vec array<double>, tags array<string>"
+)
+MMR_PASSTHROUGH_OUT = (
+    "struct<mmr_rank:bigint,id:string,rel:double,title:string,"
+    "price:double,n:int,flag:boolean,day:date,tags:array<string>>"
+)
+
+
+def test_mmr_passes_other_columns_through(spark, plan_nodes):
+    import datetime
+
+    day = datetime.date(2024, 2, 29)
+    rows = [
+        ("one", "a", 9.5, 3, True, day, 1.0, [1.0, 0.0], ["x"]),
+        ("twin", "b", 8.0, 2, False, None, 0.75, [1.0, 0.0], None),
+        (None, "c", None, None, None, day, 0.5, [0.0, 1.0], []),
+    ]
+    df = spark.createDataFrame(rows, MMR_PASSTHROUGH)
+    out = mmr_diversify(spark, df, "id", "rel", "vec", k=3)
+    assert out.schema.simpleString() == MMR_PASSTHROUGH_OUT
+    assert [tuple(r) for r in out.collect()] == [
+        (1, "a", 1.0, "one", 9.5, 3, True, day, ["x"]),
+        (2, "c", 0.5, None, None, None, None, day, []),
+        (3, "b", 0.75, "twin", 8.0, 2, False, None, None),
+    ]
+    nodes = plan_nodes(out)
+    assert [name for name, leaf in nodes if leaf] == ["LocalTableScan"]
+    assert not any("ExistingRDD" in name for name, _ in nodes)
+
+
+def test_mmr_nulls_stay_null_without_arrow(spark):
+    rows = [(None, "a", None, 1.0, [1.0, 0.0]), ("t", "b", 2.0, 0.5, None)]
+    df = spark.createDataFrame(
+        rows, "title string, id string, price double, rel double, vec array<double>"
+    )
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = mmr_diversify(spark, df, "id", "rel", "vec", k=2).collect()
+    finally:
+        spark.conf.set(key, before)
+    assert [(r["title"], r["price"]) for r in out] == [(None, None), ("t", 2.0)]
+
+
+def test_mmr_empty_candidates(spark):
+    df = spark.createDataFrame([], MMR_PASSTHROUGH)
+    out = mmr_diversify(spark, df, "id", "rel", "vec", k=3)
+    assert out.collect() == []
+    assert out.schema.simpleString() == MMR_PASSTHROUGH_OUT
+
+
 def test_mmr_ties_keep_first_seen(spark):
     rows = [(7, 0.5, [1.0, 0.0]), (3, 0.5, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "id long, rel double, vec array<double>")

@@ -13,6 +13,7 @@ from review_engine_spark.inference.stubs import (
     stub_embed_udf,
     stub_score_udf,
 )
+from review_engine_spark import pipelines
 from review_engine_spark.pipelines import build_product_embeddings, qa_answer, recommend
 
 REVIEWS = [
@@ -88,6 +89,45 @@ def test_recommend_end_to_end(spark):
         rerank_udf=stub_score_udf(), candidates=10, k=3, display=3,
     ).collect()
     assert [tuple(r) for r in out] == [tuple(r) for r in out2]
+
+
+def test_recommend_evaluates_candidates_once(spark, plan_nodes, monkeypatch):
+    """The candidate set is planned once (one cut, one rerank UDF, no
+    stats cross join), and the returned frame reads only the local MMR
+    result, never the candidates' lineage again."""
+    seen = []
+    original = pipelines.mmr_diversify
+
+    def recording(spark_, candidates, *args, **kwargs):
+        seen.append(candidates)
+        return original(spark_, candidates, *args, **kwargs)
+
+    monkeypatch.setattr(pipelines, "mmr_diversify", recording)
+    embedder = StubEmbedder(EMBED_DIM)
+    # embedded driver-side, so the rerank UDF is the plan's only Python UDF
+    emb = spark.createDataFrame(
+        [(a, embedder.encode([title])[0]) for a, title, *_ in PRODUCTS],
+        "parent_asin string, embed array<double>",
+    )
+    query = "family washer under 600"
+    out = recommend(
+        spark,
+        _products_df(spark),
+        emb,
+        query,
+        embedder.encode([query])[0],
+        rerank_udf=stub_score_udf(),
+        candidates=10,
+        k=3,
+        display=3,
+    )
+    assert len(out.collect()) == 3
+    (candidates,) = seen
+    names = [name for name, _ in plan_nodes(candidates)]
+    assert names.count("ArrowEvalPython") == 1
+    assert names.count("TakeOrderedAndProject") == 1
+    assert "BroadcastNestedLoopJoin" not in names
+    assert {name for name, leaf in plan_nodes(out) if leaf} == {"LocalTableScan"}
 
 
 def test_qa_answer_scopes_to_product(spark):
