@@ -32,6 +32,43 @@ def priced_first(df: DataFrame, price_col: str, order_col: str) -> DataFrame:
     return df.orderBy(F.col(price_col).isNull().asc(), F.col(order_col).asc())
 
 
+def _mmr_picks(ordered: list, id2score: dict, id2vec: dict, k: int, mmr_lambda: float) -> list:
+    """The greedy MMR picks over ``ordered`` (relevance-descending ids).
+
+    Each remaining candidate's max similarity to the picks is updated with
+    one dot product per pick. It takes the picks in pick order with the
+    same strict ``>`` as ``max()`` over them, so it equals that max bit for
+    bit.
+    """
+
+    def dot(a, b) -> float:
+        if a is None or b is None:
+            return 0.0  # rank.py:195-197 None tolerance
+        return sum(x * y for x, y in zip(a, b))
+
+    selected: list = []
+    remaining = list(ordered)
+    max_sim: dict = {}
+    while len(selected) < min(k, len(ordered)):
+        best_id, best_val = None, -1e9
+        for cid in remaining:
+            relevance = id2score[cid]
+            if not selected:
+                mmr_val = relevance
+            else:
+                sim = dot(id2vec[cid], id2vec[selected[-1]])
+                if cid not in max_sim or sim > max_sim[cid]:
+                    max_sim[cid] = sim
+                mmr_val = mmr_lambda * relevance - (1.0 - mmr_lambda) * max_sim[cid]
+            if mmr_val > best_val:
+                best_id, best_val = cid, mmr_val
+        if best_id is None:
+            break
+        selected.append(best_id)
+        remaining.remove(best_id)
+    return selected
+
+
 def mmr_diversify(
     spark: SparkSession,
     candidates: DataFrame,
@@ -55,7 +92,10 @@ def mmr_diversify(
     plain dot product of the normalized vectors (rank.py:195-202);
     first pick is pure relevance; ties keep the first-seen candidate
     (strict ``>`` comparison, rank.py:316), with candidate order =
-    relevance-descending (rank.py:297).
+    relevance-descending (rank.py:297). Each candidate's max similarity
+    to the picks is kept as a running max, so ``k`` picks over ``n``
+    candidates of dimension ``d`` cost O(k·n·d) driver work, where
+    recomputing the max over all picks on every pick costs O(k²·n·d).
 
     Returns one row per pick, in pick order: ``mmr_rank`` (long, from 1),
     ``id_col``, ``score_col`` (double, rounded to 6 dp), then every other
@@ -93,29 +133,8 @@ def mmr_diversify(
         norm = math.sqrt(sum(float(x) * float(x) for x in vec))
         id2vec[cid] = [float(x) / (norm + epsilon) for x in vec]
 
-    def dot(a, b) -> float:
-        if a is None or b is None:
-            return 0.0  # rank.py:195-197 None tolerance
-        return sum(x * y for x, y in zip(a, b))
-
     ordered = sorted(id2score, key=lambda cid: (-id2score[cid], cid))
-    selected: list = []
-    remaining = list(ordered)
-    while len(selected) < min(k, len(ordered)):
-        best_id, best_val = None, -1e9
-        for cid in remaining:
-            relevance = id2score[cid]
-            if not selected:
-                mmr_val = relevance
-            else:
-                max_sim = max(dot(id2vec[cid], id2vec[s]) for s in selected)
-                mmr_val = mmr_lambda * relevance - (1.0 - mmr_lambda) * max_sim
-            if mmr_val > best_val:
-                best_id, best_val = cid, mmr_val
-        if best_id is None:
-            break
-        selected.append(best_id)
-        remaining.remove(best_id)
+    selected = _mmr_picks(ordered, id2score, id2vec, k, mmr_lambda)
 
     out = (
         table.drop_columns([vec_col])

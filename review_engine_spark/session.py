@@ -13,6 +13,14 @@ cluster and encodes the session-level knobs that matter at 100 TB:
   the DuckDB oracle (DuckDB timestamps are TZ-naive UTC).
 - **shuffle.partitions** — sized to cores locally; on a real cluster this
   is superseded by AQE's coalescing from the 2048 initial partitions.
+- **DataFrame debugging off** — PySpark 4 otherwise captures the Python
+  call site on every ``Column`` call (active-session lookup, a conf get,
+  ``inspect.stack()`` and an origin set/clear over py4j), so six
+  ``Column`` calls send 62 py4j commands instead of 12
+  (``tests/test_session.py``). Errors keep their exception
+  class and message; they lose the ``file:line`` fragment of the
+  DataFrame query context. PySpark reads the flag once per process, at
+  the first ``Column`` call, from the session active then.
 """
 
 from __future__ import annotations
@@ -55,6 +63,8 @@ DEFAULT_CONF: dict[str, str] = {
     # F.broadcast, which bypasses the threshold ---
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "64MB",
+    # no Python call-site capture per Column call (module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # quiet progress bars in test logs
     "spark.ui.showConsoleProgress": "false",
 }

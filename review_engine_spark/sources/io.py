@@ -11,6 +11,10 @@ Parquet with column pruning + predicate pushdown.
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -95,6 +99,71 @@ def write_orc(
     writer.orc(path)
 
 
+# Session confs Spark's parquet schema inference reads (ParquetUtils.
+# inferSchema, ParquetFileFormat.readSchemaFromFooter and the
+# parquet-to-Spark schema converter): a different value can infer a
+# different schema from the same footer.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.files.ignoreCorruptFiles",
+)
+_SCHEMA_MEMO_MAX = 256
+_schema_memo: dict[tuple, StructType] = {}
+_schema_memo_lock = threading.Lock()
+
+
+def _local_files_key(path: str) -> tuple | None:
+    """``(path, size, mtime_ns, inode)`` of every file of a local parquet
+    table (one file, or a flat directory of files), or None for anything
+    else: a URI, a relative or glob path, a nested (partitioned) layout, or
+    a listing that cannot be read."""
+    if not os.path.isabs(path) or any(c in path for c in "*?[{"):
+        return None
+    try:
+        st = os.stat(path)
+        if stat.S_ISREG(st.st_mode):
+            entries = [(path, st)]
+        elif stat.S_ISDIR(st.st_mode):
+            with os.scandir(path) as it:
+                entries = [(e.path, e.stat()) for e in it]
+            if any(not stat.S_ISREG(s.st_mode) for _, s in entries):
+                return None
+        else:
+            return None
+    except OSError:
+        return None
+    return tuple(sorted((p, s.st_size, s.st_mtime_ns, s.st_ino) for p, s in entries))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the schema Spark inferred on an
+    earlier read of the same unchanged local files under the same schema
+    confs. Inference submits a Spark job that reads the footers, even for
+    one file; a read with the schema given submits none."""
+    files = _local_files_key(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    schema = _schema_memo.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_memo_lock:
+        if len(_schema_memo) >= _SCHEMA_MEMO_MAX:
+            del _schema_memo[next(iter(_schema_memo))]
+        _schema_memo[key] = df.schema
+    return df
+
+
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver fixture table; columnar scan with pushdown.
 
@@ -113,10 +182,21 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     (date_trunc buckets, window frames, funnel ordering) would shift
     with the harness JVM's default zone and hash-mismatch the TZ-naive
     DuckDB oracle.
+
+    The schema Spark infers is kept in memory and given to later reads of
+    the same table, so they skip the inference job. The memo key is each
+    data file's path, size, ``mtime_ns`` and inode, plus the session confs
+    that parquet schema inference reads (``_SCHEMA_CONFS``); a rewritten
+    file or a changed conf infers again. It applies to absolute local
+    paths only (one file or a flat directory); URIs and listings that
+    cannot be read are inferred on every read, and the memo holds at most
+    ``_SCHEMA_MEMO_MAX`` tables. Only the first read of a file in a
+    process pays the inference job, which makes timings depend on read
+    order; results never do, since the schema is the one Spark inferred.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) fixture read as ns longs under nanosAsLong
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

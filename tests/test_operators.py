@@ -4,6 +4,8 @@ plan-shape invariants (SURVEY §5.2.4, §4.3.3).
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +15,7 @@ from review_engine_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
-from review_engine_spark.operators.ranking import mmr_diversify, top_k_by
+from review_engine_spark.operators.ranking import _mmr_picks, mmr_diversify, top_k_by
 from review_engine_spark.operators.similarity import brute_force_topk, ivf_topk
 
 
@@ -99,6 +101,56 @@ def test_mmr_ties_keep_first_seen(spark):
     out = mmr_diversify(spark, df, "id", "rel", "vec", k=1).collect()
     # candidate order is (-score, id): id=3 first on equal scores
     assert out[0]["id"] == 3
+
+
+def _mmr_picks_quadratic(ordered, id2score, id2vec, k, mmr_lambda):
+    """The O(k²·n·d) loop ``_mmr_picks`` replaced: max similarity to the
+    picks recomputed from scratch for every candidate on every pick."""
+
+    def dot(a, b):
+        if a is None or b is None:
+            return 0.0
+        return sum(x * y for x, y in zip(a, b))
+
+    selected, remaining = [], list(ordered)
+    while len(selected) < min(k, len(ordered)):
+        best_id, best_val = None, -1e9
+        for cid in remaining:
+            relevance = id2score[cid]
+            if not selected:
+                mmr_val = relevance
+            else:
+                max_sim = max(dot(id2vec[cid], id2vec[s]) for s in selected)
+                mmr_val = mmr_lambda * relevance - (1.0 - mmr_lambda) * max_sim
+            if mmr_val > best_val:
+                best_id, best_val = cid, mmr_val
+        if best_id is None:
+            break
+        selected.append(best_id)
+        remaining.remove(best_id)
+    return selected
+
+
+def test_mmr_running_max_matches_quadratic_loop():
+    rng = random.Random(7)
+    for trial in range(400):
+        n, d = rng.randint(0, 30), rng.randint(1, 6)
+        # few distinct scores and small-integer components: tied scores
+        # and tied similarities; signed components: negative similarities
+        scores = [rng.choice([0.1, 0.5, 0.5, 0.9, rng.random()]) for _ in range(n)]
+        id2score = dict(zip(range(n), scores))
+        id2vec = {
+            cid: None if rng.random() < 0.15 else [
+                float(rng.randint(-2, 2)) if rng.random() < 0.5 else rng.gauss(0, 1) for _ in range(d)
+            ]
+            for cid in range(n)
+        }
+        ordered = sorted(id2score, key=lambda cid: (-id2score[cid], cid))
+        k = rng.choice([1, 3, 10, n, n + 5])
+        lam = rng.choice([0.0, 0.3, 0.7, 1.0])
+        want = _mmr_picks_quadratic(ordered, id2score, id2vec, k, lam)
+        assert _mmr_picks(ordered, id2score, id2vec, k, lam) == want, trial
+        assert len(want) == min(k, n)
 
 
 def test_exact_dedup_survivor_is_min_id(spark):
