@@ -1,28 +1,31 @@
-"""Benchmark runner (BASELINE.md target; driver records BENCH_r{N}.json).
+"""Benchmark runner: time every declared roster query (BASELINE.md target).
 
-Runs every declared roster query at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], timing plan-build +
-execution to completion via the noop sink (count() would let Catalyst
-prune projection-only work — a map-only query would be timed as a bare
-scan) and reporting best-of-N (default 2: first run pays one-time
-codegen JIT, the warm run is steady state). The slowest ~15 queries are
-then re-run 3x and recorded as the MEDIAN (single-sweep numbers on the
-heavy tier carry ±20% noise — see NOTES.md round-7); the sidecar's
-"median3_queries" map says which entries that applies to. Every drift
-checkpoint also records the fsync disk canary (tools/canaries.py) and
-the sidecar names the queries whose segment was disk-gusted — the CPU
-canary cannot see the host's external disk-I/O gusts (round-11 study).
+Runs each query from ``__spark_entry__.queries()`` at ``--sf-dir`` (default
+$SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1) in the engine's session and
+records the best of ``--repeat`` runs (default 2: the first run pays
+one-time whole-stage-codegen JIT, the warm run is the steady-state cost).
+A run is ``fn(spark, sf)`` plus a write to the noop sink, which evaluates
+every output column; ``count()`` would let Catalyst prune projection-only
+work, so a map-only query would be timed as a bare scan.
 
-The FINAL stdout line is ONE compact JSON object:
+Host load is measured, not corrected for. Each query's runs go under a
+Spark job group named after it, and right after them its jobs' stage
+metrics are read from Spark's status API: task CPU, GC, shuffle fetch
+wait and spill, each per run (the mean over the repeats). Task CPU moves
+less with host load than wall time does, so it is the figure to compare
+across runs of one tree; fetch wait and spill say where a slow wall time
+went.
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q_...": sec, ...}, "sf": 0.1, "n_queries": N}
+A full sweep writes ``BENCH_QUERIES.json`` next to this script: the
+summary, each query's record (wall and the four stage metrics) and the
+failure cause of every query that raised in all repeats. Subset runs
+write no sidecar. Every query gets a ``# timing`` line on stderr.
 
-Round 1 taught us the harness captures only a bounded tail of stdout, so
-the full 107-entry per-query map made the final line unparseable. The
-final line now carries only the slowest 8 queries in "queries"; the full
-map is written to BENCH_QUERIES.json next to this script and echoed
-line-by-line to stderr.
+The FINAL stdout line is one compact JSON object with the keys
+``metric, value, unit, queries, sf, n_queries, sec_per_query, n_failed,
+task_cpu_s``; ``value`` is the sum of the per-query walls. The harness
+keeps only a bounded tail of stdout, so ``queries`` holds just the slowest
+few and the line is held under 1500 bytes.
 
 Usage: python bench.py [--sf-dir DIR] [--repeat N] [query ...]
 """
@@ -36,348 +39,115 @@ import re
 import sys
 import time
 
+TAIL_BUDGET = 1500
+#: stage metrics kept per query, as ``perfbench.sparkmetrics`` names them
+EXEC_KEYS = ("exec.task_cpu_s", "exec.gc_s", "exec.fetch_wait_s", "exec.spill_bytes")
+
+
+def failure_text(exc: BaseException) -> str:
+    """``ExceptionClass: first message line``."""
+    lines = str(exc).strip().splitlines()
+    return f"{type(exc).__name__}: {lines[0] if lines else ''}"
+
+
+def query_record(walls: list[float], errors: list[BaseException], totals: dict[str, float]) -> dict:
+    """One query's record: best wall, its jobs' stage metrics per run
+    (``totals`` covers all runs), and the failure cause when every run
+    raised."""
+    rec = {"wall_s": round(min(walls), 3)}
+    rec.update({k: round(totals.get(k, 0.0) / len(walls), 3) for k in EXEC_KEYS})
+    if errors and len(errors) == len(walls):
+        rec["failure"] = failure_text(errors[-1])
+    return rec
+
+
+def summary(records: dict[str, dict], sf: float | None) -> dict:
+    """The run's totals, with the full per-query wall map."""
+    walls = {n: r["wall_s"] for n, r in records.items()}
+    total = sum(walls.values())
+    return {
+        "metric": "declared_query_wall_clock_total",
+        "value": round(total, 3),
+        "unit": "sec",
+        "queries": walls,
+        "sf": sf,
+        "n_queries": len(walls),
+        "sec_per_query": round(total / max(len(walls), 1), 3),
+        # a query that raised in every repeat adds ~0 s to the total, so
+        # a dying session must never read as a speed-up
+        "n_failed": sum("failure" in r for r in records.values()),
+        "task_cpu_s": round(sum(r["exec.task_cpu_s"] for r in records.values()), 3),
+    }
+
+
+def final_line(full: dict) -> str:
+    """``full`` as one JSON line whose ``queries`` keeps only the slowest
+    entries that fit the tail budget."""
+    ranked = sorted(full["queries"].items(), key=lambda kv: kv[1], reverse=True)
+    for k in range(8, -1, -1):
+        line = json.dumps(dict(full, queries=dict(ranked[:k])))
+        if len(line) <= TAIL_BUDGET:
+            return line
+    raise AssertionError(f"final bench line {len(line)}B > {TAIL_BUDGET}B")
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    )
-    # best-of-2 by default: the first run pays one-time whole-stage-codegen
-    # JIT compile (~1.5s on the regex-heavy plans — measured, NOTES.md);
-    # the warm run is the steady-state per-query cost that scales with data
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--repeat", type=int, default=2)
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    root = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, root)
     import __spark_entry__ as entrymod
+    from perfbench.sparkmetrics import StatusClient, per_op_totals
     from review_engine_spark.session import get_spark
-    from tools.canaries import DISK_QUIET_MAX_S, disk_canary
 
     spark = get_spark("bench")
+    sc = spark.sparkContext
+    status = StatusClient(spark)
     qs = entrymod.queries()
     if args.queries:
         qs = {k: v for k, v in qs.items() if k in set(args.queries)}
 
-    # warm the JVM + parquet footers once so per-query numbers measure the
-    # query, not session bring-up
+    # warm the JVM and parquet footers once, so per-query numbers measure
+    # the query, not session bring-up
     spark.read.parquet(f"{args.sf_dir}/part.parquet").count()
 
-    def materialize(df) -> None:
-        # NOT count(): Catalyst prunes projection-only work under a
-        # count, so a map-only query (regex scrub, tokenization) would
-        # be timed as a bare parquet scan. The noop sink evaluates every
-        # output column and discards the rows.
-        df.write.format("noop").mode("overwrite").save()
-
-    # Contention canary: three fast pure-Catalyst queries timed at sweep
-    # start and re-timed at sweep end. Their code never changes mid-run,
-    # so end/start drift beyond 1.5x means the MACHINE got slower while
-    # the sweep ran (r5's headline "regression" was exactly this —
-    # driver-host contention hitting the Python-worker-heavy paths). The
-    # "contended" flag lets a noisy host neither masquerade as a code
-    # regression nor mask a real one.
-    canary_names = ["q_group_count", "q_dot", "q_token_filter"]
-
-    def canary_pass() -> float:
-        total = 0.0
-        all_qs = entrymod.queries()
-        for cname in canary_names:
-            cfn = all_qs.get(cname)
-            if cfn is None:
-                continue
-            c0 = time.perf_counter()
-            materialize(cfn(spark, args.sf_dir))
-            total += time.perf_counter() - c0
-        return total
-
-    canary_pass()  # pay codegen JIT so the measured pass is steady-state
-    canary_start = canary_pass()
-
-    # Drift checkpoints: the canary re-timed every ~50 queries (plus once
-    # after the sweep). r8's driver sweep ran under end-of-sweep drift
-    # 0.83 — the HOST slowed ~17% mid-run, inflating the headline vs the
-    # builder's uncontended close-of-round run with no code change. The
-    # checkpoints localize WHEN the machine speed changed, so each
-    # query's timing can be re-expressed at a FIXED reference speed:
-    # corrected = raw · CANARY_REF_S / (mean of its bracketing canaries).
-    # The correction is reported ALONGSIDE the raw total, never instead
-    # of it (sidecar: drift-corrected per-query map + checkpoint list).
-    #
-    # Each checkpoint ALSO records the fsync disk canary (VERDICT r11
-    # item 1): the CPU canary is blind to external disk-I/O gusts on
-    # the spark.local.dir volume — the proven round-11 noise source for
-    # shuffle-heavy queries — so the CPU-only correction certified
-    # disk-gusted timings as clean and the driver/builder corrected
-    # headlines diverged 22%. Queries inside a disk-gusted segment are
-    # NAMED in the sidecar so a cross-round comparison can exclude or
-    # re-measure them instead of silently absorbing the gust.
-    checkpoints: list[tuple[int, float]] = [(0, canary_start)]
-    disk_checkpoints: list[tuple[int, float]] = [(0, disk_canary())]
-
-    timings: dict[str, float] = {}
-    qpos: dict[str, int] = {}
-    failed: list[str] = []
-    for qi, (name, fn) in enumerate(qs.items()):
-        best = None
-        ok = False
+    records: dict[str, dict] = {}
+    for name, fn in qs.items():
+        sc.setJobGroup(name, name)
+        walls: list[float] = []
+        errors: list[BaseException] = []
+        start = time.time()
         for _ in range(args.repeat):
             t0 = time.perf_counter()
             try:
-                df = fn(spark, args.sf_dir)
-                materialize(df)
-                ok = True
-            except Exception as e:  # noqa: BLE001
-                print(f"# {name} FAILED: {e}", file=sys.stderr)
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-        qpos[name] = qi
-        if not ok:
-            failed.append(name)
-        # drop any persist/cache a query left behind: queries must be
-        # independent measurements, and 200+ accumulated MEMORY_AND_DISK
-        # persists otherwise squeeze the heap as the sweep progresses
+                fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            except Exception as e:  # noqa: BLE001 - every failure is recorded
+                errors.append(e)
+                print(f"# {name} FAILED: {failure_text(e)}", file=sys.stderr)
+            walls.append(time.perf_counter() - t0)
+        end = time.time()
+        # fold now, not at the end: the status store keeps only the last
+        # 1,000 jobs. Streaming batches run under their own job groups and
+        # are attributed by submission time.
+        totals = per_op_totals(status.wait_idle(), status.stages(), [], [(name, start, end)])[name]
+        records[name] = rec = query_record(walls, errors, totals)
+        print(f"# timing {name} {rec['wall_s']} task_cpu_s={rec['exec.task_cpu_s']}", file=sys.stderr)
+        # queries must be independent measurements: drop any cache one
+        # left behind before the next runs
         spark.catalog.clearCache()
-        if not args.queries and qi % 50 == 49:
-            checkpoints.append((qi + 1, canary_pass()))
-            disk_checkpoints.append((qi + 1, disk_canary()))
-    n_sweep = len(qs)
-    if not args.queries:
-        checkpoints.append((n_sweep, canary_pass()))
-        disk_checkpoints.append((n_sweep, disk_canary()))
-
-    # Median-of-3 refinement for the slow tier: a single-sweep timing on
-    # the heaviest queries carries ±20% run-to-run noise (r7: q_pagerank
-    # recorded 5.44 s in the sweep vs 4.33 s solo — a phantom regression
-    # that cost a round of chasing). Re-run the slowest ~15 three times
-    # each and replace their sweep numbers with the MEDIAN, which solo
-    # re-measures reproduce within ~5%. The sweep stays the headline for
-    # the other ~230 queries (their costs are too small for the noise to
-    # matter cross-round). Full sweeps only: a targeted `--queries x`
-    # invocation is a quick spot-check, and tripling its runtime to
-    # compute a median the sidecar (also full-sweep-gated) never
-    # records would be pure waste.
-    top_tier = (
-        [
-            n
-            for n, _ in sorted(
-                timings.items(), key=lambda kv: kv[1], reverse=True
-            )[:15]
-            if n not in failed
-        ]
-        if not args.queries
-        else []
-    )
-    median3: dict[str, float] = {}
-    sweep_raw: dict[str, float] = dict(timings)
-    median3_canary_start = None
-    if top_tier:
-        # Fresh SparkContext for the slow tier (VERDICT r12 item 1):
-        # r12's end-of-sweep medians ran in a JVM carrying the whole
-        # 281-query sweep's state — accumulated localCheckpoint blocks,
-        # shuffle spill dirs, codegen-cache pressure — and recorded
-        # q_bfs_levels 28.5 s vs 6.3 s solo while BOTH canaries stayed
-        # quiet (this state is a third noise class, invisible to the
-        # CPU and disk rulers). A restarted context gets a clean block
-        # manager and fresh spark.local.dir subdirs; the correction
-        # bracket for median3 entries is re-measured IN the fresh
-        # context so their drift scaling is apples-to-apples.
-        spark.stop()
-        spark = get_spark("bench-median3")
-        spark.read.parquet(f"{args.sf_dir}/part.parquet").count()
-        canary_pass()  # codegen warm-up in the fresh context
-        median3_canary_start = canary_pass()
-    for name in top_tier:
-        runs: list[float] = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            try:
-                materialize(qs[name](spark, args.sf_dir))
-            except Exception as e:  # noqa: BLE001
-                print(f"# {name} median3 FAILED: {e}", file=sys.stderr)
-                break
-            runs.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-            # drive the ContextCleaner: checkpoint/broadcast blocks are
-            # released on GC, and an idle driver can lag a full query
-            # behind, bleeding block-manager state into the next timing
-            spark.sparkContext._jvm.System.gc()
-        if len(runs) == 3:
-            median3[name] = round(sorted(runs)[1], 3)
-            timings[name] = median3[name]
-
-    canary_end = canary_pass()
-    canary_drift = round(canary_end / max(canary_start, 1e-9), 2)
-    disk_end = disk_canary()
-
-    # Disk-gust flags: a query is suspect when EITHER disk reading
-    # bracketing its sweep segment exceeded the quiet floor
-    # (median3-replaced entries bracket on the post-sweep readings).
-    # Flagging, not correcting: the gust-to-inflation transfer is
-    # query-shape-dependent (shuffle-volume-proportional), so a scalar
-    # rescale would manufacture precision — the honest artifact names
-    # the suspect timings and lets the comparison re-measure them.
-    def _disk_gusted(lo: float, hi: float) -> bool:
-        return lo > DISK_QUIET_MAX_S or hi > DISK_QUIET_MAX_S
-
-    disk_gusted_queries: list[str] = []
-    post_disk = (disk_checkpoints[-1][1], disk_end)
-    for name in timings:
-        if name in median3:
-            gusted = _disk_gusted(*post_disk)
-        else:
-            i = qpos[name]
-            hi = next(
-                (
-                    j
-                    for j in range(len(disk_checkpoints))
-                    if disk_checkpoints[j][0] > i
-                ),
-                None,
-            )
-            if hi is None or hi == 0:
-                gusted = _disk_gusted(disk_checkpoints[-1][1], disk_end)
-            else:
-                gusted = _disk_gusted(
-                    disk_checkpoints[hi - 1][1], disk_checkpoints[hi][1]
-                )
-        if gusted:
-            disk_gusted_queries.append(name)
-
-    # Per-query drift correction: a query between checkpoints (a, b) is
-    # scaled by CANARY_REF_S / mean(c_a, c_b). r9 normalized to the
-    # run's OWN median canary, which made the "corrected" numbers of two
-    # runs of the same code incomparable (driver 1.064 vs builder 0.861
-    # s/q — different rulers; VERDICT r9 item 1). The reference is now a
-    # FIXED constant recorded once: the best-observed warm canary on the
-    # round-9 driver host (checkpoints bottomed at 1.319-1.435 s across
-    # the driver sweep and the builder's uncontended run). Every run —
-    # driver or builder, contended or not — now normalizes to the same
-    # ruler, so corrected headlines are cross-run comparable.
-    # median3-replaced entries were re-measured AFTER the sweep, so they
-    # scale by the post-sweep bracket (last checkpoint, canary_end).
-    CANARY_REF_S = 1.35
-    corrected: dict[str, float] = {}
-    c_ref = CANARY_REF_S
-    # median3 entries were measured in the fresh post-restart context:
-    # bracket them with the canaries taken THERE, not the dirty-JVM
-    # end-of-sweep checkpoint
-    post_sweep = (
-        (median3_canary_start + canary_end) / 2.0
-        if median3_canary_start is not None
-        else (checkpoints[-1][1] + canary_end) / 2.0
-    )
-    for name, raw in timings.items():
-        if name in median3:
-            seg = post_sweep
-        else:
-            i = qpos[name]
-            hi = next(
-                (j for j in range(len(checkpoints)) if checkpoints[j][0] > i),
-                None,
-            )
-            if hi is None or hi == 0:
-                seg = canary_end  # subset runs: single end bracket
-            else:
-                seg = (checkpoints[hi - 1][1] + checkpoints[hi][1]) / 2.0
-        corrected[name] = round(raw * c_ref / max(seg, 1e-9), 3)
 
     m = re.search(r"sf([0-9.]+)", args.sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_QUERIES.json"
-    )
-    full = {
-        "metric": "declared_query_wall_clock_total",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "n_queries": len(timings),
-        "sec_per_query": round(sum(timings.values()) / max(len(timings), 1), 3),
-        # a query that raised in EVERY repeat contributes ~0s, silently
-        # deflating the total — count them loudly so a mid-run session
-        # death (e.g. a concurrent local Spark fighting for the same
-        # resources) can never masquerade as a speedup
-        "n_failed": len(failed),
-        "canary_start_s": round(canary_start, 3),
-        "canary_end_s": round(canary_end, 3),
-        "canary_drift": canary_drift,
-        "contended": canary_drift > 1.5,
-        # headline re-expressed at sweep-start machine speed (see the
-        # checkpoint comment above) — compare THIS across rounds when
-        # canary_drift strays from 1.0; raw stays the honest wall-clock
-        "drift_corrected_value": round(sum(corrected.values()), 3),
-        "drift_corrected_sec_per_query": round(
-            sum(corrected.values()) / max(len(corrected), 1), 3
-        ),
-        "canary_ref_s": c_ref,  # FIXED cross-run ruler (see comment above)
-        # fsync disk canary brackets (see checkpoint comment): the CPU
-        # correction cannot see disk gusts, so these say whether the
-        # run's shuffle-heavy timings are trustworthy at all
-        "disk_start_s": round(disk_checkpoints[0][1], 3),
-        "disk_end_s": round(disk_end, 3),
-        "disk_quiet_max_s": DISK_QUIET_MAX_S,
-        "n_disk_gusted": len(disk_gusted_queries),
-    }
-    # subset invocations (explicit query args) must not clobber the
-    # full-roster sidecar the driver/analysis reads. The sidecar also
-    # records which slow-tier entries are median-of-3 (the final line
-    # has no room for the map).
-    # Queries whose in-sweep timing diverges >1.5x from their fresh-
-    # context median are NAMED: that gap is exactly the JVM-state noise
-    # class the context restart exists to remove, and a named list lets
-    # a cross-round comparison spot it instead of chasing phantom
-    # regressions (VERDICT r12 item 2's "done" criterion).
-    median3_divergent = sorted(
-        n
-        for n, med in median3.items()
-        if med > 0 and not (1 / 1.5 <= sweep_raw[n] / med <= 1.5)
-    )
+    full = summary(records, float(m.group(1).rstrip(".")) if m else None)
     if not args.queries:
-        with open(sidecar, "w") as fh:
-            json.dump(
-                dict(
-                    full,
-                    median3_queries=median3,
-                    median3_sweep_raw={
-                        n: sweep_raw[n] for n in median3
-                    },
-                    median3_divergent=median3_divergent,
-                    drift_corrected_queries=corrected,
-                    canary_checkpoints=[
-                        [i, round(c, 3)] for i, c in checkpoints
-                    ],
-                    disk_checkpoints=[
-                        [i, round(c, 3)] for i, c in disk_checkpoints
-                    ],
-                    disk_gusted_queries=sorted(disk_gusted_queries),
-                ),
-                fh,
-                indent=1,
-                sort_keys=True,
-            )
-    for name, dt in timings.items():
-        print(f"# timing {name} {dt}", file=sys.stderr)
-    # Tail-budget guard: the harness captures a bounded stdout tail, so
-    # the final line must stay comfortably small no matter how many
-    # queries the roster grows to — drop slowest-map entries until the
-    # serialized line fits a conservative budget, and hard-fail rather
-    # than emit an oversized (unparseable-at-capture) line.
-    tail_budget = 1500
-    k = 8
-    while k >= 0:
-        slowest = dict(
-            sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:k]
-        )
-        line = json.dumps(dict(full, queries=slowest))
-        if len(line) <= tail_budget:
-            break
-        k -= 1
-    assert len(line) <= tail_budget, f"final bench line {len(line)}B > {tail_budget}B"
+        failures = {n: r["failure"] for n, r in records.items() if "failure" in r}
+        with open(os.path.join(root, "BENCH_QUERIES.json"), "w") as fh:
+            json.dump(dict(full, records=records, failures=failures), fh, indent=1, sort_keys=True)
     sys.stderr.flush()
-    print(line, flush=True)
+    print(final_line(full), flush=True)
     return 0
 
 

@@ -29,7 +29,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CONF"]
+__all__ = ["get_spark", "host_defaults", "DEFAULT_CONF"]
 
 DEFAULT_CONF: dict[str, str] = {
     # --- correctness-critical ---
@@ -70,6 +70,15 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def host_defaults() -> tuple[int, str]:
+    """``(cores, driver heap)`` for a local session: ``$SPARK_GRAFT_CPUS``
+    or the cores this process may run on, and ``$SPARK_GRAFT_DRIVER_MEM``
+    or half of physical RAM, capped at 16g."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or len(os.sched_getaffinity(0))
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return cpus, os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(16, half_gib))}g")
+
+
 def get_spark(
     app_name: str = "review-engine-spark",
     master: str | None = None,
@@ -78,12 +87,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for local runs; on a cluster, leave unset and submit normally.
+    ``master`` defaults to ``local[cores]`` from :func:`host_defaults` for
+    local runs; on a cluster, leave unset and submit normally.
     ``shuffle_partitions`` defaults to the local core count — on a real
     cluster pass ~2-3× total executor cores and let AQE coalesce.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = host_defaults()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -94,14 +103,11 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
         # Local mode packs every "executor" thread into ONE driver JVM,
-        # whose default 1 g heap is the per-executor-GB equivalent of a
-        # 32-core executor with 32 MB each — measured to OOM a 32-thread
+        # whose default 1 g heap was measured to OOM a 32-thread
         # full-roster sweep at sf0.1 once session state accumulates. Size
-        # it like a real executor instead (only effective at JVM launch;
-        # a no-op via getOrCreate on a live session).
-        conf.setdefault(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
+        # it from the host instead (only effective at JVM launch; a no-op
+        # via getOrCreate on a live session).
+        conf.setdefault("spark.driver.memory", driver_mem)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

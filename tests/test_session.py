@@ -32,3 +32,19 @@ def test_column_calls_skip_call_site_capture():
     out = subprocess.run([sys.executable, "-c", probe], capture_output=True, text=True, timeout=300, check=True)
     sent = json.loads(out.stdout.strip().splitlines()[-1])["sent"]
     assert 0 < sent <= 24
+
+
+def test_local_session_is_sized_from_the_host(monkeypatch):
+    """No env override: as many local threads as usable cores, and half of
+    physical RAM (at most 16g) for the driver heap. Each env var wins."""
+    import os
+
+    from review_engine_spark.session import host_defaults
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    assert host_defaults() == (len(os.sched_getaffinity(0)), f"{max(1, min(16, half_gib))}g")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert host_defaults() == (3, "2g")

@@ -170,6 +170,8 @@ def main(argv: list[str] | None = None) -> int:
         if only and name not in only:
             continue
         t0 = time.time()
+        # attribute the query's jobs to it in the UI and event log
+        spark.sparkContext.setJobGroup(name, name)
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
