@@ -2017,7 +2017,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-located fact⋈dim join off bucketed storage: both sides are
     written ``bucketBy(8, custkey)`` and re-read through the catalog, so
     the SortMergeJoin consumes the buckets directly — NO Exchange on
-    either join input (asserted by tools/plan_audit.py). This is the
+    either join input (asserted in tests/test_bucketing.py). This is the
     100 TB posture for repeated joins on a stable key: the shuffle is
     paid once at write time and amortized over every subsequent join /
     aggregation on that key (the reference's dict probe, rank.py:21,
@@ -2077,7 +2077,7 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directory-partition pruning: documents written ``partitionBy
     (lang)`` then read back with a partition-column filter — the scan
     lists ONLY the lang=en directory (PartitionFilters in the plan,
-    asserted by tools/plan_audit.py), never touching the other
+    asserted in tests/test_bucketing.py), never touching the other
     partitions' files. At 100 TB this is the difference between reading
     one language's share and reading everything; the write is cached
     per (session, sf_dir) like q_bucketed_join's buckets."""

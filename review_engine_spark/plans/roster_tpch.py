@@ -38,8 +38,8 @@ def _t(spark, sf_dir, name):
 # ---------------------------------------------------------------------------
 # Q1 — pricing summary report. One full lineitem scan, 4-way aggregate on a
 # tiny (flag, status) key: pure map-side partial agg + 6-group final — the
-# canonical "scan-dominated" query; at 100 TB the only cost is the scan and
-# the scan reads exactly the 7 needed columns (checked via plan_audit).
+# canonical "scan-dominated" query; at scale the only cost is the scan, and
+# the scan reads exactly the 7 needed columns.
 # ---------------------------------------------------------------------------
 @declared(
     oracle="""

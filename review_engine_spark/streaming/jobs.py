@@ -100,115 +100,26 @@ def _snapshot(
     """Drive a finite streaming DataFrame to completion and return the
     result snapshot as a batch DataFrame.
 
-    Sink selection (``SPARK_GRAFT_STREAM_SINK``):
-
-    - ``memory`` (default) — the memory sink + an Arrow ``toPandas``
-      snapshot. Driver-bound by design: correct and fast for the
-      sf0.01/sf0.1 oracle contract, where every runner's full output is
-      a few thousand rows, but it would funnel a large source through
-      the driver.
-    - ``files`` — the production-shaped path, used by the 100× stress
-      chunk (SCALING.md) so the measurement never bottlenecks on a
-      driver collect. ``append``-mode queries land in a parquet
-      ``FileStreamSink`` (exactly-once via its ``_spark_metadata``
-      transaction log); ``update``/``complete`` queries run through
-      ``foreachBatch`` parquet writes. ``foreachBatch`` is only
-      at-least-once, so each landing is made IDEMPOTENT by batch id:
-      update mode overwrites ``out_dir/batch-<id>`` (a retried batch
-      replaces its own subdirectory instead of double-appending — the
-      union of subdirs is then exactly the row multiset the memory sink
-      accumulates), complete mode overwrites the whole directory (last
-      write is the final snapshot). The return value is the directory
-      read back through the DISTRIBUTED batch reader — no row ever
-      crosses the driver; the temp directory is registered for cleanup
-      at interpreter exit (the lazy DataFrame must outlive this call).
-      A runner whose stream emits zero rows returns an empty DataFrame
-      with the stream's schema (the foreachBatch modes write no files
-      to infer from). Parity between both paths is pinned per output
-      mode in tests/test_streaming_sinks.py.
+    The result lands in the memory sink and is snapshotted through Arrow
+    ``toPandas``: every runner's full output is a few thousand rows at
+    the fixture scales, so a driver-side snapshot is the cheapest exact
+    landing (the parquet file-sink landing is ``run_stream_to_parquet``).
     """
-    import atexit
-    import os
-    import shutil
-
-    use_files = (
-        os.environ.get("SPARK_GRAFT_STREAM_SINK", "memory") == "files"
-    )
     with _state_partitions(spark, state_partitions), tempfile.TemporaryDirectory() as ckpt:
-        if not use_files:
-            q = (
-                stream_df.writeStream.outputMode(mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination(30)
-            out = spark.table(name)
-            # snapshot through Arrow before the memory table goes away
-            # (collect->python rows is 10x slower at 100k rows)
-            return spark.createDataFrame(out.toPandas(), out.schema)
-        out_dir = tempfile.mkdtemp(prefix=f"{name}_sink_")
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-        if mode == "append":
-            q = (
-                stream_df.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        elif mode == "complete":
-
-            def land(batch_df: DataFrame, batch_id: int) -> None:
-                batch_df.write.mode("overwrite").parquet(out_dir)
-
-            q = (
-                stream_df.writeStream.outputMode(mode)
-                .foreachBatch(land)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        else:
-            # update mode: one subdirectory per batch id ("batch-<id>",
-            # deliberately NOT key=value so partition discovery never
-            # injects a batch column into the schema); overwrite makes a
-            # retried batch replace rather than double-append.
-            def land(batch_df: DataFrame, batch_id: int) -> None:
-                batch_df.write.mode("overwrite").parquet(
-                    f"{out_dir}/batch-{batch_id}"
-                )
-
-            q = (
-                stream_df.writeStream.outputMode(mode)
-                .foreachBatch(land)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
+        q = (
+            stream_df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
-        has_files = any(
-            f.endswith(".parquet")
-            for root, _dirs, files in os.walk(out_dir)
-            if "_spark_metadata" not in root
-            for f in files
-        )
-        if not has_files:
-            return spark.createDataFrame([], stream_df.schema)
-        if mode == "update":
-            # pass the batch dirs explicitly: a glob path works but makes
-            # FileStreamSink.hasMetadata stat the literal glob string and
-            # log a FileNotFoundException fallback on every read
-            batch_dirs = sorted(
-                os.path.join(out_dir, d)
-                for d in os.listdir(out_dir)
-                if d.startswith("batch-")
-            )
-            return spark.read.parquet(*batch_dirs)
-        return spark.read.parquet(out_dir)
+        out = spark.table(name)
+        # snapshot through Arrow before the memory table goes away
+        # (collect->python rows is 10x slower at 100k rows)
+        return spark.createDataFrame(out.toPandas(), out.schema)
 
 
 def _events_stream(
@@ -1308,11 +1219,9 @@ def run_stream_quality_gate(
     stateless narrow map, so no watermark is needed and every input row
     emits exactly one verdict row).
 
-    This is the 100 TB/day front-door shape: filter documents AS THEY
-    ARRIVE instead of landing raw text and re-scanning it in batch.
-    Scale: zero state, zero shuffle — throughput is bounded by scan +
-    regex only, and the file sink path (SPARK_GRAFT_STREAM_SINK=files)
-    keeps the output off the driver.
+    This is the front-door shape: filter documents AS THEY ARRIVE
+    instead of landing raw text and re-scanning it in batch. Zero state,
+    zero shuffle: throughput is bounded by scan + regex only.
     """
     from review_engine_spark.operators.curation import gopher_gate
 
@@ -1359,17 +1268,11 @@ def run_stream_ingest_gate(
     stream stays stateless and the per-batch plan is the EXACT batch
     expression tree — batch/stream parity by construction.
 
-    Sink selection mirrors ``_snapshot``: ``foreachBatch`` is
-    at-least-once, so the files path lands each batch idempotently in
-    its own overwritten ``batch-<id>`` subdirectory and reads the union
-    back through the distributed reader; the memory path accumulates
-    Arrow snapshots per batch (driver-bound by design, the oracle
-    contract's scale). Parity between the two is pinned in
-    tests/test_streaming_sinks.py.
+    Each batch's verdicts are snapshotted through Arrow on the driver,
+    as ``_snapshot`` does, because the full output is a few thousand
+    rows at the fixture scales.
     """
-    import atexit
     import os
-    import shutil
 
     from review_engine_spark.operators.curation import ingest_gate_frame
     from review_engine_spark.plans.roster_curation import (
@@ -1407,19 +1310,11 @@ def run_stream_ingest_gate(
         )
     stream = reader.load(src_path)
 
-    use_files = (
-        os.environ.get("SPARK_GRAFT_STREAM_SINK", "memory") == "files"
-    )
-    # memory snapshots are keyed by batch_id (last write wins) so an
-    # at-least-once batch replay is idempotent, mirroring the files
-    # path's overwritten batch-<id> dirs (ADVICE r11: a plain append
-    # would duplicate verdict rows on replay)
+    # snapshots are keyed by batch_id (last write wins) because
+    # foreachBatch is at-least-once: a plain append would duplicate
+    # verdict rows on replay
     frames: dict[int, pd.DataFrame] = {}
     landed_schema: dict[str, object] = {}  # set by land(); analysis free
-    out_dir = None
-    if use_files:
-        out_dir = tempfile.mkdtemp(prefix="stream_ingest_gate_sink_")
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         gated = ingest_gate_frame(
@@ -1427,15 +1322,10 @@ def run_stream_ingest_gate(
             score_bigrams_against(batch_df, cab, un, vocab_n),
             cut,
         )
-        if use_files:
-            gated.write.mode("overwrite").parquet(
-                f"{out_dir}/batch-{batch_id}"
-            )
-        else:
-            frames[batch_id] = gated.toPandas()
-            # the contracted Spark schema, read off the already-analyzed
-            # per-batch frame (pandas dtypes alone would be lossy)
-            landed_schema["s"] = gated.schema
+        frames[batch_id] = gated.toPandas()
+        # the contracted Spark schema, read off the already-analyzed
+        # per-batch frame (pandas dtypes alone would be lossy)
+        landed_schema["s"] = gated.schema
 
     with tempfile.TemporaryDirectory() as ckpt:
         q = (
@@ -1447,15 +1337,6 @@ def run_stream_ingest_gate(
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
-    if use_files:
-        batch_dirs = sorted(
-            os.path.join(out_dir, d)
-            for d in os.listdir(out_dir)
-            if d.startswith("batch-")
-        )
-        if not batch_dirs:
-            return spark.createDataFrame([], out_schema())
-        return spark.read.parquet(*batch_dirs)
     if not frames:
         return spark.createDataFrame([], out_schema())
     ordered = [frames[b] for b in sorted(frames)]

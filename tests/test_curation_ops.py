@@ -606,7 +606,7 @@ def test_substring_xxhash64_path_matches_md5(spark):
         assert a == b, fn.__name__
 
 
-def test_substring_detect_scrub_share_one_dup_frame(spark):
+def test_substring_detect_scrub_share_one_dup_frame(spark, plan_nodes):
     """Pipeline sharing (VERDICT r9 item 2): a detect -> scrub pipeline
     that passes one persisted substring_dup_occurrences frame into both
     halves must (a) produce the self-contained results, and (b) read the
@@ -640,44 +640,15 @@ def test_substring_detect_scrub_share_one_dup_frame(spark):
         assert sorted(map(tuple, scr.collect())) == sorted(
             map(tuple, scr_self.collect())
         )
-        import sys
-        from pathlib import Path
-
-        sys.path.insert(
-            0, str(Path(__file__).resolve().parent.parent / "tools")
-        )
-        from plan_audit import final_plan_only
-
-        jvm = spark._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
         # Self-contained forms re-run the rank Window over the shingle
         # hash; shared forms read the residue from cache, so their OUTER
         # tree keeps only det's run-merge pair (lag + running sum) and
-        # scr keeps none. Spark 4 prints the cached relation's own plan
-        # nested under InMemoryTableScan — drop those deeper-indented
-        # subtree lines before counting.
-        def outer_tree(tree: str) -> str:
-            out, skip = [], None
-            for ln in tree.split("\n"):
-                ind = len(ln) - len(ln.lstrip(" :+-*"))
-                if skip is not None:
-                    if ln.strip() and ind > skip:
-                        continue
-                    skip = None
-                out.append(ln)
-                if "InMemoryTableScan" in ln:
-                    skip = ind
-            return "\n".join(out)
-
+        # scr keeps none. The walk stops at the InMemoryTableScan leaf,
+        # so the cached relation's own plan is not counted.
         for shared, n_win in ((det, 2), (scr, 0)):
-            plan = final_plan_only(
-                shared._jdf.queryExecution().explainString(mode)
-            )
-            tree = outer_tree(plan.split("\n\n(")[0])
-            assert "InMemoryTableScan" in tree
-            assert tree.count("Window") == n_win, tree
+            names = [name for name, _ in plan_nodes(shared)]
+            assert "InMemoryTableScan" in names
+            assert names.count("Window") == n_win, names
     finally:
         dup.unpersist()
 

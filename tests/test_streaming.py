@@ -1,4 +1,5 @@
-"""Streaming upsert (foreachBatch MERGE) equivalence."""
+"""Streaming runners against their batch twins: upsert, near-dup state,
+and the quality and ingest gates."""
 
 from __future__ import annotations
 
@@ -261,3 +262,96 @@ def test_stream_near_dup_coarse_state_matches_per_key(spark, sf_dir):
     chunked = agg(run_stream_near_dup(spark, sf_dir, n_chunks=3))
     assert per_key == coarse == chunked
     assert sum(per_key.values()) > 0
+
+
+def test_stream_quality_gate_equals_batch_gate(spark, tmp_path):
+    """The streaming gate must emit exactly the batch gate's verdicts —
+    same expression tree (operators.curation.gopher_gate), streaming
+    only adds delivery."""
+    import pandas as pd
+
+    from review_engine_spark.operators.curation import gopher_gate
+    from review_engine_spark.streaming.jobs import run_stream_quality_gate
+
+    ok = "the a of to and in " + "wordy " * 24  # 30 words, stops, alpha
+    texts = [ok, "tiny doc", "x " * 100, ok + " zz99 " * 0]
+    pd.DataFrame(
+        {"doc_id": range(1, len(texts) + 1), "text": texts}
+    ).to_parquet(tmp_path / "documents.parquet")
+
+    batch = {
+        (r["doc_id"], r["keep"], r["reason"])
+        for r in gopher_gate(
+            spark.read.parquet(str(tmp_path / "documents.parquet"))
+        ).collect()
+    }
+    stream = {
+        (r["doc_id"], r["keep"], r["reason"])
+        for r in run_stream_quality_gate(spark, str(tmp_path)).collect()
+    }
+    assert stream == batch and len(stream) == len(texts)
+
+
+def test_ingest_gate_multibatch_equals_batch_twin(spark, tmp_path):
+    """Multi-micro-batch delivery (maxFilesPerTrigger=1 over a
+    several-file corpus) must emit exactly the batch twin's verdicts:
+    the LM artifact + cutoff are trained once on the standing corpus,
+    so per-batch gating is the identical expression tree per document.
+    Also pins union-of-reasons: a doc failing several gates reports
+    every gate's first-failing reason, prefixed."""
+    import pandas as pd
+
+    from review_engine_spark.operators.curation import ingest_gate_frame
+    from review_engine_spark.plans.roster_curation import (
+        _rank_cutoff,
+        score_bigrams_against,
+        train_bigram_stats,
+    )
+    from review_engine_spark.streaming.jobs import run_stream_ingest_gate
+    import pyspark.sql.functions as F
+
+    ok = ("the a of to and in " + "wordy common text here " * 10).strip()
+    texts = [
+        ok * 3,               # long enough, stopwords, alpha
+        "tiny doc",           # fails everything short
+        "x " * 120,           # no stopwords, low quality
+        ok * 3,               # duplicate of 1 — same verdict
+        ("9 8 7 " * 40).strip(),  # numeric: low_alpha + und lang
+    ]
+    docs_pd = pd.DataFrame(
+        {
+            "doc_id": range(1, len(texts) + 1),
+            "text": texts,
+            "n_chars": [len(t) for t in texts],
+        }
+    )
+    corpus = tmp_path / "documents.parquet"
+    corpus.mkdir()
+    # several part files so maxFilesPerTrigger=1 yields real multi-batch
+    for i in range(3):
+        docs_pd.iloc[i::3].to_parquet(corpus / f"part-{i}.parquet")
+
+    docs = spark.read.parquet(str(corpus))
+    stats = train_bigram_stats(docs)
+    scored = score_bigrams_against(docs, *stats)
+    cut = _rank_cutoff(
+        scored.select("doc_id", F.col("bigram_logprob").alias("_lp")),
+        "_lp", 3, 10,
+    )
+    batch = sorted(
+        tuple(r) for r in ingest_gate_frame(docs, scored, cut).collect()
+    )
+    stream = sorted(
+        tuple(r)
+        for r in run_stream_ingest_gate(
+            spark, str(tmp_path), stats, cut, max_files_per_trigger=1
+        ).collect()
+    )
+    assert stream == batch and len(stream) == len(texts)
+    reasons = {r[0]: r[2] for r in batch}
+    keeps = {r[0]: r[1] for r in batch}
+    assert keeps[2] is False
+    # union-of-reasons: the tiny doc fails quality AND gopher AND has no
+    # bigram evidence strong enough to pass — every prefix present
+    assert reasons[2].startswith("quality:too_short,gopher:too_few_words")
+    assert keeps[1] == keeps[4] and reasons[1] == reasons[4]

@@ -1,25 +1,26 @@
-"""TPC-H-suite stress run: do the classic-warehouse plans scale linearly?
+"""Build a K× replica of the sf0.1 fixture for scale runs.
 
-Replicates the sf0.1 fixture star schema K× (default 20×) into a temp
+Replicates the sf0.1 fixture star schema K× (default 10×) into a
 parquet dir — each copy gets a disjoint key space (all join keys shifted
 by copy_index * stride), so per-copy join selectivity and group
 cardinalities are preserved and the corpus behaves like K independent
-shards of one big warehouse (~12M lineitem rows at 20×). Then times each
-TPC-H roster query on the original and the scaled corpus and reports the
-time ratio vs the input ratio: a plan whose ratio tracks the input ratio
-(after ~1s fixed per-query overhead amortizes) is scan/shuffle-linear —
-the property that matters at 100 TB; a super-linear ratio exposes an
-accidental O(n²) (unblocked self-join, broadcast of a corpus-scaled
-table, single-reducer sort).
+shards of one big warehouse (~6M lineitem rows at 10×). Time the
+replica with ``bench.py --sf-dir <replica>`` and compare against the
+sf0.1 run: a query whose wall ratio tracks the input ratio is
+scan/shuffle-linear; a super-linear ratio exposes an accidental O(n²)
+(unblocked self-join, broadcast of a corpus-scaled table,
+single-reducer sort).
 
-Usage: python tools/stress_tpch.py [K] [query ...]
+Usage: [STRESS_DIR=<dir>] python tools/stress_tpch.py [K]
+
+The replica directory is printed on the last line. ``STRESS_DIR``
+reuses a replica this tool built with the same salting scheme.
 """
 
 from __future__ import annotations
 
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -40,7 +41,7 @@ KEY_COLS = {
     # Non-TPC-H fact tables, replicated the same way when stressing the
     # event/document rosters: shifting user_id / doc_id per copy keeps
     # per-entity history length constant, so the experiment measures
-    # parallel-shard scaling (the 100 TB shape), not per-key growth.
+    # parallel-shard scaling, not per-key growth.
     "events": ["event_id", "user_id"],
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
@@ -142,41 +143,16 @@ def build_salts(k: int) -> list[str]:
 
 
 def main() -> int:
-    k = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-    wanted = sys.argv[2:]
+    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 
     from pyspark.sql import functions as F
 
     from review_engine_spark.session import get_spark
     from review_engine_spark.sources.io import read_parquet_table
 
-    # 24 g heap (same as the round-2 SCALING experiment): the default 1 g
-    # local-mode heap cannot hold 32 concurrent sort-task buffers over a
-    # 12M-row shuffle — that is an environment limit, not a plan property.
-    # spark.driver.memory only takes effect at JVM launch, so an already-
-    # running session would silently keep its heap: fail loudly instead.
-    from pyspark.sql import SparkSession
-
-    assert SparkSession.getActiveSession() is None, (
-        "stress_tpch must launch its own JVM to set spark.driver.memory; "
-        "run it in a fresh process"
-    )
-    # Partition count scales with the data (capped): a K=100 corpus in
-    # the fixture's 32 partitions gives per-task aggregates ~100x the
-    # tuned size and OOM'd the 24 g heap (q_bfs_levels, r6). On a real
-    # cluster this is the "partitions ∝ input bytes, AQE coalesces the
-    # small stages back down" doctrine from session.py; the stress JVM
-    # must apply it too or it measures heap exhaustion, not plans.
-    shuffle_parts = min(1024, 32 * max(1, k // 4))
-    spark = get_spark(
-        "stress-tpch",
-        shuffle_partitions=shuffle_parts,
-        extra_conf={"spark.driver.memory": "24g"},
-    )
-    got = spark.conf.get("spark.driver.memory", "unset")
-    assert got == "24g", f"spark.driver.memory={got}; 24g did not take effect"
-    # STRESS_DIR: reuse an already-replicated corpus (chunked sweeps over
-    # many queries re-run this script; replication is the expensive part).
+    spark = get_spark("stress-tpch")
+    # STRESS_DIR: reuse an already-replicated corpus (replication is the
+    # expensive part).
     import os
 
     reuse = os.environ.get("STRESS_DIR")
@@ -194,8 +170,8 @@ def main() -> int:
             )
         have = marker.read_text().strip()
         if have == SALT_VERSION:
-            print(f"# reusing replica {reuse} (K must match its build)")
-            return _run(spark, k, wanted, reuse)
+            print(f"# reusing replica (K must match its build)\n{reuse}")
+            return 0
         print(
             f"# replica {reuse} has salt scheme {have} != {SALT_VERSION};"
             " rebuilding"
@@ -292,65 +268,7 @@ def main() -> int:
             scaled = base  # dims shared across copies (broadcast at any K)
         scaled.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
     Path(out_dir, "SALT_VERSION").write_text(SALT_VERSION + "\n")
-    return _run(spark, k, wanted, out_dir)
-
-
-def _run(spark, k: int, wanted: list[str], out_dir: str) -> int:
-    import __spark_entry__ as entrymod
-
-    qs = {
-        n: fn
-        for n, fn in entrymod.queries().items()
-        if (n in wanted if wanted else n.startswith("q_tpch_"))
-    }
-    print(f"# {len(qs)} queries, input ratio {k}x on fact tables")
-    # Only fixture-LAYOUT errors are skippable (a replica dir lacks the
-    # partitioned/bucketed/binary side-fixtures some queries build from):
-    # AnalysisException = missing table/path/column at plan time. Anything
-    # else — executor OOM, Py4J error, wrong results shape — is exactly
-    # the scale regression this harness exists to catch, so it propagates
-    # and fails the run instead of printing 'skip'.
-    from pyspark.errors import AnalysisException
-
-    rows = []
-    skipped = []
-    for name, fn in qs.items():
-        t_small = t_big = None
-        try:
-            for sf_dir in (SF_DIR, out_dir):
-                best = None
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    # noop sink, not count(): count lets Catalyst prune
-                    # projection-only work (a map-only query would be
-                    # "timed" as a bare scan — observed as phantom 1.0x
-                    # ratios at K=100 for the regex/tokenizer queries)
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    dt = time.perf_counter() - t0
-                    best = dt if best is None else min(best, dt)
-                if sf_dir == SF_DIR:
-                    t_small = best
-                else:
-                    t_big = best
-        except AnalysisException as e:
-            skipped.append(name)
-            print(f"skip      {name}: {repr(e)[:100]}", flush=True)
-            continue
-        ratio = t_big / max(t_small, 1e-9)
-        rows.append((name, t_small, t_big, ratio))
-        print(f"{name}: {t_small:.2f}s -> {t_big:.2f}s  ({ratio:.1f}x)", flush=True)
-    if skipped:
-        print(f"# skipped (fixture layout): {' '.join(skipped)}")
-    if not rows:
-        print("# no queries ran")
-        return 1
-    worst = max(rows, key=lambda r: r[3])
-    print(
-        f"# worst ratio {worst[0]} {worst[3]:.1f}x vs input {k}x — "
-        + ("OK (sub-linear)" if worst[3] <= k * 1.5 else "SUPER-LINEAR: investigate")
-    )
+    print(out_dir)
     return 0
 
 
