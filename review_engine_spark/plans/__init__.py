@@ -73,6 +73,7 @@ _TIER1_FIXED: list[str] = [
     "q_hll_md5",
     "q_ndcg_eval",
     "q_recsys_eval",
+    "q_mmr",
 ]
 
 _REPO = Path(__file__).resolve().parents[2]
@@ -97,7 +98,9 @@ _LAST_GREEN: dict[str, int] = last_green(sorted(_REPO.glob("CORRECTNESS_r*.json"
 _REGISTERED: list[str] = list(QUERIES)
 
 
-def _driver_order(proofs: dict[str, int] = _LAST_GREEN) -> list[str]:
+def _driver_order(
+    proofs: dict[str, int] = _LAST_GREEN, tier1: list[str] = _TIER1_FIXED
+) -> list[str]:
     seen: set[str] = set()
     ordered: list[str] = []
 
@@ -108,7 +111,7 @@ def _driver_order(proofs: dict[str, int] = _LAST_GREEN) -> list[str]:
                 ordered.append(n)
 
     oracle = [n for n in _REGISTERED if n in ORACLES]
-    take(_TIER1_FIXED)
+    take(tier1)
     take(n for n in oracle if n not in proofs)
     # tier 3: oldest proof first (registration order breaks ties via the
     # stable sort).

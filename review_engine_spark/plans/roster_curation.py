@@ -7,6 +7,8 @@ deterministic LCG seeding keeps even the clustering step SQL-replayable.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from review_engine_spark.operators.curation import (
@@ -18,6 +20,7 @@ from review_engine_spark.operators.curation import (
 from review_engine_spark.operators.cluster import iter_checkpoint
 from review_engine_spark.operators.kmeans import kmeans_fit
 from review_engine_spark.plans import declared
+from review_engine_spark.scratch import artifact, artifact_key, save_artifact
 from review_engine_spark.sources.io import read_parquet_table
 
 
@@ -730,59 +733,22 @@ def train_bpe(docs: DataFrame, k: int = _BPE_ROUNDS) -> list[tuple]:
     return merges
 
 
-def _bpe_artifact_path(sf_dir: str, k: int) -> str:
-    """Tokenizer-artifact location for (corpus, K): content-addressed by
-    the documents table's (realpath, mtime, size) stat so a regenerated
-    fixture can never serve stale rules."""
-    import hashlib
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(p)
-    digest = hashlib.md5(
-        f"{os.path.realpath(p)}|{st.st_mtime_ns}|{st.st_size}|k={k}".encode()
-    ).hexdigest()[:16]
-    root = os.environ.get(
-        "SPARK_GRAFT_BPE_DIR", "/tmp/review_engine_spark_bpe"
-    )
-    return os.path.join(root, f"bpe_rules_k{k}_{digest}.json")
+def _bpe_key(sf_dir: str, k: int) -> str | None:
+    return artifact_key("bpe", os.path.join(sf_dir, "documents.parquet"), k=k)
 
 
 def bpe_rules(
     spark: SparkSession, sf_dir: str, k: int = _BPE_ROUNDS
 ) -> list[tuple]:
-    """Trained BPE merge rules for a corpus, via the persisted tokenizer
-    artifact (VERDICT r9 item 6): load the JSON rules file if one
-    matches the corpus stat, else train once and write it. Before this,
-    every caller of ``bpe_doc_lengths`` (q_bpe_encode AND
-    q_sequence_pack) silently re-ran the K training rounds inline —
-    exactly what a tokenizer artifact (the tokenizer.json of real
-    pipelines) exists to avoid. Training is deterministic (exact-int
-    argmax, lexicographic ties), so artifact-served and freshly-trained
-    rules are identical — the oracle gate holds on both paths.
-    """
-    import json
-    import os
-
-    path = _bpe_artifact_path(sf_dir, k)
-    memo = _BPE_RULES_MEMO.get(path)
-    if memo is not None:
-        return memo
-    if os.path.exists(path):
-        with open(path) as fh:
-            rules = [tuple(r) for r in json.load(fh)["merges"]]
-    else:
-        rules = train_bpe(read_parquet_table(spark, sf_dir, "documents"), k)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump({"k": k, "merges": rules}, fh)
-        os.replace(tmp, path)  # atomic: concurrent callers see old|new
-    _BPE_RULES_MEMO[path] = rules
-    return rules
-
-
-_BPE_RULES_MEMO: dict[str, list[tuple]] = {}
+    """Trained BPE merge rules for a corpus: the tokenizer artifact saved
+    by ``scratch.py`` for these corpus files, else trained once and saved.
+    Training is deterministic (exact-int argmax, lexicographic ties), so
+    saved and freshly trained rules are identical."""
+    rules = artifact(
+        _bpe_key(sf_dir, k),
+        lambda: train_bpe(read_parquet_table(spark, sf_dir, "documents"), k),
+    )
+    return [tuple(r) for r in rules]
 
 
 def _bpe_oracle(k: int) -> str:
@@ -843,18 +809,9 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     As the TRAIN step it also refreshes the persisted tokenizer
     artifact the apply-side queries read (see ``bpe_rules``)."""
-    import json
-    import os
-
     docs = read_parquet_table(spark, sf_dir, "documents")
     merges = train_bpe(docs, _BPE_ROUNDS)
-    path = _bpe_artifact_path(sf_dir, _BPE_ROUNDS)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump({"k": _BPE_ROUNDS, "merges": merges}, fh)
-    os.replace(tmp, path)
-    _BPE_RULES_MEMO[path] = merges
+    save_artifact(_bpe_key(sf_dir, _BPE_ROUNDS), merges)
     return spark.createDataFrame(
         merges, "merge_rank long, pair_left string, pair_right string, freq long"
     )
@@ -1458,65 +1415,21 @@ def train_unigram(
     return vocab[:_UNI_FINAL_V]
 
 
-def _uni_artifact_path(sf_dir: str) -> str:
-    """Unigram-vocab artifact location, content-addressed by the
-    documents stat + training parameters (the ``_bpe_artifact_path``
-    convention, per-user root per the r11 PCA advice)."""
-    import hashlib
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(p)
-    params = (
-        f"W={_UNI_MAXW}|L={_UNI_MAXL}|V={_UNI_SEED_V}|"
-        f"F={_UNI_FINAL_V}|T={_UNI_EM_ROUNDS}"
+def _uni_key(sf_dir: str) -> str | None:
+    return artifact_key(
+        "unigram", os.path.join(sf_dir, "documents.parquet"),
+        W=_UNI_MAXW, L=_UNI_MAXL, V=_UNI_SEED_V, F=_UNI_FINAL_V, T=_UNI_EM_ROUNDS,
     )
-    digest = hashlib.md5(
-        f"{os.path.realpath(p)}|{st.st_mtime_ns}|{st.st_size}|{params}".encode()
-    ).hexdigest()[:16]
-    root = os.environ.get(
-        "SPARK_GRAFT_UNI_DIR",
-        f"/tmp/review_engine_spark_uni-{os.getuid()}",
-    )
-    return os.path.join(root, f"uni_vocab_{digest}.json")
-
-
-_UNI_VOCAB_MEMO: dict[str, list[tuple]] = {}
 
 
 def unigram_vocab(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    """Trained unigram vocabulary for a corpus via the persisted
-    artifact: load if the JSON matches the corpus digest (payload
-    self-validates — the r11 PCA advice), else train once and write."""
-    import json
-    import os
-
-    path = _uni_artifact_path(sf_dir)
-    memo = _UNI_VOCAB_MEMO.get(path)
-    if memo is not None:
-        return memo
-    digest = os.path.basename(path).split("_")[-1].split(".")[0]
-    if os.path.exists(path):
-        try:
-            with open(path) as fh:
-                art = json.load(fh)
-            vocab = [
-                (str(p), int(c), float(lp)) for p, c, lp in art["pieces"]
-            ]
-            if art.get("digest") == digest and vocab:
-                _UNI_VOCAB_MEMO[path] = vocab
-                return vocab
-        except (ValueError, KeyError, OSError, TypeError):
-            pass
-        os.unlink(path)  # corrupt/foreign: retrain
-    vocab = train_unigram(read_parquet_table(spark, sf_dir, "documents"))
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump({"digest": digest, "pieces": vocab}, fh)
-    os.replace(tmp, path)
-    _UNI_VOCAB_MEMO[path] = vocab
-    return vocab
+    """Trained unigram vocabulary for a corpus: the artifact saved by
+    ``scratch.py`` for these corpus files, else trained once and saved."""
+    vocab = artifact(
+        _uni_key(sf_dir),
+        lambda: train_unigram(read_parquet_table(spark, sf_dir, "documents")),
+    )
+    return [(str(p), int(c), float(lp)) for p, c, lp in vocab]
 
 
 def uni_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1525,7 +1438,8 @@ def uni_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bpe_doc_lengths`` analog. Unknown best-path spans count their
     characters (char fallback); words longer than the DP bound count
     their length. One vocab-sized DP frame, one broadcast join back to
-    the corpus token stream."""
+    the corpus token stream. The vocabulary is ``unigram_vocab``'s, kept
+    in the artifact store of ``scratch.py``."""
     docs = read_parquet_table(spark, sf_dir, "documents")
     vocab = unigram_vocab(spark, sf_dir)
     m = _uni_lp_map(vocab)
@@ -1581,19 +1495,9 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     step replayed by the oracle's unrolled lateral-alias CTEs. As the
     TRAIN step it also refreshes the persisted vocabulary artifact the
     apply-side queries read (see ``unigram_vocab``)."""
-    import json
-    import os
-
     docs = read_parquet_table(spark, sf_dir, "documents")
     vocab = train_unigram(docs, _UNI_EM_ROUNDS)
-    path = _uni_artifact_path(sf_dir)
-    digest = os.path.basename(path).split("_")[-1].split(".")[0]
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump({"digest": digest, "pieces": vocab}, fh)
-    os.replace(tmp, path)
-    _UNI_VOCAB_MEMO[path] = vocab
+    save_artifact(_uni_key(sf_dir), vocab)
     return spark.createDataFrame(
         vocab, "piece string, freq long, logprob double"
     )

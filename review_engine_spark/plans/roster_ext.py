@@ -9,14 +9,13 @@ SURVEY §2.L).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from review_engine_spark.functions.text import STOPWORDS
 from review_engine_spark.operators.cluster import iter_checkpoint
 from review_engine_spark.plans import declared
+from review_engine_spark.scratch import scratch_dir
 from review_engine_spark.sources.io import read_parquet_table, write_jsonl_gz
 
 _STOPS_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
@@ -517,7 +516,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="sink_roundtrip_")
+    tmp = scratch_dir("sink_roundtrip_")
     write_jsonl_gz(docs, tmp)
     back = spark.read.schema("doc_id long, lang string, n_chars long").json(tmp)
     return back.orderBy("doc_id")
@@ -1398,7 +1397,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="csv_roundtrip_")
+    tmp = scratch_dir("csv_roundtrip_")
     write_csv(docs, tmp)
     return read_csv(
         spark, tmp, "doc_id long, lang string, source string, n_chars long"
@@ -1424,7 +1423,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "lang", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
+    tmp = scratch_dir("schema_evo_")
     v1.write.mode("overwrite").parquet(f"{tmp}/gen=1")
     v2.write.mode("overwrite").parquet(f"{tmp}/gen=2")
     return (
@@ -1484,7 +1483,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("l_extendedprice", 4).alias("price"),
         "l_returnflag",
     )
-    tmp = tempfile.mkdtemp(prefix="orc_roundtrip_")
+    tmp = scratch_dir("orc_roundtrip_")
     write_orc(li, tmp)
     return read_orc(spark, tmp)
 
@@ -2043,7 +2042,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders = read_parquet_table(spark, sf_dir, "orders").select(
             "o_custkey", "o_totalprice"
         )
-        tmp = tempfile.mkdtemp(prefix="bucketed_join_")
+        tmp = scratch_dir("bucketed_join_")
         write_bucketed_table(
             cust, cust_t, ["c_custkey"], 8, ["c_custkey"],
             path=f"{tmp}/customer",
@@ -2087,15 +2086,12 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     key = f"spark.graft.partprune.{tag}"
-    try:
-        d = spark.conf.get(key)
-    except Exception:
-        d = None
+    d = spark.conf.get(key, None)
     if d is None:
         docs = read_parquet_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "n_chars", "lang"
         )
-        d = tempfile.mkdtemp(prefix="part_prune_")
+        d = scratch_dir("part_prune_")
         write_partitioned(docs, d, ["lang"])
         spark.conf.set(key, d)
     back = spark.read.parquet(d).filter(F.col("lang") == "en")
@@ -2271,7 +2267,7 @@ def q_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan → glob prune → Arrow decode round trip."""
     from review_engine_spark.operators.multimodal import decode_image_meta
 
-    src = tempfile.mkdtemp(prefix="binfiles_")
+    src = scratch_dir("binfiles_")
     part = read_parquet_table(spark, sf_dir, "part").orderBy("p_partkey").limit(20)
     for r in part.select("p_partkey", "p_name").collect():
         with open(f"{src}/part_{r['p_partkey']}.img", "wb") as fh:

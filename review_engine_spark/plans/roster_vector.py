@@ -12,12 +12,15 @@ operators in operators.similarity (LSH / IVF) take over (SURVEY §4.3.1).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from review_engine_spark.functions.vector import cosine_similarity, dot_product
 from review_engine_spark.plans import declared
 from review_engine_spark.plans._oracle import sql_unit_vector
+from review_engine_spark.scratch import artifact_key, load_artifact, save_artifact
 from review_engine_spark.sources.io import read_parquet_table
 
 
@@ -395,44 +398,14 @@ def _pca_project_oracle(iters: int) -> str:
 # would be corpus×d² rows). Order-dependent sums round to 6dp; the
 # normalize divides two identical rounded doubles RAW.
 # ---------------------------------------------------------------------------
-#: Trained components memoized IN-PROCESS by artifact path. The path is
-#: content-addressed by the embeddings table's (realpath, mtime, size)
-#: stat — the BPE-artifact convention — so a regenerated fixture at the
-#: same sf_dir can never be served a stale component (the round-10 memo
-#: keyed on (applicationId, sf_dir, iters) could: ADVICE r10).
-_PCA_MEMO: dict[str, list[list[float]]] = {}
-
-
-def _pca_stat_digest(sf_dir: str, iters: int) -> str:
-    """Fingerprint of (embeddings data, iteration count). The embeddings
-    table may be a single parquet file (driver fixture) or a directory
-    of part files (Spark-written test fixtures) — stat both shapes."""
-    import hashlib
-    import os
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(p):
-        parts = sorted(
-            os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
-        )
-        stat = "|".join(
-            f"{f}|{os.stat(f).st_mtime_ns}|{os.stat(f).st_size}" for f in parts
-        )
-    else:
-        st = os.stat(p)
-        stat = f"{os.path.realpath(p)}|{st.st_mtime_ns}|{st.st_size}"
-    return hashlib.md5(f"{stat}|iters={iters}".encode()).hexdigest()[:16]
-
-
 def pca_components(
     spark: SparkSession, sf_dir: str, k: int = 1, iters: int = 6
 ) -> list[list[float]]:
     """Top-``k`` principal directions by power iteration with Hotelling
-    deflation, via a persisted content-addressed artifact (the
-    ``bpe_rules`` convention): an artifact trained for k' ≥ k serves any
-    smaller request as a prefix (deflation never changes earlier
-    components), so q_pca_power (k=1), q_pca_topk (k=4) and both
-    projection halves share one training run per corpus.
+    deflation, saved by ``scratch.py`` per (embeddings files, iters): k' >= k
+    saved components serve k as a prefix (deflation never changes earlier
+    components), so q_pca_power (k=1), q_pca_topk (k=4) and both projection
+    halves share one training run; fewer are retrained at k and replaced.
 
     Per component: 6 rounds of v ← X'(Xv) with infinity-norm scaling
     (each round ONE narrow per-row dot + ONE d-key map-side-combined
@@ -442,49 +415,12 @@ def pca_components(
     deflated element is bit-identical across engines RAW — the oracle
     replays the identical algebra (see ``_pca_topk_ctes``).
     """
-    import glob
-    import json
-    import os
-
-    digest = _pca_stat_digest(sf_dir, iters)
-    # per-user default root: /tmp/review_engine_spark_pca was world-
-    # writable and shared, so a foreign file matching the name pattern
-    # could be picked up by the glob (ADVICE r11)
-    root = os.environ.get(
-        "SPARK_GRAFT_PCA_DIR",
-        f"/tmp/review_engine_spark_pca-{os.getuid()}",
+    key = artifact_key(
+        "pca", os.path.join(sf_dir, "embeddings.parquet"), iters=iters
     )
-    memo = _PCA_MEMO.get(digest)
-    if memo is not None and len(memo) >= k:
-        return memo[:k]
-    # any artifact for this corpus digest trained to k' >= k is a hit —
-    # but the payload must agree with the filename: the JSON carries its
-    # own (digest, k, iters) and is rejected on any mismatch, so a
-    # corrupt/foreign file matching the name is a retrain, never a
-    # silently-served wrong component (ADVICE r11)
-    best_path, best_k = None, 0
-    for path in glob.glob(os.path.join(root, f"pca_k*_{digest}.json")):
-        k_art = int(os.path.basename(path).split("_")[1][1:])
-        if k_art > best_k:
-            best_path, best_k = path, k_art
-    if best_path is not None and best_k >= k:
-        try:
-            with open(best_path) as fh:
-                art = json.load(fh)
-            comps = [list(map(float, c)) for c in art["components"]]
-            valid = (
-                art.get("digest") == digest
-                and art.get("iters") == iters
-                and art.get("k") == best_k
-                and len(comps) == best_k
-                and all(len(c) == len(comps[0]) for c in comps)
-            )
-        except (ValueError, KeyError, OSError, TypeError):
-            valid = False
-        if valid:
-            _PCA_MEMO[digest] = comps
-            return comps[:k]
-        os.unlink(best_path)  # quarantine-by-delete: force a retrain
+    saved = load_artifact(key)
+    if saved is not None and len(saved) >= k:
+        return [list(map(float, c)) for c in saved[:k]]
 
     emb = read_parquet_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("x")
@@ -542,16 +478,7 @@ def pca_components(
             cur.unpersist()
             cur = nxt
     cur.unpersist()
-    os.makedirs(root, exist_ok=True)
-    path = os.path.join(root, f"pca_k{k}_{digest}.json")
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"k": k, "iters": iters, "digest": digest, "components": comps},
-            fh,
-        )
-    os.replace(tmp, path)  # atomic: concurrent callers see old|new
-    _PCA_MEMO[digest] = comps
+    save_artifact(key, comps)
     return comps
 
 

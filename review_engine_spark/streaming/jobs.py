@@ -490,26 +490,21 @@ def run_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    out_dir = tempfile.mkdtemp(prefix="stream_sink_")
-    with _state_partitions(spark, 8), tempfile.TemporaryDirectory() as ckpt:
+    with _state_partitions(spark, 8), tempfile.TemporaryDirectory() as work:
         q = (
             deduped.writeStream.outputMode("append")
             .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
+            .option("path", f"{work}/out")
+            .option("checkpointLocation", f"{work}/ckpt")
             .start()
         )
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
-    out = spark.read.parquet(out_dir)
-    # materialize the snapshot through Arrow, then delete the temp dir
-    # (the returned DataFrame no longer references the files)
-    snap = spark.createDataFrame(out.toPandas(), out.schema)
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return snap
+        out = spark.read.parquet(f"{work}/out")
+        # materialize the snapshot through Arrow before the directory
+        # goes (the returned DataFrame no longer references the files)
+        return spark.createDataFrame(out.toPandas(), out.schema)
 
 
 def run_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,13 +532,6 @@ def run_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_parquet_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    src_dir = tempfile.mkdtemp(prefix="upsert_src_")
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src_dir}/chunk={i}")
-
-    target_dir = tempfile.mkdtemp(prefix="upsert_target_")
     state = {"version": -1}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -578,26 +566,26 @@ def run_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src_dir}/chunk=*")
-    )
-    with _state_partitions(spark, 8), tempfile.TemporaryDirectory() as ckpt:
+    with _state_partitions(spark, 8), tempfile.TemporaryDirectory() as work:
+        src_dir, target_dir = f"{work}/src", f"{work}/target"  # merge reads target_dir
+        for i in range(3):
+            ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(f"{src_dir}/chunk={i}")
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(f"{src_dir}/chunk=*")
+        )
         q = (
             stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", f"{work}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination(120)
-    out = spark.read.parquet(f"{target_dir}/v={state['version']}")
-    snap = spark.createDataFrame(out.toPandas(), out.schema)
-    import shutil
-
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(target_dir, ignore_errors=True)
-    return snap
+        out = spark.read.parquet(f"{target_dir}/v={state['version']}")
+        return spark.createDataFrame(out.toPandas(), out.schema)
 
 
 def run_ewma_stateful(
@@ -937,8 +925,6 @@ def run_stream_near_dup(
     the per-key layout (identical flags — parity in tests); see the
     in-code comment for the trickle-stream tradeoff.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from review_engine_spark.sources.io import read_parquet_table
 
     if occupant not in ("min_id", "first_arrival"):
@@ -946,24 +932,33 @@ def run_stream_near_dup(
             "occupant must be 'min_id' or 'first_arrival', got "
             f"{occupant!r}"
         )
-    n_bands = n_seeds // band_width
-    src_dir = None
-    if n_chunks > 1:
-        docs = read_parquet_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        hi = docs.agg(F.max("doc_id")).collect()[0][0]
-        if hi is None:
-            # empty documents table: max() is NULL and there is nothing
-            # to range-split — the output schema is fixed, so return the
-            # empty flags frame directly (matches the other runners'
-            # empty-stream handling).
-            return spark.createDataFrame(
-                [], "doc_id long, band_idx int, hit int"
-            )
-        hi += 1
-        src_dir = tempfile.mkdtemp(prefix="neardup_src_")
-        step = (hi + n_chunks - 1) // n_chunks
+    params = (n_seeds, band_width, occupant, key_buckets)
+    if n_chunks <= 1:
+        import os
+
+        table_dir = os.path.join(sf_dir, "documents.parquet")
+        if os.path.isdir(table_dir):
+            src_path, glob_opt = table_dir, None
+        else:
+            src_path, glob_opt = sf_dir, "documents.parquet"
+        schema = "doc_id long, text string"
+        reader = spark.readStream.schema(schema).format("parquet")
+        if glob_opt:
+            reader = reader.option("pathGlobFilter", glob_opt)
+        return _near_dup_snapshot(spark, reader.load(src_path), *params)
+    docs = read_parquet_table(spark, sf_dir, "documents").select(
+        "doc_id", "text"
+    )
+    hi = docs.agg(F.max("doc_id")).collect()[0][0]
+    if hi is None:
+        # empty documents table: max() is NULL and there is nothing
+        # to range-split — the output schema is fixed, so return the
+        # empty flags frame directly (matches the other runners'
+        # empty-stream handling).
+        return spark.createDataFrame([], "doc_id long, band_idx int, hit int")
+    hi += 1
+    step = (hi + n_chunks - 1) // n_chunks
+    with tempfile.TemporaryDirectory() as src_dir:
         for i in range(n_chunks):
             docs.filter(
                 (F.col("doc_id") >= i * step)
@@ -991,19 +986,17 @@ def run_stream_near_dup(
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{src_dir}/chunk=*")
         )
-    else:
-        import os
+        return _near_dup_snapshot(spark, stream, *params)
 
-        table_dir = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isdir(table_dir):
-            src_path, glob_opt = table_dir, None
-        else:
-            src_path, glob_opt = sf_dir, "documents.parquet"
-        schema = "doc_id long, text string"
-        reader = spark.readStream.schema(schema).format("parquet")
-        if glob_opt:
-            reader = reader.option("pathGlobFilter", glob_opt)
-        stream = reader.load(src_path)
+
+def _near_dup_snapshot(
+    spark: SparkSession, stream: DataFrame, n_seeds: int, band_width: int,
+    occupant: str, key_buckets: int | None | str,
+) -> DataFrame:
+    """``run_stream_near_dup`` over a stream of (doc_id, text)."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    n_bands = n_seeds // band_width
     toks = F.filter(
         F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
     )
@@ -1161,14 +1154,9 @@ def run_stream_near_dup(
     # sf0.1, vs ~150 users for the events runners), so the per-key fn
     # cost dominates and parallelism wins (measured 16.5 → 5.6 s at
     # sf0.1 going 8 → 32)
-    out = _snapshot(
+    return _snapshot(
         spark, flags, "update", "stream_near_dup_out", state_partitions=32
     )
-    if src_dir is not None:
-        import shutil
-
-        shutil.rmtree(src_dir, ignore_errors=True)
-    return out
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:

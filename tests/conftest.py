@@ -18,6 +18,17 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def scratch_root(tmp_path, monkeypatch):
+    """``review_engine_spark.scratch`` pointed at a fresh root under
+    ``tmp_path``, with an empty artifact memo."""
+    from review_engine_spark import scratch
+
+    monkeypatch.setattr(scratch, "_root", str(tmp_path / "scratch"))
+    monkeypatch.setattr(scratch, "_MEMO", {})
+    return scratch
+
+
 @pytest.fixture(scope="session")
 def plan_nodes():
     """``plan_nodes(df)`` → ``[(nodeName, is_leaf), ...]`` over ``df``'s

@@ -4,7 +4,6 @@ scans prune at planning time (SURVEY §7 M6)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -46,9 +45,9 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS b_part")
 
 
-def test_partitioned_scan_prunes(spark, sf_dir):
+def test_partitioned_scan_prunes(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = tempfile.mkdtemp(prefix="part_docs_")
+    d = str(tmp_path / "part_docs")
     write_partitioned(docs, d, ["lang"])
     back = spark.read.parquet(d).filter(F.col("lang") == "en")
     plan = back._jdf.queryExecution().executedPlan().toString()

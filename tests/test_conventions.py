@@ -59,3 +59,18 @@ def test_no_bare_double_to_bigint_cast_in_new_oracles():
         "new bare double->BIGINT cast in an oracle (quantize with"
         f" floor(x*100+0.5) first — NOTES round-6): {offenders}"
     )
+
+
+def test_local_files_are_placed_by_scratch_only():
+    """Only ``scratch.py`` decides where the engine writes local files: a
+    ``tempfile.mkdtemp`` is never cleaned up, and a literal ``/tmp/`` root
+    is shared by every user of the host and ignores ``TMPDIR``."""
+    pkg = PLANS.parent
+    offenders = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.name != "scratch.py" or p.parent != pkg
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "tempfile.mkdtemp" in line or "/tmp/" in line
+    ]
+    assert not offenders, offenders

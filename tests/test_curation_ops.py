@@ -732,7 +732,7 @@ def test_train_bpe_early_stop_when_vocab_exhausted(spark):
     assert 0 < len(got) < 10
 
 
-def test_bpe_rules_artifact_roundtrip(spark, tmp_path, monkeypatch):
+def test_bpe_rules_artifact_roundtrip(spark, tmp_path, monkeypatch, scratch_root):
     """bpe_rules trains once, persists the tokenizer artifact, and
     serves identical rules from disk on the next call (fresh memo) —
     with no retraining (the trainer is stubbed out for the second call
@@ -747,13 +747,12 @@ def test_bpe_rules_artifact_roundtrip(spark, tmp_path, monkeypatch):
         "doc_id long, text string",
     )
     docs.coalesce(1).write.parquet(str(corpus / "documents.parquet"))
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DIR", str(tmp_path / "artifacts"))
 
     first = rc.bpe_rules(spark, str(corpus), 6)
     assert first == _py_bpe_train(
         [f"alpha beta gamma delta {i}" for i in range(20)], 6
     )
-    rc._BPE_RULES_MEMO.clear()
+    scratch_root._MEMO.clear()
 
     def boom(*a, **k):  # the artifact alone must serve the second call
         raise AssertionError("bpe_rules retrained despite fresh artifact")
@@ -1053,7 +1052,7 @@ def test_train_unigram_matches_pure_python(spark):
     )
 
 
-def test_unigram_artifact_roundtrip_and_self_validation(spark, tmp_path, monkeypatch):
+def test_unigram_artifact_roundtrip_and_self_validation(spark, tmp_path, scratch_root):
     """unigram_vocab trains once, serves from the artifact after, and
     retrains (rather than serving garbage) when the JSON is corrupted
     — the r11 PCA-artifact self-validation convention."""
@@ -1062,29 +1061,49 @@ def test_unigram_artifact_roundtrip_and_self_validation(spark, tmp_path, monkeyp
 
     from review_engine_spark.plans import roster_curation as rc
 
-    monkeypatch.setenv("SPARK_GRAFT_UNI_DIR", str(tmp_path / "art"))
     pd.DataFrame(
         {"doc_id": [1, 2], "text": ["abab abab cdcd", "abab cdcd cdcd"]}
     ).to_parquet(tmp_path / "documents.parquet")
 
     v1 = rc.unigram_vocab(spark, str(tmp_path))
-    path = rc._uni_artifact_path(str(tmp_path))
-    assert json.load(open(path))["pieces"]
-    rc._UNI_VOCAB_MEMO.clear()
+    path = scratch_root.artifact_path(rc._uni_key(str(tmp_path)))
+    assert json.load(open(path))["value"]
+    scratch_root._MEMO.clear()
     v2 = rc.unigram_vocab(spark, str(tmp_path))  # artifact-served
     assert v2 == v1
-    # corrupt the payload: digest check must force a retrain
+    # corrupt the payload: the key check must force a retrain
     art = json.load(open(path))
-    art["digest"] = "deadbeefdeadbeef"
-    art["pieces"] = [["zz", 999, -0.1]]
+    art["key"] = "deadbeefdeadbeef"
+    art["value"] = [["zz", 999, -0.1]]
     json.dump(art, open(path, "w"))
-    rc._UNI_VOCAB_MEMO.clear()
+    scratch_root._MEMO.clear()
     v3 = rc.unigram_vocab(spark, str(tmp_path))
     assert v3 == v1
 
 
+def test_bpe_artifact_corrupt_payload_retrains(spark, tmp_path, scratch_root):
+    """A truncated BPE artifact is deleted and retrained, not a failed
+    query: the rules come back equal and the file is rewritten whole."""
+    from pathlib import Path
+
+    import pandas as pd
+
+    from review_engine_spark.plans import roster_curation as rc
+
+    pd.DataFrame(
+        {"doc_id": [1, 2, 3], "text": ["abab abab cdcd", "abab cdcd", "cdcd ab"]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    first = rc.bpe_rules(spark, str(tmp_path), 6)
+    path = Path(scratch_root.artifact_path(rc._bpe_key(str(tmp_path), 6)))
+    whole = path.read_bytes()
+    path.write_bytes(whole[: len(whole) // 2])
+    scratch_root._MEMO.clear()
+    assert rc.bpe_rules(spark, str(tmp_path), 6) == first
+    assert path.read_bytes() == whole
+
+
 def test_unigram_encode_char_fallback_for_overlong_words(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, scratch_root
 ):
     """A word longer than the DP bound encodes as its character count;
     normal words encode as their Viterbi piece count."""
@@ -1096,9 +1115,7 @@ def test_unigram_encode_char_fallback_for_overlong_words(
     pd.DataFrame(
         {"doc_id": [1, 2], "text": [f"abab {long_word}", "abab abab"]}
     ).to_parquet(tmp_path / "documents.parquet")
-    # isolated artifact dir via monkeypatch (leak-free, no collision
-    # with the shared per-uid /tmp root — ADVICE r12)
-    monkeypatch.setenv("SPARK_GRAFT_UNI_DIR", str(tmp_path / "art"))
+    # a fresh artifact store: no artifact of another test is served
     rows = {
         r["doc_id"]: (r["n_words"], r["n_uni_tokens"])
         for r in rc.uni_doc_lengths(spark, str(tmp_path)).collect()

@@ -299,7 +299,7 @@ def test_embedding_near_dup_lsh_recall(spark, sf_dir):
         assert len(got) >= len(exact) * 0.5
 
 
-def test_asof_join_semantics(spark):
+def test_asof_join_semantics(spark, tmp_path):
     """As-of: latest order at-or-before each event; date ties -> max
     orderkey; no prior order -> NULL."""
     from review_engine_spark.plans import roster_rel
@@ -318,9 +318,9 @@ def test_asof_join_semantics(spark):
          (102, 10, t("2024-01-04T00:00:00")), (200, 30, t("2024-01-01T00:00:00"))],
         "o_orderkey long, o_custkey long, o_orderdate timestamp",
     )
-    import tempfile, os
+    import os
 
-    d = tempfile.mkdtemp(prefix="asof_")
+    d = str(tmp_path)
     ev.write.parquet(os.path.join(d, "events.parquet"))
     orders.selectExpr(
         "o_orderkey", "o_custkey", "'O' AS o_orderstatus", "1.0 AS o_totalprice",
@@ -330,12 +330,12 @@ def test_asof_join_semantics(spark):
     assert out == {1: 102, 2: None, 3: None}
 
 
-def test_range_join_counts(spark):
+def test_range_join_counts(spark, tmp_path):
     """Bucketed range join: only same-user events in (t, t+5min] count,
     bucket-boundary crossings included, self excluded."""
     from review_engine_spark.plans import roster_rel
     import datetime as dt
-    import tempfile, os
+    import os
 
     def t(s):
         return dt.datetime.fromisoformat(s)
@@ -350,7 +350,7 @@ def test_range_join_counts(spark):
         ],
         "event_id long, user_id long, ts timestamp, value double",
     )
-    d = tempfile.mkdtemp(prefix="rj_")
+    d = str(tmp_path)
     ev.selectExpr("event_id", "ts", "user_id", "'c' AS event_type", "value", "'{}' AS props") \
         .write.parquet(os.path.join(d, "events.parquet"))
     out = {r["event_id"]: r["n_follow"] for r in roster_rel.q_range_join(spark, d).collect()}

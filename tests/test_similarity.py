@@ -58,7 +58,7 @@ def test_pca_power_recovers_rank1_direction(spark, tmp_path):
 
 
 def test_pca_topk_deflation_recovers_orthogonal_directions(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, scratch_root
 ):
     """Data built from two orthogonal directions with very different
     variance: component 1 converges to the dominant direction and,
@@ -69,7 +69,6 @@ def test_pca_topk_deflation_recovers_orthogonal_directions(
 
     from review_engine_spark.plans.roster_vector import pca_components
 
-    monkeypatch.setenv("SPARK_GRAFT_PCA_DIR", str(tmp_path / "artifacts"))
     # dominant direction (2, 1), minor orthogonal direction (1, -2)
     vecs = []
     for a in (10.0, -8.0, 12.0, -11.0, 9.0):
@@ -90,7 +89,7 @@ def test_pca_topk_deflation_recovers_orthogonal_directions(
 
 
 def test_pca_artifact_prefix_reuse_and_data_invalidation(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, scratch_root
 ):
     """(a) A k=4 artifact serves a k=1 request as a prefix with NO
     retraining (trainer stubbed out for the second call — the BPE
@@ -102,7 +101,6 @@ def test_pca_artifact_prefix_reuse_and_data_invalidation(
 
     from review_engine_spark.plans import roster_vector as rv
 
-    monkeypatch.setenv("SPARK_GRAFT_PCA_DIR", str(tmp_path / "artifacts"))
     # full-rank data (two orthogonal spans) so the k=2 deflation has a
     # real second direction to find
     vecs = [[3.0, 1.0], [6.0, 2.0], [-3.0, -1.0], [30.0, 10.0], [1.0, -3.0]]
@@ -111,7 +109,7 @@ def test_pca_artifact_prefix_reuse_and_data_invalidation(
     ).to_parquet(tmp_path / "embeddings.parquet")
 
     comps4 = rv.pca_components(spark, str(tmp_path), k=2, iters=6)
-    rv._PCA_MEMO.clear()  # force the disk-artifact path, not the memo
+    scratch_root._MEMO.clear()  # force the disk-artifact path, not the memo
 
     real_read = rv.read_parquet_table
 
