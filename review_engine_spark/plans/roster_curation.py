@@ -2888,9 +2888,9 @@ def q_pca_outlier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle grows with the corpus beyond the cutoff's bounded
     value-grid aggregate."""
     from review_engine_spark.functions.vector import dot_product
-    from review_engine_spark.plans.roster_vector import pca_components
+    from review_engine_spark.plans.roster_vector import PCA_K, pca_components
 
-    comps = pca_components(spark, sf_dir, k=4, iters=6)
+    comps = pca_components(spark, sf_dir, k=PCA_K, iters=6)
     emb = read_parquet_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("x")
     )

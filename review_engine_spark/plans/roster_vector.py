@@ -398,14 +398,19 @@ def _pca_project_oracle(iters: int) -> str:
 # would be corpus×d² rows). Order-dependent sums round to 6dp; the
 # normalize divides two identical rounded doubles RAW.
 # ---------------------------------------------------------------------------
+# Components every PCA query asks for, so whichever runs first trains
+# the one artifact the rest read: q_pca_power and q_pca_project use its
+# first component.
+PCA_K = 4
+
+
 def pca_components(
-    spark: SparkSession, sf_dir: str, k: int = 1, iters: int = 6
+    spark: SparkSession, sf_dir: str, k: int = PCA_K, iters: int = 6
 ) -> list[list[float]]:
     """Top-``k`` principal directions by power iteration with Hotelling
     deflation, saved by ``scratch.py`` per (embeddings files, iters): k' >= k
     saved components serve k as a prefix (deflation never changes earlier
-    components), so q_pca_power (k=1), q_pca_topk (k=4) and both projection
-    halves share one training run; fewer are retrained at k and replaced.
+    components); fewer are retrained at k and replaced.
 
     Per component: 6 rounds of v ← X'(Xv) with infinity-norm scaling
     (each round ONE narrow per-row dot + ONE d-key map-side-combined
@@ -446,20 +451,22 @@ def pca_components(
             if mx == 0.0:
                 # k exceeded the matrix's numerical rank (after round-6):
                 # the deflated corpus is exactly zero, so every further
-                # component is the zero vector. Only reachable when the
-                # caller over-asks; the oracle convention requires
-                # k <= rank (fixture embeddings are full-rank).
+                # component is the zero vector. Reached when the
+                # embeddings have rank < k (q_pca_power asks for PCA_K
+                # whatever the data); the topk oracles require k <= rank
+                # (fixture embeddings are full-rank).
                 v = w
                 break
             # w/mx is IEEE division of engine-identical doubles -> raw
             v = [c / mx for c in w]
         comps.append(v)
-        if ci < k - 1:
-            # Hotelling deflation against the just-found direction. The
-            # coefficient column is materialized in its own projection
-            # BEFORE the zip_with so the lambda references an attribute,
-            # not a recomputed aggregate (the NOTES HOF hazard).
-            vv = round(sum(c * c for c in v), 6)
+        vv = round(sum(c * c for c in v), 6)
+        if ci < k - 1 and vv != 0.0:
+            # Hotelling deflation against the just-found direction (a
+            # zero direction removes nothing). The coefficient column is
+            # materialized in its own projection BEFORE the zip_with so
+            # the lambda references an attribute, not a recomputed
+            # aggregate (the NOTES HOF hazard).
             v_arr = F.array(*[F.lit(c) for c in v])
             nxt = cur.select(
                 "vec_id",
@@ -486,8 +493,8 @@ def _power_component(
     spark: SparkSession, sf_dir: str, iters: int = 6
 ) -> list[float]:
     """Top-1 direction — shared by q_pca_power (emit) and q_pca_project
-    (apply); a prefix of any larger trained artifact."""
-    return pca_components(spark, sf_dir, k=1, iters=iters)[0]
+    (apply); the first of the ``PCA_K`` trained components."""
+    return pca_components(spark, sf_dir, k=PCA_K, iters=iters)[0]
 
 
 @declared(oracle=_pca_oracle(iters=6))
@@ -597,14 +604,14 @@ def _pca_project_topk_oracle(k: int, iters: int) -> str:
     return _pca_topk_ctes(k, iters) + "\n    " + "\n    UNION ALL ".join(tails)
 
 
-@declared(oracle=_pca_topk_oracle(k=4, iters=6))
+@declared(oracle=_pca_topk_oracle(k=PCA_K, iters=6))
 def q_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-4 principal directions by power iteration + Hotelling
     deflation (VERDICT r10 item 5) — SemDeDup-style embedding curation
     whitens on k ≥ 4 components, not just the top-1 the round-10
     operator emitted. One persisted artifact serves this, q_pca_power
-    (its k=1 prefix) and both projection halves."""
-    comps = pca_components(spark, sf_dir, k=4, iters=6)
+    (its first component) and both projection halves."""
+    comps = pca_components(spark, sf_dir, k=PCA_K, iters=6)
     rows = [
         (ci + 1, i + 1, val)
         for ci, comp in enumerate(comps)
@@ -615,13 +622,13 @@ def q_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@declared(oracle=_pca_project_topk_oracle(k=4, iters=6))
+@declared(oracle=_pca_project_topk_oracle(k=PCA_K, iters=6))
 def q_pca_project_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector scores against all 4 trained components — the k-dim
     reduced representation (one narrow pass; the k dots share the row's
     single array read, and the components are plan literals, so there is
     no shuffle at ANY corpus size)."""
-    comps = pca_components(spark, sf_dir, k=4, iters=6)
+    comps = pca_components(spark, sf_dir, k=PCA_K, iters=6)
     scores = F.array(
         *[
             F.round(

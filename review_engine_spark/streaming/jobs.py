@@ -14,10 +14,12 @@ partitioning.
 
 from __future__ import annotations
 
+import os
 import tempfile
+from contextlib import contextmanager
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -32,70 +34,43 @@ __all__ = [
     "run_stream_near_dup",
 ]
 
-from contextlib import contextmanager
+# GroupState keys per state partition. The stateful runners key their
+# state by ``pmod(key, buckets)`` instead of by the key itself: each
+# bucket stores its keys' state as parallel arrays and the fold loops
+# those keys inside one pandas group, so the per-group state round trip
+# and Arrow marshalling are paid per bucket, not per key. Sixteen
+# buckets per partition smooths skew across the partitions. Per-key
+# fold order and emitted rows do not depend on the bucket count (pinned
+# in tests/test_streaming.py).
+KEY_BUCKETS_PER_PARTITION = 16
 
 
-def _resolve_key_buckets(kb, state_partitions: int = 8) -> int | None:
-    """Resolve the ``key_buckets`` knob shared by the stateful runners.
-
-    ``"auto"`` (the default) sizes the bucket count to 16× the resolved
-    state-partition count — enough buckets that every state partition
-    folds ~16 groups (smooths skew), few enough that the per-invocation
-    plumbing constant is amortized across many users. ``None`` selects
-    the per-key layout (one GroupState entry per user — the canonical
-    form the r8 profiling chunk measured at ~3 ms/key/batch);
-    an int pins the bucket count exactly.
-    """
-    if kb is None:
-        return None
-    if isinstance(kb, int) and not isinstance(kb, bool):
-        # kb < 1 would reach F.pmod(user_id, kb) and yield NULL,
-        # silently collapsing all state into one NULL-keyed bucket
-        if kb < 1:
-            raise ValueError(f"key_buckets must be >= 1, got {kb}")
-        return kb
-    if kb != "auto":
-        raise ValueError(f"key_buckets must be None, int, or 'auto': {kb!r}")
-    import os
-
-    n = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", state_partitions))
-    return 16 * n
+def _key_bucket(spark: SparkSession, key: Column) -> Column:
+    """The GroupState bucket of a long ``key``: one of
+    ``KEY_BUCKETS_PER_PARTITION`` × the session's cores."""
+    n = KEY_BUCKETS_PER_PARTITION * spark.sparkContext.defaultParallelism
+    return F.pmod(key, F.lit(n)).cast("int")
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int):
-    """Scope the shuffle-partition count around a streaming run.
-
-    Stateful operators create one state-store instance per shuffle
-    partition, and the partition count is frozen into the checkpoint at
-    first start — so it must be SIZED, not defaulted: enough partitions
-    to spread peak state across executors, no more (each adds store
-    init, snapshot, and commit overhead per micro-batch; measured 4x on
-    the finite fixture runs: 32 -> 8 partitions cut the stream-stream
-    join from 9.8 s to 2.5 s). These finite-source runners default to a
-    small fixed count; a production job sizes it to peak keyed-state
-    volume — ``SPARK_GRAFT_STATE_PARTITIONS`` overrides for exactly
-    that reason (the 100× stress runs need the fold parallelism the
-    fixture-sized default caps at 8; see SCALING.md round-8 chunk).
-    """
-    import os
-
-    n = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", n))
+def _state_partitions(spark: SparkSession):
+    """Scope ``spark.sql.shuffle.partitions`` to the session's cores
+    around a streaming run. The count is frozen into the checkpoint at
+    first start, and each partition is one Python task and one state
+    store per micro-batch, so it is sized to the cores rather than left
+    at a bare session's 200."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-
 def _snapshot(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    mode: str,
-    name: str,
-    state_partitions: int = 8,
+    spark: SparkSession, stream_df: DataFrame, mode: str, name: str
 ) -> DataFrame:
     """Drive a finite streaming DataFrame to completion and return the
     result snapshot as a batch DataFrame.
@@ -105,7 +80,7 @@ def _snapshot(
     the fixture scales, so a driver-side snapshot is the cheapest exact
     landing (the parquet file-sink landing is ``run_stream_to_parquet``).
     """
-    with _state_partitions(spark, state_partitions), tempfile.TemporaryDirectory() as ckpt:
+    with _state_partitions(spark), tempfile.TemporaryDirectory() as ckpt:
         q = (
             stream_df.writeStream.outputMode(mode)
             .format("memory")
@@ -122,6 +97,35 @@ def _snapshot(
         return spark.createDataFrame(out.toPandas(), out.schema)
 
 
+def _parquet_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    path_glob: str,
+    max_files_per_trigger: int | None = None,
+    schema: str | None = None,
+) -> DataFrame:
+    """Finite-source streaming reader over the ``path_glob`` table of
+    ``sf_dir``.
+
+    The fixture stores a table as a single FILE (``<sf_dir>/<name>.parquet``),
+    Spark-written corpora (replicas, sinks) as a DIRECTORY of part files;
+    pathGlobFilter matches file basenames, so the reader points at the
+    directory when that is what exists. Structured Streaming needs an
+    explicit schema: ``schema`` if given, else a batch footer peek of
+    the matching files.
+    """
+    table_dir = os.path.join(sf_dir, path_glob)
+    if os.path.isdir(table_dir):
+        src_path, opts = table_dir, {}
+    else:
+        src_path, opts = sf_dir, {"pathGlobFilter": path_glob}
+    if schema is None:
+        schema = spark.read.options(**opts).parquet(src_path).schema
+    if max_files_per_trigger is not None:
+        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
+    return spark.readStream.schema(schema).options(**opts).parquet(src_path)
+
+
 def _events_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -131,37 +135,16 @@ def _events_stream(
     """Finite-source streaming reader for an events feed, with ``ts``
     normalized to TIMESTAMP whatever the files store.
 
-    Structured Streaming requires an explicit schema, but the fixture's
-    on-disk type has changed across driver rounds — TIMESTAMP(NANOS)
-    (arriving as ns-longs under nanosAsLong), raw int64 ns (test
-    fixtures), and TIMESTAMP(MICROS, isAdjustedToUTC=false) → NTZ. A
-    cheap batch footer peek of the matching files decides which schema
-    the stream declares and which fixup applies, mirroring
-    sources.io.read_parquet_table.
+    The fixture's on-disk type has changed across driver rounds —
+    TIMESTAMP(NANOS) (arriving as ns-longs under nanosAsLong), raw int64
+    ns (test fixtures), and TIMESTAMP(MICROS, isAdjustedToUTC=false) →
+    NTZ. The schema peeked from the matching files decides which fixup
+    applies, mirroring sources.io.read_parquet_table.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # the fixture stores a table as a single FILE (<dir>/events.parquet),
-    # Spark-written corpora (stress replicas, sinks) as a DIRECTORY of
-    # part files — pathGlobFilter matches file BASENAMES, so point the
-    # reader at the directory layout directly when that's what exists
-    import os
-
-    table_dir = os.path.join(sf_dir, path_glob)
-    if os.path.isdir(table_dir):
-        src_path, glob_opt = table_dir, None
-    else:
-        src_path, glob_opt = sf_dir, path_glob
-
-    def _opt(r):
-        return r.option("pathGlobFilter", glob_opt) if glob_opt else r
-
-    batch = _opt(spark.read).parquet(src_path)
-    ts_type = dict(batch.dtypes).get("ts")
-    reader = _opt(spark.readStream.schema(batch.schema).format("parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(src_path)
+    stream = _parquet_stream(spark, sf_dir, path_glob, max_files_per_trigger)
+    ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
@@ -202,7 +185,6 @@ def run_sessionize_stateful(
     gap_minutes: int = 30,
     path_glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    key_buckets: int | None | str = "auto",
 ) -> DataFrame:
     """Custom stateful streaming operator (SURVEY §2.I stretch goal):
     gap-based sessionization via ``applyInPandasWithState``, driven to
@@ -229,8 +211,9 @@ def run_sessionize_stateful(
     folded by sort within its batch but cannot reopen an already-closed
     session — the same horizon any watermarked sessionizer has.
 
-    Scale: the only shuffle keys events by user_id; state per key is one
-    open session struct, bounded by the watermark horizon.
+    Scale: the only shuffle keys events by user_id's GroupState bucket
+    (``_key_bucket``); state per user is one open session, bounded by
+    the watermark horizon.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -240,11 +223,13 @@ def run_sessionize_stateful(
         "user_id long, session_start timestamp, session_end timestamp, "
         "n_events long, total_v double"
     )
-    state_schema = "open_start long, open_end long, n long, v double"
+    state_schema = (
+        "users array<long>, s0s array<long>, s1s array<long>, "
+        "ns array<long>, vs array<double>"
+    )
 
     def fold_user(ts_vals, v_vals, seed):
-        """One user's fold: identical statement sequence in both state
-        layouts (the ONLY difference between them is state keying)."""
+        """One user's fold over their (ts, event_id)-ordered events."""
         sessions = []
         cur = None
         if seed is not None:  # seed the open session from the previous batch
@@ -269,43 +254,9 @@ def run_sessionize_stateful(
         return sessions, cur
 
     def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # live-stream path: flush the open session
-            s0, s1, n, v = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [pd.Timestamp(s0, unit="us")],
-                    "session_end": [pd.Timestamp(s1, unit="us") + gap],
-                    "n_events": [n],
-                    "total_v": [round(v, 4)],
-                }
-            )
-            return
-        # tie-break duplicate timestamps on event_id so both state
-        # layouts fold values in the same TOTAL order (ADVICE r9: a
-        # ts-only unstable sort could diverge from the bucketed twin's
-        # lexsort on duplicate (user, ts), flipping total_v float order)
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        seed = state.get if state.exists else None
-        sessions, cur = fold_user(rows["ts"], rows["value"], seed)
-        if cur is not None:
-            # keep the open tail in state; emit it provisionally below
-            state.update((cur[0].value // 1000, cur[1].value // 1000, cur[2], cur[3]))
-            sessions.append(cur)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(sessions),
-                "session_start": [s[0] for s in sessions],
-                "session_end": [s[1] + gap for s in sessions],
-                "n_events": [s[2] for s in sessions],
-                "total_v": [round(s[3], 4) for s in sessions],
-            }
-        )
-
-    def fn_b(key, pdfs, state: GroupState):
-        # key-coarsened layout (see run_ewma_stateful): per-bucket state
-        # holds the bucket's open sessions as parallel arrays
+        # the bucket's open sessions, as parallel arrays; duplicate
+        # timestamps tie-break on event_id so values fold in one total
+        # order
         rows = pd.concat(list(pdfs)).sort_values(["user_id", "ts", "event_id"])
         if state.exists:
             users, s0s, s1s, ns, vs = state.get
@@ -355,25 +306,13 @@ def run_sessionize_stateful(
     stream = _events_stream(
         spark, sf_dir, path_glob=path_glob, max_files_per_trigger=max_files_per_trigger
     ).select("user_id", "ts", "value", "event_id")
-    key_buckets = _resolve_key_buckets(key_buckets)
-    if key_buckets is None:
-        sessions = stream.groupBy("user_id").applyInPandasWithState(
+    sessions = (
+        stream.withColumn("bucket", _key_bucket(spark, F.col("user_id")))
+        .groupBy("bucket")
+        .applyInPandasWithState(
             fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
-    else:
-        bstate = (
-            "users array<long>, s0s array<long>, s1s array<long>, "
-            "ns array<long>, vs array<double>"
-        )
-        sessions = (
-            stream.withColumn(
-                "bucket", F.pmod("user_id", F.lit(key_buckets)).cast("int")
-            )
-            .groupBy("bucket")
-            .applyInPandasWithState(
-                fn_b, out_schema, bstate, "update", GroupStateTimeout.NoTimeout
-            )
-        )
+    )
     return _snapshot(spark, sessions, "update", "sessionize_stateful_out")
 
 
@@ -490,7 +429,7 @@ def run_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    with _state_partitions(spark, 8), tempfile.TemporaryDirectory() as work:
+    with _state_partitions(spark), tempfile.TemporaryDirectory() as work:
         q = (
             deduped.writeStream.outputMode("append")
             .format("parquet")
@@ -566,7 +505,7 @@ def run_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    with _state_partitions(spark, 8), tempfile.TemporaryDirectory() as work:
+    with _state_partitions(spark), tempfile.TemporaryDirectory() as work:
         src_dir, target_dir = f"{work}/src", f"{work}/target"  # merge reads target_dir
         for i in range(3):
             ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
@@ -594,7 +533,6 @@ def run_ewma_stateful(
     alpha: float = 0.1,
     path_glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    key_buckets: int | None | str = "auto",
 ) -> DataFrame:
     """Streaming EWMA via ``applyInPandasWithState`` — the unbounded-
     history path the batch fold (plans/roster_analytics.q_ewma) documents:
@@ -608,30 +546,8 @@ def run_ewma_stateful(
     bit-for-bit (pinned in tests/test_analytics.py). Update-mode emits a
     provisional (user_id, n_events, ewma) row per batch; the row with the
     largest n_events per user is final. Same in-order-arrival horizon as
-    run_sessionize_stateful.
-
-    ``key_buckets``: the KEY-COARSENED layout (round-9 floor attack).
-    The r8 profiling chunk proved the family's cost is ~3 ms per KEY of
-    state-store round-trip + Arrow group marshalling, not the per-event
-    fold — so with N keys the plumbing bill is N·3 ms per micro-batch
-    regardless of data. Setting ``key_buckets=B`` re-keys the state by
-    ``pmod(user_id, B)`` and stores the bucket's users as parallel
-    arrays (user_ids, accs, ns); the fold loops its users inside ONE
-    pandas group, amortizing the per-invocation constant across
-    ~N/B users. Per-user fold order, float sequence, and emitted rows
-    are IDENTICAL to the per-key layout (parity pinned in
-    tests/test_streaming.py); only the state keying changes. Tradeoff:
-    per-bucket state round-trips grow with N/B (arrays serialized per
-    batch), and a bucket is the unit of fold parallelism — size B ≥
-    cores, ≪ N. Measured verdicts: bulk ingest in SCALING.md round 9;
-    the trickle regime in SCALING.md round 10 (trickle horizon): coarse
-    wins 1.4-2× at touched-key fractions ≥10% and +8% at 1%; the
-    crossover sits near f≈0.1%, where per-key wins by only 4% while
-    ~95% of BOTH layouts' cost is the per-micro-batch fixed overhead —
-    so "auto" stays coarse in all regimes by measurement, not
-    bulk-ingest assumption (threshold rule: only switch to
-    ``key_buckets=None`` if profiling shows touched fraction ≲0.1%
-    AND the per-batch fixed cost has been engineered away).
+    run_sessionize_stateful. State is keyed by ``_key_bucket``: each
+    bucket holds its users' (ewma, n) pairs as parallel arrays.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -639,41 +555,9 @@ def run_ewma_stateful(
     stream = _events_stream(
         spark, sf_dir, path_glob=path_glob, max_files_per_trigger=max_files_per_trigger
     ).select("user_id", "ts", "event_id", "value")
-
-    key_buckets = _resolve_key_buckets(key_buckets)
-    if key_buckets is None:
-        state_schema = "acc double, n long"
-
-        def fn(key, pdfs, state: GroupState):
-            if state.hasTimedOut:
-                acc, n = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {"user_id": [key[0]], "n_events": [n], "ewma": [acc]}
-                )
-                return
-            rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-            if state.exists:
-                acc, n = state.get
-            else:
-                acc, n = None, 0
-            for v in rows["value"]:
-                x = float(v)
-                acc = x if acc is None else alpha * x + (1.0 - alpha) * acc
-                n += 1
-            state.update((acc, n))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "ewma": [acc]}
-            )
-
-        ewma = stream.groupBy("user_id").applyInPandasWithState(
-            fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-        return _snapshot(spark, ewma, "update", "ewma_stateful_out")
-
     state_schema = "users array<long>, accs array<double>, ns array<long>"
 
-    def fn_b(key, pdfs, state: GroupState):
+    def fn(key, pdfs, state: GroupState):
         rows = pd.concat(list(pdfs)).sort_values(
             ["user_id", "ts", "event_id"]
         )
@@ -710,11 +594,12 @@ def run_ewma_stateful(
             {"user_id": out_u, "n_events": out_n, "ewma": out_e}
         )
 
-    bucketed = stream.withColumn(
-        "bucket", F.pmod("user_id", F.lit(key_buckets)).cast("int")
-    )
-    ewma = bucketed.groupBy("bucket").applyInPandasWithState(
-        fn_b, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    ewma = (
+        stream.withColumn("bucket", _key_bucket(spark, F.col("user_id")))
+        .groupBy("bucket")
+        .applyInPandasWithState(
+            fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        )
     )
     return _snapshot(spark, ewma, "update", "ewma_stateful_out")
 
@@ -727,7 +612,6 @@ def run_zscore_stateful(
     threshold: float = 2.5,
     path_glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    key_buckets: int | None | str = "auto",
 ) -> DataFrame:
     """Streaming rolling z-score anomalies via ``applyInPandasWithState``
     — the streaming twin of plans/roster_analytics.q_anomaly_zscore with
@@ -748,11 +632,12 @@ def run_zscore_stateful(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = "event_id long, user_id long, zscore double"
-    state_schema = "buf array<bigint>"
+    # flattened ring buffers, since the state row must stay a flat Arrow
+    # struct: user users[i]'s buffer is cents[offsets[i] : offsets[i+1]]
+    state_schema = "users array<long>, offsets array<long>, cents array<long>"
 
     def fold_user(eids, vals, buf, out_ids, out_z):
-        """One user's ring-buffer fold — shared verbatim by both state
-        layouts; returns the trimmed buffer."""
+        """One user's ring-buffer fold; returns the trimmed buffer."""
         for eid, v in zip(eids, vals):
             c = math.floor(float(v) * 100 + 0.5)
             n = len(buf)
@@ -772,28 +657,6 @@ def run_zscore_stateful(
         return buf
 
     def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame({"event_id": [], "user_id": [], "zscore": []})
-            return
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        buf = list(state.get[0]) if state.exists else []
-        out_ids, out_z = [], []
-        buf = fold_user(rows["event_id"], rows["value"], buf, out_ids, out_z)
-        state.update((buf,))
-        yield pd.DataFrame(
-            {
-                "event_id": out_ids,
-                "user_id": [key[0]] * len(out_ids),
-                "zscore": out_z,
-            }
-        )
-
-    def fn_b(key, pdfs, state: GroupState):
-        # key-coarsened layout (see run_ewma_stateful): flattened ring
-        # buffers — (users, offsets, cents) — since the state row must
-        # stay a flat Arrow struct; user u's buffer is
-        # cents[offsets[i] : offsets[i+1]] for users[i] == u
         rows = pd.concat(list(pdfs)).sort_values(
             ["user_id", "ts", "event_id"]
         )
@@ -810,14 +673,11 @@ def run_zscore_stateful(
         out_z: list[float] = []
         for uid, grp in rows.groupby("user_id", sort=True):
             uid = int(uid)
-            ids: list[int] = []
-            zs: list[float] = []
+            n0 = len(out_ids)
             st[uid] = fold_user(
-                grp["event_id"], grp["value"], st.get(uid, []), ids, zs
+                grp["event_id"], grp["value"], st.get(uid, []), out_ids, out_z
             )
-            out_ids.extend(ids)
-            out_us.extend([uid] * len(ids))
-            out_z.extend(zs)
+            out_us.extend([uid] * (len(out_ids) - n0))
         keys = sorted(st)
         offsets = [0]
         flat: list[int] = []
@@ -832,24 +692,13 @@ def run_zscore_stateful(
     stream = _events_stream(
         spark, sf_dir, path_glob=path_glob, max_files_per_trigger=max_files_per_trigger
     ).select("user_id", "ts", "event_id", "value")
-    key_buckets = _resolve_key_buckets(key_buckets)
-    if key_buckets is None:
-        anomalies = stream.groupBy("user_id").applyInPandasWithState(
+    anomalies = (
+        stream.withColumn("bucket", _key_bucket(spark, F.col("user_id")))
+        .groupBy("bucket")
+        .applyInPandasWithState(
             fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
-    else:
-        bstate = (
-            "users array<long>, offsets array<long>, cents array<long>"
-        )
-        anomalies = (
-            stream.withColumn(
-                "bucket", F.pmod("user_id", F.lit(key_buckets)).cast("int")
-            )
-            .groupBy("bucket")
-            .applyInPandasWithState(
-                fn_b, out_schema, bstate, "append", GroupStateTimeout.NoTimeout
-            )
-        )
+    )
     return _snapshot(spark, anomalies, "append", "zscore_stateful_out")
 
 
@@ -861,11 +710,10 @@ def run_stream_near_dup(
     band_width: int = 2,
     chunk_order: list[int] | None = None,
     occupant: str = "min_id",
-    key_buckets: int | None | str = "auto",
 ) -> DataFrame:
     """Streaming ingest-time NEAR-duplicate detection — MinHash-LSH
     banding under real cross-batch ``GroupState`` (SURVEY §2.I × the
-    dedup family): the 100 TB/day training-pipeline shape, where a new
+    dedup family): the training-pipeline ingest shape, where a new
     document must be flagged against everything already ingested
     without ever joining the corpus to itself.
 
@@ -903,7 +751,7 @@ def run_stream_near_dup(
     production-ingest variant: the FIRST-ARRIVED doc keeps the bucket
     forever and every later arrival is flagged regardless of id —
     order-sensitive output, but "keep what you already ingested" is
-    the semantics a 100 TB/day front door actually wants (you cannot
+    the semantics an ingest front door actually wants (you cannot
     un-ingest the earlier copy). Within one micro-batch both fold in
     doc_id order (cross-executor row order is nondeterministic, so
     arrival rank inside a batch is defined as doc_id rank). Both
@@ -915,15 +763,10 @@ def run_stream_near_dup(
     Scale: the only shuffle keys band rows by (band_idx, band_hash) —
     bucket count grows with the corpus, so no bucket ever concentrates;
     state is one long per occupied bucket; per-doc work is O(bands).
-    No corpus self-join exists anywhere in the plan. ``key_buckets``
-    ("auto" default) applies the round-9 key-coarsened state layout:
-    occupied buckets are corpus-scaled (2M at the 100× replica), so
-    per-KEY GroupState pays the ~3 ms/key plumbing constant per bucket
-    per batch — coarse groups of ~buckets/B fold in one invocation and
-    drop the run to the signature-compute floor (measured 150 s →
-    ~floor at 100×, SCALING.md round 9). ``key_buckets=None`` restores
-    the per-key layout (identical flags — parity in tests); see the
-    in-code comment for the trickle-stream tradeoff.
+    No corpus self-join exists anywhere in the plan. The GroupState is
+    keyed by ``_key_bucket`` of xxhash64(band_idx, band_hash), so each
+    state group folds its share of the occupied buckets in one
+    invocation.
     """
     from review_engine_spark.sources.io import read_parquet_table
 
@@ -932,20 +775,12 @@ def run_stream_near_dup(
             "occupant must be 'min_id' or 'first_arrival', got "
             f"{occupant!r}"
         )
-    params = (n_seeds, band_width, occupant, key_buckets)
+    params = (n_seeds, band_width, occupant)
     if n_chunks <= 1:
-        import os
-
-        table_dir = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isdir(table_dir):
-            src_path, glob_opt = table_dir, None
-        else:
-            src_path, glob_opt = sf_dir, "documents.parquet"
-        schema = "doc_id long, text string"
-        reader = spark.readStream.schema(schema).format("parquet")
-        if glob_opt:
-            reader = reader.option("pathGlobFilter", glob_opt)
-        return _near_dup_snapshot(spark, reader.load(src_path), *params)
+        stream = _parquet_stream(
+            spark, sf_dir, "documents.parquet", schema="doc_id long, text string"
+        )
+        return _near_dup_snapshot(spark, stream, *params)
     docs = read_parquet_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
@@ -972,15 +807,14 @@ def run_stream_near_dup(
             # range-file with an mtime proportional to its rank in
             # chunk_order makes arrival order diverge from doc_id
             # order — the out-of-order-ingest test harness.
-            import glob as _glob
-            import os as _os
-            import time as _time
+            import glob
+            import time
 
             assert sorted(chunk_order) == list(range(n_chunks))
-            base = _time.time()
+            base = time.time()
             for rank, ci in enumerate(chunk_order):
-                for f in _glob.glob(f"{src_dir}/chunk={ci}/*"):
-                    _os.utime(f, (base + 10 * rank, base + 10 * rank))
+                for f in glob.glob(f"{src_dir}/chunk={ci}/*"):
+                    os.utime(f, (base + 10 * rank, base + 10 * rank))
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", "1")
@@ -991,7 +825,7 @@ def run_stream_near_dup(
 
 def _near_dup_snapshot(
     spark: SparkSession, stream: DataFrame, n_seeds: int, band_width: int,
-    occupant: str, key_buckets: int | None | str,
+    occupant: str,
 ) -> DataFrame:
     """``run_stream_near_dup`` over a stream of (doc_id, text)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -1051,37 +885,11 @@ def _near_dup_snapshot(
     first_arrival = occupant == "first_arrival"
 
     def fn(key, pdfs, state: GroupState):
-        rows = pd.concat(list(pdfs)).sort_values("doc_id")
-        cur = state.get[0] if state.exists else None
-        ids, hits = [], []
-        for did in rows["doc_id"]:
-            did = int(did)
-            ids.append(did)
-            if first_arrival:
-                # bucket belongs to whoever arrived first; every later
-                # arrival is a flagged near-dup regardless of id
-                hits.append(1 if cur is not None else 0)
-                if cur is None:
-                    cur = did
-            else:
-                hits.append(1 if (cur is not None and cur < did) else 0)
-                if cur is None or did < cur:
-                    cur = did
-        state.update((cur,))
-        yield pd.DataFrame(
-            {
-                "doc_id": ids,
-                "band_idx": [key[0]] * len(ids),
-                "hit": hits,
-            }
-        )
-
-    def fn_c(key, pdfs, state: GroupState):
-        # key-coarsened layout: this group's occupied buckets live as
-        # parallel arrays ("band|hash" composite, occupant doc_id); the
-        # fold keys on the EXACT strings, so the xxhash64 coarse key is
-        # pure partitioning — a 64-bit collision can never merge two
-        # buckets, only co-locate them
+        # this group's occupied buckets live as parallel arrays
+        # ("band|hash" composite, occupant doc_id); the fold keys on the
+        # EXACT strings, so the xxhash64 group key is pure partitioning
+        # — a 64-bit collision can never merge two buckets, only
+        # co-locate them
         rows = pd.concat(list(pdfs)).sort_values("doc_id")
         if state.exists:
             bks, occs = state.get
@@ -1109,54 +917,18 @@ def _near_dup_snapshot(
             {"doc_id": ids, "band_idx": bidx, "hit": hits}
         )
 
-    key_buckets = _resolve_key_buckets(key_buckets, state_partitions=32)
-    if key_buckets is None:
-        flags = bands.groupBy("band_idx", "bh").applyInPandasWithState(
+    flags = (
+        bands.withColumn("cg", _key_bucket(spark, F.xxhash64("band_idx", "bh")))
+        .groupBy("cg")
+        .applyInPandasWithState(
             fn,
             "doc_id long, band_idx int, hit int",
-            "min_id long",
+            "bks array<string>, occs array<long>",
             "update",
             GroupStateTimeout.NoTimeout,
         )
-    else:
-        # Coarse-group the corpus-scaled bucket space: per-KEY GroupState
-        # pays the ~3 ms/key plumbing constant per OCCUPIED bucket per
-        # batch (2M buckets at the 100× replica ≈ 150 s measured r9 —
-        # the honest re-measurement that replaced r8's stale 7.3×);
-        # folding ~buckets/B buckets per invocation drops that to the
-        # signature-compute floor. The feared trickle-regime crossover
-        # was MEASURED in r10 (SCALING.md round 10, trickle horizon):
-        # coarse wins 1.4-2x at touched fractions >=10% and +8% at 1%;
-        # per-key only wins at f~0.1% and only by 4%, in a
-        # regime where ~95% of both layouts' cost is per-micro-batch
-        # fixed overhead — array re-serialization is ~us/stored key, a
-        # per-key GroupState round-trip ~ms/touched key. So coarse
-        # stays the default everywhere; key_buckets=None remains
-        # available (parity-pinned) for the one narrow regime above.
-        flags = (
-            bands.withColumn(
-                "cg",
-                F.pmod(F.xxhash64("band_idx", "bh"), F.lit(key_buckets)).cast(
-                    "int"
-                ),
-            )
-            .groupBy("cg")
-            .applyInPandasWithState(
-                fn_c,
-                "doc_id long, band_idx int, hit int",
-                "bks array<string>, occs array<long>",
-                "update",
-                GroupStateTimeout.NoTimeout,
-            )
-        )
-    # state partitions sized UP for this op: its key count is
-    # corpus-scaled (docs × bands — ~20k mostly-singleton buckets at
-    # sf0.1, vs ~150 users for the events runners), so the per-key fn
-    # cost dominates and parallelism wins (measured 16.5 → 5.6 s at
-    # sf0.1 going 8 → 32)
-    return _snapshot(
-        spark, flags, "update", "stream_near_dup_out", state_partitions=32
     )
+    return _snapshot(spark, flags, "update", "stream_near_dup_out")
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,22 +985,7 @@ def run_stream_quality_gate(
     """
     from review_engine_spark.operators.curation import gopher_gate
 
-    import os
-
-    table_dir = os.path.join(sf_dir, path_glob)
-    if os.path.isdir(table_dir):
-        src_path, glob_opt = table_dir, None
-    else:
-        src_path, glob_opt = sf_dir, path_glob
-
-    def _opt(r):
-        return r.option("pathGlobFilter", glob_opt) if glob_opt else r
-
-    batch = _opt(spark.read).parquet(src_path)
-    reader = _opt(spark.readStream.schema(batch.schema).format("parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(src_path)
+    stream = _parquet_stream(spark, sf_dir, path_glob, max_files_per_trigger)
     return _snapshot(
         spark, gopher_gate(stream, "text", "doc_id"), "append",
         "stream_quality_gate_out",
@@ -1260,24 +1017,13 @@ def run_stream_ingest_gate(
     as ``_snapshot`` does, because the full output is a few thousand
     rows at the fixture scales.
     """
-    import os
-
     from review_engine_spark.operators.curation import ingest_gate_frame
     from review_engine_spark.plans.roster_curation import (
         score_bigrams_against,
     )
 
     cab, un, vocab_n = stats
-    table_dir = os.path.join(sf_dir, path_glob)
-    if os.path.isdir(table_dir):
-        src_path, glob_opt = table_dir, None
-    else:
-        src_path, glob_opt = sf_dir, path_glob
-
-    def _opt(r):
-        return r.option("pathGlobFilter", glob_opt) if glob_opt else r
-
-    batch = _opt(spark.read).parquet(src_path)
+    stream = _parquet_stream(spark, sf_dir, path_glob, max_files_per_trigger)
 
     def out_schema():
         # DEFERRED (round 13): analyzing the composed gate tree over
@@ -1285,18 +1031,10 @@ def run_stream_ingest_gate(
         # r12's +50% regression (profiled: OPTIMIZATION_r13.md row 2)
         # — and is only needed for the empty-stream fallback, so pay it
         # there, not on every call.
+        empty = spark.createDataFrame([], stream.schema)
         return ingest_gate_frame(
-            batch.limit(0),
-            score_bigrams_against(batch.limit(0), cab, un, vocab_n),
-            cut,
+            empty, score_bigrams_against(empty, cab, un, vocab_n), cut
         ).schema
-
-    reader = _opt(spark.readStream.schema(batch.schema).format("parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.load(src_path)
 
     # snapshots are keyed by batch_id (last write wins) because
     # foreachBatch is at-least-once: a plain append would duplicate

@@ -168,7 +168,7 @@ def test_stream_near_dup_empty_table_chunked(spark, tmp_path):
 
 def _write_event_batches(tmp_path):
     """Three single-file micro-batches with users interleaved ACROSS
-    batches, so the key-coarsened layouts must genuinely restore and
+    batches, so the bucketed GroupState folds must genuinely restore and
     re-serialize per-user state between invocations."""
     import os
     import time
@@ -208,24 +208,30 @@ def _write_event_batches(tmp_path):
     return str(tmp_path)
 
 
-def test_key_batched_state_layout_matches_per_key(spark, tmp_path):
-    """key_buckets (state keyed by pmod(user, B), per-user folds looped
-    inside one pandas group) must emit EXACTLY the per-key layout's
-    rows across multiple micro-batches — same fold order, same float
-    sequence, same provisional-row cadence — for all three stateful
-    runners. The layout exists purely to amortize the measured ~3 ms
-    per-key state plumbing (SCALING.md round 9)."""
+def test_stateful_rows_independent_of_bucket_count(spark, tmp_path, monkeypatch):
+    """The stateful runners key GroupState by ``_key_bucket`` and loop a
+    bucket's users inside one pandas group, restoring and re-serializing
+    each user's state between micro-batches. Their rows must not depend
+    on how users share buckets: the derived bucket count (one user per
+    bucket here) must emit EXACTLY what one bucket per state partition
+    (several users per bucket) emits across three interleaved
+    micro-batches — same fold order, same float sequence, same
+    provisional-row cadence — for all three runners."""
     from review_engine_spark.streaming import jobs
 
     sf_dir = _write_event_batches(tmp_path)
     kw = {"path_glob": "ev_*.parquet", "max_files_per_trigger": 1}
+
+    def n_buckets():  # over the fixture's 7 user ids
+        bucket = jobs._key_bucket(spark, F.col("id"))
+        return spark.range(7).select(bucket).distinct().count()
 
     def rows(df, cols):
         return sorted(
             tuple(r[c] for c in cols) for r in df.collect()
         )
 
-    for fn, cols in [
+    runners = [
         (jobs.run_ewma_stateful, ["user_id", "n_events", "ewma"]),
         (
             jobs.run_sessionize_stateful,
@@ -238,30 +244,20 @@ def test_key_batched_state_layout_matches_per_key(spark, tmp_path):
             ],
         ),
         (jobs.run_zscore_stateful, ["event_id", "user_id", "zscore"]),
-    ]:
-        per_key = rows(fn(spark, sf_dir, **kw), cols)
-        batched = rows(fn(spark, sf_dir, key_buckets=3, **kw), cols)
-        assert per_key == batched, fn.__name__
-        assert per_key, fn.__name__  # non-vacuous
-
-
-def test_stream_near_dup_coarse_state_matches_per_key(spark, sf_dir):
-    """The key-coarsened bucket-state layout (default) must flag
-    exactly the per-key layout's (doc, band) hits — including across
-    micro-batches, where a coarse group restores and re-serializes its
-    whole bucket array."""
-    from review_engine_spark.streaming.jobs import run_stream_near_dup
-
-    def agg(df):
-        return {
-            (r["doc_id"], r["band_idx"]): r["hit"] for r in df.collect()
-        }
-
-    per_key = agg(run_stream_near_dup(spark, sf_dir, key_buckets=None))
-    coarse = agg(run_stream_near_dup(spark, sf_dir))
-    chunked = agg(run_stream_near_dup(spark, sf_dir, n_chunks=3))
-    assert per_key == coarse == chunked
-    assert sum(per_key.values()) > 0
+    ]
+    assert n_buckets() == 7
+    derived = [rows(fn(spark, sf_dir, **kw), cols) for fn, cols in runners]
+    monkeypatch.setattr(jobs, "KEY_BUCKETS_PER_PARTITION", 1)
+    assert n_buckets() < 7  # several users really share a bucket
+    shared = [rows(fn(spark, sf_dir, **kw), cols) for fn, cols in runners]
+    for (fn, _), got, want in zip(runners, shared, derived):
+        assert got == want, fn.__name__
+        assert want, fn.__name__  # non-vacuous
+    # each user's 14 events fold into one EWMA across the three batches
+    final_n = {}
+    for u, n, _ in derived[0]:
+        final_n[u] = max(n, final_n.get(u, 0))
+    assert final_n == {u: 14 for u in range(7)}
 
 
 def test_stream_quality_gate_equals_batch_gate(spark, tmp_path):

@@ -143,7 +143,7 @@ def make_session(plain: bool):
         return SparkSession.builder.master("local[*]").appName("check-plain").getOrCreate()
     from review_engine_spark.session import get_spark
 
-    return get_spark("check", shuffle_partitions=8)
+    return get_spark("check")
 
 
 def main(argv: list[str] | None = None) -> int:
