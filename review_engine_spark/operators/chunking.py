@@ -156,20 +156,29 @@ def pack_sequences(
     )
 
 
+#: 2^31 — the modulus of the engine's LCG hash (``_lcg``).
+_M = 2147483648
+
+
+def _lcg(expr: Column) -> Column:
+    """One LCG step over ``expr mod 2^31`` → integer in [0, 2^31) — the
+    hash ``id_hash_frac`` describes. Pure 64-bit-safe integer arithmetic
+    ((2^31)·1103515245 < 2^62)."""
+    return F.pmod(
+        F.pmod(expr, F.lit(_M)) * F.lit(1103515245) + F.lit(12345), F.lit(_M)
+    )
+
+
 def id_hash_frac(id_col: str) -> Column:
     """Deterministic uniform-ish fraction in [0, 1) from an integer id:
     one 31-bit LCG step (a=1103515245, c=12345 — the classic ANSI-C
     constants) over ``id mod 2³¹``. Pure integer arithmetic that
     evaluates identically in Spark and any SQL oracle, with no reliance
-    on engine-specific hash functions — the basis for splits and
-    sampling that must be stable across runs, engines, partitionings.
+    on engine-specific hash functions — the basis for splits, sampling,
+    cluster seeding and shuffles that must be stable across runs,
+    engines, partitionings.
     """
-    m = 2147483648  # 2^31
-    h = F.pmod(
-        F.pmod(F.col(id_col), F.lit(m)) * F.lit(1103515245) + F.lit(12345),
-        F.lit(m),
-    )
-    return h.cast("double") / F.lit(float(m))
+    return _lcg(F.col(id_col)).cast("double") / F.lit(float(_M))
 
 
 def assign_split(

@@ -34,6 +34,7 @@ from review_engine_spark.functions.vector import (
     l2_norm,
 )
 from review_engine_spark.operators.chunking import chunk_documents, chunk_tokens
+from review_engine_spark.operators.kmeans import lcg_bucket
 
 __all__ = [
     "top_tokens",
@@ -155,17 +156,6 @@ def boilerplate_flags(
     )
 
 
-def _lcg_bucket(id_col: str, k: int):
-    """(LCG(id) mod k) with the ANSI-C constants — deterministic,
-    engine-portable cluster seeding (mirrors chunking.id_hash_frac)."""
-    m = 2147483648  # 2^31
-    h = F.pmod(
-        F.pmod(F.col(id_col), F.lit(m)) * F.lit(1103515245) + F.lit(12345),
-        F.lit(m),
-    )
-    return F.pmod(h, F.lit(k))
-
-
 def semantic_dedup(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -228,7 +218,7 @@ def semantic_dedup(
     """
     cents = (
         emb.filter(F.col(vec_col).isNotNull())
-        .withColumn("_b", _lcg_bucket(id_col, k))
+        .withColumn("_b", lcg_bucket(id_col, k))
         .withColumn(
             "_rn",
             F.row_number().over(Window.partitionBy("_b").orderBy(id_col)),

@@ -1,11 +1,17 @@
 """Deduplication operators (SURVEY §2.K; BASELINE.json north star).
 
-Four tiers, all pure DataFrame ops (no Python in the hot path):
+Four text tiers plus one embedding tier:
 
 - exact:        hash-groupBy on a 64-bit digest of normalized text
 - MinHash+LSH:  shingle → minhash signature → banded bucket join
 - SimHash:      per-token hash bit votes → 64-bit signature → hamming
 - n-gram Jaccard: shingle-set intersection/union on candidate pairs
+- embedding:    random-hyperplane signature → banded join → exact cosine
+
+Exact, MinHash and n-gram Jaccard are pure DataFrame expressions. The
+SimHash and random-hyperplane signatures are pandas UDFs (numpy per
+Arrow batch); the banding, candidate joins and verification after them
+are DataFrame ops again.
 
 Scale design: every candidate-generation step shuffles 8-byte keys (never
 document bodies); verification joins happen only on LSH-bucket candidate
@@ -24,16 +30,13 @@ from pyspark.sql import functions as F
 __all__ = [
     "normalize_text",
     "exact_dedup",
-    "shingles",
     "shingle_hash_rows",
     "minhash_signatures",
     "minhash_lsh_pairs",
-    "simhash_signatures",
     "simhash_signatures_batch",
     "simhash_near_dups",
     "hamming_distance",
     "ngram_jaccard_pairs",
-    "rh_signatures",
     "rh_signatures_batch",
     "embedding_near_dups",
     "contamination_check",
@@ -55,19 +58,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         df.select(F.col(id_col), h.alias("content_hash"))
         .groupBy("content_hash")
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_dups"))
-    )
-
-
-def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct n-token shingles of a whitespace-tokenized text column."""
-    toks = F.split(normalize_text(col), " ")
-    n_sh = F.size(toks) - (n - 1)
-    # guard: sequence(1, n) with n < 1 would produce a DESCENDING range
-    idx = F.when(n_sh >= 1, F.sequence(F.lit(1), n_sh)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
     )
 
 
@@ -224,54 +214,17 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_bits: int = 64
-) -> DataFrame:
-    """SimHash signatures as one bigint per document.
-
-    Per token t, h = xxhash64(t); bit b votes +1 if set else -1; signature
-    bit b = 1 iff the vote sum is positive. Implemented relationally —
-    explode tokens, then ``num_bits`` conditional-sum aggregates in ONE
-    hash aggregation (partial map-side combine keeps the shuffle at
-    num_bits ints per doc regardless of document length).
-    """
-    toks = df.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.split(normalize_text(F.col(text_col)), " "), lambda t: t != "")
-        ).alias("tok"),
-    ).select(F.col(id_col), F.xxhash64("tok").alias("h"))
-    votes = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(num_bits)
-        ]
-    )
-    sig = F.lit(0).cast("long")
-    for b in range(num_bits):
-        bit_value = (1 << b) if b < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"v{b}") > 0, F.lit(bit_value).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return votes.select(F.col(id_col), sig.alias("sig"))
-
-
 def simhash_signatures_batch(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """SimHash signatures, Arrow-batched numpy path (64-bit).
 
-    Same construction as ``simhash_signatures`` (per-token 64-bit hash,
-    ±1 bit votes, sign of vote sum) but computed per Arrow batch with
-    vectorized token hashing (pandas siphash, fixed key → deterministic
-    across executors) and one ``reduceat`` segment-sum — no token
-    explode, no 64-aggregate shuffle; the signature never leaves the
-    scan partition. Documents with no tokens yield NULL and are dropped,
-    matching the relational version (empty docs vanish at the explode).
+    Per token, a 64-bit hash (pandas siphash, fixed key → deterministic
+    across executors); each bit votes +1 if set else -1; signature bit b
+    = 1 iff the vote sum of bit b is positive. Computed per Arrow batch
+    with one ``reduceat`` segment-sum — no token explode, no shuffle;
+    the signature never leaves the scan partition. Documents with no
+    tokens yield NULL and are dropped.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -368,47 +321,6 @@ def simhash_near_dups(
     )
 
 
-def rh_signatures(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    num_bits: int = 16,
-    seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane (cosine) LSH signatures as one long per vector.
-
-    Bit b = sign of the projection of the vector onto pseudo-random
-    hyperplane b, whose components are ±1 derived from xxhash64(dim_index,
-    b, seed) — deterministic, no stored planes, no shuffle. Collision
-    probability of bit b for two vectors is 1 − θ/π (Charikar's SimHash
-    for cosine), so banding the signature gives a cosine-near-dup
-    candidate generator.
-
-    Each bit is one fold over the array (top-level expression, evaluated
-    once per row); total work is num_bits·dim cheap long-hash + adds.
-    """
-    def _projection(b: int) -> Column:
-        signed = F.transform(
-            F.col(vec_col),
-            lambda x, i: F.when(
-                F.xxhash64(i, F.lit(b), F.lit(seed)).bitwiseAND(F.lit(1)) == 1,
-                x.cast("double"),
-            ).otherwise(-x.cast("double")),
-        )
-        return F.aggregate(signed, F.lit(0.0), lambda acc, v: acc + v)
-
-    bits = [
-        F.when(_projection(b) > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for b in range(num_bits)
-    ]
-    sig = bits[0]
-    for x in bits[1:]:
-        sig = sig.bitwiseOR(x)
-    return df.select(F.col(id_col), sig.alias("sig"))
-
-
 def rh_signatures_batch(
     df: DataFrame,
     vec_col: str,
@@ -418,14 +330,15 @@ def rh_signatures_batch(
 ) -> DataFrame:
     """Random-hyperplane LSH signatures, Arrow-batched numpy path.
 
-    Same contract as ``rh_signatures`` (one long per vector, bit b =
-    sign of projection onto deterministic pseudo-random hyperplane b)
-    but computed as a single BLAS matmul per Arrow batch instead of
-    num_bits interpreted higher-order-function folds per row — measured
-    ~50× per-row on 64-dim vectors. The plane matrix is derived from a
-    fixed seed, so every executor generates identical planes with no
-    broadcast and no stored state. This is the scale path; the pure-
-    expression ``rh_signatures`` remains for SQL-only contexts.
+    One long per vector: bit b = sign of the projection onto
+    pseudo-random hyperplane b. Collision probability of bit b for two
+    vectors is 1 − θ/π (Charikar's SimHash for cosine), so banding the
+    signature gives a cosine-near-dup candidate generator. Computed as
+    a single BLAS matmul per Arrow batch — measured ~50× per-row faster
+    on 64-dim vectors than num_bits higher-order-function folds per
+    row. The plane matrix is derived from a fixed seed, so every
+    executor generates identical planes with no broadcast and no stored
+    state.
     """
     if not 0 < num_bits < 64:
         raise ValueError("num_bits must be in [1, 63] to fit a signed long")
@@ -561,9 +474,9 @@ def ngram_jaccard_pairs(
     input or feed LSH candidates at scale).
 
     Tokens are materialized as a column before the shingle transform so
-    the per-shingle slice is linear (the `shingles()` expression form
-    re-evaluates its token pipeline per element — O(n²)/doc — and is
-    kept only for single-expression SQL contexts)."""
+    the per-shingle slice is linear (building the tokens inside the
+    lambda would re-evaluate the token pipeline per element —
+    O(n²)/doc)."""
     toks = F.filter(
         F.split(normalize_text(F.col(text_col)), " "), lambda t: t != ""
     )

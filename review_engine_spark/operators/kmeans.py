@@ -27,18 +27,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from review_engine_spark.operators.chunking import _lcg
+
 __all__ = ["kmeans_fit", "lcg_bucket"]
 
 
 def lcg_bucket(id_col: str, k: int):
     """(LCG(id) mod k) — deterministic, engine-portable bucket hash
-    (the ``chunking.id_hash_frac`` constants)."""
-    m = 2147483648  # 2^31
-    h = F.pmod(
-        F.pmod(F.col(id_col), F.lit(m)) * F.lit(1103515245) + F.lit(12345),
-        F.lit(m),
-    )
-    return F.pmod(h, F.lit(k))
+    (``chunking._lcg``)."""
+    return F.pmod(_lcg(F.col(id_col)), F.lit(k))
 
 
 def _sq_dist(vec, cvec):

@@ -25,22 +25,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from review_engine_spark.operators.chunking import _lcg, id_hash_frac
+
 __all__ = ["mixture_plan", "upsample_epochs", "apply_mixture"]
-
-#: 2^31 — modulus shared with chunking.id_hash_frac so every sampling /
-#: ordering decision in the engine draws from the same LCG family.
-_M = 2147483648
-
-
-def _lcg(expr: Column) -> Column:
-    """One ANSI-C LCG step over ``expr mod 2^31`` → integer in [0, 2^31).
-
-    Pure 64-bit-safe integer arithmetic ((2^31)·1103515245 < 2^62), so
-    Spark and any SQL oracle evaluate it bit-identically.
-    """
-    return F.pmod(
-        F.pmod(expr, F.lit(_M)) * F.lit(1103515245) + F.lit(12345), F.lit(_M)
-    )
 
 
 def mixture_plan(
@@ -152,7 +139,7 @@ def apply_mixture(
         broadcast(plan.select(source_col, "sample_rate", "epochs")),
         source_col,
     )
-    frac = _lcg(F.col(id_col)).cast("double") / F.lit(float(_M))
+    frac = id_hash_frac(id_col)
     return (
         keyed.filter(frac < F.col("sample_rate"))
         .withColumn("epoch", F.explode(F.sequence(F.lit(1), F.col("epochs"))))

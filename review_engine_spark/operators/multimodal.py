@@ -32,7 +32,6 @@ from pyspark.sql.types import (
 )
 
 __all__ = [
-    "cap_images",
     "attach_media_binary",
     "decode_image_meta",
     "image_features",
@@ -41,12 +40,6 @@ __all__ = [
     "audio_fingerprint",
     "DECODED_META_SCHEMA",
 ]
-
-
-def cap_images(images_col, n: int = 1):
-    """A6 cap: keep the first n image records BEFORE any fetch/decode UDF
-    (summarize.py:28,76 — `records[:max_images]`, called with 1)."""
-    return F.slice(images_col, 1, n)
 
 
 def attach_media_binary(df: DataFrame, url_col: str, out_col: str = "content") -> DataFrame:

@@ -7,7 +7,7 @@ The north star adds the classic collaborative path on top of that
 content pipeline: MLlib ALS latent factors plus a relational item-item
 co-occurrence model. Both consume the same implicit-feedback table.
 
-Scale notes (100 TB):
+Scale notes:
 
 - ``implicit_ratings`` joins two fact tables on the order key; at scale
   both sides are bucketed by ``l_orderkey``/``o_orderkey`` (see
@@ -23,12 +23,13 @@ Scale notes (100 TB):
   rows.
 - ``als_recommend`` is iterative (driver-coordinated MLlib); its
   shuffles are block-to-block and scale with the rating count. Scoring
-  defaults to ANN over the item-factor matrix (broadcast
-  sign-random-projection index, shuffle-free per-user probe + exact
-  dot-product rerank): work is linear in users, unlike
-  ``recommendForAllUsers``'s blocked |U|×|I| factor cross (kept as
-  ``method="exact"`` — the recall yardstick, measured ≥390× at the
-  100× stress scale and hence unshippable at 100 TB).
+  probes a broadcast sign-random-projection index over the item
+  factors (shuffle-free per-user probe + exact dot-product rerank):
+  work is linear in users, unlike ``recommendForAllUsers``'s blocked
+  |U|×|I| factor cross, which survives only as the recall yardstick in
+  tests/test_recommend.py. Scoring one fitted model on a 4-core host,
+  the exact cross was ~0.8 s faster at sf0.1 (3.2 s vs 3.9-4.1 s) but
+  10-36 s slower on the 10× replica (208-223 s vs 187-198 s).
 """
 
 from __future__ import annotations
@@ -53,12 +54,11 @@ _NDCG_DISCOUNT_MICRO = [1_000_000, 630_930, 500_000, 430_677, 386_853]
 #: Prefix sums: ideal DCG for a user with n >= rank relevant items.
 _NDCG_IDEAL_MICRO = [1_000_000, 1_630_930, 2_130_930, 2_561_607, 2_948_460]
 
-#: Catalog-size ceiling for the driver-built broadcast SRP index
-#: (method="ann"). The index costs ~(4·dim + 8 + 4·n_tables) bytes/item
-#: — ~1.3 GB at 20M rank-8 items, the same budget class as a broadcast
-#: join build side. Past it, method="ann_join" runs the identical code
-#: algebra as a distributed equi-join with no driver materialization.
-ANN_BROADCAST_MAX_ITEMS = 20_000_000
+#: SRP index shape (``_ann_topk_from_factors``): code tables, expected
+#: items per bucket, and query-directed bit flips probed per table.
+_ANN_TABLES = 6
+_ANN_TARGET_BUCKET = 128
+_ANN_FLIPS = 4
 
 
 def implicit_ratings(
@@ -172,26 +172,21 @@ def _fit_als(
     reg_param: float,
     alpha: float,
     seed: int,
-    num_blocks: int | None,
     user_col: str,
     item_col: str,
     rating_col: str,
 ):
-    """Fit the implicit-feedback MLlib ALS model (shared by the exact and
-    ANN recommend paths).
+    """Fit the implicit-feedback MLlib ALS model.
 
-    ``num_blocks`` sizes the ALS block grid (shuffle width of every
-    iteration). The default scales with available parallelism instead
-    of MLlib's fixed 10 — at local scale the choice is noise-level, but
-    the block count is the knob that must grow with the cluster: on a
-    1000-executor run pass an explicit count sized to executors ×
-    cores / 2 so each block's normal-equation solve stays cache-sized.
+    The block grid (shuffle width of every iteration) scales with the
+    session's parallelism instead of MLlib's fixed 10. A different
+    block count fits a different model, so the grid is part of what
+    pins ``als_recommend``'s rows.
     """
     from pyspark.ml.recommendation import ALS
 
-    if num_blocks is None:
-        par = ratings.sparkSession.sparkContext.defaultParallelism
-        num_blocks = max(2, min(16, par // 8))
+    par = ratings.sparkSession.sparkContext.defaultParallelism
+    num_blocks = max(2, min(16, par // 8))
     als = ALS(
         rank=rank,
         maxIter=max_iter,
@@ -223,11 +218,9 @@ def als_recommend(
     reg_param: float = 0.1,
     alpha: float = 1.0,
     seed: int = 42,
-    num_blocks: int | None = None,
     user_col: str = "user_id",
     item_col: str = "item_id",
     rating_col: str = "rating",
-    method: str = "ann",
 ) -> DataFrame:
     """MLlib ALS on implicit feedback → flat (user, item, rank, score).
 
@@ -235,72 +228,20 @@ def als_recommend(
     ``implicit_ratings``; the seed pins initialization so a fixed input
     gives a fixed model (rows-only check — iterative, not SQL).
 
-    ``method`` picks the scoring plan:
-
-    - ``"exact"`` — MLlib ``recommendForAllUsers``: a blocked |U|×|I|
-      factor cross-product. Exact, but the work is inherently U×I —
-      measured ≥390× at the 100× stress scale (SCALING.md) — so it is
-      the one plan you could NOT ship at 100 TB. Kept as the recall
-      yardstick.
-    - ``"ann"`` (default) — ANN over the item-factor matrix: a
-      broadcast median-balanced sign-random-projection index over the
-      item factors, probed per user with query-directed multi-probe in
-      one shuffle-free Arrow pass, candidates re-scored with the EXACT
-      dot product (``_ann_topk_from_factors``) so approximation affects
-      recall only, never the reported score or order of surfaced items.
-      Code width grows with log(catalog), holding expected bucket size
-      constant — per-user work is O(tables · probes · bucket), linear
-      in users, the 100 TB shape. Per-user recall vs the exact path is
-      pinned in tests/test_recommend.py (like q_knn_lsh's recall pin).
-    - ``"ann_join"`` — the same SRP code algebra as ``"ann"`` expressed
-      as a distributed code-table EQUI-JOIN (``_ann_topk_join``): no
-      driver-side index, so it has no broadcast-budget ceiling. Slower
-      at any catalog that DOES fit the broadcast budget (the candidate
-      pairs cross a shuffle), so it is the escalation path, not the
-      default; ``"ann"`` asserts the catalog is under budget and names
-      this fallback.
+    Scoring is ANN over the item-factor matrix
+    (``_ann_topk_from_factors``): a broadcast median-balanced
+    sign-random-projection index over the item factors, probed per user
+    with query-directed multi-probe in one shuffle-free Arrow pass,
+    candidates re-scored with the EXACT dot product so approximation
+    affects recall only, never the reported score or order of surfaced
+    items. Per-user recall against MLlib's exact
+    ``recommendForAllUsers`` on the same model is pinned in
+    tests/test_recommend.py (like q_knn_lsh's recall pin).
     """
-    # validate before the expensive ALS fit — a typo'd method must not
-    # cost max_iter alternating-least-squares sweeps first (ADVICE r7)
-    if method not in ("ann", "exact", "ann_join"):
-        raise ValueError(
-            f"method must be 'ann', 'ann_join' or 'exact', got {method!r}"
-        )
     model = _fit_als(
-        ratings, rank, max_iter, reg_param, alpha, seed, num_blocks,
+        ratings, rank, max_iter, reg_param, alpha, seed,
         user_col, item_col, rating_col,
     )
-    if method == "exact":
-        recs = model.recommendForAllUsers(k)
-        flat = recs.select(
-            F.col(user_col).cast("long").alias(user_col),
-            F.posexplode("recommendations").alias("pos", "rec"),
-        )
-        return flat.select(
-            user_col,
-            F.col(f"rec.{item_col}").cast("long").alias(item_col),
-            (F.col("pos") + 1).cast("long").alias("rec_rank"),
-            F.round(F.col("rec.rating").cast("double"), 6).alias("score"),
-        )
-    if method == "ann_join":
-        return _ann_topk_join(
-            ratings.sparkSession,
-            model.userFactors,
-            model.itemFactors,
-            k=k,
-            user_col=user_col,
-            item_col=item_col,
-            seed=seed,
-        )
-    n_items = model.itemFactors.count()
-    if n_items > ANN_BROADCAST_MAX_ITEMS:
-        raise ValueError(
-            f"catalog has {n_items} items — past the ~"
-            f"{ANN_BROADCAST_MAX_ITEMS}-item broadcast budget of the "
-            "driver-built SRP index; use method='ann_join' (the "
-            "code-table equi-join runs the same algebra with no "
-            "broadcast ceiling)"
-        )
     return _ann_topk_from_factors(
         ratings.sparkSession,
         model.userFactors,
@@ -320,21 +261,18 @@ def _ann_topk_from_factors(
     user_col: str,
     item_col: str,
     seed: int,
-    n_tables: int = 6,
-    target_bucket: int = 128,
-    n_flip: int = 4,
 ) -> DataFrame:
     """Top-k max-inner-product items per user: a broadcast item-side
     LSH index probed per user in one shuffle-free Arrow pass, with
     exact dot-product rerank of the candidates.
 
-    Index (driver-built, broadcast): ``n_tables`` sign-random-projection
-    code tables over the item factors. Each table concatenates ``r``
+    Index (built once from the collected item factors, broadcast):
+    ``_ANN_TABLES`` sign-random-projection code tables over them. Each table concatenates ``r``
     sign bits of seeded Gaussian projections with
 
-        r = max(1, ceil(log2(|I| / target_bucket)))
+        r = max(1, ceil(log2(|I| / _ANN_TARGET_BUCKET)))
 
-    so expected bucket size stays ~``target_bucket`` AS THE CATALOG
+    so expected bucket size stays ~``_ANN_TARGET_BUCKET`` AS THE CATALOG
     GROWS — the blocking-key-cardinality-must-scale rule every near-dup
     operator in this engine follows. Each bit is offset by the ITEM
     MEDIAN of its projection (balanced binary hashing): ALS implicit
@@ -345,31 +283,28 @@ def _ann_topk_from_factors(
 
     Probe (executors, mapInPandas over the user factors): per table,
     a user visits its own bucket plus QUERY-DIRECTED flips (multi-probe
-    LSH, Lv et al. VLDB 2007) of the ``n_flip`` lowest-|margin| bits —
-    the ones actually likely to disagree with a near item — plus the
-    double-flip of the two smallest: a CONSTANT n_flip+2 probes per
+    LSH, Lv et al. VLDB 2007) of the ``_ANN_FLIPS`` lowest-|margin| bits
+    — the ones actually likely to disagree with a near item — plus the
+    double-flip of the two smallest: a CONSTANT _ANN_FLIPS+2 probes per
     table at any catalog size. Candidates are deduped per user and
     re-scored with the EXACT dot product (rounded before the cut), so
     the approximation affects recall only, never the reported score or
     order of surfaced items. Sweep at sf0.1 (15k users x 20k items):
-    recall@5 vs the exact cross = 0.89-0.91 across seeds at the
-    defaults; the MIPS->cosine augmentation (Bachrach et al. RecSys
+    recall@5 vs the exact cross = 0.89-0.91 across seeds at these
+    constants; the MIPS->cosine augmentation (Bachrach et al. RecSys
     2014) was measured WORSE (0.44-0.80 — the appended sqrt(M²−‖i‖²)
     component dominates the sign bits) and is deliberately absent; the
     pin lives in tests/test_recommend.py (like q_knn_lsh's recall pin).
 
-    Scale shape (100 TB): the RATINGS are the 100 TB side; the item
-    catalog is the dimension table. The index costs ~(4·dim + 8 +
-    4·n_tables) bytes/item — ~60 MB at 1M items, ~6 GB at 100M — the
-    same broadcast budget class as MLlib ALS's own blocked factor
-    matrices, traded for ZERO candidate shuffle: per-user work is
-    O(tables · probes · bucket) local numpy gather+matmul, linear in
-    users, and no (user,item) pair ever crosses the network (the
-    equi-join formulation it replaces shuffled ~80M candidate pairs at
-    sf0.1 — 90 s vs ~5 s for identical candidates). Past the broadcast
-    budget (``ANN_BROADCAST_MAX_ITEMS``) the caller escalates to
-    ``_ann_topk_join`` — the code-table EQUI-JOIN form of the same
-    algebra, shuffle-bound but with no driver materialization.
+    Cost shape: the ratings are the large side; the item catalog is the
+    dimension table. The index costs ~(4·dim + 8 + 4·tables) bytes/item
+    — ~60 MB at 1M items — the same broadcast budget class as MLlib
+    ALS's own blocked factor matrices, traded for ZERO candidate
+    shuffle: per-user work is O(tables · probes · bucket) local numpy
+    gather+matmul, linear in users, and no (user,item) pair ever crosses
+    the network. The code-table equi-join form of the same algebra
+    shuffled ~80M candidate pairs at sf0.1 (90 s vs ~5 s for identical
+    candidates).
     """
     import numpy as np
     import pandas as pd
@@ -380,14 +315,14 @@ def _ann_topk_from_factors(
     iid = ip["id"].to_numpy(np.int64)
     ivec = np.asarray(ip["features"].tolist(), dtype=np.float32)
     n_items, dim = ivec.shape
-    r = max(1, int(np.ceil(np.log2(max(2.0, n_items / target_bucket)))))
-    n_flip = min(n_flip, r)
+    r = max(1, int(np.ceil(np.log2(max(2.0, n_items / _ANN_TARGET_BUCKET)))))
+    n_flip = min(_ANN_FLIPS, r)
     bits = 1 << np.arange(r)
     rng = np.random.RandomState(seed)
-    projs = rng.standard_normal((n_tables, r, dim)).astype(np.float32)
-    offs = np.empty((n_tables, r), dtype=np.float32)
+    projs = rng.standard_normal((_ANN_TABLES, r, dim)).astype(np.float32)
+    offs = np.empty((_ANN_TABLES, r), dtype=np.float32)
     tables = []
-    for t in range(n_tables):
+    for t in range(_ANN_TABLES):
         m = ivec @ projs[t].T
         offs[t] = -np.median(m, axis=0)
         codes = ((m + offs[t]) >= 0) @ bits
@@ -412,7 +347,7 @@ def _ann_topk_from_factors(
             uvec = np.asarray(pdf["features"].tolist(), dtype=np.float32)
             n_u = len(uids)
             cand = [[] for _ in range(n_u)]
-            for t in range(n_tables):
+            for t in range(_ANN_TABLES):
                 mu = uvec @ b_projs[t].T + b_offs[t]
                 cu = (mu >= 0) @ bits
                 flip_order = np.argsort(np.abs(mu), axis=1)[:, :n_flip]
@@ -438,15 +373,14 @@ def _ann_topk_from_factors(
                 cs = np.unique(np.concatenate(cand[u]))
                 # float64 dot of float32 inputs: every product is exact
                 # (24+24 < 53 bits), so the score is reduction-order
-                # stable across BLAS kernels — the equi-join twin
-                # (_ann_topk_join) must round to the same 6dp value
+                # stable across BLAS kernels
                 scores = np.round(
                     b_ivec[cs].astype(np.float64)
                     @ uvec[u].astype(np.float64),
                     6,
                 )
-                # (-score, item_id) order — same tie-break as the
-                # window form: descending exact score, ascending id
+                # (-score, item_id) order: descending exact score,
+                # ascending id
                 top = np.lexsort((b_iid[cs], -scores))[:k]
                 rows_u.append(np.full(len(top), uids[u], dtype=np.int64))
                 rows_i.append(b_iid[cs][top])
@@ -471,224 +405,6 @@ def _ann_topk_from_factors(
     if user_factors.rdd.getNumPartitions() < par:
         user_factors = user_factors.repartition(par)
     return user_factors.mapInPandas(probe, out_schema)
-
-
-def _ann_topk_join(
-    spark,
-    user_factors: DataFrame,
-    item_factors: DataFrame,
-    k: int,
-    user_col: str,
-    item_col: str,
-    seed: int,
-    n_tables: int = 6,
-    target_bucket: int = 128,
-    n_flip: int = 4,
-) -> DataFrame:
-    """Top-k max-inner-product items per user as a distributed
-    code-table equi-join — ``_ann_topk_from_factors``' escalation path
-    for catalogs past the broadcast budget (``ANN_BROADCAST_MAX_ITEMS``).
-
-    Identical SRP algebra to the broadcast-index form — same seeded
-    Gaussian projections, same ``r = ceil(log2(|I|/target_bucket))``
-    data-sized code width, same median-balanced bits, same
-    query-directed multi-probe flips, same exact-dot rerank and
-    (-score, item_id) tie-break. The ONE deliberate divergence is the
-    median estimator: the broadcast form takes ``np.median`` over the
-    driver copy; this form uses ``percentile_approx(…, 0.5, 1e5)`` —
-    a bounded-memory rank sketch (relative rank error ≤ 1e-5) instead
-    of Spark's exact ``percentile``, whose aggregation buffer holds
-    every distinct projection value per group and would OOM at exactly
-    the past-broadcast-budget catalog sizes this path exists for.
-    A sketched median only shifts SRP bucket boundaries — items whose
-    projection sits within the rank-error band of the true median may
-    land in the adjacent half-space — and the exact-dot rerank keeps
-    every surfaced score correct, so the tradeoff is RECALL-ONLY
-    (pinned as candidate-level parity + exact score agreement in
-    tests/test_recommend.py, not exact top-k equality: the estimators
-    also differ by design on even counts, where ``np.median``
-    interpolates a float32 midpoint and the sketch returns a member
-    value). Nothing is ever collected to the driver.
-
-    Plan (three Arrow passes + one keyed shuffle):
-
-    1. per-(table, bit) projection medians via a distributed
-       ``percentile_approx(…, 0.5)`` aggregate over the item
-       projections — 2 scans of the catalog, bounded sketch memory,
-       no driver materialization;
-    2. item side hashed to (table, code, item_id) rows (n_tables rows
-       per item), user side to (table, probe_code, user_id) rows
-       (n_tables·(n_flip+2) rows per user);
-    3. SHUFFLE_HASH equi-join on (table, code) — both sides are
-       corpus-scaled, so broadcast is structurally excluded — then
-       (user, item) dedup, factor re-join, exact float64 dot rerank in
-       Arrow batches (float32 products are exact in float64, so the
-       6dp-rounded score matches the broadcast form bit-for-bit),
-       per-user top-k window.
-
-    Cost shape: the join moves O(users · tables · probes · bucket)
-    candidate rows through one shuffle — the price of removing the
-    driver-side index (measured 90-213 s vs ~5 s for the broadcast form
-    at sf0.1, NOTES.md r7). Use only past the broadcast budget.
-    """
-    import numpy as np
-    import pandas as pd
-
-    n_items = item_factors.count()
-    dim = len(item_factors.select("features").head()["features"])
-    r = max(1, int(np.ceil(np.log2(max(2.0, n_items / target_bucket)))))
-    n_flip = min(n_flip, r)
-    bits = 1 << np.arange(r)
-    rng = np.random.RandomState(seed)
-    projs = rng.standard_normal((n_tables, r, dim)).astype(np.float32)
-    projs_bc = spark.sparkContext.broadcast(projs)
-
-    # pass 1: per-(table, bit) projection medians over the catalog,
-    # computed distributed with a bounded-memory rank sketch. NOT the
-    # exact percentile() aggregate: that buffers every distinct value
-    # per group, and with n_tables groups of continuous floats one
-    # reduce task would hold ~n_items×r doubles — an O(catalog)
-    # aggregation buffer on exactly the path that exists because the
-    # catalog no longer fits anywhere. accuracy=1e5 bounds the rank
-    # error at 1e-5·n_items; boundary items may flip half-space
-    # (recall-only — the exact-dot rerank keeps scores correct).
-    proj_schema = "tbl int, " + ", ".join(
-        f"p{j} double" for j in range(r)
-    )
-
-    def proj_rows(batches):
-        pr = projs_bc.value
-        for pdf in batches:
-            vec = np.asarray(pdf["features"].tolist(), dtype=np.float32)
-            for t in range(n_tables):
-                m = vec @ pr[t].T  # float32 — same op as the index form
-                d = {"tbl": np.full(len(vec), t, dtype=np.int32)}
-                for j in range(r):
-                    d[f"p{j}"] = m[:, j].astype(np.float64)
-                yield pd.DataFrame(d)
-
-    med_rows = (
-        item_factors.mapInPandas(proj_rows, proj_schema)
-        .groupBy("tbl")
-        .agg(
-            *[
-                F.expr(f"percentile_approx(p{j}, 0.5, 100000)").alias(
-                    f"m{j}"
-                )
-                for j in range(r)
-            ]
-        )
-        .collect()  # n_tables rows of r doubles — O(1), not O(catalog)
-    )
-    offs = np.zeros((n_tables, r), dtype=np.float32)
-    for row in med_rows:
-        for j in range(r):
-            offs[row["tbl"], j] = np.float32(-row[f"m{j}"])
-    offs_bc = spark.sparkContext.broadcast(offs)
-
-    # pass 2a: item code table — n_tables rows per item
-    def item_codes(batches):
-        pr, off = projs_bc.value, offs_bc.value
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            vec = np.asarray(pdf["features"].tolist(), dtype=np.float32)
-            for t in range(n_tables):
-                codes = ((vec @ pr[t].T + off[t]) >= 0) @ bits
-                yield pd.DataFrame(
-                    {
-                        "tbl": np.full(len(ids), t, dtype=np.int32),
-                        "code": codes.astype(np.int64),
-                        item_col: ids,
-                    }
-                )
-
-    icodes = item_factors.mapInPandas(
-        item_codes, f"tbl int, code long, {item_col} long"
-    )
-
-    # pass 2b: user probe table — n_tables·(n_flip+2) rows per user
-    def user_probes(batches):
-        pr, off = projs_bc.value, offs_bc.value
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            vec = np.asarray(pdf["features"].tolist(), dtype=np.float32)
-            for t in range(n_tables):
-                mu = vec @ pr[t].T + off[t]
-                cu = (mu >= 0) @ bits
-                flip_order = np.argsort(np.abs(mu), axis=1)[:, :n_flip]
-                probes = [cu] + [
-                    cu ^ (1 << flip_order[:, j]) for j in range(n_flip)
-                ]
-                if n_flip >= 2:
-                    probes.append(
-                        cu
-                        ^ (1 << flip_order[:, 0])
-                        ^ (1 << flip_order[:, 1])
-                    )
-                for p in probes:
-                    yield pd.DataFrame(
-                        {
-                            "tbl": np.full(len(ids), t, dtype=np.int32),
-                            "code": p.astype(np.int64),
-                            user_col: ids,
-                        }
-                    )
-
-    uprobes = user_factors.mapInPandas(
-        user_probes, f"tbl int, code long, {user_col} long"
-    )
-
-    # the one keyed shuffle: candidates = probe ⋈ code on (tbl, code).
-    # Both sides scale with the corpus → SHUFFLE_HASH, never broadcast
-    # (the engine-wide corpus-side rule). distinct() dedups a (user,
-    # item) pair found by several tables/probes before the rerank pays
-    # for it.
-    pairs = (
-        uprobes.join(icodes.hint("shuffle_hash"), ["tbl", "code"])
-        .select(user_col, item_col)
-        .distinct()
-    )
-    uf = user_factors.select(
-        F.col("id").alias(user_col), F.col("features").alias("_uvec")
-    )
-    itf = item_factors.select(
-        F.col("id").alias(item_col), F.col("features").alias("_ivec")
-    )
-    joined = pairs.join(uf.hint("shuffle_hash"), user_col).join(
-        itf.hint("shuffle_hash"), item_col
-    )
-
-    def dots(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            u = np.asarray(pdf["_uvec"].tolist(), dtype=np.float64)
-            v = np.asarray(pdf["_ivec"].tolist(), dtype=np.float64)
-            # float64 products of float32 factors are exact — matches
-            # the broadcast-index rerank bit-for-bit after the 6dp round
-            s = np.round(np.einsum("ij,ij->i", u, v), 6)
-            yield pd.DataFrame(
-                {
-                    user_col: pdf[user_col].to_numpy(np.int64),
-                    item_col: pdf[item_col].to_numpy(np.int64),
-                    "score": s,
-                }
-            )
-
-    scored = joined.mapInPandas(
-        dots, f"{user_col} long, {item_col} long, score double"
-    )
-    w = Window.partitionBy(user_col).orderBy(F.desc("score"), F.asc(item_col))
-    return (
-        scored.withColumn("rec_rank", F.row_number().over(w))
-        .filter(F.col("rec_rank") <= k)
-        .select(
-            user_col,
-            item_col,
-            F.col("rec_rank").cast("long").alias("rec_rank"),
-            "score",
-        )
-    )
 
 
 def _loo_user_recs(
@@ -920,7 +636,7 @@ def negative_sample(
     """
     from pyspark.sql.functions import broadcast
 
-    from review_engine_spark.operators.mixture import _lcg
+    from review_engine_spark.operators.chunking import _lcg
 
     cand = (
         positives.select(user_col, item_col)

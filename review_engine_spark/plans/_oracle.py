@@ -229,26 +229,6 @@ def sql_unit_vector(vec: str) -> str:
     return f"list_transform({vec}, x -> round(CAST(x AS DOUBLE) / ({nrm} + 1e-9), 6))"
 
 
-COSINE_PAIR_CTE = """
-pairs AS (
-    SELECT {keys}, unnest({a})::DOUBLE AS _x, unnest({b})::DOUBLE AS _y
-    FROM {source}
-),
-sims AS (
-    SELECT {keys},
-           sum(_x * _y) AS _dot,
-           sqrt(sum(_x * _x)) AS _na,
-           sqrt(sum(_y * _y)) AS _nb
-    FROM pairs GROUP BY {keys}
-)
-"""
-
-
-def sql_cosine_cte(source: str, a: str, b: str, keys: str) -> str:
-    """CTE computing _dot/_na/_nb per key; cosine = _dot/(_na*_nb+1e-9)."""
-    return COSINE_PAIR_CTE.format(source=source, a=a, b=b, keys=keys)
-
-
 # --- PII scrub (training-data curation) ------------------------------------
 
 

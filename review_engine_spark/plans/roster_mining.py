@@ -1500,8 +1500,9 @@ def q_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rolled up with a calendar-bounded max — its MAU estimate is pinned
 # within the 3-sigma band of THIS query's exact MAU in
 # tests/test_operators.py. Same exact/approx split as q_als_recommend's
-# method="exact" vs "ann": keep the exact form as the yardstick, ship
-# the sketch.
+# SRP scorer, whose recall is pinned against MLlib's exact
+# recommendForAllUsers: keep the exact form as the yardstick, ship the
+# sketch.
 # ---------------------------------------------------------------------------
 @declared(
     oracle="""

@@ -307,15 +307,19 @@ _SIG_SQL = " + ".join(
     """
 )
 def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash signatures oracle-checked: the same bit-vote algebra the
-    production path runs (operators/dedup.py simhash_signatures —
-    explode → one hash aggregate with per-bit conditional sums →
-    signature assembly), but with a 60-bit md5-derived token hash so
-    DuckDB can reproduce it bit-for-bit (xxhash64 is Spark-only, which
-    is why the production signatures are rows-only). Ties (vote sum 0)
-    resolve to bit 0 on both sides. The shuffle carries SIMHASH_BITS
-    ints per doc regardless of document length — map-side combine does
-    the token-stream reduction."""
+    """SimHash signatures oracle-checked through an md5 twin. It checks
+    the bit-vote algebra (each set bit of a token hash votes +1, each
+    clear bit -1; a signature bit is 1 iff its vote sum is positive)
+    and the signature assembly, written relationally — explode → one
+    hash aggregate with per-bit conditional sums → assembly — over a
+    60-bit md5-derived token hash so DuckDB can reproduce it
+    bit-for-bit. The production path (operators/dedup.py
+    ``simhash_signatures_batch``, run by ``simhash_near_dups``) hashes
+    tokens with pandas' siphash and sums the votes in numpy; that hash
+    is not oracle-checked, which is why q_simhash_dedup is rows-only.
+    Ties (vote sum 0) resolve to bit 0 on both sides. The shuffle
+    carries SIMHASH_BITS ints per doc regardless of document length —
+    map-side combine does the token-stream reduction."""
     docs = (
         read_parquet_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < SIMHASH_CAP)

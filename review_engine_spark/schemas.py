@@ -33,7 +33,6 @@ __all__ = [
     "EMBEDDING_SCHEMA",
     "MEDIA_SCHEMA",
     "FIXTURE_SCHEMAS",
-    "fixture_schema",
 ]
 
 # ---------------------------------------------------------------------------
@@ -202,7 +201,3 @@ FIXTURE_SCHEMAS: dict[str, StructType] = {
         ]
     ),
 }
-
-
-def fixture_schema(name: str) -> StructType:
-    return FIXTURE_SCHEMAS[name]

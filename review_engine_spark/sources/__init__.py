@@ -8,7 +8,6 @@ from review_engine_spark.sources.bucketing import (
 from review_engine_spark.sources.io import (
     read_jsonl,
     read_parquet_table,
-    read_tables,
     write_jsonl_gz,
     write_parquet,
 )
@@ -17,7 +16,6 @@ __all__ = [
     "read_jsonl",
     "read_parquet_table",
     "read_table",
-    "read_tables",
     "write_bucketed_table",
     "write_jsonl_gz",
     "write_parquet",

@@ -19,14 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from review_engine_spark.schemas import FIXTURE_SCHEMAS
-
 __all__ = [
     "read_jsonl",
     "read_csv",
     "read_orc",
     "read_parquet_table",
-    "read_tables",
     "write_jsonl_gz",
     "write_csv",
     "write_orc",
@@ -210,11 +207,6 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df
-
-
-def read_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    names = names or list(FIXTURE_SCHEMAS)
-    return {n: read_parquet_table(spark, sf_dir, n) for n in names}
 
 
 def write_jsonl_gz(df: DataFrame, path: str, mode: str = "overwrite") -> None:

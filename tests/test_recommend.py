@@ -84,27 +84,39 @@ def test_als_recommend_shape_and_order(spark, sf_dir):
         key=lambda r: r["rec_rank"],
     )
     assert [r["rec_rank"] for r in rows] == [1, 2, 3]
-    # recommendForAllUsers orders by predicted score descending
+    # the SRP scorer's rerank orders by exact dot score descending
     scores = [r["score"] for r in rows]
     assert scores == sorted(scores, reverse=True)
 
 
 def test_als_ann_recall_against_exact(spark, sf_dir):
-    """The ANN scoring path (SRP buckets + exact rerank) must recover
-    most of recommendForAllUsers' exact top-5 per user — the same
-    recall-vs-exact pin q_knn_lsh carries. Scores for surfaced items are
-    exact dots, so only membership can differ."""
+    """The SRP scorer (buckets + exact rerank) must recover most of
+    recommendForAllUsers' exact top-5 per user on the SAME fitted model
+    — the same recall-vs-exact pin q_knn_lsh carries. Scores for
+    surfaced items are exact dots, so only membership can differ."""
+    from review_engine_spark.operators.recommend import (
+        _ann_topk_from_factors,
+        _fit_als,
+    )
     from review_engine_spark.sources.io import read_parquet_table
 
     ratings = implicit_ratings(
         read_parquet_table(spark, sf_dir, "orders"),
         read_parquet_table(spark, sf_dir, "lineitem"),
     )
+    # als_recommend's defaults, so the pin covers the model it serves
+    model = _fit_als(
+        ratings, rank=8, max_iter=5, reg_param=0.1, alpha=1.0, seed=42,
+        user_col="user_id", item_col="item_id", rating_col="rating",
+    )
     exact = {}
-    for r in als_recommend(ratings, k=5, method="exact").collect():
-        exact.setdefault(r["user_id"], set()).add(r["item_id"])
+    for r in model.recommendForAllUsers(5).collect():
+        exact[r["user_id"]] = {rec["item_id"] for rec in r["recommendations"]}
     approx = {}
-    for r in als_recommend(ratings, k=5, method="ann").collect():
+    for r in _ann_topk_from_factors(
+        spark, model.userFactors, model.itemFactors, k=5,
+        user_col="user_id", item_col="item_id", seed=42,
+    ).collect():
         approx.setdefault(r["user_id"], set()).add(r["item_id"])
     # every trained user must surface (multi-probe always hits the
     # user's own bucket, which is never empty of candidates for a
@@ -113,71 +125,6 @@ def test_als_ann_recall_against_exact(spark, sf_dir):
     hits = sum(len(exact[u] & approx[u]) for u in exact)
     total = sum(len(exact[u]) for u in exact)
     assert hits / total >= 0.8, f"ANN recall@5 {hits / total:.3f} < 0.8"
-
-
-def test_als_ann_join_matches_broadcast_index(spark, sf_dir):
-    """method='ann_join' (distributed code-table equi-join — the
-    past-broadcast-budget escalation) runs the same SRP algebra as
-    method='ann' (driver-built broadcast index) but estimates the
-    bit-balancing medians with a bounded-memory rank sketch, so parity
-    is CANDIDATE-LEVEL, not exact top-k equality: the two forms must
-    cover the same users, agree on the vast majority of surfaced
-    (user, item) pairs (only median-boundary items may flip buckets),
-    and score every commonly-surfaced pair IDENTICALLY (both rerank
-    with the same exact float64 dot)."""
-    from review_engine_spark.sources.io import read_parquet_table
-
-    ratings = implicit_ratings(
-        read_parquet_table(spark, sf_dir, "orders"),
-        read_parquet_table(spark, sf_dir, "lineitem"),
-    )
-    ann: dict[int, dict[int, float]] = {}
-    for r in als_recommend(ratings, k=5, method="ann").collect():
-        ann.setdefault(r["user_id"], {})[r["item_id"]] = r["score"]
-    joined: dict[int, dict[int, float]] = {}
-    for r in als_recommend(ratings, k=5, method="ann_join").collect():
-        joined.setdefault(r["user_id"], {})[r["item_id"]] = r["score"]
-    assert set(ann) == set(joined)
-    hits = sum(len(set(ann[u]) & set(joined[u])) for u in ann)
-    total = sum(len(ann[u]) for u in ann)
-    assert hits / total >= 0.9, f"candidate overlap {hits/total:.3f} < 0.9"
-    # exact score agreement on every pair both forms surfaced — the
-    # rerank dot is bit-identical float64 in both executions
-    for u in ann:
-        for i, s in ann[u].items():
-            if i in joined[u]:
-                assert joined[u][i] == s, (u, i, s, joined[u][i])
-
-
-def test_als_method_validated_before_fit(spark):
-    """A typo'd method must raise at entry, not after the ALS fit — an
-    empty ratings frame would make the fit itself explode first if
-    validation ran late."""
-    import pytest
-
-    empty = spark.createDataFrame(
-        [], "user_id long, item_id long, rating double"
-    )
-    with pytest.raises(ValueError, match="method must be"):
-        als_recommend(empty, method="approx")
-
-
-def test_als_ann_budget_gate_names_fallback(spark, sf_dir, monkeypatch):
-    """Past the broadcast budget, method='ann' must refuse and point at
-    method='ann_join' instead of silently materializing the catalog on
-    the driver."""
-    import pytest
-
-    import review_engine_spark.operators.recommend as rec
-    from review_engine_spark.sources.io import read_parquet_table
-
-    ratings = implicit_ratings(
-        read_parquet_table(spark, sf_dir, "orders"),
-        read_parquet_table(spark, sf_dir, "lineitem"),
-    )
-    monkeypatch.setattr(rec, "ANN_BROADCAST_MAX_ITEMS", 1)
-    with pytest.raises(ValueError, match="ann_join"):
-        als_recommend(ratings, k=5, max_iter=1, method="ann")
 
 
 def test_eval_no_test_leakage(spark):
