@@ -16,6 +16,8 @@ __all__ = [
     "unescape_html_entities",
     "clean_text",
     "token_count",
+    "ws_tokens",
+    "alnum_tokens",
     "tokenize",
     "STOPWORDS",
     "parse_money",
@@ -98,8 +100,6 @@ def _legacy_entity_items() -> list[tuple[str, str]]:
 
 
 LEGACY_ITEMS: list[tuple[str, str]] = _legacy_entity_items()
-_LEGACY_MAXLEN = max(len(n) for n, _ in LEGACY_ITEMS)
-_LEGACY_MINLEN = min(len(n) for n, _ in LEGACY_ITEMS)
 
 
 #: Bucket count for the O(1) named-entity lookup. Spark's map/array
@@ -290,6 +290,17 @@ STOPWORDS: list[str] = [
     "was", "were", "be", "been", "of", "to", "in", "on", "at", "for",
     "with", "by", "from", "as", "it", "its", "this", "that", "not", "no",
 ]
+
+
+def ws_tokens(col: Column) -> Column:
+    """Non-empty whitespace tokens of the lowercased text."""
+    return F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
+
+
+def alnum_tokens(col: Column) -> Column:
+    """Non-empty ``[a-z0-9]`` runs of the lowercased text, the oracles'
+    ``list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), ...)``."""
+    return F.filter(F.split(F.lower(col), "[^a-z0-9]+"), lambda t: t != "")
 
 
 def tokenize(col: Column, stopwords: list[str] | None = None) -> Column:

@@ -9,9 +9,9 @@ embed.py:75; 32 for the cross-encoder, rank.py:15), and output schemas
 match the stub UDFs in ``inference.stubs`` exactly — swapping a stub for
 a real model changes one constructor argument, never the plan.
 
-The default loaders here are deterministic hash models so the full
-machinery (worker-side caching, Arrow batch transfer, numpy marshalling)
-is exercised in tests without any model dependency.
+The default loaders wrap ``StubEmbedder`` and ``StubScorer``, so the
+full machinery (worker-side caching, Arrow batch transfer, numpy
+marshalling) is exercised in tests without any model dependency.
 """
 
 from __future__ import annotations
@@ -20,55 +20,14 @@ from collections.abc import Callable
 
 import numpy as np
 
-__all__ = ["embedder_batch_udf", "scorer_batch_udf", "stub_embed_model", "stub_score_model"]
+from review_engine_spark.inference.stubs import EMBED_DIM, StubEmbedder, StubScorer
+
+__all__ = ["embedder_batch_udf", "scorer_batch_udf"]
 
 
-def stub_embed_model(dim: int = 16) -> Callable:
-    """Deterministic text→vector model loader (J1 stand-in)."""
-
-    def make_model():
-        import hashlib
-
-        def predict(inputs: np.ndarray) -> np.ndarray:
-            out = np.empty((len(inputs), dim), dtype=np.float64)
-            for i, t in enumerate(inputs):
-                data = str(t).encode("utf-8", "replace")
-                raw = []
-                counter = 0
-                while len(raw) < dim:
-                    digest = hashlib.md5(
-                        data + counter.to_bytes(4, "little")
-                    ).digest()
-                    raw.extend(b / 255.0 - 0.5 for b in digest)
-                    counter += 1
-                v = np.array(raw[:dim])
-                out[i] = v / (np.linalg.norm(v) or 1.0)
-            return out
-
-        return predict
-
-    return make_model
-
-
-def stub_score_model() -> Callable:
-    """Deterministic (query, doc)→score model loader (J3 stand-in)."""
-
-    def make_model():
-        import hashlib
-
-        def predict(queries: np.ndarray, docs: np.ndarray) -> np.ndarray:
-            out = np.empty(len(queries), dtype=np.float64)
-            for i, (q, d) in enumerate(zip(queries, docs)):
-                h = hashlib.md5(f"{q}|{d}".encode("utf-8", "replace")).digest()
-                out[i] = int.from_bytes(h[:4], "little") / 2**32
-            return out
-
-        return predict
-
-    return make_model
-
-
-def embedder_batch_udf(make_model: Callable | None = None, dim: int = 16, batch_size: int = 700):
+def embedder_batch_udf(
+    make_model: Callable | None = None, dim: int = EMBED_DIM, batch_size: int = 700
+):
     """J1: text → array<double> via predict_batch_udf (embed.py:73-78
     analog; batch_size mirrors the reference's 700). Pass a loader that
     returns a SentenceTransformer-style ``predict(batch) -> ndarray`` for
@@ -76,8 +35,14 @@ def embedder_batch_udf(make_model: Callable | None = None, dim: int = 16, batch_
     from pyspark.ml.functions import predict_batch_udf
     from pyspark.sql.types import ArrayType, DoubleType
 
+    if make_model is None:
+
+        def make_model():
+            model = StubEmbedder(dim)
+            return lambda texts: np.array(model.encode(texts.tolist()))
+
     return predict_batch_udf(
-        make_model or stub_embed_model(dim),
+        make_model,
         return_type=ArrayType(DoubleType()),
         batch_size=batch_size,
     )
@@ -89,8 +54,16 @@ def scorer_batch_udf(make_model: Callable | None = None, batch_size: int = 32):
     from pyspark.ml.functions import predict_batch_udf
     from pyspark.sql.types import DoubleType
 
+    if make_model is None:
+
+        def make_model():
+            model = StubScorer()
+            return lambda queries, docs: np.array(
+                model.score(queries.tolist(), docs.tolist())
+            )
+
     return predict_batch_udf(
-        make_model or stub_score_model(),
+        make_model,
         return_type=DoubleType(),
         batch_size=batch_size,
     )

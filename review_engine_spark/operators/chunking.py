@@ -20,8 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from review_engine_spark.functions.text import ws_tokens
+
 __all__ = [
-    "chunk_tokens",
     "chunk_documents",
     "quantize_vector",
     "dequantize_vector",
@@ -30,11 +31,6 @@ __all__ = [
     "assign_split",
     "stratified_sample",
 ]
-
-
-def chunk_tokens(col: Column) -> Column:
-    """Whitespace tokens of a lowercased document (empty tokens dropped)."""
-    return F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
 
 
 def chunk_documents(
@@ -55,7 +51,7 @@ def chunk_documents(
     if stride <= 0 or chunk_size <= 0:
         raise ValueError("chunk_size and stride must be positive")
     toks = docs.select(
-        F.col(id_col), chunk_tokens(F.col(text_col)).alias("toks")
+        F.col(id_col), ws_tokens(F.col(text_col)).alias("toks")
     ).withColumn("n", F.size("toks"))
     starts = F.when(
         F.col("n") > 0,

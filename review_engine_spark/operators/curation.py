@@ -33,7 +33,8 @@ from review_engine_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
-from review_engine_spark.operators.chunking import chunk_documents, chunk_tokens
+from review_engine_spark.functions.text import ws_tokens
+from review_engine_spark.operators.chunking import chunk_documents
 from review_engine_spark.operators.kmeans import lcg_bucket
 
 __all__ = [
@@ -63,7 +64,7 @@ def top_tokens(
     k-row result.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(chunk_tokens(F.col(text_col))).alias("token")
+        F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("token")
     )
     counts = toks.groupBy("token").agg(
         F.countDistinct(id_col).cast("long").alias("n_docs"),
@@ -492,10 +493,8 @@ def unigram_logprob(
     """
     from pyspark.sql.functions import broadcast
 
-    from review_engine_spark.operators.chunking import chunk_tokens
-
     toks = docs.select(
-        F.col(id_col), F.explode(chunk_tokens(F.col(text_col))).alias("token")
+        F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("token")
     )
     counts = toks.groupBy("token").agg(F.count("*").cast("long").alias("n"))
     total = counts.agg(F.sum("n").alias("_total"))
@@ -528,10 +527,8 @@ def _substring_base(
 ) -> DataFrame:
     """Tokenized corpus shared by the substring family: (id, toks, n).
     Narrow (no shuffle) — cheap to recompute per caller."""
-    from review_engine_spark.operators.chunking import chunk_tokens
-
     return docs.select(
-        F.col(id_col), chunk_tokens(F.col(text_col)).alias("toks")
+        F.col(id_col), ws_tokens(F.col(text_col)).alias("toks")
     ).withColumn("n", F.size("toks"))
 
 
@@ -923,9 +920,7 @@ def gopher_metric_cols(text_col: str) -> list:
     streaming ingest gate can compute them in the SAME projection as the
     quality-gate metrics — one narrow map, one expression tree shared
     with the standalone gate."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.col(text_col))
     return [
         # NULL text must fail the gate deterministically: without this
         # flag the WHEN chain's comparisons all evaluate NULL and fall

@@ -27,11 +27,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from review_engine_spark.functions.text import alnum_tokens
+
 __all__ = [
     "normalize_text",
     "exact_dedup",
     "shingle_hash_rows",
     "minhash_signatures",
+    "md5_minhash_signatures",
     "minhash_lsh_pairs",
     "simhash_signatures_batch",
     "simhash_near_dups",
@@ -123,6 +126,42 @@ def minhash_signatures(
     return agg.select(
         F.col(id_col),
         F.array(*[F.col(f"_m{s}") for s in range(num_hashes)]).alias("sig"),
+    )
+
+
+def md5_minhash_signatures(docs: DataFrame, n_seeds: int) -> DataFrame:
+    """md5 MinHash signatures of ``(doc_id, text)`` documents as
+    ``(doc_id, sig0 .. sig{n_seeds - 1})``: ``alnum_tokens`` → word
+    3-shingles → per seed s, the min of md5("s|" || shingle). md5 is
+    bit-identical in DuckDB, so the oracles replay every step
+    (``plans._oracle.sql_minhash_sigs``); ``minhash_signatures``' xxhash64
+    family is not. Documents with fewer than 3 tokens have no shingles
+    and are dropped."""
+    toks = docs.select("doc_id", alnum_tokens(F.col("text")).alias("toks"))
+    sh = toks.filter(F.size("toks") >= 3).select(
+        "doc_id",
+        F.transform(
+            F.sequence(F.lit(0), F.size("toks") - 3),
+            lambda i: F.concat_ws(
+                " ",
+                F.element_at(F.col("toks"), i + 1),
+                F.element_at(F.col("toks"), i + 2),
+                F.element_at(F.col("toks"), i + 3),
+            ),
+        ).alias("sh"),
+    )
+
+    def seed_hash(seed: int):
+        # a factory, not ``lambda x, s=seed:``: F.transform binds a
+        # second lambda parameter to the element INDEX
+        return lambda x: F.md5(F.concat(F.lit(f"{seed}|"), x))
+
+    return sh.select(
+        "doc_id",
+        *[
+            F.array_min(F.transform(F.col("sh"), seed_hash(s))).alias(f"sig{s}")
+            for s in range(n_seeds)
+        ],
     )
 
 

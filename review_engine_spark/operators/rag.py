@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from review_engine_spark.functions.text import extract_summary
 from review_engine_spark.functions.vector import cosine_similarity, vector_literal
-from review_engine_spark.inference.stubs import StubEmbedder, stub_chat_udf
+from review_engine_spark.inference.stubs import EMBED_DIM, StubEmbedder, stub_chat_udf
 
 __all__ = ["QA_TEMPLATE", "build_prompt", "retrieve", "rag_answer"]
 
@@ -61,7 +61,7 @@ def rag_answer(
 ) -> DataFrame:
     """Full chain: embed question (driver-side, J2) → retrieve top-k →
     concat contexts → prompt → chat UDF → extract answer (H11)."""
-    qv = StubEmbedder(dim=16).encode([question])[0]
+    qv = StubEmbedder(dim=EMBED_DIM).encode([question])[0]
     top = retrieve(chunks, qv, vec_col=vec_col, text_col=text_col, k=k)
     ctx = top.agg(
         F.concat_ws(" | ", F.collect_list(text_col)).alias("context")

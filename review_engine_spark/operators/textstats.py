@@ -7,10 +7,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from review_engine_spark.functions.text import STOPWORDS
+from review_engine_spark.functions.text import STOPWORDS, ws_tokens
 
 __all__ = [
-    "ws_tokens",
     "lang_scores",
     "lang_id",
     "quality_score",
@@ -30,11 +29,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "les", "est", "et", "en", "que", "pour", "dans", "une"],
     "zh": ["的", "是", "了", "在", "和", "有", "我", "不", "人", "这"],
 }
-
-
-def ws_tokens(col: Column) -> Column:
-    """Non-empty whitespace tokens of the lowercased text."""
-    return F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
 
 
 def _marker_hits(toks: Column, markers: list[str]) -> Column:

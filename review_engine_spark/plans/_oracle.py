@@ -248,3 +248,24 @@ def sql_scrub_pii(table: str, id_col: str, text_col: str) -> str:
         f"SELECT {id_col}, t AS scrubbed, CAST(c AS BIGINT) AS n_redactions "
         f"FROM ({sel})"
     )
+
+
+# --- md5 MinHash (operators.dedup.md5_minhash_signatures) ------------------
+
+#: ``functions.text.alnum_tokens(text)``.
+ALNUM_TOKS_SQL = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
+
+#: Word 3-shingles of the ``toks`` list.
+SHINGLES_SQL = (
+    "list_transform(range(0, len(toks) - 2), "
+    "i -> toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3])"
+)
+
+
+def sql_minhash_sigs(n_seeds: int) -> str:
+    """``sig0`` .. ``sig{n_seeds - 1}`` select items over the ``sh``
+    shingle list: per seed s, the min of md5('s|' || shingle)."""
+    return ",\n               ".join(
+        f"list_min(list_transform(sh, x -> md5('{s}|' || x))) AS sig{s}"
+        for s in range(n_seeds)
+    )

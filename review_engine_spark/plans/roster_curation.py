@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from review_engine_spark.functions.text import alnum_tokens, ws_tokens
 from review_engine_spark.operators.curation import (
     boilerplate_flags,
     semantic_dedup,
@@ -20,6 +21,7 @@ from review_engine_spark.operators.curation import (
 from review_engine_spark.operators.cluster import iter_checkpoint
 from review_engine_spark.operators.kmeans import kmeans_fit
 from review_engine_spark.plans import declared
+from review_engine_spark.plans._oracle import ALNUM_TOKS_SQL
 from review_engine_spark.scratch import artifact, artifact_key, save_artifact
 from review_engine_spark.sources.io import read_parquet_table
 
@@ -573,9 +575,7 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = read_parquet_table(spark, sf_dir, "documents")
-    toks_arr = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
+    toks_arr = ws_tokens(F.col("text"))
     toks = docs.select(
         "doc_id", F.posexplode(toks_arr).alias("pos", "term")
     )
@@ -624,17 +624,6 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BPE_ROUNDS = 6
-_BPE_TOKS_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-)
-
-
-def _bpe_toks():
-    """Word stream both BPE queries tokenize from — the md5-family
-    [^a-z0-9]+ split, mirrored token-for-token by ``_BPE_TOKS_SQL``."""
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-    )
 
 
 def _bpe_pair_tail(col):
@@ -675,7 +664,7 @@ def train_bpe(docs: DataFrame, k: int = _BPE_ROUNDS) -> list[tuple]:
     from pyspark import StorageLevel
 
     words = (
-        docs.select(F.explode(_bpe_toks()).alias("token"))
+        docs.select(F.explode(alnum_tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("wc"))
     )
@@ -758,7 +747,7 @@ def _bpe_oracle(k: int) -> str:
     parts = [
         f"""words AS (
         SELECT tok AS token, CAST(count(*) AS BIGINT) AS wc
-        FROM (SELECT unnest({_BPE_TOKS_SQL}) AS tok FROM documents)
+        FROM (SELECT unnest({ALNUM_TOKS_SQL}) AS tok FROM documents)
         GROUP BY tok
     )""",
         """r0 AS (
@@ -850,7 +839,7 @@ def _bpe_chain_ctes(k: int) -> str:
     parts = [
         f"""words AS (
         SELECT tok AS token, CAST(count(*) AS BIGINT) AS wc
-        FROM (SELECT unnest({_BPE_TOKS_SQL}) AS tok FROM documents)
+        FROM (SELECT unnest({ALNUM_TOKS_SQL}) AS tok FROM documents)
         GROUP BY tok
     )""",
         """v0 AS (
@@ -879,7 +868,7 @@ def _bpe_chain_ctes(k: int) -> str:
         FROM v{r - 1} CROSS JOIN b{r}
     )""")
     parts.append(f"""tokd AS (
-        SELECT doc_id, unnest({_BPE_TOKS_SQL}) AS token FROM documents
+        SELECT doc_id, unnest({ALNUM_TOKS_SQL}) AS token FROM documents
     )""")
     parts.append(f"""bpe_len AS (
         SELECT d.doc_id,
@@ -913,7 +902,7 @@ def bpe_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     rules = bpe_rules(spark, sf_dir, _BPE_ROUNDS)
     words = (
-        docs.select(F.explode(_bpe_toks()).alias("token")).distinct()
+        docs.select(F.explode(alnum_tokens(F.col("text"))).alias("token")).distinct()
     )
     syms = F.transform(
         F.sequence(F.lit(1), F.length("token")),
@@ -930,7 +919,7 @@ def bpe_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("syms"),
         )
     lens = cur.select("token", F.size("syms").cast("long").alias("n_sub"))
-    tokd = docs.select("doc_id", F.explode(_bpe_toks()).alias("token"))
+    tokd = docs.select("doc_id", F.explode(alnum_tokens(F.col("text"))).alias("token"))
     agg = (
         tokd.join(lens, "token")
         .groupBy("doc_id")
@@ -1134,7 +1123,7 @@ def _uni_ctes(rounds: int = _UNI_EM_ROUNDS) -> str:
     parts = [
         f"""uw AS (
         SELECT tok AS token, CAST(count(*) AS BIGINT) AS wc
-        FROM (SELECT unnest({_BPE_TOKS_SQL}) AS tok FROM documents)
+        FROM (SELECT unnest({ALNUM_TOKS_SQL}) AS tok FROM documents)
         GROUP BY tok
     )""",
         f"tw AS (SELECT token, wc FROM uw WHERE len(token) <= {_UNI_MAXW})",
@@ -1206,7 +1195,7 @@ def _uni_len_ctes(rounds: int = _UNI_EM_ROUNDS) -> str:
         + f""",
     uww AS (
         SELECT DISTINCT tok AS token
-        FROM (SELECT unnest({_BPE_TOKS_SQL}) AS tok FROM documents)
+        FROM (SELECT unnest({ALNUM_TOKS_SQL}) AS tok FROM documents)
     ),
     uws AS (SELECT token FROM uww WHERE len(token) <= {_UNI_MAXW}),
     umf AS (
@@ -1230,7 +1219,7 @@ def _uni_len_ctes(rounds: int = _UNI_EM_ROUNDS) -> str:
         FROM uww WHERE len(token) > {_UNI_MAXW}
     ),
     utokd AS (
-        SELECT doc_id, unnest({_BPE_TOKS_SQL}) AS token FROM documents
+        SELECT doc_id, unnest({ALNUM_TOKS_SQL}) AS token FROM documents
     ),
     uagg AS (
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
@@ -1359,7 +1348,7 @@ def train_unigram(
     """Train the unigram-LM vocabulary over ``docs``; returns the
     pruned [(piece, freq, logprob), ...] sorted (freq DESC, piece)."""
     words = (
-        docs.select(F.explode(_bpe_toks()).alias("token"))
+        docs.select(F.explode(alnum_tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("wc"))
         .where(F.length("token") <= _UNI_MAXW)
@@ -1443,7 +1432,7 @@ def uni_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     vocab = unigram_vocab(spark, sf_dir)
     m = _uni_lp_map(vocab)
-    wall = docs.select(F.explode(_bpe_toks()).alias("token")).distinct()
+    wall = docs.select(F.explode(alnum_tokens(F.col("text"))).alias("token")).distinct()
     framed = _viterbi_frame(
         wall.where(F.length("token") <= _UNI_MAXW), vocab
     )
@@ -1460,7 +1449,7 @@ def uni_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token", F.length("token").cast("long").alias("n_sub")
         )
     )
-    tokd = docs.select("doc_id", F.explode(_bpe_toks()).alias("token"))
+    tokd = docs.select("doc_id", F.explode(alnum_tokens(F.col("text"))).alias("token"))
     agg = (
         tokd.join(lens, "token")
         .groupBy("doc_id")
@@ -1711,9 +1700,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bigram_pairs(docs: DataFrame) -> DataFrame:
     """(doc_id, a, b) — one row per adjacent token pair (narrow)."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.col("text"))
     base = docs.select("doc_id", toks.alias("toks"))
     tail = F.slice(
         "toks", 2, F.greatest(F.size("toks") - 1, F.lit(0))
@@ -1735,9 +1722,7 @@ def train_bigram_stats(
     apply per micro-batch (the CCNet deployment shape: the LM is an
     offline artifact, arrivals are scored against it)."""
     pairs = _bigram_pairs(docs)
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.col("text"))
     cab = pairs.groupBy("a", "b").agg(
         F.count("*").cast("long").alias("cab")
     )
@@ -1972,9 +1957,7 @@ def dsir_logweights(spark: SparkSession, sf_dir: str) -> DataFrame:
     DSIR hashes features: the statistic tables stay O(B) at any corpus
     size."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.col("text"))
     base = docs.select("doc_id", "lang", toks.alias("toks"))
     head = F.slice("toks", 1, F.greatest(F.size("toks") - 1, F.lit(0)))
     tail = F.slice("toks", 2, F.greatest(F.size("toks") - 1, F.lit(0)))
@@ -2096,9 +2079,6 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", (reason == "ok").alias("keep"), reason.alias("reason")
         )
     )
-
-
-_GOPHER_STOPS = ["the", "a", "of", "to", "and", "in"]
 
 
 @declared(
@@ -2568,9 +2548,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary collapse), plus type/token counts (the Heaps'-law
     inputs) and the type-token ratio."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.col("text"))
     vc = (
         docs.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -2717,9 +2695,7 @@ def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mirror-token policy (floats only) is not in play. The OLS
     reuses q_zipf_fit's fixed-order fold."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.col("text"))
     tok = docs.select("doc_id", F.explode(toks).alias("token"))
     mx = docs.agg(F.max("doc_id").alias("m"))
     ck = (
@@ -2983,9 +2959,7 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle blocking generates candidates; the exact intersection is
     candidate-bounded; the gate is an exact integer cross-product."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.col("text"))
     base = docs.select("doc_id", toks.alias("toks")).withColumn(
         "nt", F.size("toks")
     )

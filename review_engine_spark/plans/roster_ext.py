@@ -12,11 +12,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from review_engine_spark.functions.text import STOPWORDS
+from review_engine_spark.functions.text import STOPWORDS, ws_tokens
 from review_engine_spark.operators.cluster import iter_checkpoint
 from review_engine_spark.plans import declared
+from review_engine_spark.plans._oracle import (
+    ALNUM_TOKS_SQL,
+    SHINGLES_SQL,
+    sql_minhash_sigs,
+)
 from review_engine_spark.scratch import scratch_dir
 from review_engine_spark.sources.io import read_parquet_table, write_jsonl_gz
+from review_engine_spark.streaming.jobs import (
+    NEAR_DUP_BAND_WIDTH,
+    NEAR_DUP_SEEDS,
+    run_stream_near_dup,
+)
 
 _STOPS_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
 
@@ -608,44 +618,34 @@ def q_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Streaming ingest-time NEAR-dup detection — MinHash-LSH banding under
-# cross-batch GroupState (streaming × dedup, the 100 TB/day pipeline
-# shape). md5 signature algebra token-for-token with q_minhash_jaccard
-# (roster_retrieval) so the WHOLE chain — shingles, min-hash, banding,
-# first-occupant bucket semantics — is oracle-checked, not rows-only.
-# "Earlier" = smaller doc_id on both sides (ingestion order is doc_id
-# order by construction of the chunked source).
+# cross-batch GroupState (streaming × dedup). The md5 signatures are
+# q_minhash_jaccard's (roster_retrieval), so the WHOLE chain — shingles,
+# min-hash, banding, first-occupant bucket semantics — is oracle-checked,
+# not rows-only. "Earlier" = smaller doc_id on both sides.
 # ---------------------------------------------------------------------------
 
-_ND_TOKS_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-)
-_ND_SHINGLES_SQL = (
-    "list_transform(range(0, len(toks) - 2), "
-    "i -> toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3])"
-)
-_ND_SIGS_SQL = ",\n               ".join(
-    f"list_min(list_transform(sh, x -> md5('{s}|' || x))) AS sig{s}"
-    for s in range(8)
-)
 _ND_BANDS_SQL = "\n        UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band_idx, "
-    f"md5(sig{2 * b} || '|' || sig{2 * b + 1}) AS bh FROM sig"
-    for b in range(4)
+    f"SELECT doc_id, {b} AS band_idx, md5("
+    + " || '|' || ".join(
+        f"sig{b * NEAR_DUP_BAND_WIDTH + j}" for j in range(NEAR_DUP_BAND_WIDTH)
+    )
+    + ") AS bh FROM sig"
+    for b in range(NEAR_DUP_SEEDS // NEAR_DUP_BAND_WIDTH)
 )
 
 
 @declared(
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_ND_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {ALNUM_TOKS_SQL} AS toks FROM documents
     ),
     sh AS (
-        SELECT doc_id, {_ND_SHINGLES_SQL} AS sh
+        SELECT doc_id, {SHINGLES_SQL} AS sh
         FROM t WHERE len(toks) >= 3
     ),
     sig AS (
         SELECT doc_id,
-               {_ND_SIGS_SQL}
+               {sql_minhash_sigs(NEAR_DUP_SEEDS)}
         FROM sh
     ),
     bands AS (
@@ -674,8 +674,6 @@ def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides define "earlier" as smaller doc_id. Cross-batch state
     carry is pinned in tests/test_streaming.py (dup pair split across
     micro-batches)."""
-    from review_engine_spark.streaming.jobs import run_stream_near_dup
-
     flags = run_stream_near_dup(spark, sf_dir)
     return flags.groupBy("doc_id").agg(
         F.sum("hit").cast("long").alias("n_dup_bands"),
@@ -718,7 +716,7 @@ def q_embed_batch_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     cleaned = docs.select("doc_id", clean_text(F.col("text")).alias("clean"))
     kept = cleaned.filter(token_count(F.col("clean")) > 5)
-    embed = embedder_batch_udf(dim=16, batch_size=700)
+    embed = embedder_batch_udf(batch_size=700)
     return kept.select(
         "doc_id",
         F.round(
@@ -1231,9 +1229,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline. Unigram and bigram counts are two hash aggregations over
     exploded tokens; totals come back as a broadcast 1-row join (D7)."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
+    toks = ws_tokens(F.col("text"))
     d = docs.select(toks.alias("toks"))
     uni = d.select(F.explode("toks").alias("tok")).groupBy("tok").agg(
         F.count("*").alias("c")

@@ -25,7 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from review_engine_spark.functions.text import alnum_tokens, ws_tokens
+from review_engine_spark.operators.dedup import md5_minhash_signatures
 from review_engine_spark.plans import declared
+from review_engine_spark.plans._oracle import (
+    ALNUM_TOKS_SQL,
+    SHINGLES_SQL,
+    sql_minhash_sigs,
+)
 from review_engine_spark.sources.io import read_parquet_table
 
 #: Fixed retrieval query (terms present in the fixture vocabulary).
@@ -38,20 +45,13 @@ BM25_B = 0.75
 MINHASH_SEEDS = list(range(8))
 MINHASH_CAP = 32
 
-_TOKS_SQL = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
-
-def _tokens(col):
-    return F.filter(F.split(F.lower(col), "[^a-z0-9]+"), lambda x: x != "")
-
-
 _TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
 
 
 @declared(
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {ALNUM_TOKS_SQL} AS toks FROM documents
     ),
     dl AS (SELECT doc_id, len(toks) AS dl FROM d WHERE len(toks) > 0),
     stats AS (SELECT avg(dl) AS adl, count(*) AS n FROM dl),
@@ -88,7 +88,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject) — the corpus shuffles only (doc_id, term,
     tf) rows for matching terms, never the token stream."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    d = docs.select("doc_id", alnum_tokens(F.col("text")).alias("toks"))
     dl = d.filter(F.size("toks") > 0).select(
         "doc_id", F.size("toks").cast("long").alias("dl")
     )
@@ -127,7 +127,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 @declared(
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest({_TOKS_SQL}) AS term FROM documents
+        SELECT doc_id, unnest({ALNUM_TOKS_SQL}) AS term FROM documents
     ),
     posting AS (SELECT DISTINCT term, doc_id FROM toks)
     SELECT term,
@@ -151,7 +151,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     only thing shuffled twice."""
     docs = read_parquet_table(spark, sf_dir, "documents")
     posting = (
-        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
+        docs.select("doc_id", F.explode(alnum_tokens(F.col("text"))).alias("term"))
         .distinct()
     )
     return (
@@ -174,17 +174,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sig_sql(seed: int) -> str:
-    return (
-        f"list_min(list_transform(sh, x -> md5('{seed}|' || x))) AS sig{seed}"
-    )
-
-
-_SHINGLES_SQL = (
-    "list_transform(range(0, len(toks) - 2), "
-    "i -> toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3])"
-)
-_SIGS_SQL = ",\n               ".join(_sig_sql(s) for s in MINHASH_SEEDS)
 _MATCH_SQL = " + ".join(
     f"CASE WHEN a.sig{s} = b.sig{s} THEN 1 ELSE 0 END" for s in MINHASH_SEEDS
 )
@@ -193,16 +182,16 @@ _MATCH_SQL = " + ".join(
 @declared(
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {ALNUM_TOKS_SQL} AS toks FROM documents
         WHERE doc_id < {MINHASH_CAP}
     ),
     sh AS (
-        SELECT doc_id, {_SHINGLES_SQL} AS sh
+        SELECT doc_id, {SHINGLES_SQL} AS sh
         FROM t WHERE len(toks) >= 3
     ),
     sig AS (
         SELECT doc_id,
-               {_SIGS_SQL}
+               {sql_minhash_sigs(len(MINHASH_SEEDS))}
         FROM sh
     )
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -220,40 +209,10 @@ def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     with banding instead of all-pairs; the cap ({MINHASH_CAP} docs)
     bounds the quadratic join exactly like q_near_dup_embedding's
     declared cap, with LSH banding as the scale route."""
-    docs = (
-        read_parquet_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < MINHASH_CAP)
-        .select("doc_id", _tokens(F.col("text")).alias("toks"))
-        .filter(F.size("toks") >= 3)
+    docs = read_parquet_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < MINHASH_CAP
     )
-    sh = docs.select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(0), F.size("toks") - 3),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("toks"), i + 1),
-                F.element_at(F.col("toks"), i + 2),
-                F.element_at(F.col("toks"), i + 3),
-            ),
-        ).alias("sh"),
-    )
-    def _seed_hash(seed: int):
-        # NB: a `lambda x, s=seed:` would be arity-2 and F.transform would
-        # bind the ELEMENT INDEX to the second parameter — closure factory
-        # keeps the lambda unary.
-        def h(x):
-            return F.md5(F.concat(F.lit(f"{seed}|"), x))
-
-        return h
-
-    sig = sh.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("sh"), _seed_hash(s))).alias(f"sig{s}")
-            for s in MINHASH_SEEDS
-        ],
-    )
+    sig = md5_minhash_signatures(docs, len(MINHASH_SEEDS))
     a = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"sig{s}").alias(f"a{s}") for s in MINHASH_SEEDS]
     )
@@ -294,7 +253,7 @@ _SIG_SQL = " + ".join(
 @declared(
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest({_TOKS_SQL}) AS tok FROM documents
+        SELECT doc_id, unnest({ALNUM_TOKS_SQL}) AS tok FROM documents
         WHERE doc_id < {SIMHASH_CAP}
     ),
     h AS (SELECT doc_id, {_H_SQL} AS h FROM toks),
@@ -323,7 +282,7 @@ def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         read_parquet_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < SIMHASH_CAP)
-        .select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
+        .select("doc_id", F.explode(alnum_tokens(F.col("text"))).alias("tok"))
     )
     h = docs.select(
         "doc_id",
@@ -358,7 +317,7 @@ WINNOW_CAP = 48
 @declared(
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {ALNUM_TOKS_SQL} AS toks FROM documents
         WHERE doc_id < {WINNOW_CAP}
     ),
     h AS (
@@ -400,7 +359,7 @@ def q_winnow_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < WINNOW_CAP)
         .select(
             "doc_id",
-            F.posexplode(_tokens(F.col("text"))).alias("pos", "tok"),
+            F.posexplode(alnum_tokens(F.col("text"))).alias("pos", "tok"),
         )
     )
     shingle = F.concat_ws(
@@ -442,7 +401,7 @@ _OFFSETS = [sum(_WIDTHS[:b]) for b in range(_N_BLOCKS)]
 @declared(
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest({_TOKS_SQL}) AS tok FROM documents
+        SELECT doc_id, unnest({ALNUM_TOKS_SQL}) AS tok FROM documents
         WHERE doc_id < {SIMHASH_CAP}
     ),
     h AS (SELECT doc_id, {_H_SQL} AS h FROM toks),
@@ -758,9 +717,7 @@ def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-            )
+            ws_tokens(F.col("text"))
         ).alias("token")
     )
     vocab = toks.groupBy("token").agg(F.count("*").alias("n"))
@@ -833,7 +790,6 @@ def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Small-range linear counting (E <= 2.5m and V > 0 -> m * ln(m / V))
 # uses the same literal arithmetic text on both engines.
 # ---------------------------------------------------------------------------
-HLL_M = 512
 _HLL_POW52 = 1 << 52
 #: raw harmonic-mean estimate from the exact scaled sum {s}:
 #: alpha_512 * m^2 * 2^52 / S, alpha_m = 0.7213 / (1 + 1.079 / m)

@@ -1,15 +1,17 @@
-"""Streaming jobs over the events surface (SURVEY §2.I).
+"""Structured Streaming runners over the events and documents tables
+(SURVEY §2.I; the reference has no streaming, only a stateless Q&A REPL,
+semantic.py:76-106).
 
-The reference has no streaming operators — its only incremental construct
-is a stateless Q&A REPL (semantic.py:76-106). The engine declares the
-minimal Structured Streaming surface the north star asks for: watermarked
-tumbling-window aggregation (validated in batch mode against the same SQL,
-q_stream_tumbling) and gap-based sessionization via session_window.
-
-Scale notes: state store size is bounded by the watermark horizon; the
-shuffle is keyed on (window, event_type) — same layout as the batch
-aggregate, so a batch backfill and the live stream produce identical
-partitioning.
+Each runner drives a finite file source to completion and returns its
+result as a batch DataFrame (``_snapshot``), so the roster's oracles can
+check it against batch SQL. The surface: tumbling and session windows,
+watermarked dedup, stream-stream and stream-static joins, the parquet
+sink and ``foreachBatch`` upsert landings, ``applyInPandasWithState``
+folds (sessionization, EWMA, z-score, MinHash-LSH near-dup flags) and
+two document ingest gates. The folds, ``run_stream_dedup`` and the gates
+take one source contract: ``path_glob`` names the table's files under
+``sf_dir`` and ``max_files_per_trigger`` splits them into micro-batches,
+which is how the tests feed late, out-of-order and cross-batch data.
 """
 
 from __future__ import annotations
@@ -31,7 +33,12 @@ __all__ = [
     "run_stream_stream_join",
     "run_stream_to_parquet",
     "run_stream_upsert",
+    "run_ewma_stateful",
+    "run_zscore_stateful",
     "run_stream_near_dup",
+    "run_stream_static_join",
+    "run_stream_quality_gate",
+    "run_stream_ingest_gate",
 ]
 
 # GroupState keys per state partition. The stateful runners key their
@@ -43,6 +50,10 @@ __all__ = [
 # fold order and emitted rows do not depend on the bucket count (pinned
 # in tests/test_streaming.py).
 KEY_BUCKETS_PER_PARTITION = 16
+
+#: ``run_stream_near_dup``'s MinHash: md5 seeds, and seeds per LSH band.
+NEAR_DUP_SEEDS = 8
+NEAR_DUP_BAND_WIDTH = 2
 
 
 def _key_bucket(spark: SparkSession, key: Column) -> Column:
@@ -343,7 +354,7 @@ def run_stream_dedup(
     the ingest-time dedup of a training-data pipeline: keep the first
     arrival per (user_id, event_type) key; the watermark bounds how long
     each key's fingerprint is held in the state store (unbounded
-    dropDuplicates state is the classic streaming OOM at 100 TB/day).
+    dropDuplicates state grows with every key ever seen).
 
     Driven to completion over the finite events source; output row count
     equals the distinct key count, which is what the rows-only check
@@ -367,8 +378,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user's clicks in the preceding hour (attribution). Both sides
     carry watermarks so the join state store is bounded: a click can be
     evicted once the watermark passes its one-hour attribution window —
-    the state-size discipline that makes stream-stream joins viable at
-    100 TB/day (unbounded join state is the failure mode).
+    without watermarks the join state grows with the whole stream.
 
     Driven to completion over the finite events source (append mode,
     memory sink).
@@ -705,11 +715,8 @@ def run_zscore_stateful(
 def run_stream_near_dup(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 1,
-    n_seeds: int = 8,
-    band_width: int = 2,
-    chunk_order: list[int] | None = None,
-    occupant: str = "min_id",
+    path_glob: str = "documents.parquet",
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming ingest-time NEAR-duplicate detection — MinHash-LSH
     banding under real cross-batch ``GroupState`` (SURVEY §2.I × the
@@ -717,28 +724,19 @@ def run_stream_near_dup(
     document must be flagged against everything already ingested
     without ever joining the corpus to itself.
 
-    Pipeline, all inside the stream: tokenize → word 3-shingles →
-    ``n_seeds`` md5 min-hash signatures (the exact md5 algebra of
-    ``q_minhash_jaccard``, bit-identical in DuckDB) → ``n_seeds /
-    band_width`` band hashes → explode to (band_idx, band_hash, doc_id)
-    → ``applyInPandasWithState`` keyed by (band_idx, band_hash). State
+    Pipeline, all inside the stream: ``md5_minhash_signatures`` (the
+    ``NEAR_DUP_SEEDS`` md5 signatures of ``q_minhash_jaccard``,
+    bit-identical in DuckDB) → ``NEAR_DUP_SEEDS / NEAR_DUP_BAND_WIDTH``
+    band hashes → explode to (band_idx, band_hash, doc_id) →
+    ``applyInPandasWithState`` keyed by (band_idx, band_hash). State
     per bucket is ONE long (the smallest doc_id ever seen), however
     long the stream runs; an arriving doc is flagged on a band iff an
     earlier doc already occupies its bucket. Docs with <3 tokens have
-    no shingles and are dropped, mirroring the batch twin.
+    no shingles and are dropped, mirroring the batch twin. Bucket state
+    carries across micro-batches (pinned in tests/test_streaming.py by
+    streaming doc_id-range files one per trigger).
 
-    With ``n_chunks > 1`` the documents fixture is split into
-    doc_id-RANGE files and streamed with ``maxFilesPerTrigger=1``, so
-    bucket state genuinely carries across micro-batches (a dup pair
-    split across chunks is caught by batch 2 reading batch 1's state —
-    pinned in tests/test_streaming.py). The default streams the fixture
-    directly (single micro-batch — the same finite-source convention as
-    run_sessionize_stateful, whose cross-batch proof also lives in the
-    pytest, keeping the oracle-gate/bench cost at the fixed-overhead
-    floor).
-
-    **Arrival-order horizon** (``occupant``): the oracle-checked
-    default ``occupant="min_id"`` flags a doc iff a SMALLER doc_id
+    **Arrival-order horizon:** a doc is flagged iff a SMALLER doc_id
     already occupies the bucket, which equals "duplicate of an
     earlier-ingested doc" only while ingestion order tracks doc_id —
     true for the fixture replay and for append-only ingest with
@@ -747,18 +745,8 @@ def run_stream_near_dup(
     arriving late is never flagged (it becomes the bucket occupant
     instead), so a dup pair delivered in reverse order survives
     entirely — flags are a subset of the in-order flags, never
-    spurious extras. ``occupant="first_arrival"`` is the
-    production-ingest variant: the FIRST-ARRIVED doc keeps the bucket
-    forever and every later arrival is flagged regardless of id —
-    order-sensitive output, but "keep what you already ingested" is
-    the semantics an ingest front door actually wants (you cannot
-    un-ingest the earlier copy). Within one micro-batch both fold in
-    doc_id order (cross-executor row order is nondeterministic, so
-    arrival rank inside a batch is defined as doc_id rank). Both
-    semantics are pinned under shuffled chunk delivery
-    (``chunk_order``, test-only: reorders the range-files' mtimes so
-    the file source delivers them in the given sequence) in
-    tests/test_streaming.py.
+    spurious extras. Within one micro-batch the fold runs in doc_id
+    order (cross-executor row order is nondeterministic).
 
     Scale: the only shuffle keys band rows by (band_idx, band_hash) —
     bucket count grows with the corpus, so no bucket ever concentrates;
@@ -768,101 +756,14 @@ def run_stream_near_dup(
     state group folds its share of the occupied buckets in one
     invocation.
     """
-    from review_engine_spark.sources.io import read_parquet_table
-
-    if occupant not in ("min_id", "first_arrival"):
-        raise ValueError(
-            "occupant must be 'min_id' or 'first_arrival', got "
-            f"{occupant!r}"
-        )
-    params = (n_seeds, band_width, occupant)
-    if n_chunks <= 1:
-        stream = _parquet_stream(
-            spark, sf_dir, "documents.parquet", schema="doc_id long, text string"
-        )
-        return _near_dup_snapshot(spark, stream, *params)
-    docs = read_parquet_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    hi = docs.agg(F.max("doc_id")).collect()[0][0]
-    if hi is None:
-        # empty documents table: max() is NULL and there is nothing
-        # to range-split — the output schema is fixed, so return the
-        # empty flags frame directly (matches the other runners'
-        # empty-stream handling).
-        return spark.createDataFrame([], "doc_id long, band_idx int, hit int")
-    hi += 1
-    step = (hi + n_chunks - 1) // n_chunks
-    with tempfile.TemporaryDirectory() as src_dir:
-        for i in range(n_chunks):
-            docs.filter(
-                (F.col("doc_id") >= i * step)
-                & (F.col("doc_id") < (i + 1) * step)
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{src_dir}/chunk={i}"
-            )
-        if chunk_order is not None:
-            # deliver chunks in the GIVEN sequence: the file source
-            # picks up new files oldest-mtime-first, so stamping each
-            # range-file with an mtime proportional to its rank in
-            # chunk_order makes arrival order diverge from doc_id
-            # order — the out-of-order-ingest test harness.
-            import glob
-            import time
-
-            assert sorted(chunk_order) == list(range(n_chunks))
-            base = time.time()
-            for rank, ci in enumerate(chunk_order):
-                for f in glob.glob(f"{src_dir}/chunk={ci}/*"):
-                    os.utime(f, (base + 10 * rank, base + 10 * rank))
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src_dir}/chunk=*")
-        )
-        return _near_dup_snapshot(spark, stream, *params)
-
-
-def _near_dup_snapshot(
-    spark: SparkSession, stream: DataFrame, n_seeds: int, band_width: int,
-    occupant: str,
-) -> DataFrame:
-    """``run_stream_near_dup`` over a stream of (doc_id, text)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    n_bands = n_seeds // band_width
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    sh = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - 3),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("toks"), i + 1),
-            F.element_at(F.col("toks"), i + 2),
-            F.element_at(F.col("toks"), i + 3),
-        ),
-    )
+    from review_engine_spark.operators.dedup import md5_minhash_signatures
 
-    def _seed_hash(seed: int):
-        # closure factory: a two-param lambda would bind the element
-        # INDEX to the second arg (F.transform contract)
-        def h(x):
-            return F.md5(F.concat(F.lit(f"{seed}|"), x))
-
-        return h
-
-    sigs = (
-        stream.select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            *[
-                F.array_min(F.transform(sh, _seed_hash(s))).alias(f"sig{s}")
-                for s in range(n_seeds)
-            ],
-        )
+    stream = _parquet_stream(
+        spark, sf_dir, path_glob, max_files_per_trigger, schema="doc_id long, text string"
     )
+    sigs = md5_minhash_signatures(stream, NEAR_DUP_SEEDS)
     band_cols = [
         F.struct(
             F.lit(b).alias("band_idx"),
@@ -870,19 +771,17 @@ def _near_dup_snapshot(
                 F.concat_ws(
                     "|",
                     *[
-                        F.col(f"sig{b * band_width + j}")
-                        for j in range(band_width)
+                        F.col(f"sig{b * NEAR_DUP_BAND_WIDTH + j}")
+                        for j in range(NEAR_DUP_BAND_WIDTH)
                     ],
                 )
             ).alias("bh"),
         )
-        for b in range(n_bands)
+        for b in range(NEAR_DUP_SEEDS // NEAR_DUP_BAND_WIDTH)
     ]
     bands = sigs.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("b")
     ).select("doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.bh").alias("bh"))
-
-    first_arrival = occupant == "first_arrival"
 
     def fn(key, pdfs, state: GroupState):
         # this group's occupied buckets live as parallel arrays
@@ -903,14 +802,9 @@ def _near_dup_snapshot(
             cur = st.get(bk)
             ids.append(did)
             bidx.append(int(bi))
-            if first_arrival:
-                hits.append(1 if cur is not None else 0)
-                if cur is None:
-                    st[bk] = did
-            else:
-                hits.append(1 if (cur is not None and cur < did) else 0)
-                if cur is None or did < cur:
-                    st[bk] = did
+            hits.append(1 if (cur is not None and cur < did) else 0)
+            if cur is None or did < cur:
+                st[bk] = did
         keys = list(st)
         state.update((keys, [st[k] for k in keys]))
         yield pd.DataFrame(

@@ -7,7 +7,9 @@ of living only in NOTES.md.
 
 from __future__ import annotations
 
+import ast
 import re
+from collections import Counter
 from pathlib import Path
 
 PLANS = Path(__file__).resolve().parent.parent / "review_engine_spark" / "plans"
@@ -74,3 +76,39 @@ def test_local_files_are_placed_by_scratch_only():
         if "tempfile.mkdtemp" in line or "/tmp/" in line
     ]
     assert not offenders, offenders
+
+
+def _declared(node) -> bool:
+    return any(
+        getattr(d.func if isinstance(d, ast.Call) else d, "id", None) == "declared"
+        for d in node.decorator_list
+    )
+
+
+def test_no_unreferenced_module_names():
+    """Every module-level function, class or assigned name in the
+    package must be mentioned somewhere in the repo's ``.py`` files
+    beyond its own definition (an ``__all__`` entry counts). Roster
+    queries are exempt: ``@declared`` registers them by name."""
+    repo = PLANS.parent.parent
+    words = Counter()
+    for p in repo.rglob("*.py"):
+        if not any(part.startswith(".") for part in p.relative_to(repo).parts):
+            words.update(re.findall(r"[A-Za-z_]\w*", p.read_text()))
+    unused = []
+    for p in sorted(PLANS.parent.rglob("*.py")):
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names = [] if _declared(node) else [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            unused += [
+                f"{p.relative_to(repo)}:{node.lineno} {n}"
+                for n in names
+                if not n.startswith("__") and words[n] <= 1
+            ]
+    assert not unused, unused

@@ -3,6 +3,10 @@ and the quality and ingest gates."""
 
 from __future__ import annotations
 
+import os
+import time
+
+import pandas as pd
 from pyspark.sql import functions as F
 
 
@@ -32,28 +36,62 @@ def test_stream_upsert_equals_batch_latest(spark, sf_dir):
     assert got == want
 
 
-def test_stream_near_dup_cross_batch_state(spark, sf_dir):
+def _write_doc_batches(tmp_path, batches) -> str:
+    """One ``doc_*.parquet`` file per micro-batch of (doc_id, text)
+    rows; mtimes strictly increasing in list order, so the file source
+    delivers the batches in the given order."""
+    base = time.time()
+    for i, rows in enumerate(batches):
+        path = str(tmp_path / f"doc_{i:02d}.parquet")
+        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
+            path, index=False
+        )
+        os.utime(path, (base + i, base + i))
+    return str(tmp_path)
+
+
+def _near_dup_hits(df):
+    return {(r["doc_id"], r["band_idx"]): r["hit"] for r in df.collect()}
+
+
+def test_stream_near_dup_cross_batch_state(spark, sf_dir, tmp_path):
     """The LSH bucket state must carry across micro-batches: the
-    chunked run (3 doc_id-range files, maxFilesPerTrigger=1) must flag
-    exactly the same per-doc band hits as the single-batch run — a dup
-    pair split across chunks is caught only if batch 2 reads batch 1's
-    bucket state."""
+    documents streamed as 3 doc_id-range files, one per trigger, must
+    flag exactly the same per-doc band hits as the single-batch run — a
+    dup pair split across files is caught only if batch 2 reads batch
+    1's bucket state."""
+    from review_engine_spark.sources.io import read_parquet_table
     from review_engine_spark.streaming.jobs import run_stream_near_dup
 
-    def agg(df):
-        return {
-            (r["doc_id"], r["band_idx"]): r["hit"] for r in df.collect()
-        }
+    docs = sorted(
+        (r["doc_id"], r["text"])
+        for r in read_parquet_table(spark, sf_dir, "documents").collect()
+    )
+    n = -(-len(docs) // 3)
+    d = _write_doc_batches(tmp_path, [docs[i : i + n] for i in range(0, len(docs), n)])
 
-    one_batch = agg(run_stream_near_dup(spark, sf_dir, n_chunks=1))
-    chunked = agg(run_stream_near_dup(spark, sf_dir, n_chunks=3))
-    assert one_batch == chunked
+    one_batch = _near_dup_hits(run_stream_near_dup(spark, sf_dir))
+    batched = _near_dup_hits(
+        run_stream_near_dup(
+            spark, d, path_glob="doc_*.parquet", max_files_per_trigger=1
+        )
+    )
+    assert one_batch == batched
     assert sum(one_batch.values()) > 0  # the check must not be vacuous
 
 
-def _mini_docs_dir(spark, tmp_path):
-    """Six-doc corpus with ONE near-dup pair (0, 5) whose members land
-    in different doc_id-range chunks at n_chunks=2 (0-2 | 3-5)."""
+def test_stream_near_dup_out_of_order_min_id_is_conservative(
+    spark, tmp_path
+):
+    """The documented min_id horizon, pinned on a six-doc corpus with
+    ONE near-dup pair (0, 5) split across two files (0-2 | 3-5): when
+    the file holding doc 5 (the LATER member of the pair) arrives BEFORE
+    the file holding doc 0, the min_id rule flags NOTHING — doc 5 finds
+    empty buckets, doc 0 displaces it as occupant without being flagged.
+    The degradation is conservative (flags ⊆ in-order flags, no
+    spurious extras), never wrong-positive."""
+    from review_engine_spark.streaming.jobs import run_stream_near_dup
+
     dup = "the quick brown fox jumps over the lazy dog tonight"
     uniq = [
         "alpha beta gamma delta epsilon zeta eta theta iota kappa",
@@ -62,102 +100,35 @@ def _mini_docs_dir(spark, tmp_path):
         "north south east west compass points guide the old sailors",
     ]
     rows = [(0, dup)] + [(i + 1, t) for i, t in enumerate(uniq)] + [(5, dup)]
-    d = str(tmp_path / "mini_sf")
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-        1
-    ).write.parquet(f"{d}/documents.parquet")
-    return d
 
+    def hits(batches, sub):
+        (tmp_path / sub).mkdir()
+        d = _write_doc_batches(tmp_path / sub, batches)
+        flags = _near_dup_hits(
+            run_stream_near_dup(
+                spark, d, path_glob="doc_*.parquet", max_files_per_trigger=1
+            )
+        )
+        return {k for k, hit in flags.items() if hit == 1}
 
-def test_stream_near_dup_out_of_order_min_id_is_conservative(
-    spark, tmp_path
-):
-    """The documented min_id horizon, pinned: when the chunk holding
-    doc 5 (the LATER member of the dup pair) arrives BEFORE the chunk
-    holding doc 0, the min_id rule flags NOTHING — doc 5 finds empty
-    buckets, doc 0 displaces it as occupant without being flagged. The
-    degradation is conservative (flags ⊆ in-order flags, no spurious
-    extras), never wrong-positive."""
-    from review_engine_spark.streaming.jobs import run_stream_near_dup
-
-    d = _mini_docs_dir(spark, tmp_path)
-
-    def hits(df):
-        return {
-            (r["doc_id"], r["band_idx"])
-            for r in df.collect()
-            if r["hit"] == 1
-        }
-
-    in_order = hits(run_stream_near_dup(spark, d, n_chunks=2))
+    in_order = hits([rows[:3], rows[3:]], "in_order")
     assert in_order  # doc 5 flagged on every band in the in-order run
     assert {doc for doc, _ in in_order} == {5}
-    shuffled = hits(
-        run_stream_near_dup(spark, d, n_chunks=2, chunk_order=[1, 0])
-    )
+    shuffled = hits([rows[3:], rows[:3]], "reversed")
     assert shuffled == set()  # pair delivered in reverse: both survive
     assert shuffled <= in_order  # conservative, not spurious
 
 
-def test_stream_near_dup_first_arrival_flags_late_arrivals(
-    spark, tmp_path
-):
-    """The production-ingest variant: the first-ARRIVED doc keeps the
-    bucket, so under reversed delivery doc 0 (arriving after its dup
-    twin doc 5) is flagged on exactly the bands doc 5 was flagged on
-    in the in-order run."""
-    from review_engine_spark.streaming.jobs import run_stream_near_dup
-
-    d = _mini_docs_dir(spark, tmp_path)
-
-    def hits(df):
-        return {
-            (r["doc_id"], r["band_idx"])
-            for r in df.collect()
-            if r["hit"] == 1
-        }
-
-    in_order = hits(
-        run_stream_near_dup(
-            spark, d, n_chunks=2, occupant="first_arrival"
-        )
-    )
-    shuffled = hits(
-        run_stream_near_dup(
-            spark,
-            d,
-            n_chunks=2,
-            chunk_order=[1, 0],
-            occupant="first_arrival",
-        )
-    )
-    # same bands fire either way; only WHICH twin is flagged follows
-    # the arrival order
-    assert {doc for doc, _ in in_order} == {5}
-    assert {doc for doc, _ in shuffled} == {0}
-    assert {b for _, b in in_order} == {b for _, b in shuffled}
-
-
-def test_stream_near_dup_rejects_unknown_occupant(spark, sf_dir):
-    import pytest
-
-    from review_engine_spark.streaming.jobs import run_stream_near_dup
-
-    with pytest.raises(ValueError, match="occupant"):
-        run_stream_near_dup(spark, sf_dir, occupant="latest")
-
-
-def test_stream_near_dup_empty_table_chunked(spark, tmp_path):
-    """An EMPTY documents table through the chunked path must return
-    the empty flags frame (same schema), not TypeError on None+1 from
-    the max(doc_id) range-split probe (ADVICE r8)."""
+def test_stream_near_dup_empty_table(spark, tmp_path):
+    """An EMPTY documents table through the default path returns the
+    empty flags frame with the fixed schema."""
     from review_engine_spark.streaming.jobs import run_stream_near_dup
 
     d = str(tmp_path / "empty_sf")
     spark.createDataFrame([], "doc_id long, text string").write.parquet(
         f"{d}/documents.parquet"
     )
-    out = run_stream_near_dup(spark, d, n_chunks=3)
+    out = run_stream_near_dup(spark, d)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "doc_id",
