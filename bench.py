@@ -2,11 +2,20 @@
 
 Runs each query from ``__spark_entry__.queries()`` at ``--sf-dir`` (default
 $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1) in the engine's session and
-records the best of ``--repeat`` runs (default 2: the first run pays
-one-time whole-stage-codegen JIT, the warm run is the steady-state cost).
-A run is ``fn(spark, sf)`` plus a write to the noop sink, which evaluates
-every output column; ``count()`` would let Catalyst prune projection-only
-work, so a map-only query would be timed as a bare scan.
+records the best of ``--repeat`` runs (default 2). A run is
+``fn(spark, sf)`` plus a write to the noop sink, which evaluates every
+output column; ``count()`` would let Catalyst prune projection-only work,
+so a map-only query would be timed as a bare scan.
+
+The first run compiles the query's generated classes with Janino, and the
+JIT then compiles their bytecode. A later run is the steady-state cost
+only while Spark's generated-class cache still holds those classes; at
+Spark's default of 100 entries the roster evicted them
+(``review_engine_spark.session`` sizes the cache). So each run's compiles
+are counted from Spark's codegen metrics: ``compiles_cold`` for the first
+run and ``compiles_warm`` for the last. A warm count above 0 means
+classes were evicted, the query's generated code inlines literals that
+change per run, or AQE re-planned into a variant not compiled before.
 
 Host load is measured, not corrected for. Each query's runs go under a
 Spark job group named after it, and right after them its jobs' stage
@@ -17,9 +26,10 @@ across runs of one tree; fetch wait and spill say where a slow wall time
 went.
 
 A full sweep writes ``BENCH_QUERIES.json`` next to this script: the
-summary, each query's record (wall and the four stage metrics) and the
-failure cause of every query that raised in all repeats. Subset runs
-write no sidecar. Every query gets a ``# timing`` line on stderr.
+summary, each query's record (wall, the four stage metrics and the two
+compile counts) and the failure cause of every query that raised in all
+repeats. Subset runs write no sidecar. Every query gets a ``# timing``
+line on stderr.
 
 The FINAL stdout line is one compact JSON object with the keys
 ``metric, value, unit, queries, sf, n_queries, sec_per_query, n_failed,
@@ -50,12 +60,16 @@ def failure_text(exc: BaseException) -> str:
     return f"{type(exc).__name__}: {lines[0] if lines else ''}"
 
 
-def query_record(walls: list[float], errors: list[BaseException], totals: dict[str, float]) -> dict:
+def query_record(
+    walls: list[float], errors: list[BaseException], totals: dict[str, float], compiles: list[int]
+) -> dict:
     """One query's record: best wall, its jobs' stage metrics per run
-    (``totals`` covers all runs), and the failure cause when every run
-    raised."""
+    (``totals`` covers all runs), the classes compiled in the first and
+    the last run (``None`` for a single run), and the failure cause when
+    every run raised."""
     rec = {"wall_s": round(min(walls), 3)}
     rec.update({k: round(totals.get(k, 0.0) / len(walls), 3) for k in EXEC_KEYS})
+    rec.update(compiles_cold=compiles[0], compiles_warm=compiles[-1] if len(compiles) > 1 else None)
     if errors and len(errors) == len(walls):
         rec["failure"] = failure_text(errors[-1])
     return rec
@@ -107,6 +121,7 @@ def main() -> int:
     spark = get_spark("bench")
     sc = spark.sparkContext
     status = StatusClient(spark)
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     qs = entrymod.queries()
     if args.queries:
         qs = {k: v for k, v in qs.items() if k in set(args.queries)}
@@ -120,8 +135,10 @@ def main() -> int:
         sc.setJobGroup(name, name)
         walls: list[float] = []
         errors: list[BaseException] = []
+        compiles: list[int] = []
         start = time.time()
         for _ in range(args.repeat):
+            c0 = compilations.getCount()
             t0 = time.perf_counter()
             try:
                 fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
@@ -129,13 +146,18 @@ def main() -> int:
                 errors.append(e)
                 print(f"# {name} FAILED: {failure_text(e)}", file=sys.stderr)
             walls.append(time.perf_counter() - t0)
+            compiles.append(compilations.getCount() - c0)
         end = time.time()
         # fold now, not at the end: the status store keeps only the last
         # 1,000 jobs. Streaming batches run under their own job groups and
         # are attributed by submission time.
         totals = per_op_totals(status.wait_idle(), status.stages(), [], [(name, start, end)])[name]
-        records[name] = rec = query_record(walls, errors, totals)
-        print(f"# timing {name} {rec['wall_s']} task_cpu_s={rec['exec.task_cpu_s']}", file=sys.stderr)
+        records[name] = rec = query_record(walls, errors, totals, compiles)
+        print(
+            f"# timing {name} {rec['wall_s']} task_cpu_s={rec['exec.task_cpu_s']} "
+            f"compiles={rec['compiles_cold']}/{rec['compiles_warm']}",
+            file=sys.stderr,
+        )
         # queries must be independent measurements: drop any cache one
         # left behind before the next runs
         spark.catalog.clearCache()

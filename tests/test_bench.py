@@ -24,7 +24,7 @@ def _totals(cpu: float) -> dict[str, float]:
 
 def test_final_line_fits_the_tail_budget_at_300_queries():
     records = {
-        f"q_some_rather_long_query_name_{i:03d}": bench.query_record([1.0 + i / 7, 0.5 + i / 9], [], _totals(0.25))
+        f"q_some_rather_long_query_name_{i:03d}": bench.query_record([1.0 + i / 7, 0.5 + i / 9], [], _totals(0.25), [40, 0])
         for i in range(300)
     }
     full = bench.summary(records, 0.1)
@@ -43,13 +43,14 @@ def test_final_line_fits_the_tail_budget_at_300_queries():
 
 def test_failure_is_recorded_only_when_every_run_raised():
     boom = ValueError("bad column\n  at line 2")
-    failed = bench.query_record([0.2, 0.1], [boom, boom], _totals(0.0))
-    flaky = bench.query_record([0.2, 0.3], [boom], _totals(0.4))
+    failed = bench.query_record([0.2, 0.1], [boom, boom], _totals(0.0), [3, 1])
+    flaky = bench.query_record([0.2, 0.3], [boom], _totals(0.4), [12, 0])
     assert failed == {
         "wall_s": 0.1, "exec.task_cpu_s": 0.0, "exec.gc_s": 0.005, "exec.fetch_wait_s": 0.0,
-        "exec.spill_bytes": 0.0, "failure": "ValueError: bad column",
+        "exec.spill_bytes": 0.0, "compiles_cold": 3, "compiles_warm": 1, "failure": "ValueError: bad column",
     }
     assert "failure" not in flaky
+    assert bench.query_record([0.2], [], _totals(0.1), [7])["compiles_warm"] is None
     full = bench.summary({"q_a": failed, "q_b": flaky}, 0.01)
     assert full["n_failed"] == 1
     assert json.loads(bench.final_line(full))["n_failed"] == 1
@@ -66,9 +67,9 @@ def test_bench_runs_two_queries_end_to_end(sf_dir):
     assert set(final) == FINAL_KEYS
     assert final["n_queries"] == 2 and final["n_failed"] == 0 and final["sf"] == 0.001
     timing = {
-        m.group(1): (float(m.group(2)), float(m.group(3)))
-        for m in re.finditer(r"^# timing (\S+) (\S+) task_cpu_s=(\S+)$", out.stderr, re.M)
+        m.group(1): (float(m.group(2)), float(m.group(3)), int(m.group(4)), int(m.group(5)))
+        for m in re.finditer(r"^# timing (\S+) (\S+) task_cpu_s=(\S+) compiles=(\d+)/(\d+)$", out.stderr, re.M)
     }
     assert set(timing) == set(names)
-    assert all(wall > 0 and cpu > 0 for wall, cpu in timing.values()), timing
-    assert final["task_cpu_s"] == round(sum(cpu for _, cpu in timing.values()), 3)
+    assert all(wall > 0 and cpu > 0 and cold > 0 for wall, cpu, cold, _ in timing.values()), timing
+    assert final["task_cpu_s"] == round(sum(cpu for _, cpu, _, _ in timing.values()), 3)

@@ -48,3 +48,37 @@ def test_local_session_is_sized_from_the_host(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert host_defaults() == (3, "2g")
+
+
+#: the ``roster_mix`` queries whose classes are the same on every run,
+#: plus four more so one pass overflows Spark's default of 100 entries
+#: (151 distinct classes at sf0.001 under ``local[2]``). Left out:
+#: ``q_perplexity_gate`` and ``q_tpch_q9``, whose AQE re-planning picks a
+#: plan variant by stage completion order, so a warm pass can still
+#: compile a variant it has not met before.
+WARM_QUERIES = [
+    "q_stream_dedup", "q_porter_stem", "q_sink_roundtrip", "q_group_count", "q_json_extract",
+    "q_containment_dedup", "q_sequence_pack", "q_countmin", "q_benford",
+]
+
+
+def test_warm_pass_compiles_nothing(spark, sf_dir):
+    """Spark's cache of generated classes holds every class one pass
+    needs, so a second pass runs them all from the cache. At the default
+    of 100 entries the pass evicted its own classes before reusing them,
+    and every warm pass compiled over 120 of its 151 classes again."""
+    from review_engine_spark.plans import QUERIES
+    from review_engine_spark.session import DEFAULT_CONF
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == DEFAULT_CONF[key]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        for name in WARM_QUERIES:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0
