@@ -1,6 +1,7 @@
 """The one place that decides where the engine writes local files: a root
 ``<tempfile.gettempdir()>/review_engine_spark-<uid>/`` private to its user,
-holding ``run-<pid>/`` (``scratch_dir``, removed at exit) and ``artifacts/``
+holding ``run-<pid>/`` (``scratch_dir``, removed at exit, or by the next
+process to make its own if this one was killed first) and ``artifacts/``
 (trained BPE rules, unigram vocabulary and PCA components, kept across
 processes and keyed by the stat of every file of the training table)."""
 
@@ -32,8 +33,25 @@ def root() -> str:
     return _root
 
 
+def _sweep_dead_runs(root: str) -> None:
+    """Remove the ``run-<pid>/`` directories of processes that are gone
+    without running their exit handler (SIGKILL). A pid that is alive, or
+    that this process may not signal, keeps its directory."""
+    for name in os.listdir(root):
+        pid = name.removeprefix("run-")
+        if pid == name or not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        except PermissionError:
+            pass
+
+
 @functools.cache
 def _run_dir(root: str, pid: int) -> str:
+    _sweep_dead_runs(root)
     run = os.path.join(root, f"run-{pid}")
     os.makedirs(run, exist_ok=True)
     atexit.register(lambda: os.getpid() == pid and shutil.rmtree(run, ignore_errors=True))

@@ -72,3 +72,19 @@ def test_scratch_queries_leave_only_artifacts_in_tmpdir(tmp_path, sf_dir):
     root = f"review_engine_spark-{os.getuid()}"
     left = sorted(str(p.relative_to(tmp)) for p in tmp.rglob("*"))
     assert all(p in (root, f"{root}/artifacts") or p.startswith(f"{root}/artifacts/") for p in left), left
+
+
+def test_first_scratch_dir_removes_the_run_dirs_of_dead_processes(scratch_root):
+    """A process killed before its exit handler ran leaves its ``run-<pid>/``;
+    the next process to make a scratch directory removes it, and leaves the
+    directories of live processes alone."""
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    live = os.getppid()
+    root = Path(scratch_root.root())
+    for pid in (dead.pid, live):
+        (root / f"run-{pid}" / "x").mkdir(parents=True)
+    scratch_root.scratch_dir("sweep")
+    assert not (root / f"run-{dead.pid}").exists()
+    assert (root / f"run-{live}" / "x").is_dir()
+    assert (root / f"run-{os.getpid()}").is_dir()

@@ -1,4 +1,4 @@
-"""session.get_spark defaults that change driver-side cost."""
+"""session.get_spark defaults that change driver-side and Python-worker cost."""
 
 from __future__ import annotations
 
@@ -6,6 +6,8 @@ import json
 import subprocess
 import sys
 from pathlib import Path
+
+import pandas as pd
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -82,3 +84,71 @@ def test_warm_pass_compiles_nothing(spark, sf_dir):
     before = compiles.getCount()
     one_pass()
     assert compiles.getCount() - before == 0
+
+
+def test_workers_import_pyspark_from_its_installed_directory(spark):
+    """The session's Python workers run ``review_engine_spark.worker_daemon``:
+    PySpark comes from a directory, and no ``zipimporter`` is left for each
+    task's ``importlib.invalidate_caches()`` to re-read (16 under Spark's
+    own daemon, about 120–200 ms of CPU per task)."""
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("string")
+    def report(ids: pd.Series) -> pd.Series:
+        import sys
+        import zipimport
+
+        import pyspark
+
+        return pd.Series([json.dumps({
+            "pyspark": pyspark.__file__,
+            "zipimporters": sum(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values()),
+            "jars": [p for p in sys.path if p.endswith(".jar")],
+        })] * len(ids))
+
+    worker = json.loads(spark.range(1).select(report("id")).first()[0])
+    assert (".zip" in worker["pyspark"], worker["zipimporters"], worker["jars"]) == (False, 0, []), worker
+
+
+def _zip(path: Path, member: str, text: str) -> str:
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(member, text)
+    return str(path)
+
+
+def _installed(site: Path, version: str) -> str:
+    for pkg in ("pyspark", "py4j"):
+        (site / pkg).mkdir(parents=True)
+        (site / pkg / "version.py").write_text(version)
+    return str(site)
+
+
+def test_worker_path_drops_archives_only_for_the_same_installed_release(tmp_path):
+    """Spark's jar and archives leave the worker's path only when an
+    installed copy of the same release follows them; a different release,
+    or none at all, leaves the path exactly as Spark set it."""
+    from review_engine_spark.worker_daemon import pruned_path
+
+    release = "__version__: str = '4.1.2'\n"
+    spark_path = [
+        str(tmp_path / "cwd"),
+        _zip(tmp_path / "pyspark.zip", "pyspark/version.py", release),
+        _zip(tmp_path / "py4j-0.10.9.9-src.zip", "py4j/version.py", release),
+        _zip(tmp_path / "spark-core_2.13-4.1.2.jar", "org/Main.class", ""),
+    ]
+    same = _installed(tmp_path / "same" / "site-packages", release)
+    assert pruned_path([*spark_path, same]) == [str(tmp_path / "cwd"), same]
+    other = _installed(tmp_path / "other" / "site-packages", "__version__: str = '4.0.0'\n")
+    assert pruned_path([*spark_path, other]) == [*spark_path, other]
+    assert pruned_path(spark_path) == spark_path
+
+
+def test_worker_daemon_imports_no_pyspark_before_pruning():
+    """``python -m review_engine_spark.worker_daemon`` imports the package
+    and the module before it prunes the path, so neither may import
+    PySpark."""
+    probe = "import sys, review_engine_spark.worker_daemon; print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))"
+    out = subprocess.run([sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True, timeout=60, check=True)
+    assert out.stdout.strip() == "[]"
