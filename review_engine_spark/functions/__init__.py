@@ -5,45 +5,3 @@ Everything here is pure expression composition over
 Python on the hot path. Each kernel documents the reference behavior it
 reproduces (file:line) including the None/dirty-data branches.
 """
-
-from review_engine_spark.functions.text import (
-    clean_text,
-    extract_summary,
-    parse_budget,
-    parse_money,
-    token_count,
-    tokenize,
-    unescape_html_entities,
-)
-from review_engine_spark.functions.scoring import (
-    bayesian_rating,
-    blend_score,
-    log_popularity,
-    minmax_normalize,
-    price_fit,
-)
-from review_engine_spark.functions.vector import (
-    cosine_similarity,
-    dot_product,
-    l2_norm,
-    l2_normalize,
-)
-
-__all__ = [
-    "clean_text",
-    "extract_summary",
-    "parse_budget",
-    "parse_money",
-    "token_count",
-    "tokenize",
-    "unescape_html_entities",
-    "bayesian_rating",
-    "blend_score",
-    "log_popularity",
-    "minmax_normalize",
-    "price_fit",
-    "cosine_similarity",
-    "dot_product",
-    "l2_norm",
-    "l2_normalize",
-]

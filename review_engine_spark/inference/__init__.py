@@ -8,27 +8,3 @@ interfaces whose production path is an Arrow-batched
 whose test path is a seeded hash stub — so every pipeline *shape* is
 deterministic and CI-checkable without GPUs (SURVEY §5.2.4).
 """
-
-from review_engine_spark.inference.batch import (
-    embedder_batch_udf,
-    scorer_batch_udf,
-)
-from review_engine_spark.inference.stubs import (
-    StubChat,
-    StubEmbedder,
-    StubScorer,
-    stub_chat_udf,
-    stub_embed_udf,
-    stub_score_udf,
-)
-
-__all__ = [
-    "StubChat",
-    "StubEmbedder",
-    "StubScorer",
-    "embedder_batch_udf",
-    "scorer_batch_udf",
-    "stub_chat_udf",
-    "stub_embed_udf",
-    "stub_score_udf",
-]

@@ -25,7 +25,6 @@ from review_engine_spark.functions.text import ws_tokens
 __all__ = [
     "chunk_documents",
     "quantize_vector",
-    "dequantize_vector",
     "pack_sequences",
     "id_hash_frac",
     "assign_split",
@@ -100,11 +99,6 @@ def quantize_vector(v: Column) -> tuple[Column, Column]:
         ),
     ).otherwise(F.transform(v, lambda x: F.lit(0).cast("long")))
     return codes, F.round(scale, 9)
-
-
-def dequantize_vector(codes: Column, scale: Column) -> Column:
-    """Inverse of ``quantize_vector``: codes[i] * scale."""
-    return F.transform(codes, lambda c: c.cast("double") * scale)
 
 
 def pack_sequences(

@@ -115,7 +115,8 @@ def blocked_connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    block_cols: list[str] | None = None,
+    *,
+    block_cols: list[str],
 ) -> DataFrame:
     """Component labels when the edge graph is *block-decomposed*:
     (node, cluster_id), cluster_id = min member id, same contract as
@@ -140,15 +141,10 @@ def blocked_connected_components(
     import pandas as pd
 
     e = edges.select(
-        *(block_cols or []),
+        *block_cols,
         F.col(src).alias("a").cast("long"),
         F.col(dst).alias("b").cast("long"),
     ).filter(F.col("a") != F.col("b"))
-    if not block_cols:
-        # degenerate single block — still correct, but serial; callers
-        # with no block key should prefer connected_components
-        e = e.withColumn("_blk", F.lit(0))
-        block_cols = ["_blk"]
 
     def _uf(pdf: pd.DataFrame) -> pd.DataFrame:
         parent: dict[int, int] = {}

@@ -537,39 +537,20 @@ def substring_dup_occurrences(
     text_col: str = "text",
     id_col: str = "doc_id",
     width: int = 16,
-    hasher: str = "md5",
 ) -> DataFrame:
     """Shared detect core of the substring-dedup family — the ONE
-    corpus-scaled stage, factored out so detect → scrub (the normal
-    pipeline order) pays the shingle stream and its shuffle once
-    instead of twice (VERDICT r9 item 2): both ``substring_dedup`` and
-    ``substring_dedup_apply`` accept this frame as an optional input.
+    corpus-scaled stage, which both ``substring_dedup`` and
+    ``substring_dedup_apply`` build on.
 
     Returns (id, pos): every NON-canonical occurrence of a
     ``width``-token sliding window (stride 1) — the sparse duplicated
     residue. Canonical = the globally first (doc_id, pos) occurrence of
     each window's exact text.
 
-    ``hasher`` selects the shuffle key:
-
-    - ``"md5"`` — 128-bit key of the space-joined window; collision
-      odds are negligible at any corpus size, and DuckDB computes the
-      identical string, so this form IS the oracle (cross-engine
-      convention of the md5 family).
-    - ``"xxhash64"`` — the 100 TB production path the md5 docstring
-      promised: 8-byte shuffle keys (vs 32-hex-char md5 strings — ~4×
-      less shuffle width on the key column) plus a collision RECHECK.
-      At ~10¹² windows, birthday collisions in 64 bits are expected in
-      the thousands, so candidates cannot be trusted blindly: every
-      rank ≥ 2 occurrence re-joins (with its rank-1 canonical) back to
-      the token stream — a join bounded by the sparse residue, not the
-      corpus — and survives only if the actual ``width``-token windows
-      are equal. The recheck is one-sided by construction: a collision
-      can only DROP a candidate (never cut a non-duplicate); a true
-      duplicate is missed only when its window collides with an
-      earlier DIFFERENT string under the same 64-bit key
-      (~n_distinct/2⁶⁴ per window — vanishing). Equality of outputs on
-      collision-free corpora is pinned in tests/test_curation.py.
+    The shuffle key is the md5 of the space-joined window: a 128-bit
+    key whose collision odds are negligible at any corpus size, and
+    DuckDB computes the identical string, so this form IS the oracle
+    (cross-engine convention of the md5 family).
     """
     base = _substring_base(docs, text_col, id_col)
     # posexplode-of-indices + slice of the MATERIALIZED token array —
@@ -584,37 +565,10 @@ def substring_dup_occurrences(
         F.col(id_col), "toks", F.posexplode(idx).alias("_i", "pos")
     )
     win_str = F.concat_ws(" ", F.slice("toks", F.col("pos"), width))
-    if hasher == "md5":
-        key = F.md5(win_str)
-    elif hasher == "xxhash64":
-        key = F.xxhash64(win_str)
-    else:
-        raise ValueError(f"hasher must be 'md5' or 'xxhash64': {hasher!r}")
-    sh = ex.select(id_col, "pos", key.alias("h"))
+    sh = ex.select(id_col, "pos", F.md5(win_str).alias("h"))
     wh = Window.partitionBy("h").orderBy(id_col, "pos")
     occ = sh.withColumn("rn", F.row_number().over(wh))
-    if hasher == "md5":
-        return occ.filter(F.col("rn") >= 2).select(id_col, "pos")
-    # xxhash64 collision recheck: candidates + their canonicals (sparse
-    # residue) re-fetch their window text via one join back to the
-    # corpus on id — corpus-linear scan, but the shuffled side is the
-    # residue, never the full shingle stream.
-    cand = occ.filter(F.col("rn") >= 2).select(id_col, "pos", "h")
-    canon = occ.filter(F.col("rn") == 1).join(
-        cand.select("h").distinct(), "h", "left_semi"
-    )
-    toks = base.select(id_col, "toks")
-    cand_txt = cand.join(toks, id_col).select(
-        id_col, "pos", "h", win_str.alias("_w")
-    )
-    canon_txt = canon.join(toks, id_col).select(
-        "h", win_str.alias("_w0")
-    )
-    return (
-        cand_txt.join(canon_txt, "h")
-        .filter(F.col("_w") == F.col("_w0"))
-        .select(id_col, "pos")
-    )
+    return occ.filter(F.col("rn") >= 2).select(id_col, "pos")
 
 
 def substring_dedup(
@@ -622,8 +576,6 @@ def substring_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     width: int = 16,
-    hasher: str = "md5",
-    dup: DataFrame | None = None,
 ) -> DataFrame:
     """Substring-level exact dedup signal — the sliding-shingle version
     of the public "Deduplicating Training Data Makes Language Models
@@ -637,9 +589,7 @@ def substring_dedup(
 
     1. every ``width``-token SLIDING window (stride 1) is hashed
        (md5 of the space-joined tokens — the md5 family's
-       cross-engine convention; ``hasher="xxhash64"`` selects the
-       built production path: 8-byte keys + collision recheck, see
-       ``substring_dup_occurrences``);
+       cross-engine convention, see ``substring_dup_occurrences``);
     2. per hash, occurrences rank by (doc_id, pos) — rank 1 is the
        surviving canonical copy, every rank ≥ 2 is a dup occurrence
        (rank ≥ 2 implies global count ≥ 2, so no separate count);
@@ -662,17 +612,12 @@ def substring_dedup(
     equivalent: they detect every duplicated run of ≥ width tokens AND
     cover it token-exactly (the run's L−width+1 interior windows are
     each duplicated, so coverage = the full L tokens — boundary
-    exactness pinned at a 23-token span in tests/test_curation.py);
+    exactness pinned at a 23-token span in tests/test_curation_ops.py);
     the only inexactness class is runs SHORTER than width, which
     survive whole (the resolution floor any shingle scheme has).
-
-    ``dup`` (optional) injects a precomputed
-    ``substring_dup_occurrences`` frame so a detect → scrub pipeline
-    pays the corpus shuffle once; ``hasher`` is forwarded otherwise.
     """
     base = _substring_base(docs, text_col, id_col)
-    if dup is None:
-        dup = substring_dup_occurrences(docs, text_col, id_col, width, hasher)
+    dup = substring_dup_occurrences(docs, text_col, id_col, width)
     wd = Window.partitionBy(id_col).orderBy("pos")
     isl = dup.withColumn(
         "new_run",
@@ -713,8 +658,6 @@ def substring_dedup_apply(
     text_col: str = "text",
     id_col: str = "doc_id",
     width: int = 16,
-    hasher: str = "md5",
-    dup: DataFrame | None = None,
 ) -> DataFrame:
     """The APPLY half of ``substring_dedup`` — actually scrub the
     duplicated intervals: every token covered by a non-canonical
@@ -729,13 +672,10 @@ def substring_dedup_apply(
     stream, then one ordered per-doc reassembly. Same scale shape as
     ``span_dedup``'s reassembly, with sliding-window resolution.
     Stride-1 windows make the cut token-exact for every duplicated run
-    ≥ width tokens (see ``substring_dedup``'s scale note); pass a
-    persisted ``substring_dup_occurrences`` frame as ``dup`` to share
-    the corpus-scaled detect stage with ``substring_dedup``.
+    ≥ width tokens (see ``substring_dedup``'s scale note).
     """
     base = _substring_base(docs, text_col, id_col)
-    if dup is None:
-        dup = substring_dup_occurrences(docs, text_col, id_col, width, hasher)
+    dup = substring_dup_occurrences(docs, text_col, id_col, width)
     cutpos = dup.select(
         id_col,
         F.explode(

@@ -1,14 +1,14 @@
 """Deduplication operators (SURVEY §2.K; BASELINE.json north star).
 
-Four text tiers plus one embedding tier:
+Three text tiers plus one embedding tier (exact dedup is a plain
+groupBy on normalized text, ``q_dedup_exact``):
 
-- exact:        hash-groupBy on a 64-bit digest of normalized text
 - MinHash+LSH:  shingle → minhash signature → banded bucket join
 - SimHash:      per-token hash bit votes → 64-bit signature → hamming
 - n-gram Jaccard: shingle-set intersection/union on candidate pairs
 - embedding:    random-hyperplane signature → banded join → exact cosine
 
-Exact, MinHash and n-gram Jaccard are pure DataFrame expressions. The
+MinHash and n-gram Jaccard are pure DataFrame expressions. The
 SimHash and random-hyperplane signatures are pandas UDFs (numpy per
 Arrow batch); the banding, candidate joins and verification after them
 are DataFrame ops again.
@@ -24,14 +24,13 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from review_engine_spark.functions.text import alnum_tokens
 
 __all__ = [
     "normalize_text",
-    "exact_dedup",
     "shingle_hash_rows",
     "minhash_signatures",
     "md5_minhash_signatures",
@@ -49,19 +48,6 @@ __all__ = [
 def normalize_text(col: Column) -> Column:
     """Dedup normalization: lowercase, collapse whitespace, trim."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Exact dedup keyed on xxhash64(normalized text): the shuffle carries
-    8-byte keys instead of document bodies; survivor = min id (deterministic,
-    unlike dropDuplicates). Output: one row per distinct content with
-    ``n_dups``."""
-    h = F.xxhash64(normalize_text(F.col(text_col)))
-    return (
-        df.select(F.col(id_col), h.alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_dups"))
-    )
 
 
 def shingle_hash_rows(

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column operators (SURVEY §2.A A6, §2.K).
 
 Convention: media payloads are opaque ``binary`` columns plus typed
-metadata (schemas.MEDIA_SCHEMA). The reference fetches image URLs into
+metadata columns (``media_id``, ``url``, ...). The reference fetches image URLs into
 PIL images inline (summarize.py:28-35); at scale fetch/decode are
 Arrow-batched ``mapInPandas`` stages placed AFTER every limit/top-k cut
 (SURVEY §4.3.3 — the reference's own cap, summarize.py:76, becomes
@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -34,7 +33,6 @@ from pyspark.sql.types import (
 __all__ = [
     "attach_media_binary",
     "decode_image_meta",
-    "image_features",
     "sample_video_frames",
     "resize_images",
     "audio_fingerprint",
@@ -92,32 +90,6 @@ def decode_image_meta(df: DataFrame, id_col: str = "media_id", content_col: str 
             )
 
     return df.select(id_col, content_col).mapInPandas(decode, DECODED_META_SCHEMA)
-
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
-
-
-def image_features(df: DataFrame, id_col: str = "media_id", content_col: str = "content", dim: int = 8) -> DataFrame:
-    """Feature-extraction stage shape (stubbed): binary → array<double>.
-    Production: a predict_batch_udf wrapping a vision encoder."""
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                if payload is None:
-                    continue
-                dig = hashlib.md5(bytes(payload)).digest()
-                vec = [dig[i] / 255.0 for i in range(dim)]
-                rows.append((str(mid), vec))
-            yield pd.DataFrame(rows, columns=["media_id", "features"])
-
-    return df.select(id_col, content_col).mapInPandas(featurize, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(

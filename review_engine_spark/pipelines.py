@@ -3,9 +3,10 @@
 A user of the reference system drives three flows: the offline embedding
 build (``python embed.py``), the recommendation query, and the per-product
 Q&A loop (``python semantic.py``). These functions are those flows over
-the reference's own data shapes (schemas.REVIEW_SCHEMA /
-PRODUCT_META_SCHEMA / EMBEDDING_SCHEMA), composed from the same operator
-builders the declared-query roster verifies.
+the reference's own data shapes (reviews as ``schemas.REVIEW_SCHEMA``,
+product metadata keyed by ``parent_asin``, per-product ``embed`` arrays),
+composed from the same operator builders the declared-query roster
+verifies.
 
 Everything stays one lazy DataFrame lineage per flow; the only
 materialization barriers are the ≤``candidates`` collect for MMR (the
@@ -38,7 +39,6 @@ __all__ = [
     "build_product_embeddings",
     "recommend",
     "qa_answer",
-    "curate_corpus",
 ]
 
 
@@ -213,75 +213,3 @@ def qa_answer(
     )
     return rag_answer(scoped, question, k=k)
 
-
-def curate_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span: int = 16,
-    boiler_span: int = 8,
-    boiler_min_docs: int = 2,
-    boiler_max_ratio: float = 0.3,
-    min_quality: float = 0.2,
-    train: float = 0.9,
-    val: float = 0.05,
-) -> DataFrame:
-    """End-to-end pretraining-corpus curation, composed from the
-    oracle-verified operators — the pipeline a corpus team would run
-    before tokenization:
-
-      PII scrub → exact dedup (min-id survivor per content hash)
-      → duplicated-span removal → boilerplate-ratio gate
-      → quality-score gate → deterministic train/val/test split.
-
-    One lazy lineage; the shuffles are the dedup winner elections and
-    the boilerplate doc-frequency join (all keyed on span/content
-    hashes, never payload-wide), everything else is narrow. Returns
-    ``(id, text, n_redactions, n_chunks, n_kept, boiler_ratio,
-    quality, split)`` for the surviving documents. Note the output text
-    is lower-cased: the span stage reassembles from normalized chunks.
-    """
-    from review_engine_spark.operators.chunking import assign_split
-    from review_engine_spark.operators.curation import (
-        boilerplate_flags,
-        span_dedup,
-    )
-    from review_engine_spark.operators.dedup import exact_dedup
-    from review_engine_spark.operators.textstats import quality_score
-    from review_engine_spark.functions.text import scrub_pii
-
-    scrubbed, n_red = scrub_pii(F.col(text_col))
-    base = docs.select(
-        F.col(id_col), scrubbed.alias("text"), n_red.alias("n_redactions")
-    )
-    survivors = exact_dedup(base, "text", id_col).select(id_col)
-    base = base.join(survivors, id_col, "left_semi")
-
-    deduped = (
-        span_dedup(base, "text", id_col, span=span)
-        .filter(F.col("n_kept") > 0)
-        .select(
-            F.col(id_col),
-            F.col("text_dedup").alias("text"),
-            "n_chunks",
-            "n_kept",
-        )
-        .join(base.select(id_col, "n_redactions"), id_col)
-    )
-
-    flags = boilerplate_flags(
-        deduped,
-        "text",
-        id_col,
-        span=boiler_span,
-        min_docs=boiler_min_docs,
-        max_ratio=boiler_max_ratio,
-    )
-    gated = deduped.join(
-        flags.filter(F.col("keep")).select(id_col, "boiler_ratio"), id_col
-    )
-
-    scored = gated.withColumn(
-        "quality", F.round(quality_score(F.col("text")), 6)
-    ).filter(F.col("quality") >= min_quality)
-    return assign_split(scored, id_col, train=train, val=val)

@@ -1145,11 +1145,10 @@ def q_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom PySpark DataSource (synthetic range stream):
     partition-parallel generated rows with an LCG value column.
     """
-    import tempfile
-
     from review_engine_spark.sources.python_datasource import (
         register_synthetic_source,
     )
+    from review_engine_spark.streaming.jobs import _snapshot
 
     register_synthetic_source(spark)
     stream = (
@@ -1159,20 +1158,7 @@ def q_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rows_per_batch", "100")
         .load()
     )
-    name = "python_stream_source_out"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(30)
-    out = spark.table(name)
-    return spark.createDataFrame(out.toPandas(), out.schema)
+    return _snapshot(spark, stream, "append", "python_stream_source_out")
 
 
 # ---------------------------------------------------------------------------

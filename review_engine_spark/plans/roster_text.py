@@ -331,7 +331,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic alternative to dropDuplicates (which keeps an arbitrary
     row). At 100 TB: single hash-shuffle on a 64-bit key — in practice
     group on ``xxhash64(norm)`` so the shuffle carries 8-byte keys, not
-    document bodies (that variant is exact_dedup in operators.dedup).
+    document bodies (``q_incremental_dedup`` keys its join that way).
     """
     docs = read_parquet_table(spark, sf_dir, "documents")
     norm = docs.select("doc_id", F.trim(F.lower(F.col("text"))).alias("norm"))

@@ -159,25 +159,13 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the per-query top-k window, which partitions by query_id — at
     1000 executors that is a k·|queries| shuffle, not a corpus shuffle.
     """
+    from review_engine_spark.operators.similarity import brute_force_topk
+
     emb = read_parquet_table(spark, sf_dir, "embeddings")
-    queries = F.broadcast(
-        emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    pairs = queries.join(emb, F.col("vec_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_similarity(F.col("qv"), F.col("embedding")), 6).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 5)
-    )
+    return brute_force_topk(emb, queries, k=5)
 
 
 @declared(

@@ -27,7 +27,6 @@ __all__ = [
     "read_table",
     "write_partitioned",
     "zorder_key",
-    "zorder_sort",
 ]
 
 
@@ -83,19 +82,3 @@ def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
         z = term if z is None else z + term
     return z.cast("long")
 
-
-def zorder_sort(
-    df: DataFrame, x_col: str, y_col: str, bits: int = 16
-) -> DataFrame:
-    """Range-partition + sort by the Morton key — write this out and
-    parquet row-group stats become a 2-D index (each output file covers
-    a small Z-curve segment, i.e. a rectangle in (x, y) space)."""
-    keyed = df.withColumn(
-        "_zkey",
-        zorder_key(
-            F.col(x_col) % F.lit(1 << bits), F.col(y_col) % F.lit(1 << bits), bits
-        ),
-    )
-    return keyed.repartitionByRange("_zkey").sortWithinPartitions("_zkey").drop(
-        "_zkey"
-    )

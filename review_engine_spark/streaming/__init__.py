@@ -1,9 +1,1 @@
 """Structured Streaming surface (SURVEY §2.I)."""
-
-from review_engine_spark.streaming.jobs import (
-    run_tumbling_count_batchlike,
-    sessionize,
-    tumbling_counts,
-)
-
-__all__ = ["tumbling_counts", "run_tumbling_count_batchlike", "sessionize"]

@@ -77,18 +77,6 @@ def test_zorder_key_locality(spark):
             assert max(tile) - min(tile) == 3
 
 
-def test_zorder_sort_clusters_files(spark):
-    from review_engine_spark.sources.bucketing import zorder_sort
-    from pyspark.sql import functions as F
-
-    df = spark.range(1000).select(
-        (F.col("id") * 7919 % 256).alias("a"), (F.col("id") * 104729 % 256).alias("b")
-    )
-    out = zorder_sort(df, "a", "b", bits=8)
-    assert out.columns == ["a", "b"]
-    assert out.count() == 1000
-
-
 def test_corpus_scaled_joins_never_broadcast(spark, sf_dir):
     """SCALING.md rule: joins whose build side is O(corpus) must pin a
     shuffle strategy — a size threshold that admits them at some scale

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import ast
 import re
+import sys
 from collections import Counter
 from pathlib import Path
 
@@ -85,16 +86,39 @@ def _declared(node) -> bool:
     )
 
 
+def _is_test_file(rel: Path) -> bool:
+    return "tests" in rel.parts or rel.name.startswith(("test_", "conftest"))
+
+
+def _without_all_lists(src: str) -> str:
+    """``src`` with each module-level ``__all__ = [...]`` blanked out."""
+    lines = src.splitlines()
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            for i in range(node.lineno - 1, node.end_lineno):
+                lines[i] = ""
+    return "\n".join(lines)
+
+
+# Kept with no caller in the program: the J3 swap-in point for a real
+# reranker model (its stub twin is what the roster runs).
+_KEPT_UNREFERENCED = {"scorer_batch_udf"}
+
+
 def test_no_unreferenced_module_names():
     """Every module-level function, class or assigned name in the
-    package must be mentioned somewhere in the repo's ``.py`` files
-    beyond its own definition (an ``__all__`` entry counts). Roster
-    queries are exempt: ``@declared`` registers them by name."""
+    package must be mentioned somewhere in the repo's non-test ``.py``
+    files beyond its own definition. Mentions inside an ``__all__`` list
+    or a test do not count: a name only tests reach is dead surface.
+    Roster queries are exempt: ``@declared`` registers them by name."""
     repo = PLANS.parent.parent
     words = Counter()
     for p in repo.rglob("*.py"):
-        if not any(part.startswith(".") for part in p.relative_to(repo).parts):
-            words.update(re.findall(r"[A-Za-z_]\w*", p.read_text()))
+        rel = p.relative_to(repo)
+        if not any(part.startswith(".") for part in rel.parts) and not _is_test_file(rel):
+            words.update(re.findall(r"[A-Za-z_]\w*", _without_all_lists(p.read_text())))
     unused = []
     for p in sorted(PLANS.parent.rglob("*.py")):
         for node in ast.parse(p.read_text()).body:
@@ -109,6 +133,17 @@ def test_no_unreferenced_module_names():
             unused += [
                 f"{p.relative_to(repo)}:{node.lineno} {n}"
                 for n in names
-                if not n.startswith("__") and words[n] <= 1
+                if not n.startswith("__") and n not in _KEPT_UNREFERENCED and words[n] <= 1
             ]
     assert not unused, unused
+
+
+def test_queries_md_matches_its_generator():
+    """QUERIES.md is generated: the committed file must equal what
+    ``tools/catalog.py`` renders from the roster (regenerate with
+    ``python tools/catalog.py``)."""
+    repo = PLANS.parent.parent
+    sys.path.insert(0, str(repo))
+    from tools.catalog import render
+
+    assert (repo / "QUERIES.md").read_text() == render()

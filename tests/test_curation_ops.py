@@ -581,78 +581,6 @@ def test_substring_scrub_token_exact_at_non_multiple_width(spark):
     assert app[2] == (18, f"c0 {span15} c1 c2")
 
 
-def test_substring_xxhash64_path_matches_md5(spark):
-    """The xxhash64 production path (8-byte shuffle keys + collision
-    recheck) must emit EXACTLY the md5 oracle form's rows on a
-    collision-free corpus — detect and scrub both."""
-    from review_engine_spark.operators.curation import (
-        substring_dedup,
-        substring_dedup_apply,
-    )
-
-    run = "w1 w2 w3 w4 w5 w6"
-    docs = spark.createDataFrame(
-        [
-            (0, f"{run} tail0 tail1"),
-            (1, f"head0 head1 {run}"),
-            (2, "w1 w2 w3 other tokens here"),
-            (3, f"{run} mid {run}"),
-        ],
-        "doc_id long, text string",
-    )
-    for fn in (substring_dedup, substring_dedup_apply):
-        a = sorted(map(tuple, fn(docs, width=4, hasher="md5").collect()))
-        b = sorted(map(tuple, fn(docs, width=4, hasher="xxhash64").collect()))
-        assert a == b, fn.__name__
-
-
-def test_substring_detect_scrub_share_one_dup_frame(spark, plan_nodes):
-    """Pipeline sharing (VERDICT r9 item 2): a detect -> scrub pipeline
-    that passes one persisted substring_dup_occurrences frame into both
-    halves must (a) produce the self-contained results, and (b) read the
-    residue from the cache — the executed TREE (cached lineage excluded)
-    shows InMemoryTableScan and no shingle-hash rank Window re-run."""
-    from review_engine_spark.operators.curation import (
-        substring_dedup,
-        substring_dedup_apply,
-        substring_dup_occurrences,
-    )
-
-    run = "w1 w2 w3 w4 w5 w6"
-    docs = spark.createDataFrame(
-        [
-            (0, f"{run} tail0 tail1"),
-            (1, f"head0 head1 {run}"),
-            (3, f"{run} mid {run}"),
-        ],
-        "doc_id long, text string",
-    )
-    dup = substring_dup_occurrences(docs, width=4).persist()
-    try:
-        dup.count()  # materialize the cache before plan inspection
-        det = substring_dedup(docs, width=4, dup=dup)
-        scr = substring_dedup_apply(docs, width=4, dup=dup)
-        det_self = substring_dedup(docs, width=4)
-        scr_self = substring_dedup_apply(docs, width=4)
-        assert sorted(map(tuple, det.collect())) == sorted(
-            map(tuple, det_self.collect())
-        )
-        assert sorted(map(tuple, scr.collect())) == sorted(
-            map(tuple, scr_self.collect())
-        )
-        # Self-contained forms re-run the rank Window over the shingle
-        # hash; shared forms read the residue from cache, so their OUTER
-        # tree keeps only det's run-merge pair (lag + running sum) and
-        # scr keeps none. The walk stops at the InMemoryTableScan leaf,
-        # so the cached relation's own plan is not counted.
-        for shared, n_win in ((det, 2), (scr, 0)):
-            names = [name for name, _ in plan_nodes(shared)]
-            assert "InMemoryTableScan" in names
-            assert names.count("Window") == n_win, names
-    finally:
-        dup.unpersist()
-
-
 def _py_bpe_train(texts, k):
     """Pure-Python reference BPE trainer (the test_kernels.py oracle
     convention): identical algebra to train_bpe — wc-weighted adjacent

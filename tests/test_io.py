@@ -5,12 +5,16 @@ from __future__ import annotations
 
 import itertools
 import re
+import sys
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from review_engine_spark.schemas import FIXTURE_SCHEMAS
-from review_engine_spark.sources import io
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from review_engine_spark.sources import io  # noqa: E402
+from tools.check import TABLES  # noqa: E402
 
 _groups = itertools.count()
 
@@ -32,7 +36,7 @@ def plan_text(df) -> str:
 
 
 def test_memo_read_matches_fresh_inference(spark, sf_dir):
-    for name in FIXTURE_SCHEMAS:
+    for name in TABLES:
         io._schema_memo.clear()
         fresh, fresh_jobs = jobs_in(spark, lambda: io.read_parquet_table(spark, sf_dir, name))
         memo, memo_jobs = jobs_in(spark, lambda: io.read_parquet_table(spark, sf_dir, name))

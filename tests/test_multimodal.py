@@ -14,7 +14,6 @@ from review_engine_spark.operators.multimodal import (
     attach_media_binary,
     audio_fingerprint,
     decode_image_meta,
-    image_features,
     resize_images,
     sample_video_frames,
 )
@@ -84,13 +83,6 @@ def test_audio_fingerprint_windows_payload(spark):
     assert {m: r["fingerprint"] for m, r in out.items()} == {
         m: r["fingerprint"] for m, r in again.items()
     }
-
-
-def test_image_features_fixed_dim(spark):
-    out = image_features(_media(spark), dim=8).collect()
-    assert len(out) == 5
-    assert all(len(r["features"]) == 8 for r in out)
-    assert all(0.0 <= x <= 1.0 for r in out for x in r["features"])
 
 
 def test_observed_metrics_on_pipeline(spark):

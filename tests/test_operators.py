@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from review_engine_spark.operators.dedup import (
-    exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_dups,
@@ -151,13 +150,6 @@ def test_mmr_running_max_matches_quadratic_loop():
         want = _mmr_picks_quadratic(ordered, id2score, id2vec, k, lam)
         assert _mmr_picks(ordered, id2score, id2vec, k, lam) == want, trial
         assert len(want) == min(k, n)
-
-
-def test_exact_dedup_survivor_is_min_id(spark):
-    rows = [(10, "Same  Text"), (3, "same text"), (5, "other")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r["n_dups"] for r in exact_dedup(df, "text", "doc_id").collect()}
-    assert out == {3: 2, 5: 1}
 
 
 def test_minhash_finds_near_duplicates(spark):

@@ -140,38 +140,3 @@ def test_qa_answer_scopes_to_product(spark):
     assert len(out) == 1
     # stub answer is ASSISTANT-labeled; extraction must strip the label/tail
     assert out[0]["answer"].startswith("stub answer")
-
-
-def test_curate_corpus_stage_invariants(spark):
-    """The curation pipeline must: drop exact dups (keep min id), strip
-    PII, remove cross-doc duplicated spans, drop all-boilerplate docs,
-    and assign a deterministic split to every survivor."""
-    from review_engine_spark.pipelines import curate_corpus
-
-    common = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [
-        (0, "mail me at a@b.com please and call +12 345 678 901 soon "
-            "unique words one two three four five six seven eight nine"),
-        (1, common + " iota kappa unique content here for doc one only"),
-        (2, common + " iota kappa unique content here for doc one only"),  # exact dup of 1
-        (3, common),                     # nothing but the shared span run
-        (4, "completely different text with many fresh tokens nobody shares "
-            "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r
-        for r in curate_corpus(
-            df, span=4, boiler_span=4, boiler_min_docs=2,
-            boiler_max_ratio=0.6, min_quality=0.0,
-        ).collect()
-    }
-    assert 2 not in out                      # exact dup dropped, min id kept
-    assert 1 in out
-    assert 3 not in out                      # pure shared-span doc gated out
-    assert 0 in out and 4 in out
-    # span stage lowercases (chunk normalization), so markers too
-    assert "[email]" in out[0]["text"] and "[phone]" in out[0]["text"]
-    assert out[0]["n_redactions"] == 2
-    assert all(r["split"] in {"train", "val", "test"} for r in out.values())
-    assert all(r["n_kept"] >= 1 for r in out.values())

@@ -16,7 +16,8 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
-def main() -> int:
+def render() -> str:
+    """QUERIES.md's text for the roster as declared."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -44,9 +45,13 @@ def main() -> int:
     for name, kind, mod, first in rows:
         first = first.replace("|", "\\|")
         lines.append(f"| `{name}` | {kind} | {mod} | {first} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> int:
     out = REPO / "QUERIES.md"
-    out.write_text("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(rows)} queries, {n_oracle} oracle)")
+    out.write_text(render())
+    print(f"wrote {out}")
     return 0
 
 
