@@ -25,6 +25,11 @@ less with host load than wall time does, so it is the figure to compare
 across runs of one tree; fetch wait and spill say where a slow wall time
 went.
 
+Queries are independent measurements with no cache to clear between
+them: the engine reuses an intermediate only through
+``operators.cluster.iter_checkpoint``, which registers no cached plan a
+later query (or a later repeat) could read.
+
 A full sweep writes ``BENCH_QUERIES.json`` next to this script: the
 summary, each query's record (wall, the four stage metrics and the two
 compile counts) and the failure cause of every query that raised in all
@@ -158,9 +163,6 @@ def main() -> int:
             f"compiles={rec['compiles_cold']}/{rec['compiles_warm']}",
             file=sys.stderr,
         )
-        # queries must be independent measurements: drop any cache one
-        # left behind before the next runs
-        spark.catalog.clearCache()
 
     m = re.search(r"sf([0-9.]+)", args.sf_dir)
     full = summary(records, float(m.group(1).rstrip(".")) if m else None)

@@ -37,14 +37,22 @@ __all__ = [
 
 
 def iter_checkpoint(df: DataFrame) -> DataFrame:
-    """Lineage-truncating checkpoint for iterative loops, stored
-    SERIALIZED with disk spill (MEMORY_AND_DISK). The bare
-    ``localCheckpoint()`` default keeps deserialized Java objects in
-    the storage pool; across rounds of an iterative algorithm those
-    unroll spikes plus superseded-round blocks OOM'd a 24 g heap at the
-    100x stress scale (q_bfs_levels, r6). Serialized blocks are ~4-8x
-    smaller and evict to disk under pressure instead of failing the
-    task."""
+    """The engine's one way to reuse an intermediate: an eager,
+    lineage-truncating checkpoint stored SERIALIZED with disk spill
+    (MEMORY_AND_DISK). Runs one job when called.
+
+    - It registers nothing with the session's CacheManager, so no later
+      query can plan-match it: ``persist``/``cacheTable`` entries live
+      for the session and make one query's timing depend on which query
+      ran before.
+    - The ContextCleaner frees its blocks once the returned frame is
+      unreachable, so no ``unpersist`` has to be paired with it.
+    - Serialized blocks are ~4-8x smaller than the deserialized Java
+      objects a bare ``localCheckpoint()`` or ``persist()`` keeps, and
+      evict to disk under pressure instead of failing the task: across
+      rounds of an iterative algorithm those unroll spikes plus
+      superseded-round blocks OOM'd a 24 g heap at the 100x stress
+      scale (q_bfs_levels, r6)."""
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 

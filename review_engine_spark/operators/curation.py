@@ -35,6 +35,7 @@ from review_engine_spark.functions.vector import (
 )
 from review_engine_spark.functions.text import ws_tokens
 from review_engine_spark.operators.chunking import chunk_documents
+from review_engine_spark.operators.cluster import iter_checkpoint
 from review_engine_spark.operators.kmeans import lcg_bucket
 
 __all__ = [
@@ -212,10 +213,11 @@ def semantic_dedup(
     as NaN and NaN comparisons are False. An empty input returns an
     empty (id, cluster_id, keep) frame.
 
-    The three-way-consumed intermediate is ``localCheckpoint``-ed (not
-    ``persist``-ed): blocks are released by the ContextCleaner when the
-    result frame is garbage-collected, so library callers don't leak a
-    cached relation per call (VERDICT r12 item 7).
+    The three-way-consumed intermediate goes through ``iter_checkpoint``
+    (one eager job when called): its blocks are released by the
+    ContextCleaner when the result frame is garbage-collected, so
+    library callers don't leak a cached relation per call (VERDICT r12
+    item 7).
     """
     cents = (
         emb.filter(F.col(vec_col).isNotNull())
@@ -272,11 +274,8 @@ def semantic_dedup(
     cl = F.when(sims[0][1] == best, F.lit(sims[0][0]))
     for cid, s in sims[1:]:
         cl = cl.when(s == best, F.lit(cid))
-    # consumed 3x (size probe, pair stage, keep join) — NOTES lesson 5.
-    # localCheckpoint, NOT persist: persist registers with the cache
-    # manager for the session's lifetime (a leak for library callers;
-    # ADVICE r12), while checkpoint blocks are dropped by the
-    # ContextCleaner once the returned frame is unreachable.
+    # consumed 3x (size probe, pair stage, keep join) — NOTES lesson 5,
+    # so checkpointed (iter_checkpoint says why not persist).
     # `_nrm` is materialized ONCE per row here so the exact pair stage
     # below pays one fold per pair (the dot) instead of three (dot + two
     # norms) — bit-identical: l2_norm(v) per row is the same IEEE value
@@ -289,7 +288,7 @@ def semantic_dedup(
         F.col(vec_col),
         cl.cast("int").alias("cluster_id"),
         l2_norm(F.col(vec_col)).alias("_nrm"),
-    ).localCheckpoint(eager=True)
+    ).transform(iter_checkpoint)
     # max cluster size decides the pair-stage plan: a bounded driver
     # read of k rows (the centroid collect's sibling)
     size_rows = (

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from review_engine_spark.functions.text import alnum_tokens
+from review_engine_spark.operators.cluster import iter_checkpoint
 
 __all__ = [
     "normalize_text",
@@ -167,18 +168,16 @@ def minhash_lsh_pairs(
     (signature agreement fraction). With b=16, r=4 the S-curve threshold is
     (1/b)^(1/r) ≈ 0.5. Buckets larger than ``max_bucket_size`` are dropped
     (boilerplate guard): a single 10^5-doc bucket would reintroduce O(N²).
-    """
-    from pyspark import StorageLevel
 
+    Runs one eager job when called: the signature checkpoint.
+    """
     rows_per_band = num_hashes // bands
     # The signature table is consumed three times (banding + both sides of
-    # the candidate verification join); persist materializes the shingle →
-    # minhash pipeline ONCE instead of re-running it per consumer. Size is
-    # bounded: num_hashes longs + key per document (~0.5 KB/doc), spilling
-    # to disk if the corpus is huge.
-    sig = minhash_signatures(df, text_col, id_col, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # the candidate verification join); the checkpoint materializes the
+    # shingle → minhash pipeline ONCE instead of re-running it per
+    # consumer. Size is bounded: num_hashes longs + key per document
+    # (~0.5 KB/doc), spilling to disk if the corpus is huge.
+    sig = iter_checkpoint(minhash_signatures(df, text_col, id_col, num_hashes))
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     # banded rows carry (id, band, band_hash) ONLY — 24 bytes each. The
     # signature is projected away before any shuffle (the explode and the
@@ -298,13 +297,10 @@ def simhash_near_dups(
     ``max_hamming + 1`` blocks (pigeonhole: hamming ≤ h ⇒ at least one of
     h+1 blocks equal), join on (block_idx, block), verify exact hamming.
     Candidate shuffle is 8-byte keys. Signatures come from the
-    Arrow-batched path and are persisted: both sides of the banding
-    self-join consume them, and the table is two longs per doc."""
-    from pyspark import StorageLevel
-
-    sigs = simhash_signatures_batch(df, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    Arrow-batched path and are checkpointed (one eager job when called):
+    both sides of the banding self-join consume them, and the table is
+    two longs per doc."""
+    sigs = iter_checkpoint(simhash_signatures_batch(df, text_col, id_col))
     n_blocks = min(max_hamming + 1, 32)
     base, rem = divmod(64, n_blocks)
     # shift amounts must be Python ints — build the banded rows as an
@@ -421,13 +417,11 @@ def embedding_near_dups(
     joined back by id for verification, so the wide rows move just for
     the (few) candidates — the all-pairs O(N²) crossJoin of
     q_near_dup_embedding never happens. Signatures come from the
-    Arrow-batched matmul path and are persisted because both sides of
-    the banding self-join consume them (id + one long per row — tiny,
-    spills if not).
+    Arrow-batched matmul path and are checkpointed (one eager job when
+    called) because both sides of the banding self-join consume them
+    (id + one long per row — tiny, spills if not).
     """
     import math
-
-    from pyspark import StorageLevel
 
     from review_engine_spark.functions.vector import cosine_similarity
 
@@ -435,9 +429,7 @@ def embedding_near_dups(
         n = df.count()  # 1-row agg — bounded driver work at any corpus
         width = max(4, math.ceil(math.log2(max(2.0, n / target_bucket))))
         num_bits = n_blocks * width
-    sigs = rh_signatures_batch(df, vec_col, id_col, num_bits).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sigs = iter_checkpoint(rh_signatures_batch(df, vec_col, id_col, num_bits))
     base, rem = divmod(num_bits, n_blocks)
     widths = [base + 1 if b < rem else base for b in range(n_blocks)]
     offsets = [sum(widths[:b]) for b in range(n_blocks)]

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from review_engine_spark.operators.chunking import _lcg
+from review_engine_spark.operators.cluster import iter_checkpoint
 
 __all__ = ["kmeans_fit", "lcg_bucket"]
 
@@ -61,15 +62,17 @@ def kmeans_fit(
     ``cluster_id`` is the 0..k-1 seed-bucket index of the final
     assignment; ``sq_dist`` the (rounded) squared euclidean distance to
     that centroid. Ties in the argmin break to the lower cluster id.
+    Runs one eager job when called (the corpus checkpoint) before the
+    seed collect and the iters driver rounds.
     """
-    from pyspark import StorageLevel
-
     # every round's assignment job re-reads the corpus otherwise:
     # iters+1 assignment passes + the seed scan all share this table
-    doubled = emb.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    doubled = iter_checkpoint(
+        emb.select(
+            F.col(id_col),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        )
+    )
     seeds = (
         doubled.withColumn("_b", lcg_bucket(id_col, k))
         .withColumn(

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from review_engine_spark.operators.cluster import iter_checkpoint
+
 __all__ = [
     "implicit_ratings",
     "cooccurrence_topk",
@@ -108,9 +110,9 @@ def cooccurrence_topk(
     baskets (≤7 lines/order), which is why the roster oracles mirror it
     as a ``list_slice`` that never binds at test SF. Pass ``None`` to
     disable.
-    """
-    from pyspark import StorageLevel
 
+    Runs one eager job when called: the basket checkpoint.
+    """
     baskets = (
         lineitem.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
@@ -118,11 +120,11 @@ def cooccurrence_topk(
     )
     if max_basket is not None:
         baskets = baskets.select(F.slice("items", 1, max_basket).alias("items"))
-    # The basket table feeds four consumers (both union branches of the
-    # pair generation + both sides' item counts); without persist the
-    # fact-table scan + collect_set shuffle runs 4×. Size is one array
-    # of item ids per order — far smaller than the fact table.
-    baskets = baskets.persist(StorageLevel.MEMORY_AND_DISK)
+    # The basket table feeds the pair generation and the item counts;
+    # the checkpoint runs the fact-table scan + collect_set shuffle
+    # once for both. Size is one array of item ids per order — far
+    # smaller than the fact table.
+    baskets = iter_checkpoint(baskets)
     item_cnt = baskets.select(F.explode("items").alias("l_partkey")).groupBy(
         "l_partkey"
     ).agg(F.count("*").alias("n"))

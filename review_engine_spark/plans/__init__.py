@@ -74,6 +74,8 @@ _TIER1_FIXED: list[str] = [
     "q_ndcg_eval",
     "q_recsys_eval",
     "q_mmr",
+    "q_cooccur_topk",
+    "q_kmeans",
 ]
 
 _REPO = Path(__file__).resolve().parents[2]

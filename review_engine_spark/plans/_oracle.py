@@ -269,3 +269,16 @@ def sql_minhash_sigs(n_seeds: int) -> str:
         f"list_min(list_transform(sh, x -> md5('{s}|' || x))) AS sig{s}"
         for s in range(n_seeds)
     )
+
+
+# --- synthetic Python DataSource (sources.python_datasource) ---------------
+
+#: The LCG rows the synthetic source generates: q_python_datasource reads
+#: them as a batch, q_python_stream_source drains them as a stream.
+SYNTHETIC_SOURCE_ORACLE = """
+    SELECT g AS row_id,
+           CAST(g // 250 AS INT) AS part,
+           round((((g % 2147483648) * 1103515245 + 12345) % 2147483648)
+                 / 2147483648.0, 6) AS val
+    FROM (SELECT unnest(generate_series(0, 999)) AS g)
+    """

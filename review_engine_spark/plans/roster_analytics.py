@@ -44,8 +44,7 @@ from review_engine_spark.sources.io import read_parquet_table
 # sequence; init = first observation (the standard pandas `adjust=False`
 # convention).
 # ---------------------------------------------------------------------------
-@declared(
-    oracle="""
+_EWMA_ORACLE = """
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_events,
            list_reduce(list(value ORDER BY ts, event_id),
@@ -53,7 +52,9 @@ from review_engine_spark.sources.io import read_parquet_table
     FROM events
     GROUP BY user_id
     """
-)
+
+
+@declared(oracle=_EWMA_ORACLE)
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially weighted moving average (alpha = 0.1) as a
     bit-identical ordered list fold.
@@ -143,8 +144,7 @@ def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ((s2 - s1*mean)/(n-1)) so both engines derive z from identical doubles.
 # One shuffle on user_id; the two window sums share a single WindowExec.
 # ---------------------------------------------------------------------------
-@declared(
-    oracle="""
+_ANOMALY_ZSCORE_ORACLE = """
     WITH cents AS (
         SELECT event_id, user_id, ts,
                CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
@@ -177,7 +177,9 @@ def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, user_id, round(z, 3) AS zscore
     FROM z WHERE abs(z) > 2.5
     """
-)
+
+
+@declared(oracle=_ANOMALY_ZSCORE_ORACLE)
 def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomalies: each event scored against its user's 20
     preceding integer-cent values (leakage-free frame).
@@ -436,16 +438,7 @@ def q_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Update-mode emits provisional rows per batch; the widest (max
 # n_events) row per user is final.
 # ---------------------------------------------------------------------------
-@declared(
-    oracle="""
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           list_reduce(list(value ORDER BY ts, event_id),
-                       (acc, x) -> 0.1 * x + 0.9 * acc) AS ewma
-    FROM events
-    GROUP BY user_id
-    """
-)
+@declared(oracle=_EWMA_ORACLE)
 def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_ewma: per-user EWMA folded under
     applyInPandasWithState, bit-identical to the batch fold.
@@ -897,41 +890,7 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sequence — tests/test_analytics.py asserts exact set equality), so it
 # carries the SAME trailing-window oracle SQL as q_anomaly_zscore.
 # ---------------------------------------------------------------------------
-@declared(
-    oracle="""
-    WITH cents AS (
-        SELECT event_id, user_id, ts,
-               CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-        FROM events
-    ),
-    w AS (
-        SELECT event_id, user_id, c,
-               CAST(sum(c) OVER win AS BIGINT) AS s1,
-               CAST(sum(c * c) OVER win AS BIGINT) AS s2,
-               CAST(count(*) OVER win AS BIGINT) AS n
-        FROM cents
-        WINDOW win AS (
-            PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING
-        )
-    ),
-    z AS (
-        SELECT event_id, user_id,
-               (CAST(c AS DOUBLE) - CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-               / sqrt((CAST(s2 AS DOUBLE)
-                       - CAST(s1 AS DOUBLE)
-                         * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))
-                      / CAST(n - 1 AS DOUBLE)) AS z
-        FROM w
-        WHERE n >= 10
-          AND (CAST(s2 AS DOUBLE)
-               - CAST(s1 AS DOUBLE) * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))
-              > 0.0
-    )
-    SELECT event_id, user_id, round(z, 3) AS zscore
-    FROM z WHERE abs(z) > 2.5
-    """
-)
+@declared(oracle=_ANOMALY_ZSCORE_ORACLE)
 def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_anomaly_zscore: a bounded ring buffer in
     GroupState scores each event against its user's trailing window.

@@ -661,20 +661,19 @@ def train_bpe(docs: DataFrame, k: int = _BPE_ROUNDS) -> list[tuple]:
     toy K. Large-K parity with a pure-Python reference trainer is
     pinned in tests/test_curation_ops.py (the test_kernels convention).
     """
-    from pyspark import StorageLevel
-
     words = (
         docs.select(F.explode(alnum_tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("wc"))
     )
-    # Materialize the vocabulary once (k-core/BFS edge-cache convention):
-    # every round's 1-row argmax collect re-executes its whole lineage,
-    # so without this round r re-ran the corpus explode+groupBy AND the
-    # r-1 chained folds from raw text — K corpus scans for K rounds. The
-    # vocabulary is corpus-bounded (grows sub-linearly), so the cache is
-    # the cheap side of the trade at any scale.
-    words = words.persist(StorageLevel.MEMORY_AND_DISK)
+    # Materialize the vocabulary once (k-core/BFS edge-checkpoint
+    # convention): every round's 1-row argmax collect re-executes its
+    # whole lineage, so without this round r re-ran the corpus
+    # explode+groupBy AND the r-1 chained folds from raw text — K corpus
+    # scans for K rounds. The vocabulary is corpus-bounded (grows
+    # sub-linearly), so the checkpoint is the cheap side of the trade at
+    # any scale.
+    words = iter_checkpoint(words)
     syms = F.transform(
         F.sequence(F.lit(1), F.length("token")),
         lambda i: F.col("token").substr(i, F.lit(1)),
@@ -717,8 +716,7 @@ def train_bpe(docs: DataFrame, k: int = _BPE_ROUNDS) -> list[tuple]:
             # round r re-analyzes and re-runs r-1 chained folds from the
             # raw vocab (O(K²) analysis + fold work — NOTES.md item 4)
             if rank % 8 == 0:
-                cur = cur.localCheckpoint(eager=True)
-    words.unpersist()
+                cur = iter_checkpoint(cur)
     return merges
 
 
@@ -1352,7 +1350,7 @@ def train_unigram(
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("wc"))
         .where(F.length("token") <= _UNI_MAXW)
-    ).persist()
+    ).transform(iter_checkpoint)
     subs = (
         words.select(
             "wc",
@@ -1374,7 +1372,7 @@ def train_unigram(
         )
         .groupBy("piece")
         .agg(F.sum("wc").cast("long").alias("c"))
-    ).persist()
+    ).transform(iter_checkpoint)
     sel = subs.orderBy(F.desc("c"), F.asc("piece")).limit(_UNI_SEED_V)
     sing = subs.where(F.length("piece") == 1)
     vset = (
@@ -1385,7 +1383,6 @@ def train_unigram(
     vocab = [
         (r["piece"], r["c"], r["lp"]) for r in _uni_lp_cols(vset).collect()
     ]
-    subs.unpersist()
     for _t in range(rounds):
         framed = _viterbi_frame(words, vocab)
         m = _uni_lp_map(vocab)
@@ -1399,7 +1396,6 @@ def train_unigram(
             (r["piece"], r["c"], r["lp"])
             for r in _uni_lp_cols(counts).collect()
         ]
-    words.unpersist()
     vocab.sort(key=lambda r: (-r[1], r[0]))
     return vocab[:_UNI_FINAL_V]
 
@@ -1713,11 +1709,9 @@ def _bigram_pairs(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("p.0").alias("a"), F.col("p.1").alias("b"))
 
 
-def train_bigram_stats(
-    docs: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The TRAINING half of the bigram LM: (cab, un, vocab_n) count
-    tables from a reference corpus. Factored from the scoring half so
+def train_bigram_stats(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The TRAINING half of the bigram LM: (cab, un) count tables from a
+    reference corpus. Factored from the scoring half so
     the streaming ingest gate can train ONCE on the standing corpus and
     apply per micro-batch (the CCNet deployment shape: the LM is an
     offline artifact, arrivals are scored against it)."""
@@ -1731,18 +1725,18 @@ def train_bigram_stats(
         .groupBy("a")
         .agg(F.count("*").cast("long").alias("ca"))
     )
-    vocab_n = un.agg(F.count("*").cast("long").alias("v"))
-    return cab, un, vocab_n
+    return cab, un
 
 
 def score_bigrams_against(
-    docs: DataFrame, cab: DataFrame, un: DataFrame, vocab_n: DataFrame
+    docs: DataFrame, cab: DataFrame, un: DataFrame
 ) -> DataFrame:
     """The SCORING half: (doc_id, n_bigrams, bigram_logprob) for ``docs``
     against trained count tables. Unseen bigrams/unigrams contribute
     nothing (inner joins) — on the training corpus itself that is a
     no-op, which keeps this refactor bit-identical to the fused form."""
     pairs = _bigram_pairs(docs)
+    vocab_n = un.agg(F.count("*").cast("long").alias("v"))
     scored = (
         # bigram/unigram tables are corpus-scaled — no forced
         # broadcast; AQE converts when actually small
@@ -2081,8 +2075,7 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@declared(
-    oracle=rf"""
+_GOPHER_ORACLE = rf"""
     WITH t AS (
         SELECT doc_id, {_TOKS} AS toks FROM documents
     ),
@@ -2112,7 +2105,9 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, reason = 'ok' AS keep, reason FROM r
     """
-)
+
+
+@declared(oracle=_GOPHER_ORACLE)
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/MassiveText repetition-free quality rules (Rae et al.
     2021, Table A1 — the public heuristic gate most pretraining
@@ -2265,38 +2260,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@declared(
-    oracle=rf"""
-    WITH t AS (
-        SELECT doc_id, {_TOKS} AS toks FROM documents
-    ),
-    m AS (
-        SELECT doc_id,
-               CAST(len(toks) AS BIGINT) AS n_words,
-               CAST(coalesce(list_sum(list_transform(toks, x -> len(x))), 0)
-                    AS BIGINT) AS n_wchars,
-               CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
-                    AS BIGINT) AS n_alpha,
-               CAST(len(list_filter(
-                   ['the', 'a', 'of', 'to', 'and', 'in'],
-                   s -> list_contains(toks, s))) AS BIGINT) AS n_stops
-        FROM t
-    ),
-    r AS (
-        SELECT doc_id,
-               CASE WHEN n_words IS NULL THEN 'too_few_words'
-                    WHEN n_words < 30 THEN 'too_few_words'
-                    WHEN n_words > 80 THEN 'too_many_words'
-                    WHEN 3 * n_words > n_wchars THEN 'short_words'
-                    WHEN n_wchars > 10 * n_words THEN 'long_words'
-                    WHEN 5 * n_alpha < 4 * n_words THEN 'low_alpha'
-                    WHEN n_stops < 2 THEN 'no_stopwords'
-                    ELSE 'ok' END AS reason
-        FROM m
-    )
-    SELECT doc_id, reason = 'ok' AS keep, reason FROM r
-    """
-)
+@declared(oracle=_GOPHER_ORACLE)
 def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher-rule gate running INSIDE Structured Streaming over the
     finite documents feed (append mode, stateless narrow map) — the
@@ -2410,24 +2374,31 @@ def _ingest_gate_oracle() -> str:
     """
 
 
-def _ingest_gate_inputs(spark: SparkSession, sf_dir: str):
+def _ingest_gate_inputs(spark: SparkSession, sf_dir: str, reuse=lambda df: df):
     """(docs, stats, scored, cut) shared by the batch twin and the
     streaming front door — train the bigram LM on the standing corpus,
     score it, and take the exact 30th-percentile order-statistic
-    cutoff (the q_perplexity_gate convention)."""
+    cutoff (the q_perplexity_gate convention). ``reuse`` wraps the
+    trained count tables and the cutoff: the streaming gate passes
+    ``iter_checkpoint`` so every micro-batch reads them, trained once."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    stats = train_bigram_stats(docs)
+    stats = tuple(map(reuse, train_bigram_stats(docs)))
     scored = score_bigrams_against(docs, *stats)
-    cut = _rank_cutoff(
-        scored.select("doc_id", F.col("bigram_logprob").alias("_lp")),
-        "_lp",
-        3,
-        10,
+    cut = reuse(
+        _rank_cutoff(
+            scored.select("doc_id", F.col("bigram_logprob").alias("_lp")),
+            "_lp",
+            3,
+            10,
+        )
     )
     return docs, stats, scored, cut
 
 
-@declared(oracle=_ingest_gate_oracle())
+_INGEST_GATE_ORACLE = _ingest_gate_oracle()
+
+
+@declared(oracle=_INGEST_GATE_ORACLE)
 def q_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the composed ingest gate: quality + gopher +
     perplexity in one pass with union-of-reasons output. One narrow
@@ -2441,7 +2412,7 @@ def q_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_gate_frame(docs, scored, cut)
 
 
-@declared(oracle=_ingest_gate_oracle())
+@declared(oracle=_INGEST_GATE_ORACLE)
 def q_stream_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed gate running as the STREAMING front door: documents
     arrive through Structured Streaming and each micro-batch is gated by
@@ -2454,17 +2425,10 @@ def q_stream_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_streaming.py."""
     from review_engine_spark.streaming.jobs import run_stream_ingest_gate
 
-    docs, stats, scored, cut = _ingest_gate_inputs(spark, sf_dir)
-    cab, un, vocab_n = stats
-    cab = cab.persist()
-    un = un.persist()
-    cut = cut.persist()  # 1 row; re-read per micro-batch, trained once
-    try:
-        return run_stream_ingest_gate(spark, sf_dir, (cab, un, vocab_n), cut)
-    finally:
-        cab.unpersist()
-        un.unpersist()
-        cut.unpersist()
+    _docs, stats, _scored, cut = _ingest_gate_inputs(
+        spark, sf_dir, iter_checkpoint
+    )
+    return run_stream_ingest_gate(spark, sf_dir, stats, cut)
 
 
 # ---------------------------------------------------------------------------

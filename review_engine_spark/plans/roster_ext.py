@@ -18,6 +18,7 @@ from review_engine_spark.plans import declared
 from review_engine_spark.plans._oracle import (
     ALNUM_TOKS_SQL,
     SHINGLES_SQL,
+    SYNTHETIC_SOURCE_ORACLE,
     sql_minhash_sigs,
 )
 from review_engine_spark.scratch import scratch_dir
@@ -1484,11 +1485,12 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_orc(spark, tmp)
 
 
-@declared(
-    oracle="""
+_STREAM_DEDUP_ORACLE = """
     SELECT DISTINCT user_id, event_type FROM events
     """
-)
+
+
+@declared(oracle=_STREAM_DEDUP_ORACLE)
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest dedup: dropDuplicatesWithinWatermark over the
     finite events source. Oracle-checked: first-arrival-per-key over a
@@ -1944,11 +1946,7 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return part.join(dropped, "p_partkey", "left_anti").select("p_partkey")
 
 
-@declared(
-    oracle="""
-    SELECT DISTINCT user_id, event_type FROM events
-    """
-)
+@declared(oracle=_STREAM_DEDUP_ORACLE)
 def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.I sink path: streaming ingest dedup landed in an exactly-once
     parquet file sink (transaction-logged), read back through the batch
@@ -2173,15 +2171,7 @@ def q_gini_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@declared(
-    oracle="""
-    SELECT g AS row_id,
-           CAST(g // 250 AS INT) AS part,
-           round((((g % 2147483648) * 1103515245 + 12345) % 2147483648)
-                 / 2147483648.0, 6) AS val
-    FROM (SELECT unnest(generate_series(0, 999)) AS g)
-    """
-)
+@declared(oracle=SYNTHETIC_SOURCE_ORACLE)
 def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource (PySpark 4 extension surface): a
     registered ``DataSource`` whose InputPartitions generate rows

@@ -33,7 +33,6 @@ Determinism strategy (per roster_analytics / roster_warehouse):
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -42,6 +41,7 @@ from pyspark.sql import functions as F
 from review_engine_spark.functions.packing import pack_pair, unpack_pair
 from review_engine_spark.operators.cluster import iter_checkpoint
 from review_engine_spark.plans import declared
+from review_engine_spark.plans._oracle import SYNTHETIC_SOURCE_ORACLE
 from review_engine_spark.sources.io import read_parquet_table
 
 _CENTS = "CAST(floor({x} * 100 + 0.5) AS BIGINT)"
@@ -477,18 +477,14 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frontier BFS levels from a seed over the customer-part bipartite
     graph (iterative DataFrame rounds, localCheckpoint per level).
     """
-    edges = _copurchase_edges(spark, sf_dir)
-    from pyspark import StorageLevel
-
-    # Cache the edges ALREADY hash-partitioned by the frontier join key:
-    # all 8 rounds join frontier⋈edges on "u", so the cached partitioning
-    # is reused every round instead of re-exchanging the edge list
-    # (11.0 s -> 6.4 s best / far lower variance at sf0.1; guide §2.4 —
-    # same discipline as q_kcore). Broadcast-frontier was measured too
-    # (7.4 s) and rejected: frontiers grow with the graph, so broadcast
-    # is not the 100 TB shape.
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = edges.repartition(n_shuffle, "u").persist(StorageLevel.MEMORY_AND_DISK)
+    # Checkpoint the edges once: all 8 rounds join frontier⋈edges on
+    # "u", and would otherwise re-run the edge pipeline per round. A
+    # checkpoint taken under AQE keeps no hash partitioning (the adaptive
+    # root reports none), so each round's join still exchanges the edge
+    # list, and pre-partitioning by "u" measured no gain. Broadcast-frontier
+    # was measured (7.4 s vs 6.4 s at sf0.1) and rejected: frontiers
+    # grow with the graph, so broadcast is not the 100 TB shape.
+    edges = iter_checkpoint(_copurchase_edges(spark, sf_dir))
     src = edges.agg(F.min("u").alias("s")).collect()[0]["s"]  # 1 row: bounded
     levels = spark.createDataFrame([(src, 0)], "node long, lvl long")
     for i in range(8):
@@ -513,7 +509,6 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # oracle's depth-8 recursion adds nothing past the fixpoint.
         if levels.where(F.col("lvl") == i + 1).limit(1).count() == 0:
             break
-    edges.unpersist()
     return levels.select(F.col("node").cast("long"), F.col("lvl").cast("long"))
 
 
@@ -937,9 +932,9 @@ def q_bom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the smallest qualifying multiple of 10 is 10*ceil(x_k/10) for the
 # first rank with rank*2 >= n.
 #
-# The probe view is a CACHED 1-column projection (one DOUBLE per order),
-# so the ~16 bisection COUNTs after the first hit memory instead of
-# re-reading parquet. This query exists to exercise the SQL-scripting
+# The probe view is a checkpointed 1-column projection (one DOUBLE per
+# order), so the seed passes and the script's scans read memory instead
+# of re-reading parquet. This query exists to exercise the SQL-scripting
 # surface; the PRODUCTION form of the computation is the oracle's
 # one-pass exact percentile (a single order-statistic scan — see
 # q_spend_deciles / q_percentile_norm for the engine-side idiom).
@@ -964,21 +959,10 @@ def q_bom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-statement SQL-script surface: temp-view pipeline computing a
-    cached percentile probe (spark.sql driven).
+    checkpointed percentile probe (spark.sql driven).
     """
     orders = read_parquet_table(spark, sf_dir, "orders")
-    probe = orders.select("o_totalprice")
-    # View name keyed by sf_dir: replacing ONE shared name with a
-    # different dir's plan made isCached() report false for the new plan
-    # while the old plan's cache entry stayed alive unreferenced. Per-dir
-    # names make isCached() answer for the right plan and bound the cache
-    # at one 1.2 MB double column per distinct fixture dir. The cache
-    # outlives this function on purpose: the first probe materializes it
-    # and every later pass (and bench repeat) is a memory scan.
-    view = "v_script_orders_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    probe.createOrReplaceTempView(view)
-    if not spark.catalog.isCached(view):
-        spark.catalog.cacheTable(view)
+    probe = iter_checkpoint(orders.select("o_totalprice"))
     # Seed pass 1: n, a fallback upper bound, and a tight approximate
     # bracket around the median (rank error <= n/1e5, vs the 0.005*n
     # margin the 0.495/0.505 pair leaves — 500x slack). 1 row: bounded.
@@ -1027,6 +1011,8 @@ def q_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuf = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "1")
+    view = "v_script_orders"
+    probe.createOrReplaceTempView(view)
     try:
         row = spark.sql(f"""
         BEGIN
@@ -1067,6 +1053,7 @@ def q_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
         END
         """).collect()[0]
     finally:
+        spark.catalog.dropTempView(view)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         spark.conf.set("spark.sql.shuffle.partitions", shuf)
     return spark.createDataFrame(
@@ -1132,15 +1119,7 @@ def q_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1000-row LCG stream, the appended result equals the batch read — the
 # same closed-form oracle replays it.
 # ---------------------------------------------------------------------------
-@declared(
-    oracle="""
-    SELECT g AS row_id,
-           CAST(g // 250 AS INT) AS part,
-           round((((g % 2147483648) * 1103515245 + 12345) % 2147483648)
-                 / 2147483648.0, 6) AS val
-    FROM (SELECT unnest(generate_series(0, 999)) AS g)
-    """
-)
+@declared(oracle=SYNTHETIC_SOURCE_ORACLE)
 def q_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom PySpark DataSource (synthetic range stream):
     partition-parallel generated rows with an LCG value column.
@@ -1706,20 +1685,17 @@ def _kcore_oracle(k: int, rounds: int) -> str:
 # R rounds, and a converged peel makes the extra rounds no-ops, so both
 # engines agree in either case. Scale: each round is two keys-only
 # semi-joins + one count per node — no pair explosion; edge table
-# persisted once, alive frontier localCheckpoint'd per round (the BFS
+# checkpointed once, alive frontier checkpointed per round (the BFS
 # iterative-loop doctrine).
 # ---------------------------------------------------------------------------
 @declared(oracle=_kcore_oracle(k=3, rounds=6))
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core of the customer co-purchase graph after a bounded 6-round
     peel: surviving customers with their within-core degree."""
-    # Persist the edge cache ALREADY partitioned by the peel loop's join
-    # key: every round runs a semi-join + groupBy on "u", and caching the
-    # hash partitioning once means the 6 rounds reuse it instead of each
-    # re-exchanging the edge list (7.1 s -> 4.6 s at sf0.1, guide §2.4).
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _copurchase_edges(spark, sf_dir).repartition(n_shuffle, "u").persist()
-    edges.count()
+    # Checkpoint the edges once: every round semi-joins them, and would
+    # otherwise re-run the edge pipeline per round (see q_bfs_levels on
+    # why the checkpoint is not pre-partitioned by "u").
+    edges = iter_checkpoint(_copurchase_edges(spark, sf_dir))
     alive = edges.select(F.col("u").alias("node")).distinct()
     n_alive = alive.count()
     for i in range(6):
@@ -1741,17 +1717,13 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_alive = n_new
     au = alive.select(F.col("node").alias("u"))
     av = alive.select(F.col("node").alias("v"))
-    # materialize the (node-bounded) result before dropping the edge
-    # cache — the caller's action must not re-derive the edge subtree
-    out = iter_checkpoint(
+    return (
         edges.join(au, "u", "left_semi")
         .join(av, "v", "left_semi")
         .groupBy("u")
         .agg(F.count("*").cast("long").alias("core_degree"))
         .select(F.col("u").alias("user_id"), "core_degree")
     )
-    edges.unpersist()
-    return out
 
 
 #: Adamic–Adar discounts in micro units: round(1e6 / ln(deg)) for part

@@ -96,12 +96,13 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@declared(
-    oracle="""
+_GROUP_COLLECT_ORACLE = """
     SELECT lang, array_to_string(list(doc_id ORDER BY doc_id), ',') AS doc_ids
     FROM documents GROUP BY lang
     """
-)
+
+
+@declared(oracle=_GROUP_COLLECT_ORACLE)
 def q_group_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language ordered collect_list of doc ids, joined to one string
     (D1 group-by collect).
@@ -542,12 +543,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@declared(
-    oracle="""
-    SELECT lang, array_to_string(list(doc_id ORDER BY doc_id), ',') AS doc_ids
-    FROM documents GROUP BY lang
-    """
-)
+@declared(oracle=_GROUP_COLLECT_ORACLE)
 def q_salted_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage salted collect_list (engine surface): same result as
     q_group_collect, but no single reducer ever materializes a hot key's
@@ -765,13 +761,14 @@ def q_hop_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@declared(
-    oracle=r"""
+_JSON_EXTRACT_ORACLE = r"""
     SELECT event_id,
            CAST(regexp_extract(props, '"k":\s*(-?\d+)', 1) AS BIGINT) AS k
     FROM events
     """
-)
+
+
+@declared(oracle=_JSON_EXTRACT_ORACLE)
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H25: per-row JSON field extraction (embed.py:58-style parsing).
 
@@ -1644,13 +1641,7 @@ def q_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@declared(
-    oracle=r"""
-    SELECT event_id,
-           CAST(regexp_extract(props, '"k":\s*(-?\d+)', 1) AS BIGINT) AS k
-    FROM events
-    """
-)
+@declared(oracle=_JSON_EXTRACT_ORACLE)
 def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured access through Spark 4's VARIANT type:
     ``parse_json`` once into the binary variant encoding, then typed

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from review_engine_spark.functions.vector import cosine_similarity, dot_product
+from review_engine_spark.operators.cluster import iter_checkpoint
 from review_engine_spark.plans import declared
 from review_engine_spark.plans._oracle import sql_unit_vector
 from review_engine_spark.scratch import artifact_key, load_artifact, save_artifact
@@ -418,7 +419,7 @@ def pca_components(
     emb = read_parquet_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("x")
     )
-    cur = emb.persist()
+    cur = iter_checkpoint(emb)
     d = len(cur.select("x").first()["x"])
     comps: list[list[float]] = []
     for ci in range(k):
@@ -468,11 +469,7 @@ def pca_components(
                     lambda xj, vj: xj - (F.col("c") / F.lit(vv)) * vj,
                 ).alias("x"),
             )
-            nxt = nxt.persist()
-            nxt.count()  # materialize before dropping the parent
-            cur.unpersist()
-            cur = nxt
-    cur.unpersist()
+            cur = iter_checkpoint(nxt)
     save_artifact(key, comps)
     return comps
 

@@ -889,7 +889,7 @@ def run_stream_quality_gate(
 def run_stream_ingest_gate(
     spark: SparkSession,
     sf_dir: str,
-    stats: tuple[DataFrame, DataFrame, DataFrame],
+    stats: tuple[DataFrame, DataFrame],
     cut: DataFrame,
     path_glob: str = "documents.parquet",
     max_files_per_trigger: int | None = None,
@@ -916,7 +916,7 @@ def run_stream_ingest_gate(
         score_bigrams_against,
     )
 
-    cab, un, vocab_n = stats
+    cab, un = stats
     stream = _parquet_stream(spark, sf_dir, path_glob, max_files_per_trigger)
 
     def out_schema():
@@ -927,7 +927,7 @@ def run_stream_ingest_gate(
         # there, not on every call.
         empty = spark.createDataFrame([], stream.schema)
         return ingest_gate_frame(
-            empty, score_bigrams_against(empty, cab, un, vocab_n), cut
+            empty, score_bigrams_against(empty, cab, un), cut
         ).schema
 
     # snapshots are keyed by batch_id (last write wins) because
@@ -939,7 +939,7 @@ def run_stream_ingest_gate(
     def land(batch_df: DataFrame, batch_id: int) -> None:
         gated = ingest_gate_frame(
             batch_df,
-            score_bigrams_against(batch_df, cab, un, vocab_n),
+            score_bigrams_against(batch_df, cab, un),
             cut,
         )
         frames[batch_id] = gated.toPandas()

@@ -79,6 +79,31 @@ def test_local_files_are_placed_by_scratch_only():
     assert not offenders, offenders
 
 
+_REUSE_FORMS = (".persist(", ".cache()", "unpersist", "cacheTable", "CACHE TABLE", "localCheckpoint(")
+
+
+def test_intermediates_are_reused_by_iter_checkpoint_only():
+    """``operators.cluster.iter_checkpoint`` is the one way to reuse an
+    intermediate: it registers nothing with the session's CacheManager,
+    so no later query can plan-match it, and its blocks are freed once
+    the frame is unreachable. A ``persist``/``cacheTable`` entry outlives
+    the query and makes the next query's result timing depend on it."""
+    pkg = PLANS.parent
+    cluster = pkg / "operators" / "cluster.py"
+    (body,) = [
+        range(n.lineno, n.end_lineno + 1)
+        for n in ast.parse(cluster.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "iter_checkpoint"
+    ]
+    offenders = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if any(f in line for f in _REUSE_FORMS) and not (p == cluster and n in body)
+    ]
+    assert not offenders, offenders
+
+
 def _declared(node) -> bool:
     return any(
         getattr(d.func if isinstance(d, ast.Call) else d, "id", None) == "declared"
@@ -147,3 +172,24 @@ def test_queries_md_matches_its_generator():
     from tools.catalog import render
 
     assert (repo / "QUERIES.md").read_text() == render()
+
+
+def test_twin_queries_share_one_oracle():
+    """Queries that replay the same oracle bind it to one module
+    constant (``_SESSIONIZE_ORACLE`` serves q_sessionize and
+    q_sessionize_state), so the twins cannot drift apart. Compared as
+    source text: Python already merges equal plain literals within one
+    module, so an identity check would miss copies."""
+    seen: dict[str, list[str]] = {}
+    for p in sorted(PLANS.glob("*.py")):
+        src = p.read_text()
+        for node in ast.parse(src).body:
+            if not (isinstance(node, ast.FunctionDef) and _declared(node)):
+                continue
+            for d in node.decorator_list:
+                for kw in getattr(d, "keywords", []):
+                    if kw.arg == "oracle" and not isinstance(kw.value, ast.Name):
+                        text = ast.get_source_segment(src, kw.value)
+                        seen.setdefault(text, []).append(f"{p.name}:{node.name}")
+    copies = [names for names in seen.values() if len(names) > 1]
+    assert not copies, copies

@@ -42,6 +42,8 @@ def test_entry_runs(spark):
 def test_query_runs_at_sf0001(spark, sf_dir, name):
     df = entrymod.queries()[name](spark, sf_dir)
     assert df.count() >= 0
+    # no cached plan survives the query: a later query could plan-match it
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # Structural gate for the three known driver-hash killers (NOTES.md; r5's
