@@ -5,7 +5,10 @@ $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1) in the engine's session and
 records the best of ``--repeat`` runs (default 2). A run is
 ``fn(spark, sf)`` plus a write to the noop sink, which evaluates every
 output column; ``count()`` would let Catalyst prune projection-only work,
-so a map-only query would be timed as a bare scan.
+so a map-only query would be timed as a bare scan. The best run's wall
+is split into ``build_s``, the time inside ``fn(spark, sf)`` (Python-side
+DataFrame construction, including the driver rounds of iterative queries
+and any job they submit), and ``exec_s``, the noop write.
 
 The first run compiles the query's generated classes with Janino, and the
 JIT then compiles their bytecode. A later run is the steady-state cost
@@ -31,10 +34,10 @@ them: the engine reuses an intermediate only through
 later query (or a later repeat) could read.
 
 A full sweep writes ``BENCH_QUERIES.json`` next to this script: the
-summary, each query's record (wall, the four stage metrics and the two
-compile counts) and the failure cause of every query that raised in all
-repeats. Subset runs write no sidecar. Every query gets a ``# timing``
-line on stderr.
+summary, each query's record (wall and its build/execute split, the four
+stage metrics and the two compile counts) and the failure cause of every
+query that raised in all repeats. Subset runs write no sidecar. Every
+query gets a ``# timing`` line on stderr.
 
 The FINAL stdout line is one compact JSON object with the keys
 ``metric, value, unit, queries, sf, n_queries, sec_per_query, n_failed,
@@ -66,13 +69,23 @@ def failure_text(exc: BaseException) -> str:
 
 
 def query_record(
-    walls: list[float], errors: list[BaseException], totals: dict[str, float], compiles: list[int]
+    walls: list[float],
+    builds: list[float],
+    errors: list[BaseException],
+    totals: dict[str, float],
+    compiles: list[int],
 ) -> dict:
-    """One query's record: best wall, its jobs' stage metrics per run
-    (``totals`` covers all runs), the classes compiled in the first and
-    the last run (``None`` for a single run), and the failure cause when
-    every run raised."""
-    rec = {"wall_s": round(min(walls), 3)}
+    """One query's record: best wall, split into the best run's build
+    (``builds``: the time inside ``fn(spark, sf)``) and execute (the noop
+    write), its jobs' stage metrics per run (``totals`` covers all runs),
+    the classes compiled in the first and the last run (``None`` for a
+    single run), and the failure cause when every run raised."""
+    best = walls.index(min(walls))
+    rec = {
+        "wall_s": round(walls[best], 3),
+        "build_s": round(builds[best], 3),
+        "exec_s": round(walls[best] - builds[best], 3),
+    }
     rec.update({k: round(totals.get(k, 0.0) / len(walls), 3) for k in EXEC_KEYS})
     rec.update(compiles_cold=compiles[0], compiles_warm=compiles[-1] if len(compiles) > 1 else None)
     if errors and len(errors) == len(walls):
@@ -139,25 +152,32 @@ def main() -> int:
     for name, fn in qs.items():
         sc.setJobGroup(name, name)
         walls: list[float] = []
+        builds: list[float] = []
         errors: list[BaseException] = []
         compiles: list[int] = []
         start = time.time()
         for _ in range(args.repeat):
             c0 = compilations.getCount()
             t0 = time.perf_counter()
+            built = None
             try:
-                fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+                df = fn(spark, args.sf_dir)
+                built = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
             except Exception as e:  # noqa: BLE001 - every failure is recorded
                 errors.append(e)
                 print(f"# {name} FAILED: {failure_text(e)}", file=sys.stderr)
-            walls.append(time.perf_counter() - t0)
+            end = time.perf_counter()
+            walls.append(end - t0)
+            # a run that raised while building spent all of its wall there
+            builds.append((built or end) - t0)
             compiles.append(compilations.getCount() - c0)
         end = time.time()
         # fold now, not at the end: the status store keeps only the last
         # 1,000 jobs. Streaming batches run under their own job groups and
         # are attributed by submission time.
         totals = per_op_totals(status.wait_idle(), status.stages(), [], [(name, start, end)])[name]
-        records[name] = rec = query_record(walls, errors, totals, compiles)
+        records[name] = rec = query_record(walls, builds, errors, totals, compiles)
         print(
             f"# timing {name} {rec['wall_s']} task_cpu_s={rec['exec.task_cpu_s']} "
             f"compiles={rec['compiles_cold']}/{rec['compiles_warm']}",

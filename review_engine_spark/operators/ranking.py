@@ -11,12 +11,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from review_engine_spark.functions.scoring import MMR_LAMBDA
 
-__all__ = ["top_k_by", "mmr_diversify", "mmr_diversify_grouped", "priced_first"]
+__all__ = ["top_k_by", "mmr_diversify", "mmr_diversify_grouped"]
 
 
 def top_k_by(df: DataFrame, score_col: str, id_col: str, k: int) -> DataFrame:
@@ -24,12 +24,6 @@ def top_k_by(df: DataFrame, score_col: str, id_col: str, k: int) -> DataFrame:
     TakeOrderedAndProject: per-partition bounded heaps, k-row driver
     merge, never a full sort shuffle. Ties broken by id for determinism."""
     return df.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
-
-
-def priced_first(df: DataFrame, price_col: str, order_col: str) -> DataFrame:
-    """F2: stable two-tier ordering — priced rows first, unpriced
-    appended, each tier keeping the given order (rank.py:327-337)."""
-    return df.orderBy(F.col(price_col).isNull().asc(), F.col(order_col).asc())
 
 
 def _mmr_picks(ordered: list, id2score: dict, id2vec: dict, k: int, mmr_lambda: float) -> list:
@@ -70,7 +64,6 @@ def _mmr_picks(ordered: list, id2score: dict, id2vec: dict, k: int, mmr_lambda: 
 
 
 def mmr_diversify(
-    spark: SparkSession,
     candidates: DataFrame,
     id_col: str,
     score_col: str,
@@ -97,23 +90,22 @@ def mmr_diversify(
     candidates of dimension ``d`` cost O(k·n·d) driver work, where
     recomputing the max over all picks on every pick costs O(k²·n·d).
 
-    Returns one row per pick, in pick order: ``mmr_rank`` (long, from 1),
-    ``id_col``, ``score_col`` (double, rounded to 6 dp), then every other
-    column of ``candidates`` except ``vec_col``, each with its own type.
-    Callers read display columns from here rather than joining back to
-    ``candidates``, which would re-run the candidates' whole lineage.
-
-    The candidates are collected once, as Arrow, and the result is built
-    from a ``pyarrow.Table``, which plans as a ``LocalTableScan``. A
-    Python-list ``createDataFrame`` plans as a Python RDD scan that forks
-    Python workers on every action that reads it, and the pandas path
-    turns a null double into NaN when Arrow is off (so a null price would
-    sort as a price).
+    Returns the picks as a ``pyarrow.Table``, one row per pick, in pick
+    order: ``mmr_rank`` (long, from 1), ``id_col``, ``score_col`` (double,
+    rounded to 6 dp), then every other column of ``candidates`` except
+    ``vec_col``. Callers read display columns from here rather than
+    joining back to ``candidates``, which would re-run the candidates'
+    whole lineage, and can finish a small ranking on the table with no
+    Spark job. ``spark.createDataFrame(picks)`` makes it a frame that
+    plans as a ``LocalTableScan``, with each column's Spark type and
+    nullability (Arrow fields carry both). A Python-list
+    ``createDataFrame`` would plan as a Python RDD scan that forks Python
+    workers on every action that reads it, and the pandas path turns a
+    null double into NaN when Arrow is off (so a null price would sort as
+    a price).
     """
     import pyarrow as pa
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    types = candidates.schema
     rest = [c for c in candidates.columns if c not in (id_col, score_col, vec_col)]
     table = candidates.select(id_col, score_col, vec_col, *rest).toArrow()
 
@@ -136,7 +128,7 @@ def mmr_diversify(
     ordered = sorted(id2score, key=lambda cid: (-id2score[cid], cid))
     selected = _mmr_picks(ordered, id2score, id2vec, k, mmr_lambda)
 
-    out = (
+    return (
         table.drop_columns([vec_col])
         .take(pa.array([row_of[cid] for cid in selected], pa.int64()))
         .set_column(
@@ -146,15 +138,6 @@ def mmr_diversify(
         )
         .add_column(0, "mmr_rank", pa.array(range(1, len(selected) + 1), pa.int64()))
     )
-    schema = StructType(
-        [
-            StructField("mmr_rank", LongType()),
-            types[id_col],
-            StructField(score_col, DoubleType()),
-            *(types[c] for c in rest),
-        ]
-    )
-    return spark.createDataFrame(out, schema)
 
 
 def mmr_diversify_grouped(

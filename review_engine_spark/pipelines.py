@@ -33,7 +33,7 @@ from review_engine_spark.functions.scoring import (
 )
 from review_engine_spark.functions.text import clean_text, parse_budget, token_count
 from review_engine_spark.functions.vector import cosine_similarity, vector_literal
-from review_engine_spark.operators.ranking import mmr_diversify, priced_first, top_k_by
+from review_engine_spark.operators.ranking import mmr_diversify, top_k_by
 
 __all__ = [
     "build_product_embeddings",
@@ -99,14 +99,17 @@ def recommend(
     rating, log-popularity, price fit → weighted blend → MMR
     diversification (driver-side over the cut, collected once with its
     display columns) → priced-first ordering → top-``display``, ranked
-    on the local MMR result.
+    on the local MMR picks with pyarrow.
 
     The candidate set is evaluated once per call: the MMR collect is the
-    only action that runs the scan, cut, join and rerank UDF, and the
-    returned frame reads only the local MMR result.
+    only action that runs the scan, cut, join and rerank UDF. The returned
+    frame is a ``LocalTableScan`` of the ranked picks, so collecting it
+    submits no Spark job.
 
     Returns (rank, parent_asin, title, price, score, price_missing).
     """
+    import pyarrow as pa
+
     qv = vector_literal(query_vec)
     scored = embeddings.select(
         "parent_asin",
@@ -179,18 +182,19 @@ def recommend(
         ).alias("score"),
     )
 
-    diversified = mmr_diversify(
-        spark, blended, "parent_asin", "score", "embed", k=k
-    )
-    ordered = priced_first(diversified, "price", "mmr_rank").limit(display)
-    w = Window.orderBy(F.col("price_missing").asc(), F.col("mmr_rank").asc())
-    return ordered.select(
-        F.row_number().over(w).cast("long").alias("rank"),
-        "parent_asin",
-        "title",
-        "price",
-        "score",
-        "price_missing",
+    picks = mmr_diversify(blended, "parent_asin", "score", "embed", k=k)
+    # rank.py:327-337: priced picks first, unpriced appended, each tier in
+    # pick order; the ≤k local picks are sorted and numbered here, since a
+    # Sort or Window over them would cost a Spark job
+    shown = picks.sort_by(
+        [("price_missing", "ascending"), ("mmr_rank", "ascending")]
+    ).slice(0, display)
+    return spark.createDataFrame(
+        shown.select(["parent_asin", "title", "price", "score", "price_missing"]).add_column(
+            0,
+            pa.field("rank", pa.int64(), nullable=False),
+            pa.array(range(1, shown.num_rows + 1), pa.int64()),
+        )
     )
 
 

@@ -321,13 +321,14 @@ def q_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("relevance"), F.asc("vec_id"))
         .limit(50)
     )
-    return mmr_diversify(
-        spark,
-        candidates,
-        id_col="vec_id",
-        score_col="relevance",
-        vec_col="embedding",
-        k=10,
+    return spark.createDataFrame(
+        mmr_diversify(
+            candidates,
+            id_col="vec_id",
+            score_col="relevance",
+            vec_col="embedding",
+            k=10,
+        )
     )
 
 

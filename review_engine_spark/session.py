@@ -17,8 +17,8 @@ session-level knobs that plan cost depends on:
 - **DataFrame debugging off** — PySpark 4 otherwise captures the Python
   call site on every ``Column`` call (active-session lookup, a conf get,
   ``inspect.stack()`` and an origin set/clear over py4j), so six
-  ``Column`` calls send 62 py4j commands instead of 12
-  (``tests/test_session.py``). Errors keep their exception
+  ``Column`` calls send 62 py4j commands instead of 12, or 7 with the
+  class-lookup memo below (``tests/test_session.py``). Errors keep their exception
   class and message; they lose the ``file:line`` fragment of the
   DataFrame query context. PySpark reads the flag once per process, at
   the first ``Column`` call, from the session active then.
@@ -43,12 +43,27 @@ session-level knobs that plan cost depends on:
   the session's JVM starts. Executors must be able to import the package
   when the daemon starts; ``--py-files`` alone is not enough, since a
   worker adds those to its path per task.
+- **class lookups memoized once per session** — PySpark reaches
+  ``functions``, ``PythonUtils``, ``PythonSQLUtils`` and the classic
+  ``SparkSession`` by name through the py4j JVM view on every call, and
+  py4j asks the JVM again each time. A bare name is first tried against
+  the whole classpath and each star import before the right one matches:
+  0.6–0.76 ms of JVM CPU per ``PythonSQLUtils`` lookup, about 0.2 ms per
+  ``PythonUtils`` one. Each ``getMember`` (``functions.lit``) then costs
+  50–75 µs, since it copies every ``Method`` of the class. A search
+  request sent 361 class and 359 method lookups among its 2,216 py4j
+  commands. ``get_spark`` puts one memoizing ``JavaClass`` per class into
+  the JVM view, under its short and its full name, and each keeps the
+  static methods it hands out: an ``F.*`` call sends 1 command instead of
+  3, and no lookup scans the classpath (``tests/test_session.py``). The
+  memo lives as long as the py4j gateway, across session restarts.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass, JavaMember
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "host_defaults", "DEFAULT_CONF"]
@@ -99,6 +114,39 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+#: the classes PySpark looks up by name on every Column or DataFrame call
+#: (module docstring)
+MEMOIZED_CLASSES = (
+    "org.apache.spark.sql.functions",
+    "org.apache.spark.api.python.PythonUtils",
+    "org.apache.spark.sql.api.python.PythonSQLUtils",
+    "org.apache.spark.sql.classic.SparkSession",
+)
+
+
+class _MemoJavaClass(JavaClass):
+    """A ``JavaClass`` that keeps each static method it hands out, so a
+    second ``functions.lit`` is an attribute read, not a py4j command.
+    Fields and nested classes are looked up every time, as by py4j."""
+
+    def __getattr__(self, name):
+        member = super().__getattr__(name)
+        if isinstance(member, JavaMember):
+            self.__dict__[name] = member
+        return member
+
+
+def _memoize_class_lookups(jvm) -> None:
+    """Put a :class:`_MemoJavaClass` for each of ``MEMOIZED_CLASSES`` into
+    the py4j JVM view, under its full and its short name. ``JVMView``
+    asks the JVM only for names missing from its ``__dict__``. A view that
+    already holds the memo keeps it, with the methods it has cached."""
+    for fqn in MEMOIZED_CLASSES:
+        if not isinstance(jvm.__dict__.get(fqn), _MemoJavaClass):
+            memo = _MemoJavaClass(fqn, jvm._gateway_client)
+            jvm.__dict__[fqn] = jvm.__dict__[fqn.rsplit(".", 1)[1]] = memo
+
+
 def host_defaults() -> tuple[int, str]:
     """``(cores, driver heap)`` for a local session: ``$SPARK_GRAFT_CPUS``
     or the cores this process may run on, and ``$SPARK_GRAFT_DRIVER_MEM``
@@ -142,4 +190,5 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _memoize_class_lookups(spark.sparkContext._jvm)
     return spark

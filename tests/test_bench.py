@@ -24,7 +24,7 @@ def _totals(cpu: float) -> dict[str, float]:
 
 def test_final_line_fits_the_tail_budget_at_300_queries():
     records = {
-        f"q_some_rather_long_query_name_{i:03d}": bench.query_record([1.0 + i / 7, 0.5 + i / 9], [], _totals(0.25), [40, 0])
+        f"q_some_rather_long_query_name_{i:03d}": bench.query_record([1.0 + i / 7, 0.5 + i / 9], [0.5, 0.25], [], _totals(0.25), [40, 0])
         for i in range(300)
     }
     full = bench.summary(records, 0.1)
@@ -43,14 +43,17 @@ def test_final_line_fits_the_tail_budget_at_300_queries():
 
 def test_failure_is_recorded_only_when_every_run_raised():
     boom = ValueError("bad column\n  at line 2")
-    failed = bench.query_record([0.2, 0.1], [boom, boom], _totals(0.0), [3, 1])
-    flaky = bench.query_record([0.2, 0.3], [boom], _totals(0.4), [12, 0])
+    failed = bench.query_record([0.2, 0.1], [0.2, 0.1], [boom, boom], _totals(0.0), [3, 1])
+    flaky = bench.query_record([0.2, 0.3], [0.2, 0.05], [boom], _totals(0.4), [12, 0])
     assert failed == {
-        "wall_s": 0.1, "exec.task_cpu_s": 0.0, "exec.gc_s": 0.005, "exec.fetch_wait_s": 0.0,
+        "wall_s": 0.1, "build_s": 0.1, "exec_s": 0.0, "exec.task_cpu_s": 0.0, "exec.gc_s": 0.005, "exec.fetch_wait_s": 0.0,
         "exec.spill_bytes": 0.0, "compiles_cold": 3, "compiles_warm": 1, "failure": "ValueError: bad column",
     }
     assert "failure" not in flaky
-    assert bench.query_record([0.2], [], _totals(0.1), [7])["compiles_warm"] is None
+    # build and execute are the best run's, not each figure's own minimum
+    split = bench.query_record([0.5, 0.4], [0.1, 0.3], [], _totals(0.1), [5, 0])
+    assert (split["wall_s"], split["build_s"], split["exec_s"]) == (0.4, 0.3, 0.1)
+    assert bench.query_record([0.2], [0.05], [], _totals(0.1), [7])["compiles_warm"] is None
     full = bench.summary({"q_a": failed, "q_b": flaky}, 0.01)
     assert full["n_failed"] == 1
     assert json.loads(bench.final_line(full))["n_failed"] == 1

@@ -18,6 +18,11 @@ from review_engine_spark.operators.ranking import _mmr_picks, mmr_diversify, top
 from review_engine_spark.operators.similarity import brute_force_topk, ivf_topk
 
 
+def _mmr(spark, candidates, *args, **kwargs):
+    """The MMR picks as a frame, the way ``q_mmr`` returns them."""
+    return spark.createDataFrame(mmr_diversify(candidates, *args, **kwargs))
+
+
 def test_mmr_first_pick_is_pure_relevance(spark):
     # Two near-identical top docs: MMR must pick the best, then skip its
     # twin in favor of the diverse third (rank.py:282-325 semantics).
@@ -27,7 +32,7 @@ def test_mmr_first_pick_is_pure_relevance(spark):
         (3, 0.50, [0.0, 1.0]),   # orthogonal
     ]
     df = spark.createDataFrame(rows, "id long, rel double, vec array<double>")
-    out = mmr_diversify(spark, df, "id", "rel", "vec", k=2).collect()
+    out = mmr_diversify(df, "id", "rel", "vec", k=2).to_pylist()
     assert [r["id"] for r in out] == [1, 3]
     assert [r["mmr_rank"] for r in out] == [1, 2]
 
@@ -35,7 +40,7 @@ def test_mmr_first_pick_is_pure_relevance(spark):
 def test_mmr_none_vector_tolerated(spark):
     rows = [(1, 1.0, [1.0, 0.0]), (2, 0.9, None), (3, 0.8, [1.0, 0.0])]
     df = spark.createDataFrame(rows, "id long, rel double, vec array<double>")
-    out = mmr_diversify(spark, df, "id", "rel", "vec", k=3).collect()
+    out = mmr_diversify(df, "id", "rel", "vec", k=3).to_pylist()
     # None vector → similarity 0.0 (rank.py:195-197), so id=2 ranks 2nd
     assert [r["id"] for r in out] == [1, 2, 3]
 
@@ -60,7 +65,7 @@ def test_mmr_passes_other_columns_through(spark, plan_nodes):
         (None, "c", None, None, None, day, 0.5, [0.0, 1.0], []),
     ]
     df = spark.createDataFrame(rows, MMR_PASSTHROUGH)
-    out = mmr_diversify(spark, df, "id", "rel", "vec", k=3)
+    out = _mmr(spark, df, "id", "rel", "vec", k=3)
     assert out.schema.simpleString() == MMR_PASSTHROUGH_OUT
     assert [tuple(r) for r in out.collect()] == [
         (1, "a", 1.0, "one", 9.5, 3, True, day, ["x"]),
@@ -81,7 +86,7 @@ def test_mmr_nulls_stay_null_without_arrow(spark):
     before = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        out = mmr_diversify(spark, df, "id", "rel", "vec", k=2).collect()
+        out = _mmr(spark, df, "id", "rel", "vec", k=2).collect()
     finally:
         spark.conf.set(key, before)
     assert [(r["title"], r["price"]) for r in out] == [(None, None), ("t", 2.0)]
@@ -89,7 +94,7 @@ def test_mmr_nulls_stay_null_without_arrow(spark):
 
 def test_mmr_empty_candidates(spark):
     df = spark.createDataFrame([], MMR_PASSTHROUGH)
-    out = mmr_diversify(spark, df, "id", "rel", "vec", k=3)
+    out = _mmr(spark, df, "id", "rel", "vec", k=3)
     assert out.collect() == []
     assert out.schema.simpleString() == MMR_PASSTHROUGH_OUT
 
@@ -97,7 +102,7 @@ def test_mmr_empty_candidates(spark):
 def test_mmr_ties_keep_first_seen(spark):
     rows = [(7, 0.5, [1.0, 0.0]), (3, 0.5, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "id long, rel double, vec array<double>")
-    out = mmr_diversify(spark, df, "id", "rel", "vec", k=1).collect()
+    out = mmr_diversify(df, "id", "rel", "vec", k=1).to_pylist()
     # candidate order is (-score, id): id=3 first on equal scores
     assert out[0]["id"] == 3
 
@@ -510,10 +515,7 @@ def test_stream_dedup_matches_batch_distinct(spark, sf_dir):
 def test_grouped_mmr_matches_driver_loop(spark, sf_dir):
     """applyInPandas grouped MMR must reproduce the driver-side greedy
     loop group by group (same normalize/tie/None rules)."""
-    from review_engine_spark.operators.ranking import (
-        mmr_diversify,
-        mmr_diversify_grouped,
-    )
+    from review_engine_spark.operators.ranking import mmr_diversify_grouped
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # distinct per-id relevance: with dense score ties the two
@@ -535,13 +537,12 @@ def test_grouped_mmr_matches_driver_loop(spark, sf_dir):
     labels = [r["label"] for r in cands.select("label").distinct().collect()]
     for lbl in labels:
         one = mmr_diversify(
-            spark,
             cands.filter(F.col("label") == lbl).drop("label"),
             "vec_id",
             "rel",
             "embedding",
             k=4,
-        ).collect()
+        ).to_pylist()
         for r in one:
             assert grouped[(lbl, r["mmr_rank"])] == r["vec_id"]
 
@@ -550,10 +551,7 @@ def test_grouped_mmr_tie_semantics(spark):
     """Exact-arithmetic tie case: equal scores and 0/1 orthogonal vectors
     make every float path exact, so tie handling (first-seen in
     relevance-then-id order) must match the driver loop bit-for-bit."""
-    from review_engine_spark.operators.ranking import (
-        mmr_diversify,
-        mmr_diversify_grouped,
-    )
+    from review_engine_spark.operators.ranking import mmr_diversify_grouped
 
     rows = [
         ("g", 1, 0.5, [1.0, 0.0, 0.0]),
@@ -572,9 +570,7 @@ def test_grouped_mmr_tie_semantics(spark):
     ]
     want = [
         (r["mmr_rank"], r["vec_id"])
-        for r in mmr_diversify(
-            spark, df.drop("label"), "vec_id", "rel", "vec", k=4
-        ).collect()
+        for r in mmr_diversify(df.drop("label"), "vec_id", "rel", "vec", k=4).to_pylist()
     ]
     assert got == want
     # and the picks make sense: 1 (first tie), then 3 (orthogonal beats

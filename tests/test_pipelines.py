@@ -98,9 +98,9 @@ def test_recommend_evaluates_candidates_once(spark, plan_nodes, monkeypatch):
     seen = []
     original = pipelines.mmr_diversify
 
-    def recording(spark_, candidates, *args, **kwargs):
+    def recording(candidates, *args, **kwargs):
         seen.append(candidates)
-        return original(spark_, candidates, *args, **kwargs)
+        return original(candidates, *args, **kwargs)
 
     monkeypatch.setattr(pipelines, "mmr_diversify", recording)
     embedder = StubEmbedder(EMBED_DIM)
@@ -128,6 +128,44 @@ def test_recommend_evaluates_candidates_once(spark, plan_nodes, monkeypatch):
     assert names.count("TakeOrderedAndProject") == 1
     assert "BroadcastNestedLoopJoin" not in names
     assert {name for name, leaf in plan_nodes(out) if leaf} == {"LocalTableScan"}
+
+
+def test_recommend_result_collects_without_a_job(spark):
+    """The ranking is finished on the local MMR picks: collecting what
+    ``recommend`` returns submits no Spark job (a Sort and a Window over
+    the picks cost one job of 5 tasks before)."""
+    emb = build_product_embeddings(_reviews_df(spark), stub_embed_udf())
+    query = "family washer under 600"
+    out = recommend(
+        spark,
+        _products_df(spark),
+        emb,
+        query,
+        StubEmbedder(EMBED_DIM).encode([query])[0],
+        rerank_udf=stub_score_udf(),
+        candidates=10,
+        k=3,
+        display=2,
+    )
+    assert out.schema.simpleString() == (
+        "struct<rank:bigint,parent_asin:string,title:string,price:double,"
+        "score:double,price_missing:boolean>"
+    )
+    assert not out.schema["rank"].nullable
+    sc = spark.sparkContext
+    group = "recommend-result-collect"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        before = set(tracker.getJobIdsForGroup(group))
+        rows = out.collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        after = set(tracker.getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert [r["rank"] for r in rows] == [1, 2]
+    assert after == before
 
 
 def test_qa_answer_scopes_to_product(spark):

@@ -16,7 +16,10 @@ def test_column_calls_skip_call_site_capture():
     """A fresh interpreter: PySpark reads the DataFrame-debugging flag once
     per process, at the first Column call under an active session, so the
     test session's answer is already fixed. With call-site capture on, the
-    six Column calls below send 62 py4j commands; with it off, 12."""
+    six Column calls below send 62 py4j commands; with it off, 12, and 7
+    once ``get_spark``'s class-lookup memo spares the lookups of
+    ``functions`` and of its methods (the first ``lit`` still asks for its
+    method once)."""
     probe = "\n".join([
         f"import json, sys; sys.path.insert(0, {str(REPO)!r})",
         "from pyspark.sql import functions as F",
@@ -33,7 +36,40 @@ def test_column_calls_skip_call_site_capture():
     ])
     out = subprocess.run([sys.executable, "-c", probe], capture_output=True, text=True, timeout=300, check=True)
     sent = json.loads(out.stdout.strip().splitlines()[-1])["sent"]
-    assert 0 < sent <= 24
+    assert 0 < sent <= 7
+
+
+def test_class_lookups_are_memoized_across_session_restarts():
+    """A fresh interpreter: after ``get_spark``, bare lookups of the
+    classes PySpark reaches by name and a repeated ``F.col``/``F.lit`` send
+    no py4j reflection command (``r``), where each ``F.*`` call sent two
+    before. A session stopped and started again on the same gateway, as
+    perfbench's set-up cycles do, keeps the memo and its cached methods."""
+    probe = "\n".join([
+        f"import json, sys; sys.path.insert(0, {str(REPO)!r})",
+        "from pyspark.sql import functions as F",
+        "from review_engine_spark.session import get_spark",
+        "conf = dict(master='local[1]', shuffle_partitions=1, extra_conf={'spark.driver.memory': '1g'})",
+        "s = get_spark('probe', **conf)",
+        "F.col('warm'), F.lit(0)",
+        "client = s.sparkContext._gateway._gateway_client",
+        "send = client.send_command",
+        "def sent_by_kind():",
+        "    jvm, kinds = s.sparkContext._jvm, []",
+        "    client.send_command = lambda cmd, *a, **k: kinds.append(cmd[0]) or send(cmd, *a, **k)",
+        "    jvm.functions, jvm.PythonUtils, jvm.PythonSQLUtils",
+        "    F.col('a'), F.lit(1)",
+        "    client.send_command = send",
+        "    return {k: kinds.count(k) for k in 'rc'}",
+        "first = sent_by_kind()",
+        "s.stop()",
+        "s = get_spark('probe', **conf)",
+        "same = s.sparkContext._gateway._gateway_client is client",
+        "print(json.dumps({'first': first, 'restarted': sent_by_kind(), 'same_gateway': same})); s.stop()",
+    ])
+    out = subprocess.run([sys.executable, "-c", probe], capture_output=True, text=True, timeout=300, check=True)
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"first": {"r": 0, "c": 2}, "restarted": {"r": 0, "c": 2}, "same_gateway": True}
 
 
 def test_local_session_is_sized_from_the_host(monkeypatch):
