@@ -76,6 +76,11 @@ _TIER1_FIXED: list[str] = [
     "q_mmr",
     "q_cooccur_topk",
     "q_kmeans",
+    "q_sessionize_state",
+    "q_stream_ewma",
+    "q_stream_anomaly",
+    "q_stream_near_dup",
+    "q_stream_upsert",
 ]
 
 _REPO = Path(__file__).resolve().parents[2]

@@ -24,7 +24,7 @@ Scale notes: the fold queries materialize one user's history as an array
 (collect_list cannot partial-combine); that is the right physical plan
 when per-key cardinality is bounded (user sessions, device histories). At
 unbounded per-key history, the EWMA/CUSUM recurrences move to
-``applyInPandasWithState`` (streaming/jobs.py shows the pattern) or a
+a per-key GroupState fold (``streaming.jobs._fold_by_key``) or a
 chunked prefix-scan; the window/aggregate queries below shuffle once on
 user_id and are size-agnostic.
 """
@@ -431,7 +431,7 @@ def q_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Streaming EWMA — the same recurrence as q_ewma computed with REAL
-# cross-batch GroupState (applyInPandasWithState): per-user state is one
+# cross-batch GroupState (streaming.jobs._fold_by_key): per-user state is one
 # (acc, n) pair however long the history, which is why this is the
 # declared unbounded-history path. Oracle-checked against the identical
 # list_reduce SQL as the batch fold — stream-batch parity is the check.
@@ -440,8 +440,9 @@ def q_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @declared(oracle=_EWMA_ORACLE)
 def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of q_ewma: per-user EWMA folded under
-    applyInPandasWithState, bit-identical to the batch fold.
+    """Streaming twin of q_ewma: per-user EWMA folded under cross-batch
+    GroupState (``streaming.jobs._fold_by_key``), bit-identical to the
+    batch fold.
     """
     # Raw (unrounded) ewma, same rationale as q_ewma: the stateful fold
     # replays the identical op sequence, so the double is bit-exact and
@@ -449,7 +450,7 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second-seed sf0.1 sweep).
     from review_engine_spark.streaming.jobs import run_ewma_stateful
 
-    raw = run_ewma_stateful(spark, sf_dir, alpha=0.1)
+    raw = run_ewma_stateful(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         raw.withColumn("_rn", F.row_number().over(w))
@@ -892,8 +893,9 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @declared(oracle=_ANOMALY_ZSCORE_ORACLE)
 def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of q_anomaly_zscore: a bounded ring buffer in
-    GroupState scores each event against its user's trailing window.
+    """Streaming twin of q_anomaly_zscore: a bounded ring buffer per
+    user in cross-batch GroupState (``streaming.jobs._fold_by_key``)
+    scores each event against its user's trailing window.
     """
     from review_engine_spark.streaming.jobs import run_zscore_stateful
 

@@ -593,20 +593,21 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from review_engine_spark.streaming.jobs import sessionize
 
     ev = read_parquet_table(spark, sf_dir, "events")
-    return sessionize(ev, gap="30 minutes")
+    return sessionize(ev)
 
 
 @declared(oracle=_SESSIONIZE_ORACLE)
 def q_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming sessionization via applyInPandasWithState
-    (SURVEY §2.I stretch goal), oracle-checked against the same islands
-    SQL as q_sessionize. Update-mode emits provisional open-session rows
+    """Custom stateful streaming sessionization, a per-user fold under
+    cross-batch GroupState (``streaming.jobs._fold_by_key``; SURVEY §2.I
+    stretch goal), oracle-checked against the same islands SQL as
+    q_sessionize. Update-mode emits provisional open-session rows
     superseded by later batches; the final form per (user_id,
     session_start) key is the widest one, so reduce to it before
     comparing (a no-op when the finite source lands in one micro-batch)."""
     from review_engine_spark.streaming.jobs import run_sessionize_stateful
 
-    raw = run_sessionize_stateful(spark, sf_dir, gap_minutes=30)
+    raw = run_sessionize_stateful(spark, sf_dir)
     w = Window.partitionBy("user_id", "session_start").orderBy(
         F.desc("n_events"), F.desc("session_end")
     )

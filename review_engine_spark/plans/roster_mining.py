@@ -521,7 +521,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expression is textually duplicated inside b' on BOTH engines — same
 # IEEE tree, bit-identical — so level/trend ship as RAW doubles.
 # Scale: per-user histories are session-bounded; at unbounded history
-# this moves to applyInPandasWithState (streaming/jobs.py pattern).
+# this moves to a per-key GroupState fold (streaming.jobs._fold_by_key).
 # ---------------------------------------------------------------------------
 @declared(
     oracle="""

@@ -8,7 +8,11 @@ session-level knobs that plan cost depends on:
 - **AQE on** — runtime coalescing of shuffle partitions, skew-join
   splitting, and broadcast-join demotion/promotion. The fixture data's
   per-key group sizes are Zipf-ish (review counts per product in the
-  reference), so skew handling is load-bearing.
+  reference), so skew handling is load-bearing. The flag is set
+  explicitly because the broadcast doctrine (``DEFAULT_CONF``) depends
+  on it. Spark 4's defaults are not restated: coalescing and skew-join
+  splitting on, a 64 MB advisory post-shuffle partition size, 128 MB
+  input splits and 10,000 rows per Arrow batch.
 - **Arrow on** — every pandas-UDF / toPandas boundary is Arrow-batched.
 - **UTC session timezone** — parquet timestamps compare bit-exact against
   the DuckDB oracle (DuckDB timestamps are TZ-naive UTC).
@@ -74,20 +78,10 @@ DEFAULT_CONF: dict[str, str] = {
     # fixture events.parquet stores TIMESTAMP(NANOS) which Spark's parquet
     # reader rejects; read as long and convert (sources.io.read_parquet_table)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # --- adaptive execution: the scale story ---
+    # --- adaptive execution: the scale story (module docstring) ---
     "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # post-shuffle partitions coalesce toward ~64 MB — small enough to fit
-    # executor memory with headroom, large enough to amortize task overhead
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB",
-    # input-split sizing: 128 MB splits keep scan tasks ~seconds-long on
-    # parquet; explicit (not default-reliant) because spill behavior at
-    # the target scale depends on it (SURVEY §7 M6)
-    "spark.sql.files.maxPartitionBytes": "128MB",
     # --- Arrow everywhere Python touches data ---
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # --- broadcast doctrine (SCALING.md, both stress experiments): the
     # STATIC planner may never guess-broadcast — its file-size estimates
     # under-count filtered/aggregated corpus-scaled tables, which works

@@ -6,18 +6,22 @@ Each runner drives a finite file source to completion and returns its
 result as a batch DataFrame (``_snapshot``), so the roster's oracles can
 check it against batch SQL. The surface: tumbling and session windows,
 watermarked dedup, stream-stream and stream-static joins, the parquet
-sink and ``foreachBatch`` upsert landings, ``applyInPandasWithState``
-folds (sessionization, EWMA, z-score, MinHash-LSH near-dup flags) and
-two document ingest gates. The folds, ``run_stream_dedup`` and the gates
-take one source contract: ``path_glob`` names the table's files under
-``sf_dir`` and ``max_files_per_trigger`` splits them into micro-batches,
-which is how the tests feed late, out-of-order and cross-batch data.
+sink and ``foreachBatch`` upsert landings, four stateful per-key folds
+(sessionization, EWMA, z-score, MinHash-LSH near-dup flags) and two
+document ingest gates. The folds share one GroupState layout,
+``_fold_by_key``: each runner supplies only what one key's rows do to
+that key's state. The folds and ``run_stream_dedup`` take one source
+contract: ``path_glob`` names the table's files under ``sf_dir`` and
+``max_files_per_trigger`` splits them into micro-batches (the ingest
+gate takes only the latter), which is how the tests feed late,
+out-of-order and cross-batch data.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
 from contextlib import contextmanager
 
 import pandas as pd
@@ -41,9 +45,9 @@ __all__ = [
     "run_stream_ingest_gate",
 ]
 
-# GroupState keys per state partition. The stateful runners key their
-# state by ``pmod(key, buckets)`` instead of by the key itself: each
-# bucket stores its keys' state as parallel arrays and the fold loops
+# GroupState keys per state partition. ``_fold_by_key`` keys its state
+# by ``pmod(key, buckets)`` instead of by the key itself: each bucket
+# stores its keys and their states as two arrays and the fold loops
 # those keys inside one pandas group, so the per-group state round trip
 # and Arrow marshalling are paid per bucket, not per key. Sixteen
 # buckets per partition smooths skew across the partitions. Per-key
@@ -54,6 +58,14 @@ KEY_BUCKETS_PER_PARTITION = 16
 #: ``run_stream_near_dup``'s MinHash: md5 seeds, and seeds per LSH band.
 NEAR_DUP_SEEDS = 8
 NEAR_DUP_BAND_WIDTH = 2
+
+#: the batch twins' parameters: session gap, EWMA smoothing factor, and
+#: the z-score's trailing window, history needed to score, and flag |z|
+SESSION_GAP = "30 minutes"
+EWMA_ALPHA = 0.1
+ZSCORE_WINDOW = 20
+ZSCORE_MIN_N = 10
+ZSCORE_THRESHOLD = 2.5
 
 
 def _key_bucket(spark: SparkSession, key: Column) -> Column:
@@ -163,12 +175,76 @@ def _events_stream(
     return stream
 
 
-def tumbling_counts(events: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes") -> DataFrame:
-    """Watermarked tumbling-window count/sum per event_type. Works on both
-    batch and streaming DataFrames (withWatermark is a no-op in batch)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def _fold_by_key(
+    spark: SparkSession,
+    rows: DataFrame,
+    key: str,
+    order: list[str],
+    fold: Callable[[object, list[tuple], object], tuple[list[tuple], object]],
+    out_schema: str,
+    value_type: str,
+    mode: str,
+    name: str,
+    bucket_of: Column | None = None,
+) -> DataFrame:
+    """Fold the streaming ``rows`` per ``key`` under cross-batch
+    GroupState, drive the stream to completion and return the emitted
+    rows (``_snapshot``).
+
+    State is keyed by ``_key_bucket`` of ``bucket_of`` (default: the
+    ``key`` column itself, a long), and each bucket holds its keys'
+    states as ``keys array<K>, vals array<value_type>``. In each
+    micro-batch a bucket's rows are sorted by ``key`` then ``order``, and
+    ``fold(key, key_rows, prior)`` runs once per key: ``key_rows`` are
+    the key's rows as tuples of ``rows``' other columns, and ``prior`` is
+    its state from earlier batches (None for a new key). The fold
+    returns ``(emitted, state)``: tuples in ``out_schema``'s column order,
+    and the key's new state (None drops the key).
+    """
+    from itertools import groupby
+    from operator import itemgetter
+
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.types import StructType
+
+    out_cols = StructType.fromDDL(out_schema).fieldNames()
+    cols = [c for c in rows.columns if c != key]
+
+    def fn(_bucket, pdfs, state: GroupState):
+        batch = pd.concat(list(pdfs)).sort_values([key, *order])
+        states = dict(zip(*state.get)) if state.exists else {}
+        emitted: list[tuple] = []
+        keyed = zip(batch[key].tolist(), zip(*(batch[c] for c in cols)))
+        for k, group in groupby(keyed, key=itemgetter(0)):
+            out, new = fold(k, [r for _, r in group], states.pop(k, None))
+            emitted.extend(out)
+            if new is not None:
+                states[k] = new
+        state.update((list(states), list(states.values())))
+        yield pd.DataFrame.from_records(emitted, columns=out_cols)
+
+    bucket = _key_bucket(spark, F.col(key) if bucket_of is None else bucket_of)
+    folded = (
+        rows.withColumn("_key_bucket", bucket)
+        .groupBy("_key_bucket")
+        .applyInPandasWithState(
+            fn,
+            out_schema,
+            f"keys array<{dict(rows.dtypes)[key]}>, vals array<{value_type}>",
+            mode,
+            GroupStateTimeout.NoTimeout,
+        )
+    )
+    return _snapshot(spark, folded, mode, name)
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 10-minute tumbling-window count/sum per event_type.
+    Works on both batch and streaming DataFrames (withWatermark is a
+    no-op in batch)."""
+    src = events.withWatermark("ts", "30 minutes") if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window).alias("win"), "event_type")
+        src.groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_v"))
         .select(
             F.col("win.start").alias("ws"),
@@ -193,21 +269,20 @@ def run_tumbling_count_batchlike(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_sessionize_stateful(
     spark: SparkSession,
     sf_dir: str,
-    gap_minutes: int = 30,
     path_glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Custom stateful streaming operator (SURVEY §2.I stretch goal):
-    gap-based sessionization via ``applyInPandasWithState``, driven to
-    completion over the finite events source.
+    gap-based sessionization as a per-user ``_fold_by_key`` fold, driven
+    to completion over the finite events source.
 
     Semantics match ``session_window`` exactly: a session is a maximal
-    run of same-user events with inter-event gaps < ``gap_minutes``;
+    run of same-user events with inter-event gaps < ``SESSION_GAP``;
     ``session_end`` = last event + gap (asserted equal to the
     session_window result in tests). The open session genuinely lives in
-    ``GroupState`` across micro-batches: each batch seeds from
-    ``state.get``, closes sessions the new events terminate, and writes
-    the still-open tail back via ``state.update``. Update-mode contract:
+    ``GroupState`` across micro-batches: each batch seeds a user's fold
+    from their open session, closes sessions the new events terminate,
+    and keeps the still-open tail as the user's state. Update-mode contract:
     the open session is emitted *provisionally* each batch it changes,
     keyed by (user_id, session_start) — a later batch that extends it
     re-emits a superseding row under the same key, so downstream takes
@@ -222,31 +297,22 @@ def run_sessionize_stateful(
     folded by sort within its batch but cannot reopen an already-closed
     session — the same horizon any watermarked sessionizer has.
 
-    Scale: the only shuffle keys events by user_id's GroupState bucket
-    (``_key_bucket``); state per user is one open session, bounded by
-    the watermark horizon.
+    Scale: the only shuffle keys events by user_id's GroupState bucket;
+    state per user is one open session, bounded by the watermark
+    horizon.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    gap = pd.Timedelta(SESSION_GAP)
 
-    gap = pd.Timedelta(minutes=gap_minutes)
-
-    out_schema = (
-        "user_id long, session_start timestamp, session_end timestamp, "
-        "n_events long, total_v double"
-    )
-    state_schema = (
-        "users array<long>, s0s array<long>, s1s array<long>, "
-        "ns array<long>, vs array<double>"
-    )
-
-    def fold_user(ts_vals, v_vals, seed):
-        """One user's fold over their (ts, event_id)-ordered events."""
+    def fold(uid, events, seed):
+        """One user's (ts, event_id)-ordered events, seeded with the
+        open session (start and end in µs, count, value sum) of earlier
+        batches."""
         sessions = []
         cur = None
-        if seed is not None:  # seed the open session from the previous batch
+        if seed is not None:
             s0, s1, n, v = seed
             cur = [pd.Timestamp(s0, unit="us"), pd.Timestamp(s1, unit="us"), n, v]
-        for ts, v in zip(ts_vals, v_vals):
+        for ts, _, v in events:
             # new session when the gap is reached (session_window's
             # half-open [start, last+gap) boundary: an event at exactly
             # last+gap starts a new session)
@@ -262,77 +328,32 @@ def run_sessionize_stateful(
             cur[1] = max(cur[1], ts)
             cur[2] += 1
             cur[3] += float(v)
-        return sessions, cur
+        sessions.append(cur)
+        emitted = [(uid, s0, s1 + gap, n, round(v, 4)) for s0, s1, n, v in sessions]
+        return emitted, (cur[0].value // 1000, cur[1].value // 1000, cur[2], cur[3])
 
-    def fn(key, pdfs, state: GroupState):
-        # the bucket's open sessions, as parallel arrays; duplicate
-        # timestamps tie-break on event_id so values fold in one total
-        # order
-        rows = pd.concat(list(pdfs)).sort_values(["user_id", "ts", "event_id"])
-        if state.exists:
-            users, s0s, s1s, ns, vs = state.get
-            st = {
-                int(u): (int(a), int(b), int(n), v)
-                for u, a, b, n, v in zip(users, s0s, s1s, ns, vs)
-            }
-        else:
-            st = {}
-        out = {
-            "user_id": [],
-            "session_start": [],
-            "session_end": [],
-            "n_events": [],
-            "total_v": [],
-        }
-        for uid, grp in rows.groupby("user_id", sort=True):
-            uid = int(uid)
-            sessions, cur = fold_user(
-                grp["ts"], grp["value"], st.pop(uid, None)
-            )
-            if cur is not None:
-                st[uid] = (
-                    cur[0].value // 1000,
-                    cur[1].value // 1000,
-                    cur[2],
-                    cur[3],
-                )
-                sessions.append(cur)
-            out["user_id"].extend([uid] * len(sessions))
-            out["session_start"].extend(s[0] for s in sessions)
-            out["session_end"].extend(s[1] + gap for s in sessions)
-            out["n_events"].extend(s[2] for s in sessions)
-            out["total_v"].extend(round(s[3], 4) for s in sessions)
-        keys = sorted(st)
-        state.update(
-            (
-                keys,
-                [st[u][0] for u in keys],
-                [st[u][1] for u in keys],
-                [st[u][2] for u in keys],
-                [st[u][3] for u in keys],
-            )
-        )
-        yield pd.DataFrame(out)
-
-    stream = _events_stream(
-        spark, sf_dir, path_glob=path_glob, max_files_per_trigger=max_files_per_trigger
-    ).select("user_id", "ts", "value", "event_id")
-    sessions = (
-        stream.withColumn("bucket", _key_bucket(spark, F.col("user_id")))
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
+    events = _events_stream(spark, sf_dir, path_glob, max_files_per_trigger)
+    return _fold_by_key(
+        spark,
+        events.select("user_id", "ts", "event_id", "value"),
+        "user_id",
+        ["ts", "event_id"],  # event_id breaks ts ties: one total order
+        fold,
+        "user_id long, session_start timestamp, session_end timestamp, "
+        "n_events long, total_v double",
+        "struct<s0: bigint, s1: bigint, n: bigint, v: double>",
+        "update",
+        "sessionize_stateful_out",
     )
-    return _snapshot(spark, sessions, "update", "sessionize_stateful_out")
 
 
-def sessionize(events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization via session_window (stretch surface,
-    SURVEY §2.I): per-user sessions with event counts."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+    SURVEY §2.I): per-user sessions with event counts, split at
+    ``SESSION_GAP`` of inactivity."""
+    src = events.withWatermark("ts", "1 hour") if events.isStreaming else events
     return (
-        src.groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
+        src.groupBy(F.session_window("ts", SESSION_GAP).alias("sess"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_v"))
         .select(
             F.col("sess.start").alias("session_start"),
@@ -529,10 +550,11 @@ def run_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stream.writeStream.foreachBatch(merge)
             .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination(30)
         out = spark.read.parquet(f"{target_dir}/v={state['version']}")
         return spark.createDataFrame(out.toPandas(), out.schema)
 
@@ -540,15 +562,14 @@ def run_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_ewma_stateful(
     spark: SparkSession,
     sf_dir: str,
-    alpha: float = 0.1,
     path_glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Streaming EWMA via ``applyInPandasWithState`` — the unbounded-
-    history path the batch fold (plans/roster_analytics.q_ewma) documents:
-    per-user state is ONE (ewma, n) pair regardless of history length, so
-    a stream that never ends stays O(1) per key where collect_list would
-    grow without bound.
+    """Streaming EWMA as a per-user ``_fold_by_key`` fold — the
+    unbounded-history path the batch fold (plans/roster_analytics.q_ewma)
+    documents: per-user state is ONE (ewma, n) pair regardless of history
+    length, so a stream that never ends stays O(1) per key where
+    collect_list would grow without bound.
 
     Exactness: the Python fold ``alpha*x + (1-alpha)*acc`` performs the
     identical IEEE-double op sequence as the batch ``F.aggregate`` lambda
@@ -556,160 +577,86 @@ def run_ewma_stateful(
     bit-for-bit (pinned in tests/test_analytics.py). Update-mode emits a
     provisional (user_id, n_events, ewma) row per batch; the row with the
     largest n_events per user is final. Same in-order-arrival horizon as
-    run_sessionize_stateful. State is keyed by ``_key_bucket``: each
-    bucket holds its users' (ewma, n) pairs as parallel arrays.
+    run_sessionize_stateful.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = "user_id long, n_events long, ewma double"
-    stream = _events_stream(
-        spark, sf_dir, path_glob=path_glob, max_files_per_trigger=max_files_per_trigger
-    ).select("user_id", "ts", "event_id", "value")
-    state_schema = "users array<long>, accs array<double>, ns array<long>"
+    def fold(uid, events, prior):
+        acc, n = (None, 0) if prior is None else prior
+        for _, _, v in events:  # (ts, event_id) order
+            x = float(v)
+            acc = x if acc is None else EWMA_ALPHA * x + (1.0 - EWMA_ALPHA) * acc
+            n += 1
+        return [(uid, n, acc)], (acc, n)
 
-    def fn(key, pdfs, state: GroupState):
-        rows = pd.concat(list(pdfs)).sort_values(
-            ["user_id", "ts", "event_id"]
-        )
-        if state.exists:
-            users, accs, ns = state.get
-            st = {
-                int(u): (a, int(n)) for u, a, n in zip(users, accs, ns)
-            }
-        else:
-            st = {}
-        out_u: list[int] = []
-        out_n: list[int] = []
-        out_e: list[float] = []
-        for uid, grp in rows.groupby("user_id", sort=True):
-            uid = int(uid)
-            acc, n = st.get(uid, (None, 0))
-            for v in grp["value"]:  # ts-sorted within user by the sort
-                x = float(v)
-                acc = x if acc is None else alpha * x + (1.0 - alpha) * acc
-                n += 1
-            st[uid] = (acc, n)
-            out_u.append(uid)
-            out_n.append(n)
-            out_e.append(acc)
-        keys = sorted(st)
-        state.update(
-            (
-                keys,
-                [st[u][0] for u in keys],
-                [st[u][1] for u in keys],
-            )
-        )
-        yield pd.DataFrame(
-            {"user_id": out_u, "n_events": out_n, "ewma": out_e}
-        )
-
-    ewma = (
-        stream.withColumn("bucket", _key_bucket(spark, F.col("user_id")))
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
+    events = _events_stream(spark, sf_dir, path_glob, max_files_per_trigger)
+    return _fold_by_key(
+        spark,
+        events.select("user_id", "ts", "event_id", "value"),
+        "user_id",
+        ["ts", "event_id"],
+        fold,
+        "user_id long, n_events long, ewma double",
+        "struct<acc: double, n: bigint>",
+        "update",
+        "ewma_stateful_out",
     )
-    return _snapshot(spark, ewma, "update", "ewma_stateful_out")
 
 
 def run_zscore_stateful(
     spark: SparkSession,
     sf_dir: str,
-    window: int = 20,
-    min_n: int = 10,
-    threshold: float = 2.5,
     path_glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Streaming rolling z-score anomalies via ``applyInPandasWithState``
-    — the streaming twin of plans/roster_analytics.q_anomaly_zscore with
-    a BOUNDED ring buffer as state: the last ``window`` integer-cent
-    values per user (≤ 20 longs/key however long the stream runs).
+    """Streaming rolling z-score anomalies as a per-user ``_fold_by_key``
+    fold — the streaming twin of plans/roster_analytics.q_anomaly_zscore
+    with a BOUNDED ring buffer as state: the last ``ZSCORE_WINDOW``
+    integer-cent values per user (≤ 20 longs/key however long the stream
+    runs).
 
     Exactness: the buffer holds exact ints, the Python moment formula
     (mean = s1/n, var = (s2 - s1*mean)/(n-1), z = (c-mean)/sqrt(var))
     performs the identical IEEE-double op sequence as the batch window
     query, so the emitted anomalies match the batch result EXACTLY on
     in-order arrival (pinned in tests/test_analytics.py). Each event is
-    scored against the ``window`` PRECEDING events only — no target
-    leakage — exactly like the batch ROWS BETWEEN 20 PRECEDING AND
-    1 PRECEDING frame.
+    scored against the ``ZSCORE_WINDOW`` PRECEDING events only — no
+    target leakage — exactly like the batch ROWS BETWEEN 20 PRECEDING
+    AND 1 PRECEDING frame.
     """
     import math
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "event_id long, user_id long, zscore double"
-    # flattened ring buffers, since the state row must stay a flat Arrow
-    # struct: user users[i]'s buffer is cents[offsets[i] : offsets[i+1]]
-    state_schema = "users array<long>, offsets array<long>, cents array<long>"
-
-    def fold_user(eids, vals, buf, out_ids, out_z):
-        """One user's ring-buffer fold; returns the trimmed buffer."""
-        for eid, v in zip(eids, vals):
+    def fold(uid, events, buf):
+        buf = [] if buf is None else buf
+        hits = []
+        for _, eid, v in events:  # (ts, event_id) order
             c = math.floor(float(v) * 100 + 0.5)
             n = len(buf)
-            if n >= min_n:
+            if n >= ZSCORE_MIN_N:
                 s1 = sum(buf)
                 s2 = sum(b * b for b in buf)
                 mean = float(s1) / float(n)
                 var = (float(s2) - float(s1) * mean) / float(n - 1)
                 if var > 0.0:
                     z = (float(c) - mean) / math.sqrt(var)
-                    if abs(z) > threshold:
-                        out_ids.append(int(eid))
-                        out_z.append(round(z, 3))
+                    if abs(z) > ZSCORE_THRESHOLD:
+                        hits.append((eid, uid, round(z, 3)))
             buf.append(c)
-            if len(buf) > window:
-                buf = buf[-window:]
-        return buf
+            if len(buf) > ZSCORE_WINDOW:
+                buf = buf[-ZSCORE_WINDOW:]
+        return hits, buf
 
-    def fn(key, pdfs, state: GroupState):
-        rows = pd.concat(list(pdfs)).sort_values(
-            ["user_id", "ts", "event_id"]
-        )
-        if state.exists:
-            users, offs, cents = state.get
-            st = {
-                int(u): list(cents[offs[i] : offs[i + 1]])
-                for i, u in enumerate(users)
-            }
-        else:
-            st = {}
-        out_ids: list[int] = []
-        out_us: list[int] = []
-        out_z: list[float] = []
-        for uid, grp in rows.groupby("user_id", sort=True):
-            uid = int(uid)
-            n0 = len(out_ids)
-            st[uid] = fold_user(
-                grp["event_id"], grp["value"], st.get(uid, []), out_ids, out_z
-            )
-            out_us.extend([uid] * (len(out_ids) - n0))
-        keys = sorted(st)
-        offsets = [0]
-        flat: list[int] = []
-        for u in keys:
-            flat.extend(st[u])
-            offsets.append(len(flat))
-        state.update((keys, offsets, flat))
-        yield pd.DataFrame(
-            {"event_id": out_ids, "user_id": out_us, "zscore": out_z}
-        )
-
-    stream = _events_stream(
-        spark, sf_dir, path_glob=path_glob, max_files_per_trigger=max_files_per_trigger
-    ).select("user_id", "ts", "event_id", "value")
-    anomalies = (
-        stream.withColumn("bucket", _key_bucket(spark, F.col("user_id")))
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    events = _events_stream(spark, sf_dir, path_glob, max_files_per_trigger)
+    return _fold_by_key(
+        spark,
+        events.select("user_id", "ts", "event_id", "value"),
+        "user_id",
+        ["ts", "event_id"],
+        fold,
+        "event_id long, user_id long, zscore double",
+        "array<bigint>",
+        "append",
+        "zscore_stateful_out",
     )
-    return _snapshot(spark, anomalies, "append", "zscore_stateful_out")
 
 
 def run_stream_near_dup(
@@ -727,14 +674,15 @@ def run_stream_near_dup(
     Pipeline, all inside the stream: ``md5_minhash_signatures`` (the
     ``NEAR_DUP_SEEDS`` md5 signatures of ``q_minhash_jaccard``,
     bit-identical in DuckDB) → ``NEAR_DUP_SEEDS / NEAR_DUP_BAND_WIDTH``
-    band hashes → explode to (band_idx, band_hash, doc_id) →
-    ``applyInPandasWithState`` keyed by (band_idx, band_hash). State
-    per bucket is ONE long (the smallest doc_id ever seen), however
-    long the stream runs; an arriving doc is flagged on a band iff an
-    earlier doc already occupies its bucket. Docs with <3 tokens have
-    no shingles and are dropped, mirroring the batch twin. Bucket state
-    carries across micro-batches (pinned in tests/test_streaming.py by
-    streaming doc_id-range files one per trigger).
+    band hashes → explode to (doc_id, band_idx, band_hash) → a
+    ``_fold_by_key`` fold per LSH bucket, keyed by the exact
+    ``"band_idx|band_hash"`` string. State per LSH bucket is ONE long
+    (the smallest doc_id ever seen), however long the stream runs; an
+    arriving doc is flagged on a band iff an earlier doc already
+    occupies its bucket. Docs with <3 tokens have no shingles and are
+    dropped, mirroring the batch twin. Bucket state carries across
+    micro-batches (pinned in tests/test_streaming.py by streaming
+    doc_id-range files one per trigger).
 
     **Arrival-order horizon:** a doc is flagged iff a SMALLER doc_id
     already occupies the bucket, which equals "duplicate of an
@@ -745,19 +693,15 @@ def run_stream_near_dup(
     arriving late is never flagged (it becomes the bucket occupant
     instead), so a dup pair delivered in reverse order survives
     entirely — flags are a subset of the in-order flags, never
-    spurious extras. Within one micro-batch the fold runs in doc_id
+    spurious extras. Within one micro-batch each bucket folds in doc_id
     order (cross-executor row order is nondeterministic).
 
-    Scale: the only shuffle keys band rows by (band_idx, band_hash) —
-    bucket count grows with the corpus, so no bucket ever concentrates;
-    state is one long per occupied bucket; per-doc work is O(bands).
-    No corpus self-join exists anywhere in the plan. The GroupState is
-    keyed by ``_key_bucket`` of xxhash64(band_idx, band_hash), so each
-    state group folds its share of the occupied buckets in one
-    invocation.
+    Scale: the only shuffle keys band rows by ``_key_bucket`` of
+    xxhash64(band_idx, band_hash), and the fold keys on the exact string,
+    so a hash collision can only co-locate two LSH buckets, never merge
+    them. State is one long per occupied LSH bucket; per-doc work is
+    O(bands); no corpus self-join exists anywhere in the plan.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from review_engine_spark.operators.dedup import md5_minhash_signatures
 
     stream = _parquet_stream(
@@ -779,50 +723,33 @@ def run_stream_near_dup(
         )
         for b in range(NEAR_DUP_SEEDS // NEAR_DUP_BAND_WIDTH)
     ]
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("b")
-    ).select("doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.bh").alias("bh"))
-
-    def fn(key, pdfs, state: GroupState):
-        # this group's occupied buckets live as parallel arrays
-        # ("band|hash" composite, occupant doc_id); the fold keys on the
-        # EXACT strings, so the xxhash64 group key is pure partitioning
-        # — a 64-bit collision can never merge two buckets, only
-        # co-locate them
-        rows = pd.concat(list(pdfs)).sort_values("doc_id")
-        if state.exists:
-            bks, occs = state.get
-            st = dict(zip(bks, (int(o) for o in occs)))
-        else:
-            st = {}
-        ids, bidx, hits = [], [], []
-        for did, bi, bh in zip(rows["doc_id"], rows["band_idx"], rows["bh"]):
-            did = int(did)
-            bk = f"{bi}|{bh}"
-            cur = st.get(bk)
-            ids.append(did)
-            bidx.append(int(bi))
-            hits.append(1 if (cur is not None and cur < did) else 0)
-            if cur is None or did < cur:
-                st[bk] = did
-        keys = list(st)
-        state.update((keys, [st[k] for k in keys]))
-        yield pd.DataFrame(
-            {"doc_id": ids, "band_idx": bidx, "hit": hits}
-        )
-
-    flags = (
-        bands.withColumn("cg", _key_bucket(spark, F.xxhash64("band_idx", "bh")))
-        .groupBy("cg")
-        .applyInPandasWithState(
-            fn,
-            "doc_id long, band_idx int, hit int",
-            "bks array<string>, occs array<long>",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    bands = sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("b")).select(
+        "doc_id",
+        F.col("b.band_idx").alias("band_idx"),
+        F.col("b.bh").alias("bh"),
+        F.concat_ws("|", F.col("b.band_idx").cast("string"), "b.bh").alias("band_key"),
     )
-    return _snapshot(spark, flags, "update", "stream_near_dup_out")
+
+    def fold(band_key, docs, occupant):
+        hits = []
+        for doc_id, band_idx, _ in docs:  # doc_id order
+            hits.append((doc_id, band_idx, int(occupant is not None and occupant < doc_id)))
+            if occupant is None or doc_id < occupant:
+                occupant = doc_id
+        return hits, occupant
+
+    return _fold_by_key(
+        spark,
+        bands,
+        "band_key",
+        ["doc_id"],
+        fold,
+        "doc_id long, band_idx int, hit int",
+        "bigint",
+        "update",
+        "stream_near_dup_out",
+        bucket_of=F.xxhash64("band_idx", "bh"),
+    )
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,12 +786,7 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _snapshot(spark, agg, "complete", "stream_static_out")
 
 
-def run_stream_quality_gate(
-    spark: SparkSession,
-    sf_dir: str,
-    path_glob: str = "documents.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def run_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time document quality gating: the EXACT Gopher-rule gate
     q_gopher_rules runs in batch (``operators.curation.gopher_gate`` —
     one shared expression tree, so batch/stream parity holds by
@@ -879,7 +801,7 @@ def run_stream_quality_gate(
     """
     from review_engine_spark.operators.curation import gopher_gate
 
-    stream = _parquet_stream(spark, sf_dir, path_glob, max_files_per_trigger)
+    stream = _parquet_stream(spark, sf_dir, "documents.parquet")
     return _snapshot(
         spark, gopher_gate(stream, "text", "doc_id"), "append",
         "stream_quality_gate_out",
@@ -891,7 +813,6 @@ def run_stream_ingest_gate(
     sf_dir: str,
     stats: tuple[DataFrame, DataFrame],
     cut: DataFrame,
-    path_glob: str = "documents.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """The composed quality+gopher+perplexity ingest gate over a
@@ -917,7 +838,7 @@ def run_stream_ingest_gate(
     )
 
     cab, un = stats
-    stream = _parquet_stream(spark, sf_dir, path_glob, max_files_per_trigger)
+    stream = _parquet_stream(spark, sf_dir, "documents.parquet", max_files_per_trigger)
 
     def out_schema():
         # DEFERRED (round 13): analyzing the composed gate tree over

@@ -112,7 +112,6 @@ def test_stream_ewma_crosses_batches_and_matches_batch_fold(spark, tmp_path):
     raw = run_ewma_stateful(
         spark,
         str(tmp_path),
-        alpha=0.1,
         path_glob="*_events.parquet",
         max_files_per_trigger=1,
     ).toPandas()

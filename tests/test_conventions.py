@@ -104,6 +104,30 @@ def test_intermediates_are_reused_by_iter_checkpoint_only():
     assert not offenders, offenders
 
 
+def test_stateful_streams_fold_through_one_keyed_state_layout():
+    """``streaming.jobs._fold_by_key`` is the one place that knows how
+    GroupState is laid out (keys bucketed by ``_key_bucket``, each bucket
+    holding its keys' states as two arrays); the stateful runners supply
+    only a per-key fold. A second ``applyInPandasWithState`` call would
+    bring back a per-runner copy of that layout."""
+    pkg = PLANS.parent
+    sites = [
+        (p, n)
+        for p in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "applyInPandasWithState(" in line
+    ]
+    assert len(sites) == 1, [f"{p.relative_to(pkg)}:{n}" for p, n in sites]
+    jobs = pkg / "streaming" / "jobs.py"
+    (body,) = [
+        range(n.lineno, n.end_lineno + 1)
+        for n in ast.parse(jobs.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_fold_by_key"
+    ]
+    ((path, line),) = sites
+    assert path == jobs and line in body, sites
+
+
 def _declared(node) -> bool:
     return any(
         getattr(d.func if isinstance(d, ast.Call) else d, "id", None) == "declared"

@@ -794,7 +794,6 @@ def test_stateful_sessionize_merges_across_microbatches(spark, tmp_path):
     raw = run_sessionize_stateful(
         spark,
         str(tmp_path),
-        gap_minutes=30,
         path_glob="*_events.parquet",
         max_files_per_trigger=1,
     ).toPandas()
@@ -832,7 +831,7 @@ def test_stateful_sessionize_merges_across_microbatches(spark, tmp_path):
             r["n_events"],
             round(r["total_v"], 4),
         )
-        for r in sessionize(batch, gap="30 minutes").collect()
+        for r in sessionize(batch).collect()
     }
     assert got == want
 

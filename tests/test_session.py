@@ -19,9 +19,12 @@ def test_column_calls_skip_call_site_capture():
     six Column calls below send 62 py4j commands; with it off, 12, and 7
     once ``get_spark``'s class-lookup memo spares the lookups of
     ``functions`` and of its methods (the first ``lit`` still asks for its
-    method once)."""
+    method once). Only the calling thread's commands count: py4j's
+    finalizer thread sends the deletes of objects freed earlier whenever
+    its 1 s poll wakes, and under CPU load that poll fell inside the six
+    calls (11 and 39 commands seen, 32 of them deletes)."""
     probe = "\n".join([
-        f"import json, sys; sys.path.insert(0, {str(REPO)!r})",
+        f"import json, sys, threading; sys.path.insert(0, {str(REPO)!r})",
         "from pyspark.sql import functions as F",
         "from review_engine_spark.session import get_spark",
         "s = get_spark('probe', master='local[1]', shuffle_partitions=1, extra_conf={'spark.driver.memory': '1g'})",
@@ -29,7 +32,8 @@ def test_column_calls_skip_call_site_capture():
         "client = s.sparkContext._gateway._gateway_client",
         "sent = []",
         "send = client.send_command",
-        "client.send_command = lambda *a, **k: sent.append(1) or send(*a, **k)",
+        "mine = threading.current_thread()",
+        "client.send_command = lambda *a, **k: (threading.current_thread() is mine and sent.append(1)) or send(*a, **k)",
         "(F.col('a') * F.col('b') + F.lit(1.0)).alias('c')",
         "client.send_command = send",
         "print(json.dumps({'sent': len(sent)})); s.stop()",

@@ -181,17 +181,35 @@ def _write_event_batches(tmp_path):
 
 def test_stateful_rows_independent_of_bucket_count(spark, tmp_path, monkeypatch):
     """The stateful runners key GroupState by ``_key_bucket`` and loop a
-    bucket's users inside one pandas group, restoring and re-serializing
-    each user's state between micro-batches. Their rows must not depend
-    on how users share buckets: the derived bucket count (one user per
+    bucket's keys inside one pandas group, restoring and re-serializing
+    each key's state between micro-batches. Their rows must not depend
+    on how keys share buckets: the derived bucket count (one user per
     bucket here) must emit EXACTLY what one bucket per state partition
-    (several users per bucket) emits across three interleaved
+    (several keys per bucket) emits across three interleaved
     micro-batches — same fold order, same float sequence, same
-    provisional-row cadence — for all three runners."""
+    provisional-row cadence — for all four runners."""
     from review_engine_spark.streaming import jobs
 
     sf_dir = _write_event_batches(tmp_path)
+    dup, other = (
+        "the quick brown fox jumps over the lazy dog tonight",
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+    )
+    uniq = [
+        "one two three four five six seven eight nine ten",
+        "red orange yellow green blue indigo violet colors here now",
+        "north south east west compass points guide the old sailors",
+    ]
+    _write_doc_batches(
+        tmp_path,
+        [
+            [(0, dup), (1, uniq[0]), (2, other)],
+            [(3, uniq[1]), (4, dup), (5, uniq[2])],
+            [(6, other), (7, dup)],
+        ],
+    )
     kw = {"path_glob": "ev_*.parquet", "max_files_per_trigger": 1}
+    doc_kw = {"path_glob": "doc_*.parquet", "max_files_per_trigger": 1}
 
     def n_buckets():  # over the fixture's 7 user ids
         bucket = jobs._key_bucket(spark, F.col("id"))
@@ -203,9 +221,10 @@ def test_stateful_rows_independent_of_bucket_count(spark, tmp_path, monkeypatch)
         )
 
     runners = [
-        (jobs.run_ewma_stateful, ["user_id", "n_events", "ewma"]),
+        (jobs.run_ewma_stateful, kw, ["user_id", "n_events", "ewma"]),
         (
             jobs.run_sessionize_stateful,
+            kw,
             [
                 "user_id",
                 "session_start",
@@ -214,14 +233,15 @@ def test_stateful_rows_independent_of_bucket_count(spark, tmp_path, monkeypatch)
                 "total_v",
             ],
         ),
-        (jobs.run_zscore_stateful, ["event_id", "user_id", "zscore"]),
+        (jobs.run_zscore_stateful, kw, ["event_id", "user_id", "zscore"]),
+        (jobs.run_stream_near_dup, doc_kw, ["doc_id", "band_idx", "hit"]),
     ]
     assert n_buckets() == 7
-    derived = [rows(fn(spark, sf_dir, **kw), cols) for fn, cols in runners]
+    derived = [rows(fn(spark, sf_dir, **a), cols) for fn, a, cols in runners]
     monkeypatch.setattr(jobs, "KEY_BUCKETS_PER_PARTITION", 1)
     assert n_buckets() < 7  # several users really share a bucket
-    shared = [rows(fn(spark, sf_dir, **kw), cols) for fn, cols in runners]
-    for (fn, _), got, want in zip(runners, shared, derived):
+    shared = [rows(fn(spark, sf_dir, **a), cols) for fn, a, cols in runners]
+    for (fn, _, _), got, want in zip(runners, shared, derived):
         assert got == want, fn.__name__
         assert want, fn.__name__  # non-vacuous
     # each user's 14 events fold into one EWMA across the three batches
@@ -229,6 +249,15 @@ def test_stateful_rows_independent_of_bucket_count(spark, tmp_path, monkeypatch)
     for u, n, _ in derived[0]:
         final_n[u] = max(n, final_n.get(u, 0))
     assert final_n == {u: 14 for u in range(7)}
+    # the near-dup fold ran with several LSH band keys per bucket: each
+    # band key's first doc is its one miss, so the misses count the
+    # distinct band keys, more than the buckets they now share
+    near_dup = shared[3]
+    band_keys = sum(1 for *_, hit in near_dup if hit == 0)
+    assert band_keys > spark.sparkContext.defaultParallelism
+    # docs 4 and 7 repeat doc 0, doc 6 repeats doc 2, on every band
+    flagged = {doc for doc, _, hit in near_dup if hit == 1}
+    assert flagged == {4, 6, 7}
 
 
 def test_stream_quality_gate_equals_batch_gate(spark, tmp_path):

@@ -109,7 +109,7 @@ def test_stateful_sessionize_late_event_folds_into_open_session(spark, tmp_path)
         ],
     )
     raw = run_sessionize_stateful(
-        spark, sf_dir, gap_minutes=30, path_glob="ev_*.parquet", max_files_per_trigger=1
+        spark, sf_dir, path_glob="ev_*.parquet", max_files_per_trigger=1
     )
     # update-mode: reduce to the final (widest) row per session key, as
     # q_sessionize_state does
